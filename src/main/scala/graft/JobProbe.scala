@@ -10,7 +10,10 @@ import scala.collection.mutable
   * noop-sink runs (the Bench shape), then a per-job breakdown of the
   * SECOND run (codegen/JIT warm) with stage task-time totals, shuffle
   * bytes, and peak task counts, so "where do the seconds go" is a
-  * printed fact rather than a guess.
+  * printed fact rather than a guess. Each query's formatted plan
+  * (`explain("formatted")`: pushdown reaching scans, broadcast vs shuffle
+  * joins, whole-stage codegen spans) follows its breakdown, and any
+  * failed warm-up step is printed before the first query.
   *
   * `runMain graft.JobProbe <query> [<query> ...]`; SPARK_GRAFT_SF_DIR /
   * SPARK_GRAFT_CPUS as in Bench. Not part of the driver contract.
@@ -25,11 +28,9 @@ object JobProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.local(cpus)
-    graft.core.Tables.names.foreach { t =>
-      try graft.core.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+    SparkEntry.warm(spark, sfDir)._1.foreach { case (step, e) =>
+      println(s"JOBPROBE warm-up $step failed: $e")
     }
-    try SparkEntry.prewarm(spark, sfDir) catch { case _: Throwable => () }
 
     val stages = mutable.Map.empty[Int, StageRec]
     val jobs = mutable.ArrayBuffer.empty[(Int, Long, Long, Seq[Int])]
@@ -113,9 +114,12 @@ object JobProbe {
       if (!probeRun1) { stages.clear(); jobs.clear(); collecting = true }
       val t1 = if (probeRun1) t0 else System.nanoTime()
       lastQe = null
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val df2 = fn(spark, sfDir)
+      df2.write.format("noop").mode("overwrite").save()
       val w2 = (System.nanoTime() - t1) / 1e9
       collecting = false
+      val plan = df2.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
       // per-operator SQL metrics of run 2 — the SQL-tab stand-in: every
       // plan node (subqueries and AQE final plans included) whose timing
       // metrics crossed 200 ms, heaviest first
@@ -195,6 +199,7 @@ object JobProbe {
       val tailGap = (t1 + ((w2 * 1e9).toLong) -
         (if (jobsSorted.nonEmpty) jobsSorted.map(j => math.max(j._2, j._3)).max else t1)) / 1e9
       println(f"  tail-after-last-job=$tailGap%.3f (plan/driver time outside jobs)")
+      println(plan)
     }
     spark.stop()
   }

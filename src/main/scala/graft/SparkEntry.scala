@@ -47,4 +47,24 @@ object SparkEntry {
     * per-query timings are order-independent. */
   def prewarm(spark: SparkSession, dir: String): Unit =
     packs.foreach(_.prewarm(spark, dir))
+
+  /** The timing harnesses' warm-up: count every fixture table (pays the
+    * one-time session, codegen and parquet-footer costs), then
+    * [[prewarm]]. Returns each failed step as (step, [[describe]]) — a
+    * failure is reported, never swallowed — and the prewarm seconds. */
+  private[graft] def warm(spark: SparkSession, dir: String)
+      : (Seq[(String, String)], Double) = {
+    def step(name: String)(body: => Unit): Option[(String, String)] =
+      try { body; None } catch { case e: Throwable => Some(name -> describe(e)) }
+    val loads = graft.core.Tables.names.flatMap(t =>
+      step(s"load:$t")(graft.core.Tables.load(spark, dir, t).count()))
+    val t0 = System.nanoTime()
+    val pre = step("prewarm")(prewarm(spark, dir))
+    (loads ++ pre, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** "exception class: message", the message cut to 300 chars (an
+    * analysis error can carry a whole plan). */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}"
 }

@@ -26,18 +26,6 @@ object Verify {
       // accumulate across the 85+ queries a single session runs.
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -53,4 +41,17 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/bounded_oracles.json"), bounded)
     spark.stop()
   }
+
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in oracle SQL would otherwise make the
+    * checker's json.load fail and silently zero the correctness run. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -228,9 +228,6 @@ object FixtureCache {
     * pushdown, never the original expensive subtree). */
   def tableFor(spark: SparkSession, fixtureDir: String, name: String)
               (build: => DataFrame): DataFrame =
-    // Frames memo (optimization r15): generation dirs are
-    // content-addressed, so the frame memo can never serve a stale
-    // generation — a regenerated fixture resolves to a NEW path
     Frames.parquet(spark, dirFor(spark, fixtureDir, name) { tmp =>
       build.write.mode("overwrite").parquet(tmp)
     })

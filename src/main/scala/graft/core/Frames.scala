@@ -2,88 +2,103 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Per-(session, path) frame memo for ARTIFACT parquet/orc reads — the
-  * [[Tables]] memo generalized (optimization r15, guide §1/§7.3):
-  * `spark.read.parquet` runs a footer schema-inference JOB on every
-  * call, and artifact-served queries construct several artifact frames
-  * per run (index tables, meta rows, served bases), so each Bench
-  * best-of-2 pair paid 2× a chain of ~30-80 ms driver barriers per
-  * artifact before any real work (JobProbe: ~0.6 s of dd12's 2.4 s).
-  * Only the inferred schema is pinned — data always comes from the
-  * files at execution time.
+/** The one session-scoped frame memo, and the repo's cache contract.
   *
-  * Staleness: FixtureCache generation dirs are content-addressed
-  * (fingerprint in the path), so their entries can never go stale.
-  * MUTABLE index roots (DedupIndex/TextIndex/VectorIndex append/
-  * compact/delete) must call [[invalidate]](root) after every write —
-  * all in-repo mutators do; a new mutator that forgets the hook serves
-  * a stale schema/partition listing, which is why the hook sits inside
-  * the operators' write methods, not at call sites. Stopped sessions
-  * are swept on every lookup (the Tables/ADVICE-r14 discipline).
+  * Who owns what:
   *
-  * [[headRow]] additionally memoizes single-row meta tables (index
-  * metadata), replacing a per-call collect JOB with a map read — same
-  * invalidation rules.
+  *  - **This memo — lazy frames, per (session, path).**
+  *    `spark.read.parquet` runs a footer schema-inference JOB on every
+  *    call, so an un-memoized read taxes every DataFrame construction
+  *    (one job per table reference; PlanQualitySpec pins construction
+  *    laziness). Fixture tables ([[Tables.load]]), artifact reads
+  *    ([[parquet]]/[[orc]]) and single-row meta tables ([[headRow]]) all
+  *    read through it. Only the inferred schema and file listing are
+  *    pinned: data always comes from the files at execution time. Keys
+  *    carry the loader's tag (`t:` adapted fixture table, `p:` parquet,
+  *    `o:` orc, `r:` head row), so an adapted `events` frame never shares
+  *    an entry with a raw parquet read of the same file. Entries of
+  *    STOPPED sessions are swept on every lookup — a strong key would
+  *    otherwise pin a dead session's analyzed plans for the JVM lifetime,
+  *    and a WeakHashMap cannot help because each memoized frame strongly
+  *    references its session (the value→key leak).
+  *  - **[[FixtureCache]] — durable, content-addressed artifacts.**
+  *    Derived tables live under a fixture-fingerprint path, so a
+  *    regenerated fixture resolves to a NEW path and a memo entry over a
+  *    generation dir can never go stale.
+  *  - **[[ManagedPersist]] — GC-scoped Dataset persists.** Unpersisted
+  *    once the frames they serve become unreachable.
+  *
+  * Who must call [[invalidate]]: anything that rewrites files IN PLACE
+  * under a memoized path.
+  *  - Index mutators (DedupIndex/TextIndex/VectorIndex append, compact,
+  *    delete, swap, recover) call it inside their write methods, after
+  *    every write. A new mutator that forgets it serves a stale schema
+  *    and partition listing.
+  *  - A fixture dir regenerated in place mid-JVM goes through
+  *    [[Tables.invalidate]] (an `events` ts physical-type flip would
+  *    otherwise keep the old schema until JVM exit).
   */
 object Frames {
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-  private val rowMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      Row]()
+  private type Memo[A] =
+    java.util.concurrent.ConcurrentHashMap[(SparkSession, String), A]
 
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  private val frames = new Memo[DataFrame]()
+  // a separate map on purpose: headRow's computeIfAbsent calls parquet(),
+  // and a nested computeIfAbsent on ONE ConcurrentHashMap throws
+  // "Recursive update"
+  private val rows = new Memo[Row]()
+
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    frame(spark, "p:", path)(spark.read.parquet(path))
+
+  def orc(spark: SparkSession, path: String): DataFrame =
+    frame(spark, "o:", path)(spark.read.orc(path))
+
+  /** The memoized frame under (session, `tag` + `path`); `read` runs on a
+    * miss only. Every tag is two characters (see [[invalidate]]). */
+  private[core] def frame(spark: SparkSession, tag: String, path: String)
+                         (read: => DataFrame): DataFrame = {
     sweepStopped()
-    memo.computeIfAbsent((spark, "p:" + path),
-      _ => spark.read.parquet(path))
+    frames.computeIfAbsent((spark, tag + path), _ => read)
   }
 
-  def orc(spark: SparkSession, path: String): DataFrame = {
-    sweepStopped()
-    memo.computeIfAbsent((spark, "o:" + path),
-      _ => spark.read.orc(path))
-  }
-
-  /** First row of a (single-row) parquet meta table, memoized. */
+  /** First row of a (single-row) parquet meta table: a map read in place
+    * of a per-call collect JOB. */
   def headRow(spark: SparkSession, path: String): Row = {
     sweepStopped()
-    rowMemo.computeIfAbsent((spark, "p:" + path),
+    rows.computeIfAbsent((spark, "r:" + path),
       _ => parquet(spark, path).collect().head)
   }
 
-  /** Drop every session's entries under `pathPrefix` — REQUIRED after
-    * any in-place mutation of an index root (append/compact/delete/
-    * swap/recover). Prefix semantics so one call covers a root's
-    * sub-tables. */
+  /** Drop every session's frames and rows at or under `pathPrefix`. The
+    * boundary is a path separator: invalidating /data/idx keeps
+    * /data/idx2. */
   def invalidate(pathPrefix: String): Unit = {
-    def sweep[A](m: java.util.concurrent.ConcurrentHashMap[
-        (SparkSession, String), A]): Unit = {
-      val it = m.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        val p = k._2.stripPrefix("p:").stripPrefix("o:")
-        // path-separator boundary (ADVICE r15): a raw startsWith made a
-        // root that is a string prefix of a sibling (/data/idx vs
-        // /data/idx2) drop the sibling's entries on every mutation —
-        // harmless over-invalidation, but surprising
-        val root = pathPrefix.stripSuffix("/")
-        if (p == root || p.startsWith(root + "/")) it.remove()
-      }
+    val root = pathPrefix.stripSuffix("/")
+    sweep { case (_, key) =>
+      val p = key.drop(2)
+      p == root || p.startsWith(root + "/")
     }
-    sweep(memo); sweep(rowMemo)
   }
 
-  private def sweepStopped(): Unit = {
-    def sweep[A](m: java.util.concurrent.ConcurrentHashMap[
-        (SparkSession, String), A]): Unit = {
-      val it = m.keySet().iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    sweep(memo); sweep(rowMemo)
+  private def sweepStopped(): Unit = sweepWhere(_.sparkContext.isStopped)
+
+  /** The stopped-session sweep with an injectable predicate, so a spec
+    * can exercise it without stopping the suite-shared SparkContext. */
+  private[graft] def sweepWhere(dead: SparkSession => Boolean): Unit =
+    sweep(k => dead(k._1))
+
+  private def sweep(drop: ((SparkSession, String)) => Boolean): Unit = {
+    frames.keySet().removeIf(drop(_))
+    rows.keySet().removeIf(drop(_))
   }
 
-  /** Test hook: live memo size. */
-  private[graft] def memoSize: Int = memo.size() + rowMemo.size()
+  /** Test hook: the live keys of both maps. */
+  private[graft] def memoKeys: Set[(SparkSession, String)] = {
+    val b = Set.newBuilder[(SparkSession, String)]
+    frames.keySet().forEach(k => b += k)
+    rows.keySet().forEach(k => b += k)
+    b.result()
+  }
 }

@@ -108,16 +108,12 @@ object ManagedPersist {
     * nothing. count() over a persisted frame materializes whole
     * partitions (all columns), so consumers read complete blocks.
     *
-    * `graft.explain.planOnly` (set by [[graft.Explain]] only — never by
-    * Bench/Verify) suppresses the materialization so a plan dump shows
-    * the same un-executed InMemoryRelation rendering as a pre-guard
-    * capture: an executed cached relation prints Final+Initial plans
-    * with fresh node ids per occurrence, which makes line/node counts
-    * incomparable across the guard's introduction. Plan-shape evidence
-    * only; the guard is always live in every executing path. */
+    * A plan dump taken after this guard has run (JobProbe prints one per
+    * probed query) renders an executed cached relation as Final+Initial
+    * plans with fresh node ids per occurrence, so its line and node
+    * counts are not comparable with a dump of an un-executed plan. */
   def materializeOnce(df: DataFrame): Unit =
-    if (!java.lang.Boolean.getBoolean("graft.explain.planOnly") &&
-        org.apache.spark.sql.graft.Bridge.cacheNotLoaded(df)) df.count()
+    if (org.apache.spark.sql.graft.Bridge.cacheNotLoaded(df)) df.count()
 
   private def sweepLocked(): Unit = {
     val (dead, live) = registry.partition(_.refs.forall(_.get() == null))

@@ -3,8 +3,8 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** One place for the local-harness SparkSession contract shared by the
-  * driver-facing mains (Verify/Bench) and the dev tools (BenchOne/
-  * BenchScale/Explain).
+  * harness mains (Verify/Bench), the dev tools (JobProbe/
+  * BenchScale) and the streaming benchmark (streambench/).
   */
 object Sessions {
 

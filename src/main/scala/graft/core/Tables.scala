@@ -15,60 +15,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, dir, table) frame memo: `spark.read.parquet` runs a
-    * footer schema-inference JOB on every call, so an un-memoized load
-    * taxed every DataFrame construction (one job per table reference —
-    * visible in PlanQualitySpec's construction-laziness pin). The frame
-    * is lazy and immutable: DATA always comes from the files at
-    * execution time; only the inferred schema is pinned, and the
-    * fixture dirs are static for a JVM's lifetime (artifact staleness
-    * is FixtureCache's fingerprint job, not this memo's). Sessions key
-    * by identity; the memo holds ≤ sessions × tables lazy frames. */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  /** The fixture table `name` under `dir`, read through the [[Frames]]
+    * memo (see there for the cache contract). */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Frames.frame(spark, "t:", s"$dir/$name.parquet")(load0(spark, dir, name))
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    sweepStopped()
-    memo.computeIfAbsent((spark, dir, name),
-      _ => load0(spark, dir, name))
-  }
-
-  /** Evict entries whose session's context is STOPPED (ADVICE r14: a
-    * strong key pinned a dead session's analyzed plans and session
-    * state for the JVM lifetime). Runs on every load — the map holds
-    * ≤ sessions × tables entries, so the sweep is a few dozen
-    * `isStopped` flag reads, trivial next to the lookup it fronts.
-    * (A WeakHashMap key would not work here: each memoized DataFrame
-    * strongly references its session, so the value would pin the weak
-    * key forever — the documented WeakHashMap value→key leak.) */
-  private def sweepStopped(): Unit = sweepWhere(_.sparkContext.isStopped)
-
-  /** The sweep's eviction core, predicate-injectable so a spec can
-    * exercise it without stopping the suite-shared SparkContext (the
-    * production predicate above is the one-line `isStopped` read). */
-  private[graft] def sweepWhere(pred: SparkSession => Boolean): Unit = {
-    val it = memo.keySet().iterator()
-    while (it.hasNext) if (pred(it.next()._1)) it.remove()
-  }
-
-  /** Drop every session's pinned frames under `dir` — the hook for a
-    * fixture dir REGENERATED IN PLACE mid-JVM (ADVICE r14: the memo
-    * pins the inferred schema, so an in-place regeneration that changes
-    * it — e.g. an events ts physical-type flip — would otherwise serve
-    * a stale schema until JVM exit). Artifact staleness for DERIVED
-    * tables remains FixtureCache's fingerprint job; this hook covers
-    * the raw fixture frames the memo itself pins. */
-  def invalidate(dir: String): Unit = {
-    val it = memo.keySet().iterator()
-    while (it.hasNext) if (it.next()._2 == dir) it.remove()
-  }
-
-  /** Test hook: the live memo keys. */
-  private[graft] def memoKeys: Set[(SparkSession, String, String)] = {
-    val b = Set.newBuilder[(SparkSession, String, String)]
-    memo.keySet().forEach(k => b += k)
-    b.result()
-  }
+  /** Drop every session's memoized frames under the fixture `dir`. */
+  def invalidate(dir: String): Unit = Frames.invalidate(dir)
 
   private def load0(spark: SparkSession, dir: String,
                     name: String): DataFrame =

@@ -39,23 +39,18 @@ object Similarity {
     * class doc for why the sequential fold is deterministic; VectorDotSpec
     * pins bit-equality between the native expression and the HOF fold).
     *
-    * Nullability/raggedness caveat (ADVICE r15): [[dotSeqHof]] returns
-    * NULL on a length mismatch (zip_with pads with nulls, the fold
-    * nulls out) or a null ELEMENT; the native expression instead dots
-    * the min-length overlap and must not see null elements (it reads
-    * primitive slots). Every in-repo call site feeds equal-length,
-    * non-null-element embeddings; a future caller with nullable element
-    * arrays must pre-filter (`!array_contains(transform(v, isnull), …)`)
-    * or use [[dotSeqHof]] to keep NULL-propagation semantics. */
+    * Nullability/raggedness caveat (ADVICE r15): the built-ins-only
+    * fold `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` (VectorDotSpec's
+    * reference twin) returns NULL on a length mismatch (zip_with pads
+    * with nulls, the fold nulls out) or a null ELEMENT; the native
+    * expression instead dots the min-length overlap and must not see
+    * null elements (it reads primitive slots). Every in-repo call site
+    * feeds equal-length, non-null-element embeddings; a future caller
+    * with nullable element arrays must pre-filter
+    * (`!array_contains(transform(v, isnull), …)`) or use that fold to
+    * keep NULL-propagation semantics. */
   def dotSeq(a: Column, b: Column): Column =
     graft.functions.VectorDot.vector_dot(a, b)
-
-  /** The built-ins-only fold (zip_with + aggregate) — same semantics as
-    * [[dotSeq]]; kept as the portable reference implementation. */
-  def dotSeqHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   /** L2 norm via the same sequential fold + one IEEE sqrt. */
   def normSeq(a: Column): Column = sqrt(dotSeq(a, a))

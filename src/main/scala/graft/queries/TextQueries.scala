@@ -1615,20 +1615,17 @@ object TextQueries extends QueryPack {
   }
 
   private val ClassifierBuckets = 4096
-  private def tokenWeight(t: org.apache.spark.sql.Column) =
+  private[graft] def tokenWeight(t: org.apache.spark.sql.Column) =
     (graft.functions.PortableHash.hash60(t) % ClassifierBuckets) * 131L %
       401L - 200L
   /** Classifier margin Σ_tokens tokenWeight — the single-pass kernel
     * (optimization r16, guide §4): the composed
     * `aggregate(tokens(text), 0, acc + tokenWeight(t))` ran Catalyst's
     * higher-order fold interpreted per token in the four classifier
-    * keys' dominant corpus pass. [[marginHof]] is the composed twin,
-    * pinned bit-equal in TextKernelsSpec. */
+    * keys' dominant corpus pass. That composed fold is TextKernelsSpec's
+    * reference twin, pinned bit-equal to this kernel. */
   private def margin(t: org.apache.spark.sql.Column) =
     graft.functions.TextExpressions.token_weight_sum(t, ClassifierBuckets)
-  def marginHof(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    aggregate(graft.functions.TextFunctions.tokens(t), lit(0L),
-      (acc, tok) => acc + tokenWeight(tok))
   private def tokenWeightSql(e: String): String =
     s"(((${graft.functions.PortableHash.hash60Sql(e)} % $ClassifierBuckets)" +
       s" * 131) % 401 - 200)"

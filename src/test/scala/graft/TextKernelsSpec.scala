@@ -17,6 +17,12 @@ class TextKernelsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
+  /** The composed classifier-margin fold over the production token
+    * weight — the reference twin of the token_weight_sum kernel. */
+  private def marginHof(t: org.apache.spark.sql.Column) =
+    aggregate(tokens(t), lit(0L),
+      (acc, tok) => acc + graft.queries.TextQueries.tokenWeight(tok))
+
   private val adversarial = Seq(
     "", " ", "\t\n\f\r", "single", "a  b\t c",
     "  lead and trail  ", "a.b", "a . b", "Hello, World! 42",
@@ -69,7 +75,7 @@ class TextKernelsSpec extends AnyFunSuite {
     val diff = df.select(
         graft.functions.TextExpressions
           .token_weight_sum($"text", 4096L).as("fast"),
-        graft.queries.TextQueries.marginHof($"text").as("slow"))
+        marginHof($"text").as("slow"))
       .where(not($"fast" <=> $"slow"))
     assert(diff.count() === 0, diff.collect().take(3).mkString("; "))
     val nulls = Seq[Option[String]](None, Some("a b")).toDF("text")

@@ -1,15 +1,22 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorDot
-import graft.operators.Similarity
 
 /** The native VectorDot expression: bit-equality with the built-ins-only
   * HOF fold, SQL registration, null/edge handling. */
 class VectorDotSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
+
+  /** The built-ins-only reference fold (zip_with + aggregate) — the
+    * semantics `Similarity.dotSeq` delegates to the native expression. */
+  private def dotSeqHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
 
   private val rnd = new scala.util.Random(11)
   private val df = (0L until 200L).map(i =>
@@ -22,7 +29,7 @@ class VectorDotSpec extends AnyFunSuite {
   test("native expression is bit-identical to the zip_with/aggregate fold") {
     val cmp = df.select(
       VectorDot.vector_dot($"a", $"b").as("native"),
-      Similarity.dotSeqHof($"a", $"b").as("hof")).collect()
+      dotSeqHof($"a", $"b").as("hof")).collect()
     assert(cmp.forall(r => r.getDouble(0) == r.getDouble(1)))
   }
 
@@ -40,7 +47,7 @@ class VectorDotSpec extends AnyFunSuite {
     df.createOrReplaceTempView("vd")
     val out = spark.sql(
       "SELECT id, vector_dot(a, b) AS d FROM vd ORDER BY id").collect()
-    val want = df.select($"id", Similarity.dotSeqHof($"a", $"b"))
+    val want = df.select($"id", dotSeqHof($"a", $"b"))
       .orderBy("id").collect()
     assert(out.map(_.getDouble(1)).toSeq == want.map(_.getDouble(1)).toSeq)
   }
@@ -70,9 +77,9 @@ class VectorDotSpec extends AnyFunSuite {
       .withColumn("f", $"f".cast("array<float>"))
     val cmp = mixed.select(
       VectorDot.vector_dot($"f", $"d").as("n_fd"),
-      Similarity.dotSeqHof($"f", $"d").as("h_fd"),
+      dotSeqHof($"f", $"d").as("h_fd"),
       VectorDot.vector_dot($"d", $"d").as("n_dd"),
-      Similarity.dotSeqHof($"d", $"d").as("h_dd")).collect()
+      dotSeqHof($"d", $"d").as("h_dd")).collect()
     assert(cmp.forall(r =>
       r.getDouble(0) == r.getDouble(1) && r.getDouble(2) == r.getDouble(3)))
   }
