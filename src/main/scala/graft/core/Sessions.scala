@@ -1,12 +1,45 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.internal.SQLConf
 
 /** One place for the local-harness SparkSession contract shared by the
   * harness mains (Verify/Bench), the dev tools (JobProbe/
   * BenchScale) and the streaming benchmark (streambench/).
   */
 object Sessions {
+
+  /** The checkpoint file manager of every streaming query on a graft
+    * session: Spark's `FileSystem`-based one in place of its default
+    * `FileContext`-based one. [[local]] and the test session both set this
+    * pair; it is a fixed value, not an option.
+    *
+    * Why: the default renames each checkpoint file through
+    * `FileContext.rename`, which on `file:` asks
+    * `RawLocalFileSystem.getFileLinkStatus` about the destination, and
+    * Hadoop 3.4's `FileUtil.readLink` forks a `readlink` process for that.
+    * Every offset-log, commit-log and state-store delta/checksum file
+    * then pays one fork, and each state-store commit waits on them: on a
+    * 4-core host a 500 ms-trigger metrics query spends ~290 ms of a
+    * ~410 ms trigger committing a one-row state. This manager renames
+    * through `FileSystem.rename` and never asks for link status.
+    *
+    * Why it is safe:
+    *  - its no-overwrite create (`exists(dst)`, then rename) is the same
+    *    check-then-rename the `FileContext` path does on `file:` (the
+    *    local `AbstractFileSystem` has no atomic 3-argument rename either);
+    *  - on HDFS `rename` refuses an existing destination, which it turns
+    *    into the same `FileAlreadyExistsException`;
+    *  - Spark's state-file checksums still wrap it, the `.crc` files are
+    *    kept, and a checkpoint written by either manager reads back under
+    *    the other.
+    *
+    * Only streaming checkpoint I/O reads this key; batch queries never do.
+    */
+  val CheckpointManagerConf: (String, String) =
+    SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key ->
+      classOf[FileSystemBasedCheckpointFileManager].getName
 
   /** Local session sized for the fixture layout.
     *
@@ -51,6 +84,7 @@ object Sessions {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
       .config("spark.ui.enabled", "false")
+      .config(CheckpointManagerConf._1, CheckpointManagerConf._2)
     if (utc) b = b.config("spark.sql.session.timeZone", "UTC")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

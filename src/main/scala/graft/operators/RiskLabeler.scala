@@ -24,14 +24,24 @@ object RiskLabeler {
     df.withColumn("risk_type",
       when(amount > threshold, "RISK").otherwise("SAFE"))
 
-  /** Full reference-parity enrichment incl. wall-clock latency stamping. */
+  /** Wall-clock millis read per row, as StreamJob.java's per-event
+    * `System.currentTimeMillis()`. Not `current_timestamp()`: Spark folds
+    * that into a per-query literal that is inlined into generated code, so
+    * every micro-batch and every batch job would compile new classes. */
+  private val wallClockMs =
+    udf(() => System.currentTimeMillis()).asNondeterministic()
+
+  /** Full reference-parity enrichment incl. wall-clock latency stamping.
+    * One stamp per row feeds both columns, so
+    * `latency == processing_time - eventTimeMillis` on every row (a
+    * nondeterministic column is never inlined twice by the optimizer). */
   def labelWithLatency(df: DataFrame, amount: Column, eventTimeMillis: Column,
-                       threshold: Double = DefaultThreshold): DataFrame = {
-    val nowMs = unix_millis(current_timestamp())
+                       threshold: Double = DefaultThreshold): DataFrame =
     label(df, amount, threshold)
-      .withColumn("processing_time", nowMs.cast("string"))
-      .withColumn("latency", (nowMs - eventTimeMillis).cast("string"))
-  }
+      .withColumn("processing_time", wallClockMs())
+      .withColumn("latency",
+        (col("processing_time") - eventTimeMillis).cast("string"))
+      .withColumn("processing_time", col("processing_time").cast("string"))
 
   /** P3 — the console line format (StreamJob.java:82-89). */
   def formatted(df: DataFrame, txId: Column, amount: Column): DataFrame =

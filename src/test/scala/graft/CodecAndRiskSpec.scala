@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.JsonCodec
@@ -43,6 +44,37 @@ class CodecAndRiskSpec extends AnyFunSuite {
     val out = RiskLabeler.labelWithLatency(df, $"amount", $"timestamp").head()
     assert(out.getAs[String]("latency").toLong >= 0L)
     assert(out.getAs[String]("processing_time").toLong > 0L)
+    // one wall-clock read per row feeds both columns: the optimized plan
+    // holds the stamp once, so latency == processing_time - timestamp
+    val many = RiskLabeler.labelWithLatency(
+      Generator.batch(spark, 2000).repartition(4), $"amount", $"timestamp")
+    val udfs = many.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(udfs.size == 1)
+    val rows = many.select($"timestamp", $"processing_time".cast("long"),
+      $"latency".cast("long")).as[(Long, Long, Long)].collect()
+    assert(rows.length == 2000)
+    assert(rows.forall { case (ts, pt, lat) => lat == pt - ts })
+  }
+
+  test("a streaming risk query compiles no new class after its first trigger") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[String]
+    // the input is built up front: its own batch job compiles classes too
+    val chunks = Generator.toWire(Generator.batch(spark, 200))
+      .as[String].collect().toSeq.grouped(50).toSeq
+    val q = graft.streaming.Pipelines.riskPipeline(mem.toDF())
+      .writeStream.format("noop").queryName("risk_codegen").start()
+    def feed(c: Seq[String]): Unit = { mem.addData(c); q.processAllAvailable() }
+    try {
+      feed(chunks.head)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      chunks.tail.foreach(feed)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 4)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+    } finally q.stop()
   }
 
   test("risk line golden format") {

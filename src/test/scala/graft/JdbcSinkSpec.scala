@@ -75,6 +75,28 @@ class JdbcSinkSpec extends AnyFunSuite {
     } finally conn.close()
   }
 
+  test("upsertBatch: leaves an index over all key columns (single and composite)") {
+    def indexes(table: String): Seq[Seq[String]] = {
+      val cfg = cfgFor(table)
+      val conn = java.sql.DriverManager.getConnection(
+        cfg.url, cfg.user, cfg.password)
+      try {
+        val rs = conn.getMetaData.getIndexInfo(null, "APP", table.toUpperCase,
+          false, false)
+        val cols = scala.collection.mutable.Buffer.empty[(String, Int, String)]
+        while (rs.next()) cols += ((rs.getString("INDEX_NAME"),
+          rs.getInt("ORDINAL_POSITION"), rs.getString("COLUMN_NAME")))
+        cols.groupBy(_._1).values.map(_.sortBy(_._2).map(_._3).toSeq).toSeq
+      } finally conn.close()
+    }
+    Sources.upsertBatch(Seq((1000L, 5L)).toDF("window_start", "cnt"),
+      cfgFor("m_ix1"))
+    assert(indexes("m_ix1").contains(Seq("WINDOW_START")))
+    Sources.upsertBatch(Seq((1000L, "a", 5L)).toDF("window_start", "k", "cnt"),
+      cfgFor("m_ix2"), keyCols = Seq("window_start", "k"))
+    assert(indexes("m_ix2").contains(Seq("WINDOW_START", "K")))
+  }
+
   test("upsertBatch: rejects a batch whose key does not identify rows") {
     // a composite-keyed output sunk with too few key columns would have
     // its sibling rows silently destroyed on replay — must fail fast

@@ -13,6 +13,8 @@ object TestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.Sessions.CheckpointManagerConf._1,
+        graft.core.Sessions.CheckpointManagerConf._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
