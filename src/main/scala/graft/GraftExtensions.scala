@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{VectorDot, VectorDotFixed}
 
-/** The engine's SparkSessionExtensions entry point — permanent SQL
-  * function registration (vs. the per-session temp registration in
-  * `VectorDot.register`). Wire with:
+/** The engine's SparkSessionExtensions entry point — the one way its SQL
+  * functions (`vector_dot`, `vector_dot_fixed`) are registered. Wire
+  * with:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions)...

@@ -43,29 +43,27 @@ object Sessions {
 
   /** Local session sized for the fixture layout.
     *
-    * Scan-split sizing (`SPARK_GRAFT_MAX_PARTITION_BYTES`, default the
-    * Spark default 128 MB): with 128 MB bins + 4 MB openCostInBytes the
-    * 32-part fixture tables bin-pack into 1-2 scan partitions, so narrow
-    * CPU-heavy stages above a scan (decode, shingling, distinct's
-    * partial agg) can serialize. An A/B at both sf0.1 and sf1.0 showed
-    * neither a 4 MB nor the 128 MB setting dominating — small bins win
-    * on CPU-per-row paths but tax every other query with empty-split /
-    * task-launch overhead (sf0.1 +9 s, and a 5x blow-up on iterative
-    * k-means) — so the default stays Spark's, the knob exists for
-    * experiments, and the CPU-heavy paths get explicit [[Tables.spread]]
-    * calls at their scan instead (the same repartition a cluster job
-    * would carry for a pathological small-files table).
+    * Scan-split size, fixed at Spark's default 128 MB: with 128 MB bins +
+    * 4 MB openCostInBytes the 32-part fixture tables bin-pack into 1-2
+    * scan partitions, so narrow CPU-heavy stages above a scan (decode,
+    * shingling, distinct's partial agg) can serialize. An A/B at both
+    * sf0.1 and sf1.0 showed neither a 4 MB nor the 128 MB setting
+    * dominating — small bins win on CPU-per-row paths but tax every
+    * other query with empty-split / task-launch overhead (sf0.1 +9 s,
+    * and a 5x blow-up on iterative k-means) — so the size stays Spark's
+    * and the CPU-heavy paths get explicit [[Tables.spread]] calls at
+    * their scan instead (the same repartition a cluster job would carry
+    * for a pathological small-files table).
     *
     * Single-file single-row-group fixtures (the sf0.001-0.1 test data)
     * cannot split below one row group; [[Tables.spread]] is the lever
     * there too.
     */
   def local(cpus: String, utc: Boolean = false): SparkSession = {
-    val mpb = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m")
     var b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", mpb)
+      .config("spark.sql.files.maxPartitionBytes", "128m")
       // ObjectHashAggregate (collect_set/collect_list aggs) falls back
       // to SORT-BASED aggregation after this many distinct groups per
       // task — Spark's default 128 turns any fact-scale collect into a
@@ -78,11 +76,10 @@ object Sessions {
       // ~135 classes (JobProbe CodegenMetrics), so a multi-query run
       // evicts and re-janino-compiles its own classes — on local[32]
       // every task of the next stage blocks behind each ~0.5-1 s
-      // compile. 4096 entries of generated classes is a few hundred MB
-      // of metaspace at worst, well inside the 8 GB harness JVM;
-      // parameterized for smaller driver JVMs in production.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // compile. 4096 entries keep ~30 such queries' classes resident
+      // at a few hundred MB of metaspace at worst, well inside the 8 GB
+      // harness JVM.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
       .config(CheckpointManagerConf._1, CheckpointManagerConf._2)
     if (utc) b = b.config("spark.sql.session.timeZone", "UTC")

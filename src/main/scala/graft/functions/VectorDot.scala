@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -91,10 +90,4 @@ object VectorDot {
   /** Column API: `vector_dot(a, b)`. */
   def vector_dot(a: Column, b: Column): Column =
     Bridge.column(VectorDot(Bridge.expr(a), Bridge.expr(b)))
-
-  /** SQL registration: `SELECT vector_dot(a, b)` — the engine's function
-    * extension surface. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "scala_udf")
 }

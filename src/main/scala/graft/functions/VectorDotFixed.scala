@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -109,10 +108,4 @@ object VectorDotFixed {
   /** Column API: `vector_dot_fixed(a, b)`. */
   def vector_dot_fixed(a: Column, b: Column): Column =
     Bridge.column(VectorDotFixed(Bridge.expr(a), Bridge.expr(b)))
-
-  /** SQL registration (parity with [[VectorDot.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot_fixed", exprs => VectorDotFixed(exprs(0), exprs(1)),
-      "scala_udf")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,7 +71,7 @@ object VectorOuterFixed {
     * covariance cells AND the per-dim moment sums together —
     * [[graft.operators.Similarity.covarianceMatrix]]'s one-corpus-pass
     * shape. Each linear term is exactly the `floor(x·1e12)::long` the
-    * per-dim sum12 fold quantized. */
+    * per-dim [[ExactNum.sumFloor]] fold at 12 digits quantized. */
   def terms(v: ArrayData, isDouble: Boolean, withLinear: Boolean): ArrayData = {
     val d = v.numElements()
     val quad = d * (d + 1) / 2
@@ -124,9 +123,4 @@ object VectorOuterFixed {
       .otherwise(i0)
     (i, i + (k - off(i)))
   }
-
-  /** SQL registration (parity with [[VectorDot.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_outer_fixed", exprs => VectorOuterFixed(exprs(0)), "scala_udf")
 }

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DecimalType => DT}
+import graft.functions.ExactNum.{quantize, quantizeDriver, quantizeSql,
+  sumFloorDriver, sumFloorSql}
 
 /** Platt scaling (Platt 1999): calibrate a raw classifier SCORE into a
   * probability by fitting p = σ(a·m + b) with Newton/IRLS — the step
@@ -19,10 +20,11 @@ import org.apache.spark.sql.types.{DecimalType, DecimalType => DT}
   * solve. Fixed iteration count; the histogram is persisted once.
   *
   * Determinism / oracle-portability:
-  *  - per-row p = q6(1/(1 + q6(exp(clamp(−(a·m+b), ±30))))) — the
-  *    ln/exp DECIMAL(28,6) round-trip discipline (tx13/tx14), clamp
-  *    keeps exp finite at any margin;
-  *  - moment sums are floor·1e6 decimal folds (order-insensitive);
+  *  - per-row p = quantize(1/(1 + quantize(exp(clamp(−(a·m+b), ±30)))))
+  *    — the ln/exp DECIMAL(28,6) round-trip discipline (tx13/tx14),
+  *    clamp keeps exp finite at any margin;
+  *  - moment sums are floor·1e6 decimal folds (order-insensitive):
+  *    ExactNum.sumFloorDriver on the driver, sumFloorSql in the twin;
   *  - the Newton update `a − (S3·G1 − S2·G2)/det` is the IDENTICAL
   *    double expression on the driver and in the SQL twin, evaluated on
   *    identical operands — bit-equal results with no quantization of
@@ -30,29 +32,11 @@ import org.apache.spark.sql.types.{DecimalType, DecimalType => DT}
   */
 object Calibration {
 
-  private def q6(c: Column): Column =
-    c.cast(DecimalType(28, 6)).cast("double")
-
-  /** Order-insensitive quantized fold (the tx23 sumF6). */
-  private def f6(c: Column): Column =
-    sum(floor(c * 1e6).cast(DT(38, 0))).cast("double") / 1e6
-
   /** σ(a·m + b) through the portable exp round-trip. */
   private def pCal(m: Column, a: Double, b: Double): Column = {
     val z = greatest(least(-(lit(a) * m + lit(b)), lit(30.0)), lit(-30.0))
-    q6(lit(1.0) / (lit(1.0) + q6(exp(z))))
+    quantize(lit(1.0) / (lit(1.0) + quantize(exp(z))))
   }
-
-  /** Driver mirror of the Spark-side q6 round-trip: Spark's
-    * Cast(double → DECIMAL(28,6)) goes through
-    * BigDecimal.valueOf(d).setScale(6, HALF_UP) (the shortest-repr
-    * valueOf, NOT the exact binary constructor), then Decimal.toDouble —
-    * reproduced operation-for-operation so the driver fit and the
-    * executor projection compute the identical double. The independent
-    * DuckDB twin hash-gates this equivalence every round. */
-  private def q6d(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
   /** Driver mirror of [[pCal]]: Spark's exp is java.lang.Math.exp —
     * the same JVM intrinsic this driver call hits. The clamp mirrors
@@ -65,18 +49,7 @@ object Calibration {
     val z0 = -(a * m + b)
     val zLo = if (z0.isNaN) 30.0 else math.min(z0, 30.0) // Spark least
     val z = math.max(zLo, -30.0) // zLo is finite here, max is exact
-    q6d(1.0 / (1.0 + q6d(math.exp(z))))
-  }
-
-  /** Driver mirror of [[f6]]: Spark's floor(double) is
-    * math.floor(d).toLong (overflow-wrapping, matched exactly); the
-    * DECIMAL(38,0) sum is an exact integer fold (BigInt here), and
-    * Cast(decimal→double) and BigInt.doubleValue are both
-    * correctly-rounded conversions. */
-  private def f6d(vals: Iterator[Double]): Double = {
-    var s = BigInt(0)
-    vals.foreach(v => s += BigInt(math.floor(v * 1e6).toLong))
-    s.doubleValue / 1e6
+    quantizeDriver(1.0 / (1.0 + quantizeDriver(math.exp(z))))
   }
 
   /** Fit on a (mCol, nCol, kCol) histogram — n rows, k positives per
@@ -132,9 +105,8 @@ object Calibration {
     val tPlus = (nPos.doubleValue + 1.0) / (nPos.doubleValue + 2.0)
     val tMinus = 1.0 / (nNeg.doubleValue + 2.0)
     var a = 0.0
-    var b = BigDecimal(
+    var b = quantizeDriver(
       math.log((nNeg.doubleValue + 1.0) / (nPos.doubleValue + 1.0)))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     for (_ <- 1 to iters) {
       val p = mv.map(pCalD(_, a, b))
       val w = rows.indices.map(i => nv(i) * p(i) * (1.0 - p(i)))
@@ -142,11 +114,12 @@ object Calibration {
       // Σ per-sample (p − t_i) = n·p − (k·t⁺ + (n−k)·t⁻)
       val r = rows.indices.map(i =>
         nv(i) * p(i) - (kv(i) * tPlus + (nv(i) - kv(i)) * tMinus))
-      val s1 = f6d(rows.indices.iterator.map(i => w(i) * mv(i) * mv(i)))
-      val s2 = f6d(rows.indices.iterator.map(i => w(i) * mv(i)))
-      val s3 = f6d(w.iterator)
-      val g1 = f6d(rows.indices.iterator.map(i => r(i) * mv(i)))
-      val g2 = f6d(r.iterator)
+      val ix = rows.indices
+      val s1 = sumFloorDriver(ix.iterator.map(i => w(i) * mv(i) * mv(i)))
+      val s2 = sumFloorDriver(ix.iterator.map(i => w(i) * mv(i)))
+      val s3 = sumFloorDriver(w.iterator)
+      val g1 = sumFloorDriver(ix.iterator.map(i => r(i) * mv(i)))
+      val g2 = sumFloorDriver(r.iterator)
       val det = s1 * s3 - s2 * s2
       // A degenerate histogram (e.g. one distinct margin) has det == 0;
       // the update would silently turn a/b (and every p_cal) into
@@ -162,8 +135,8 @@ object Calibration {
       }
     }
     // serve from the collected rows (LocalRelation): the per-row p_cal
-    // projection still evaluates through the SPARK q6/exp expressions,
-    // so the output AST is unchanged from the r8 form
+    // projection still evaluates through the SPARK quantize/exp
+    // expressions, so the output AST is unchanged from the r8 form
     val m = col(mCol).cast("double")
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), slim.schema)
       .select(col(mCol), col(nCol), col(kCol),
@@ -173,13 +146,10 @@ object Calibration {
   /** The DuckDB twin: the identical Newton unroll as CTEs over a
     * histogram CTE named `hist(m, n, k)` supplied by `histSql`. */
   def plattSql(histSql: String, iters: Int = 3): String = {
-    def q6s(e: String) = s"CAST(CAST(($e) AS DECIMAL(28,6)) AS DOUBLE)"
-    def f6s(e: String) =
-      s"CAST(sum(CAST(floor(($e) * 1e6) AS DECIMAL(38,0))) AS DOUBLE) / 1e6"
     def pSql(aE: String, bE: String) = {
       val z = s"greatest(least(-(($aE) * CAST(m AS DOUBLE) + ($bE)), " +
         "CAST(30.0 AS DOUBLE)), CAST(-30.0 AS DOUBLE))"
-      q6s(s"1.0 / (1.0 + ${q6s(s"exp($z)")})")
+      quantizeSql(s"1.0 / (1.0 + ${quantizeSql(s"exp($z)")})")
     }
     val iterCtes = (1 to iters).map { it =>
       val prev = s"pr${it - 1}"
@@ -201,11 +171,11 @@ object Calibration {
         s" + (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)) * tc.tminus))"
       s"""mo$it AS (
          |  SELECT
-         |    ${f6s(s"CAST(n AS DOUBLE) * $p * (1.0 - $p) * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)")} AS s1,
-         |    ${f6s(s"CAST(n AS DOUBLE) * $p * (1.0 - $p) * CAST(m AS DOUBLE)")} AS s2,
-         |    ${f6s(s"CAST(n AS DOUBLE) * $p * (1.0 - $p)")} AS s3,
-         |    ${f6s(s"$resid * CAST(m AS DOUBLE)")} AS g1,
-         |    ${f6s(resid)} AS g2
+         |    ${sumFloorSql(s"CAST(n AS DOUBLE) * $p * (1.0 - $p) * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)")} AS s1,
+         |    ${sumFloorSql(s"CAST(n AS DOUBLE) * $p * (1.0 - $p) * CAST(m AS DOUBLE)")} AS s2,
+         |    ${sumFloorSql(s"CAST(n AS DOUBLE) * $p * (1.0 - $p)")} AS s3,
+         |    ${sumFloorSql(s"$resid * CAST(m AS DOUBLE)")} AS g1,
+         |    ${sumFloorSql(resid)} AS g2
          |  FROM hist CROSS JOIN $prev CROSS JOIN tc
          |), pr$it AS (
          |  SELECT
@@ -228,7 +198,7 @@ object Calibration {
        |  FROM tots
        |), pr0 AS (
        |  SELECT CAST(0 AS DOUBLE) AS a,
-       |    ${q6s("ln((nneg + CAST(1 AS DOUBLE)) / (npos + CAST(1 AS DOUBLE)))")}
+       |    ${quantizeSql("ln((nneg + CAST(1 AS DOUBLE)) / (npos + CAST(1 AS DOUBLE)))")}
        |      AS b
        |  FROM tots
        |),

@@ -183,8 +183,8 @@ object LanguageModel {
       .na.fill(0.0, Seq("logprob")).na.fill(0L, Seq("n_bigrams"))
       .withColumn("ppl",
         when(col("n_bigrams") > 0,
-          exp(col("logprob") * lit(-1.0) / col("n_bigrams").cast("double"))
-            .cast(ExactNum.Exact).cast("double")))
+          ExactNum.quantize(exp(col("logprob") * lit(-1.0) /
+            col("n_bigrams").cast("double")))))
       .select(col("doc").as(idCol), col("n_bigrams"), col("logprob"),
         col("ppl"))
   }

@@ -773,14 +773,14 @@ object Similarity {
     // PLUS its d linear terms (flat index k ≥ T = d(d+1)/2 ⇒ dim =
     // k − T), so the single (d, k) hash agg yields the covariance
     // cells AND the per-dim moment sums — the former separate
-    // posexplode + sum12 stats pass re-scanned the corpus and folded
-    // 2 more decimals per element (7.8 s task CPU at sf0.1). Each
+    // posexplode + sumFloor(·, 12) stats pass re-scanned the corpus and
+    // folded 2 more decimals per element (7.8 s task CPU at sf0.1). Each
     // quadratic term is bit-identical to the HOF AST's
-    // floor(x_i·x_j·1e12)::long and each linear term to sum12's
-    // floor(x·1e12)::long, so every downstream DECIMAL(38,0) fold is
-    // unchanged (spec-pinned term-for-term; the former nested
-    // transform/struct HOF form evaluated interpreted per element,
-    // ~300 µs/row at d=64).
+    // floor(x_i·x_j·1e12)::long and each linear term to
+    // sumFloor(·, 12)'s floor(x·1e12)::long, so every downstream
+    // DECIMAL(38,0) fold is unchanged (spec-pinned term-for-term; the
+    // former nested transform/struct HOF form evaluated interpreted per
+    // element, ~300 µs/row at d=64).
     // The corpus-sized agg keys on the PLAIN (d, k) columns — (i, j)
     // derive from ijOf's sqrt/when tree only on the aggregated
     // ≤ #lengths·d² frame (inlined per term row, the optimizer
@@ -815,7 +815,7 @@ object Similarity {
         (sum(col("sd")).cast("double") / Scale).as("s_ij"))
     // per-dim moments: s from the linear tail, s2 from the diagonal
     // cells (floor((x·x)·1e12) ≡ the diagonal term — same AST), both
-    // exact-decimal merges ⇒ doubles identical to the former sum12s
+    // exact-decimal merges ⇒ doubles identical to sumFloor(·, 12)
     val linS = part.filter(kL >= tQ)
       .groupBy((kL - tQ).as("dim"))
       .agg((sum(col("sd")).cast("double") / Scale).as("s"))
@@ -856,17 +856,14 @@ object Similarity {
     * mean/std/z derive per-row in double with one oracle-shared AST. */
   def standardize(vecs: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    def sum12(c: Column): Column =
-      sum(floor(c * Scale)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .cast("double") / Scale
+    import graft.functions.ExactNum.sumFloor
     val ex = vecs.select(col(idCol),
         posexplode(col(vecCol)).as(Seq("pos0", "xf")))
       .select(col(idCol), col("pos0").cast("long").as("dim"),
         col("xf").cast("double").as("x"))
     val stats = ex.groupBy(col("dim"))
-      .agg(count(lit(1)).as("n"), sum12(col("x")).as("s"),
-        sum12(col("x") * col("x")).as("s2"))
+      .agg(count(lit(1)).as("n"), sumFloor(col("x"), 12).as("s"),
+        sumFloor(col("x") * col("x"), 12).as("s2"))
       .select(col("dim"), (col("s") / col("n")).as("mean"),
         sqrt((col("s2") - col("s") * col("s") / col("n")) / (col("n") - 1))
           .as("std"))

@@ -96,8 +96,7 @@ object ExtendedQueries extends QueryPack {
       t(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", day.as("day"), $"o_totalprice")
         .withColumn("cnt_30d", count(lit(1)).over(w))
-        .withColumn("sum_30d",
-          sum($"o_totalprice".cast(Exact)).over(w).cast("double"))
+        .withColumn("sum_30d", sumExactOver($"o_totalprice", w))
         .select($"o_orderkey", $"o_custkey", $"day", $"cnt_30d", $"sum_30d")
     }),
 
@@ -260,8 +259,7 @@ object ExtendedQueries extends QueryPack {
       t(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
         .withColumn("mov_avg",
-          sum($"o_totalprice".cast(Exact)).over(w).cast("double") /
-            count(lit(1)).over(w))
+          sumExactOver($"o_totalprice", w) / count(lit(1)).over(w))
     }),
 
     // Q52 — ratio-to-report: each order's share of its customer's total
@@ -272,8 +270,7 @@ object ExtendedQueries extends QueryPack {
       t(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
         .withColumn("share",
-          $"o_totalprice" /
-            sum($"o_totalprice".cast(Exact)).over(w).cast("double"))
+          $"o_totalprice" / sumExactOver($"o_totalprice", w))
     }),
 
     // Q53 — fuzzy string matching by edit distance: blocked self-join
@@ -1218,10 +1215,6 @@ object ExtendedQueries extends QueryPack {
     // ulp apart), while floor of the SAME double is bit-identical.
     "q72_group_regression" -> ((s, dir) => {
       import s.implicits._
-      def sumF6(c: org.apache.spark.sql.Column) =
-        sum(floor(c * 1e6)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / 1e6
       val epoch = lit("2024-01-01 00:00:00").cast("timestamp")
       t(s, dir, "events")
         .select($"event_type",
@@ -1230,9 +1223,9 @@ object ExtendedQueries extends QueryPack {
           $"value".as("y"))
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
-          sumF6($"x").as("sx"), sumF6($"y").as("sy"),
-          sumF6($"x" * $"y").as("sxy"),
-          sumF6($"x" * $"x").as("sxx"))
+          sumFloor($"x").as("sx"), sumFloor($"y").as("sy"),
+          sumFloor($"x" * $"y").as("sxy"),
+          sumFloor($"x" * $"x").as("sxx"))
         .withColumn("slope",
           ($"n" * $"sxy" - $"sx" * $"sy") / ($"n" * $"sxx" - $"sx" * $"sx"))
         .withColumn("intercept", ($"sy" - $"slope" * $"sx") / $"n")
@@ -1266,7 +1259,7 @@ object ExtendedQueries extends QueryPack {
             .otherwise($"last_mkt.mtype"))
         .groupBy($"attr")
         .agg(count(lit(1)).as("n_purchases"),
-          graft.functions.ExactNum.sumExact($"value").as("revenue"))
+          sumExact($"value").as("revenue"))
     }),
 
     // Q73 — Benford first-digit screen: the classic forensic-accounting
@@ -1392,11 +1385,6 @@ object ExtendedQueries extends QueryPack {
         .agg(count(lit(1)).as("users_7d")) // (rday, user) distinct above
     }))
 
-  /** q72's fold twin: fixed-point floor at 1e-6 (bit-identical across
-    * engines; a rounding decimal cast is not at these magnitudes). */
-  private def sumF6Sql(e: String): String =
-    s"(CAST(sum(CAST(floor(($e) * 1e6) AS DECIMAL(38,0))) AS DOUBLE) / 1e6)"
-
   /** q61's sketch size: 64 minima ⇒ expected relative error
     * ~1/√(k−2) ≈ 12.7%; the oracle reproduces the estimate exactly
     * either way, this only calibrates how informative it is. */
@@ -1461,7 +1449,7 @@ object ExtendedQueries extends QueryPack {
          |)
          |SELECT o_orderpriority, count(*) AS n_bloom_pass,
          |  count(b.bkey) AS n_true,
-         |  ${graft.functions.ExactNum.sumExactSql(
+         |  ${sumExactSql(
               "CASE WHEN b.bkey IS NOT NULL THEN o_totalprice END")}
          |    AS true_revenue
          |FROM orders o JOIN pass ON o.o_orderkey = pass.okey
@@ -1869,7 +1857,7 @@ object ExtendedQueries extends QueryPack {
     // marketing timestamp and type carried as two IGNORE NULLS
     // last_values over one frame (they always read the same row).
     "q80_attribution" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_id, user_id, event_type, value,
         |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
         |  FROM events
@@ -1891,7 +1879,7 @@ object ExtendedQueries extends QueryPack {
         |            WHEN ts_s - mts > 3600 THEN 'direct'
         |            ELSE mtype END AS attr,
         |  count(*) AS n_purchases,
-        |  CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+        |  ${sumExactSql("value")} AS revenue
         |FROM carried WHERE event_type = 'purchase'
         |GROUP BY 1""".stripMargin,
     "q72_group_regression" ->
@@ -1903,9 +1891,9 @@ object ExtendedQueries extends QueryPack {
          |  FROM events
          |), m AS (
          |  SELECT event_type, count(*) AS n,
-         |    ${sumF6Sql("x")} AS sx, ${sumF6Sql("y")} AS sy,
-         |    ${sumF6Sql("x * y")} AS sxy,
-         |    ${sumF6Sql("x * x")} AS sxx
+         |    ${sumFloorSql("x")} AS sx, ${sumFloorSql("y")} AS sy,
+         |    ${sumFloorSql("x * y")} AS sxy,
+         |    ${sumFloorSql("x * x")} AS sxx
          |  FROM pts GROUP BY event_type
          |)
          |SELECT event_type, n,
@@ -2112,11 +2100,10 @@ object ExtendedQueries extends QueryPack {
         |  UNION ALL BY NAME
         |  SELECT o_orderkey AS id, o_orderpriority AS prio FROM orders)""".stripMargin,
     "q41_range_frame" ->
-      """SELECT o_orderkey, o_custkey,
+      s"""SELECT o_orderkey, o_custkey,
         |  epoch_ms(o_orderdate) // 86400000 AS day,
         |  count(*) OVER w AS cnt_30d,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) OVER w AS DOUBLE)
-        |    AS sum_30d
+        |  ${sumExactOverSql("o_totalprice", "w")} AS sum_30d
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey
         |  ORDER BY epoch_ms(o_orderdate) // 86400000
@@ -2178,9 +2165,9 @@ object ExtendedQueries extends QueryPack {
         |  CAST(weekofyear(ts) AS BIGINT) AS iso_week
         |FROM events""".stripMargin,
     "q51_moving_avg" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) OVER w AS DOUBLE)
-        |    / count(*) OVER w AS mov_avg
+      s"""SELECT o_orderkey, o_custkey, o_totalprice,
+        |  ${sumExactOverSql("o_totalprice", "w")} / count(*) OVER w
+        |    AS mov_avg
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
         |  ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)""".stripMargin,
@@ -2222,10 +2209,10 @@ object ExtendedQueries extends QueryPack {
         |WINDOW w AS (PARTITION BY o_custkey
         |             ORDER BY o_totalprice, o_orderkey)""".stripMargin,
     "q52_ratio_to_report" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
+      s"""SELECT o_orderkey, o_custkey, o_totalprice,
         |  o_totalprice /
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(28,6)))
-        |      OVER (PARTITION BY o_custkey) AS DOUBLE) AS share
+        |    ${sumExactOverSql("o_totalprice", "(PARTITION BY o_custkey)")}
+        |      AS share
         |FROM orders""".stripMargin,
     "q50_try_funcs" ->
       """SELECT p_partkey,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.ExactNum.sumFloorSql
 import graft.functions.TextFunctions
 
 /** The in-engine logistic-regression trainer shared by pl27 (the
@@ -153,9 +154,6 @@ object LrBase {
     * pl27 and pl28 oracles. Emits CTE definitions only (no leading
     * WITH, no trailing comma). */
   def chainSql(withNc: Boolean): String = {
-    def f6(e: String): String =
-      s"(CAST(sum(CAST(floor(($e) * 1e6) AS DECIMAL(38,0))) AS DOUBLE)" +
-        " / 1e6)"
     val enWords = TextFunctions.langMarkers.head._2
     val x1 =
       s"(CAST(${TextFunctions.wordListCountSql("lower(text)", enWords)}" +
@@ -179,8 +177,10 @@ object LrBase {
     for (t <- 1 to Rounds) {
       sb ++= s""",
          |g$t AS MATERIALIZED (
-         |  SELECT ${f6(eExpr)} AS g0, ${f6(s"$eExpr * x1")} AS g1,
-         |    ${f6(s"$eExpr * x2")} AS g2, ${f6(s"$eExpr * x3")} AS g3,
+         |  SELECT ${sumFloorSql(eExpr)} AS g0,
+         |    ${sumFloorSql(s"$eExpr * x1")} AS g1,
+         |    ${sumFloorSql(s"$eExpr * x2")} AS g2,
+         |    ${sumFloorSql(s"$eExpr * x3")} AS g3,
          |    count(*) AS n
          |  FROM (SELECT y, x1, x2, x3, $mExpr AS m
          |        FROM feats, wt${t - 1} w) z

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.ExactNum._
 import graft.functions.TextFunctions
 
 /** Training-data pipeline build steps beyond dedup/similarity: embedding
@@ -90,10 +91,7 @@ object PipelineQueries extends QueryPack {
           (length($"text") + 1).cast("double").as("w"),
           ((PortableHash.hash60($"doc_id".cast("string")) + 1L)
             .cast("double") / lit(1.152921504606846976e18)).as("u"))
-        .withColumn("k",
-          (-log($"u"))
-            .cast(org.apache.spark.sql.types.DecimalType(28, 6))
-            .cast("double") / $"w")
+        .withColumn("k", quantize(-log($"u")) / $"w")
       keyed.orderBy($"k".asc, $"doc_id".asc).limit(k)
         .withColumn("rank", row_number().over(
           org.apache.spark.sql.expressions.Window
@@ -473,18 +471,16 @@ object PipelineQueries extends QueryPack {
     // the key carries a full hash oracle.
     "pl31_recrawl_schedule" -> ((s, dir) => {
       import s.implicits._
-      def q6(c: org.apache.spark.sql.Column) =
-        c.cast(graft.functions.ExactNum.Exact).cast("double")
       RecrawlBase.comparisons(s, dir)
         .groupBy($"canonical_url", $"period")
         .agg(count(lit(1)).as("n_cmp"),
           sum($"chg").as("n_chg"),
           sum($"gap").as("t_span"))
-        .withColumn("lambda_hat", q6(
+        .withColumn("lambda_hat", quantize(
           -log((($"n_cmp" - $"n_chg").cast("double") + lit(0.5)) /
                ($"n_cmp".cast("double") + lit(0.5))) /
           ($"t_span".cast("double") / $"n_cmp".cast("double"))))
-        .withColumn("next_interval", q6(lit(1.0) / $"lambda_hat"))
+        .withColumn("next_interval", quantize(lit(1.0) / $"lambda_hat"))
     }),
 
     // PL30 — quality-weighted temperature mix → token packing, the
@@ -512,11 +508,7 @@ object PipelineQueries extends QueryPack {
     // DECIMAL (pl15's discipline), quality sums as floor·1e6 folds.
     "pl30_quality_mix_pack" -> ((s, dir) => {
       import s.implicits._
-      import graft.functions.{ExactNum, PortableHash}
-      def sumF6(c: org.apache.spark.sql.Column) =
-        sum(floor(c * 1e6)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / 1e6
+      import graft.functions.PortableHash
       val d = Tables.spread(Tables.load(s, dir, "documents"))
         .select($"doc_id",
           concat(lit("s"), (length(bin($"doc_id" + 2)) - 1)
@@ -526,10 +518,9 @@ object PipelineQueries extends QueryPack {
       val stats = d.groupBy($"src").agg(
         count(lit(1)).as("n_docs"),
         sum($"n_tok").as("src_tok"),
-        sumF6($"q").as("sum_q"))
-      val ws = stats.withColumn("w",
-        (sqrt($"n_docs".cast("double")) *
-          ($"sum_q" / $"n_docs".cast("double"))).cast(ExactNum.Exact))
+        sumFloor($"q").as("sum_q"))
+      val ws = stats.withColumn("w", toExact(sqrt($"n_docs".cast("double")) *
+        ($"sum_q" / $"n_docs".cast("double"))))
       val tot = ws.agg(sum($"w").cast("double").as("w_tot"),
         expr("sum(src_tok) div 2").as("budget"))
       val rates = ws.crossJoin(broadcast(tot)).select($"src",
@@ -749,12 +740,11 @@ object PipelineQueries extends QueryPack {
     // nothing corpus-scale shuffles except the per-source count.
     "pl15_temperature_mix" -> ((s, dir) => {
       import s.implicits._
-      import graft.functions.{ExactNum, PortableHash}
+      import graft.functions.PortableHash
       val docs = Tables.load(s, dir, "documents")
       val counts = docs.groupBy($"source")
         .agg(count(lit(1)).as("n_docs"))
-      val ws = counts.withColumn("w",
-        sqrt($"n_docs".cast("double")).cast(ExactNum.Exact))
+      val ws = counts.withColumn("w", toExact(sqrt($"n_docs".cast("double"))))
       val tot = ws.agg(sum($"w").cast("double").as("w_tot"),
         expr("sum(n_docs) div 2").as("budget"))
       val rates = ws.crossJoin(broadcast(tot)).select(
@@ -843,8 +833,8 @@ object PipelineQueries extends QueryPack {
           max($"p05").as("p05"), max($"p95").as("p95"),
           sum(when($"v" < $"p05", 1L).otherwise(0L)).as("clipped_lo"),
           sum(when($"v" > $"p95", 1L).otherwise(0L)).as("clipped_hi"),
-          graft.functions.ExactNum.sumExact(
-            least(greatest($"v", $"p05"), $"p95")).as("sum_winsorized"))
+          sumExact(least(greatest($"v", $"p05"), $"p95"))
+            .as("sum_winsorized"))
       // tie the helper's persist to the frame actually returned
       // (ADVICE r13)
       graft.core.ManagedPersist.extendHandles(hck, res)
@@ -881,7 +871,7 @@ object PipelineQueries extends QueryPack {
       grid.withColumn("term", dev * dev / denom)
         .groupBy($"source")
         .agg(max($"n_s").as("n_docs"),
-          graft.functions.ExactNum.sumExact($"term").as("chi2"))
+          sumExact($"term").as("chi2"))
     }),
 
     // deterministic sharded epoch shuffle: the training-order permutation
@@ -1065,7 +1055,10 @@ object PipelineQueries extends QueryPack {
     // estimator with explicit double casts (a bare 0.5 in DuckDB is
     // DECIMAL and would run the ratio in decimal arithmetic);
     // λ̂ DECIMAL(28,6)-quantized, next_interval from the quantized λ̂.
-    "pl31_recrawl_schedule" ->
+    "pl31_recrawl_schedule" -> {
+      val lambda = "-ln((CAST(n_cmp - n_chg AS DOUBLE) + 0.5) /" +
+        " (CAST(n_cmp AS DOUBLE) + 0.5)) /" +
+        " (CAST(t_span AS DOUBLE) / CAST(n_cmp AS DOUBLE))"
       s"""WITH $recrawlFetchCtesSql, lagd AS (
          |  SELECT canonical_url, r, period, ck,
          |    lag(ck) OVER (PARTITION BY canonical_url ORDER BY r)
@@ -1086,17 +1079,13 @@ object PipelineQueries extends QueryPack {
          |  FROM comp GROUP BY 1, 2
          |), lam AS (
          |  SELECT canonical_url, period, n_cmp, n_chg, t_span,
-         |    CAST(CAST((
-         |      -ln((CAST(n_cmp - n_chg AS DOUBLE) + 0.5) /
-         |          (CAST(n_cmp AS DOUBLE) + 0.5)) /
-         |      (CAST(t_span AS DOUBLE) / CAST(n_cmp AS DOUBLE))
-         |    ) AS DECIMAL(28,6)) AS DOUBLE) AS lambda_hat
+         |    ${quantizeSql(lambda)} AS lambda_hat
          |  FROM pp
          |)
          |SELECT canonical_url, period, n_cmp, n_chg, t_span, lambda_hat,
-         |  CAST(CAST((CAST(1.0 AS DOUBLE) / lambda_hat)
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS next_interval
-         |FROM lam""".stripMargin,
+         |  ${quantizeSql("CAST(1.0 AS DOUBLE) / lambda_hat")} AS next_interval
+         |FROM lam""".stripMargin
+    },
     // pl26's twin: the same aggregate over the flat table — the key's
     // content is the LAYOUT (pruned scan, spec-pinned), not the math.
     "pl26_partition_prune" ->
@@ -1237,13 +1226,12 @@ object PipelineQueries extends QueryPack {
          |), c AS (
          |  SELECT src, count(*) AS n_docs,
          |    CAST(sum(n_tok) AS BIGINT) AS src_tok,
-         |    CAST(sum(CAST(floor(q * 1e6) AS DECIMAL(38,0))) AS DOUBLE)
-         |      / 1e6 AS sum_q
+         |    ${sumFloorSql("q")} AS sum_q
          |  FROM dd GROUP BY src
          |), w AS (
          |  SELECT src, n_docs, src_tok,
-         |    CAST(sqrt(CAST(n_docs AS DOUBLE)) *
-         |      (sum_q / CAST(n_docs AS DOUBLE)) AS DECIMAL(28,6)) AS w
+         |    ${toExactSql("sqrt(CAST(n_docs AS DOUBLE)) *" +
+              " (sum_q / CAST(n_docs AS DOUBLE))")} AS w
          |  FROM c
          |), t AS (
          |  SELECT CAST(sum(w) AS DOUBLE) AS w_tot,
@@ -1292,8 +1280,8 @@ object PipelineQueries extends QueryPack {
       s"""WITH keyed AS (
          |  SELECT doc_id,
          |    CAST(length(text) + 1 AS DOUBLE) AS w,
-         |    CAST(CAST(-ln(CAST($h + 1 AS DOUBLE) /
-         |        1152921504606846976.0) AS DECIMAL(28,6)) AS DOUBLE)
+         |    ${quantizeSql(s"-ln(CAST($h + 1 AS DOUBLE) /" +
+              " 1152921504606846976.0)")}
          |      / CAST(length(text) + 1 AS DOUBLE) AS k
          |  FROM documents
          |)
@@ -1351,7 +1339,7 @@ object PipelineQueries extends QueryPack {
     // pl17's twin: identical histogram-cumulative rank extraction (value
     // at rank k = min v with cum(v) ≥ k), identical clip + decimal fold.
     "pl17_winsorize" ->
-      """WITH hist AS (
+      s"""WITH hist AS (
         |  SELECT l_returnflag AS g, l_extendedprice AS v, count(*) AS c
         |  FROM lineitem GROUP BY 1, 2
         |), cum AS (
@@ -1375,15 +1363,15 @@ object PipelineQueries extends QueryPack {
         |    AS BIGINT) AS clipped_lo,
         |  CAST(sum(CASE WHEN l_extendedprice > p95 THEN 1 ELSE 0 END)
         |    AS BIGINT) AS clipped_hi,
-        |  CAST(sum(CAST(least(greatest(l_extendedprice, p05), p95)
-        |    AS DECIMAL(28,6))) AS DOUBLE) AS sum_winsorized
+        |  ${sumExactSql("least(greatest(l_extendedprice, p05), p95)")}
+        |    AS sum_winsorized
         |FROM lineitem li JOIN bounds ON li.l_returnflag = bounds.g
         |GROUP BY li.l_returnflag""".stripMargin,
     // pl18's twin: the same grid completion and the same double AST
     // ((obs·N − n_s·n_b)² / ((N·n_s)·n_b)) so the IEEE results match
     // bit-for-bit before the decimal fold.
     "pl18_source_drift" ->
-      """WITH obs AS (
+      s"""WITH obs AS (
         |  SELECT source, lang, count(*) AS obs
         |  FROM documents GROUP BY source, lang
         |), s AS (
@@ -1408,8 +1396,7 @@ object PipelineQueries extends QueryPack {
         |  FROM grid
         |)
         |SELECT source, max(n_s) AS n_docs,
-        |  CAST(sum(CAST(dev * dev / denom AS DECIMAL(28,6))) AS DOUBLE)
-        |    AS chi2
+        |  ${sumExactSql("dev * dev / denom")} AS chi2
         |FROM terms GROUP BY source""".stripMargin,
     // pl15's twin replays the α=0.5 rate derivation with the identical
     // numeric AST: IEEE sqrt → DECIMAL(28,6) weight sum → double
@@ -1420,7 +1407,7 @@ object PipelineQueries extends QueryPack {
          |  SELECT source, count(*) AS n_docs FROM documents GROUP BY source
          |), w AS (
          |  SELECT source, n_docs,
-         |    CAST(sqrt(CAST(n_docs AS DOUBLE)) AS DECIMAL(28,6)) AS w
+         |    ${toExactSql("sqrt(CAST(n_docs AS DOUBLE))")} AS w
          |  FROM c
          |), t AS (
          |  SELECT CAST(sum(w) AS DOUBLE) AS w_tot,
@@ -1658,7 +1645,6 @@ object PipelineQueries extends QueryPack {
     * below the 1e-6 quantum); integer/boolean columns were always exact,
     * and the rank rule ties on (weight DESC, doc ASC) identically. */
   private lazy val dsirTwinSql: Map[String, String] = {
-    import graft.functions.ExactNum.sumExactSql
     import graft.functions.PortableHash.hash60Sql
     val B = 4096
     val sql =

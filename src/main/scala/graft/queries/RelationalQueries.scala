@@ -130,10 +130,8 @@ object RelationalQueries extends QueryPack {
         .orderBy($"o_orderdate".asc, $"o_orderkey".asc)
       t(s, dir, "orders")
         .filter($"o_custkey" < 50)
-        .withColumn("running_spend",
-          sum($"o_totalprice".cast(Exact))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double"))
+        .withColumn("running_spend", sumExactOver($"o_totalprice",
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .withColumn("prev_price", lag($"o_totalprice", 1).over(w))
         .select($"o_custkey", $"o_orderkey", $"o_totalprice",
           $"running_spend", $"prev_price")
@@ -638,14 +636,15 @@ object RelationalQueries extends QueryPack {
         |      ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
         |  FROM part) x
         |WHERE rn <= 3""".stripMargin,
-    "q9_running_sum" ->
+    "q9_running_sum" -> {
+      val w = "(PARTITION BY o_custkey ORDER BY o_orderdate ASC," +
+        " o_orderkey ASC ROWS UNBOUNDED PRECEDING)"
       s"""SELECT o_custkey, o_orderkey, o_totalprice,
-         |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6)))
-         |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-         |          ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_spend,
+         |  ${sumExactOverSql("o_totalprice", w)} AS running_spend,
          |  lag(o_totalprice, 1) OVER (PARTITION BY o_custkey
          |    ORDER BY o_orderdate ASC, o_orderkey ASC) AS prev_price
-         |FROM orders WHERE o_custkey < 50""".stripMargin,
+         |FROM orders WHERE o_custkey < 50""".stripMargin
+    },
     "q10_rollup" ->
       s"""SELECT n_name, c_mktsegment, count(*) AS cnt,
          |  ${sumExactSql("c_acctbal")} AS sum_bal

@@ -323,8 +323,6 @@ object SimilarityQueries extends QueryPack {
   private def ndcgScore(qIds: DataFrame, rel: DataFrame,
                         lists: Seq[(String, DataFrame)]): DataFrame = {
     import org.apache.spark.sql.Column
-    def q6(c: Column) =
-      c.cast(graft.functions.ExactNum.Exact).cast("double")
     def gain(g: Column) =
       when(g === 3L, 7.0).when(g === 2L, 3.0)
         .when(g === 1L, 1.0).otherwise(0.0)
@@ -343,17 +341,16 @@ object SimilarityQueries extends QueryPack {
         .when(col("i") <= col("n3") + col("n2") + col("n1"), 1L)
         .otherwise(0L))
       .groupBy(col("query_id"))
-      .agg(graft.functions.ExactNum.sumExact(
+      .agg(sumExact(
         gain(col("g")) / (log(col("i").cast("double") + 1.0) / ln2))
         .as("idcg"))
     def dcgOf(list: DataFrame, as: String) = list
       .join(rel, Seq("query_id", "doc_id"), "left")
       .groupBy(col("query_id"))
-      .agg(graft.functions.ExactNum.sumExact(
-        gain(coalesce(col("rel"), lit(0L))) /
-          (log(col("rank").cast("double") + 1.0) / ln2)).as(as))
+      .agg(sumExact(gain(coalesce(col("rel"), lit(0L))) /
+        (log(col("rank").cast("double") + 1.0) / ln2)).as(as))
     def nd(dcg: Column) =
-      when(col("idcg") > 0.0, q6(coalesce(dcg, lit(0.0)) / col("idcg")))
+      when(col("idcg") > 0.0, quantize(coalesce(dcg, lit(0.0)) / col("idcg")))
         .otherwise(lit(0.0))
     val perQ = lists.foldLeft(idcg) { case (acc, (name, list)) =>
         acc.join(dcgOf(list, s"dcg_$name"), Seq("query_id"), "left")
@@ -363,9 +360,31 @@ object SimilarityQueries extends QueryPack {
     perQ.rollup(col("query_id"))
       .agg(count(lit(1)).as("n_q"),
         lists.map { case (name, _) =>
-          q6(graft.functions.ExactNum.sumExact(col(s"ndcg_$name")) /
-            count(lit(1))).as(s"ndcg_$name") }: _*)
+          quantize(sumExact(col(s"ndcg_$name")) / count(lit(1)))
+            .as(s"ndcg_$name") }: _*)
   }
+
+  /** The sim25/sim26 twins' nDCG pieces, the SQL side of [[ndcgScore]]:
+    * the graded gain, the per-list DCG over a ranked `list` CTE
+    * (query_id, doc_id, rank), the per-query quantized dcg/idcg of the
+    * `alias`-joined dcg CTE, and the rollup's quantized mean of one ndcg
+    * column. */
+  private def gainSql(g: String): String =
+    s"CASE $g WHEN 3 THEN 7.0 WHEN 2 THEN 3.0 WHEN 1 THEN 1.0 ELSE 0.0 END"
+
+  private def dcgCte(list: String): String =
+    s"""SELECT l.query_id, ${sumExactSql(
+         s"(${gainSql("coalesce(r.rel, 0)")}) / (ln(l.rank + 1.0) / ln(2.0))")}
+       |    AS dcg
+       |  FROM $list l LEFT JOIN rel r
+       |    ON r.query_id = l.query_id AND r.doc_id = l.doc_id
+       |  GROUP BY 1""".stripMargin
+
+  private def ndcgSql(alias: String): String = "CASE WHEN idcg > 0 THEN " +
+    s"${quantizeSql(s"coalesce($alias.dcg, 0.0) / idcg")} ELSE 0.0 END"
+
+  private def ndcgMeanSql(c: String): String =
+    quantizeSql(s"${sumExactSql(c)} / count(*)")
 
   /** DuckDB twin of Similarity.dotSeq: sequential fold over the zipped
     * product list, same order as Spark's `aggregate`. */
@@ -819,7 +838,7 @@ object SimilarityQueries extends QueryPack {
         .agg(min(struct($"score", $"label")).as("b"), max($"x2").as("x2"))
       best.groupBy($"b.label".as("label"))
         .agg(count(lit(1)).as("cnt"),
-          graft.functions.ExactNum.sumExact($"x2" + $"b.score")
+          sumExact($"x2" + $"b.score")
             .as("inertia"))
     }),
 
@@ -1211,17 +1230,6 @@ object SimilarityQueries extends QueryPack {
     // would drop a zero-token query doc, an engine divergence; current
     // fixtures have none, so the hash is unchanged).
     "sim25_retrieval_ndcg" -> {
-      import graft.functions.ExactNum.sumExactSql
-      def gain(g: String) =
-        s"CASE $g WHEN 3 THEN 7.0 WHEN 2 THEN 3.0 WHEN 1 THEN 1.0 " +
-          "ELSE 0.0 END"
-      def dcgCte(list: String) =
-        s"""SELECT l.query_id, ${sumExactSql(
-             s"(${gain("coalesce(r.rel, 0)")}) / (ln(l.rank + 1.0) / ln(2.0))")}
-           |    AS dcg
-           |  FROM $list l LEFT JOIN rel r
-           |    ON r.query_id = l.query_id AND r.doc_id = l.doc_id
-           |  GROUP BY 1""".stripMargin
       s"""WITH sparse AS (
          |  SELECT query_id, doc_id, rank
          |  FROM (${TextQueries.bm25RankedSql(10)}) s
@@ -1289,7 +1297,7 @@ object SimilarityQueries extends QueryPack {
          |  GROUP BY 1
          |), idcg AS (
          |  SELECT query_id,
-         |    ${sumExactSql(s"(${gain("g")}) / (ln(i + 1.0) / ln(2.0))")}
+         |    ${sumExactSql(s"(${gainSql("g")}) / (ln(i + 1.0) / ln(2.0))")}
          |      AS idcg
          |  FROM (SELECT query_id, i,
          |      CASE WHEN i <= n3 THEN 3 WHEN i <= n3 + n2 THEN 2
@@ -1304,28 +1312,17 @@ object SimilarityQueries extends QueryPack {
          |), dcg_f AS (
          |  ${dcgCte("flist")}
          |), perq AS (
-         |  SELECT i.query_id,
-         |    CASE WHEN idcg > 0 THEN CAST(CAST((coalesce(s.dcg, 0.0)
-         |      / idcg) AS DECIMAL(28,6)) AS DOUBLE) ELSE 0.0 END
-         |      AS ndcg_sparse,
-         |    CASE WHEN idcg > 0 THEN CAST(CAST((coalesce(d.dcg, 0.0)
-         |      / idcg) AS DECIMAL(28,6)) AS DOUBLE) ELSE 0.0 END
-         |      AS ndcg_dense,
-         |    CASE WHEN idcg > 0 THEN CAST(CAST((coalesce(f.dcg, 0.0)
-         |      / idcg) AS DECIMAL(28,6)) AS DOUBLE) ELSE 0.0 END
-         |      AS ndcg_fused
+         |  SELECT i.query_id, ${ndcgSql("s")} AS ndcg_sparse,
+         |    ${ndcgSql("d")} AS ndcg_dense, ${ndcgSql("f")} AS ndcg_fused
          |  FROM idcg i
          |  LEFT JOIN dcg_s s USING (query_id)
          |  LEFT JOIN dcg_d d USING (query_id)
          |  LEFT JOIN dcg_f f USING (query_id)
          |)
          |SELECT query_id, count(*) AS n_q,
-         |  CAST(CAST((${sumExactSql("ndcg_sparse")} / count(*))
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS ndcg_sparse,
-         |  CAST(CAST((${sumExactSql("ndcg_dense")} / count(*))
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS ndcg_dense,
-         |  CAST(CAST((${sumExactSql("ndcg_fused")} / count(*))
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS ndcg_fused
+         |  ${ndcgMeanSql("ndcg_sparse")} AS ndcg_sparse,
+         |  ${ndcgMeanSql("ndcg_dense")} AS ndcg_dense,
+         |  ${ndcgMeanSql("ndcg_fused")} AS ndcg_fused
          |FROM perq GROUP BY ROLLUP(query_id)""".stripMargin
     },
     // sim26's twin — the honest from-scratch oracle for BOTH serve
@@ -1337,17 +1334,6 @@ object SimilarityQueries extends QueryPack {
     // ndcg_indexed replacing ndcg_dense. cosq exists here only for the
     // semantic relevance channel.
     "sim26_indexed_retrieval_ndcg" -> {
-      import graft.functions.ExactNum.sumExactSql
-      def gain(g: String) =
-        s"CASE $g WHEN 3 THEN 7.0 WHEN 2 THEN 3.0 WHEN 1 THEN 1.0 " +
-          "ELSE 0.0 END"
-      def dcgCte(list: String) =
-        s"""SELECT l.query_id, ${sumExactSql(
-             s"(${gain("coalesce(r.rel, 0)")}) / (ln(l.rank + 1.0) / ln(2.0))")}
-           |    AS dcg
-           |  FROM $list l LEFT JOIN rel r
-           |    ON r.query_id = l.query_id AND r.doc_id = l.doc_id
-           |  GROUP BY 1""".stripMargin
       s"""WITH sparse AS (
          |  SELECT query_id, doc_id, rank
          |  FROM (${TextQueries.bm25RankedSql(10)}) s
@@ -1426,7 +1412,7 @@ object SimilarityQueries extends QueryPack {
          |  GROUP BY 1
          |), idcg AS (
          |  SELECT query_id,
-         |    ${sumExactSql(s"(${gain("g")}) / (ln(i + 1.0) / ln(2.0))")}
+         |    ${sumExactSql(s"(${gainSql("g")}) / (ln(i + 1.0) / ln(2.0))")}
          |      AS idcg
          |  FROM (SELECT query_id, i,
          |      CASE WHEN i <= n3 THEN 3 WHEN i <= n3 + n2 THEN 2
@@ -1441,28 +1427,17 @@ object SimilarityQueries extends QueryPack {
          |), dcg_f AS (
          |  ${dcgCte("flist")}
          |), perq AS (
-         |  SELECT i.query_id,
-         |    CASE WHEN idcg > 0 THEN CAST(CAST((coalesce(s.dcg, 0.0)
-         |      / idcg) AS DECIMAL(28,6)) AS DOUBLE) ELSE 0.0 END
-         |      AS ndcg_sparse,
-         |    CASE WHEN idcg > 0 THEN CAST(CAST((coalesce(d.dcg, 0.0)
-         |      / idcg) AS DECIMAL(28,6)) AS DOUBLE) ELSE 0.0 END
-         |      AS ndcg_indexed,
-         |    CASE WHEN idcg > 0 THEN CAST(CAST((coalesce(f.dcg, 0.0)
-         |      / idcg) AS DECIMAL(28,6)) AS DOUBLE) ELSE 0.0 END
-         |      AS ndcg_fused
+         |  SELECT i.query_id, ${ndcgSql("s")} AS ndcg_sparse,
+         |    ${ndcgSql("d")} AS ndcg_indexed, ${ndcgSql("f")} AS ndcg_fused
          |  FROM idcg i
          |  LEFT JOIN dcg_s s USING (query_id)
          |  LEFT JOIN dcg_i d USING (query_id)
          |  LEFT JOIN dcg_f f USING (query_id)
          |)
          |SELECT query_id, count(*) AS n_q,
-         |  CAST(CAST((${sumExactSql("ndcg_sparse")} / count(*))
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS ndcg_sparse,
-         |  CAST(CAST((${sumExactSql("ndcg_indexed")} / count(*))
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS ndcg_indexed,
-         |  CAST(CAST((${sumExactSql("ndcg_fused")} / count(*))
-         |    AS DECIMAL(28,6)) AS DOUBLE) AS ndcg_fused
+         |  ${ndcgMeanSql("ndcg_sparse")} AS ndcg_sparse,
+         |  ${ndcgMeanSql("ndcg_indexed")} AS ndcg_indexed,
+         |  ${ndcgMeanSql("ndcg_fused")} AS ndcg_fused
          |FROM perq GROUP BY ROLLUP(query_id)""".stripMargin
     },
     // sim13's twin pairs dimensions by a self-join of the exploded view
@@ -1471,23 +1446,19 @@ object SimilarityQueries extends QueryPack {
     // double→decimal cast would diverge at 12 digits — see
     // Similarity.covarianceMatrix), same cov/corr AST.
     "sim13_covariance" ->
-      """WITH ex AS (
+      s"""WITH ex AS (
         |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
         |    CAST(embedding[i] AS DOUBLE) AS x
         |  FROM (SELECT vec_id, embedding,
         |          unnest(generate_series(1, len(embedding))) AS i
         |        FROM embeddings) p
         |), stats AS (
-        |  SELECT dim, count(*) AS n,
-        |    CAST(sum(CAST(floor((x) * 1e12) AS DECIMAL(38,0)))
-        |      AS DOUBLE) / 1e12 AS s,
-        |    CAST(sum(CAST(floor((x * x) * 1e12) AS DECIMAL(38,0)))
-        |      AS DOUBLE) / 1e12 AS s2
+        |  SELECT dim, count(*) AS n, ${sumFloorSql("x", 12)} AS s,
+        |    ${sumFloorSql("x * x", 12)} AS s2
         |  FROM ex GROUP BY dim
         |), cells AS (
         |  SELECT a.dim AS i, b.dim AS j, count(*) AS n,
-        |    CAST(sum(CAST(floor((a.x * b.x) * 1e12) AS DECIMAL(38,0)))
-        |      AS DOUBLE) / 1e12 AS s_ij
+        |    ${sumFloorSql("a.x * b.x", 12)} AS s_ij
         |  FROM ex a JOIN ex b
         |    ON a.vec_id = b.vec_id AND a.dim <= b.dim
         |  GROUP BY 1, 2
@@ -1503,7 +1474,7 @@ object SimilarityQueries extends QueryPack {
     // sim15's twin: same exploded view, same fixed-point stat folds,
     // same mean/std/z AST.
     "sim15_standardize" ->
-      """WITH ex AS (
+      s"""WITH ex AS (
         |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
         |    CAST(embedding[i] AS DOUBLE) AS x
         |  FROM (SELECT vec_id, embedding,
@@ -1511,14 +1482,9 @@ object SimilarityQueries extends QueryPack {
         |        FROM embeddings) p
         |), stats AS (
         |  SELECT dim,
-        |    (CAST(sum(CAST(floor((x) * 1e12) AS DECIMAL(38,0)))
-        |      AS DOUBLE) / 1e12) / count(*) AS mean,
-        |    sqrt(((CAST(sum(CAST(floor((x * x) * 1e12) AS DECIMAL(38,0)))
-        |        AS DOUBLE) / 1e12)
-        |      - (CAST(sum(CAST(floor((x) * 1e12) AS DECIMAL(38,0)))
-        |          AS DOUBLE) / 1e12)
-        |        * (CAST(sum(CAST(floor((x) * 1e12) AS DECIMAL(38,0)))
-        |            AS DOUBLE) / 1e12) / count(*))
+        |    ${sumFloorSql("x", 12)} / count(*) AS mean,
+        |    sqrt((${sumFloorSql("x * x", 12)}
+        |      - ${sumFloorSql("x", 12)} * ${sumFloorSql("x", 12)} / count(*))
         |      / (count(*) - 1)) AS std
         |  FROM ex GROUP BY dim
         |)
@@ -1742,7 +1708,6 @@ object SimilarityQueries extends QueryPack {
   private def pqCtes(m: Int, subDim: Int, ks: Int, iters: Int,
                      queryWhere: String,
                      trainSrc: String = "embeddings"): String = {
-    import graft.functions.ExactNum.avgExactSql
     import graft.functions.PortableHash
     val seedHash = PortableHash.hash60Sql("CAST(vec_id AS VARCHAR)")
     // training stages see only trainSrc's vectors; psubq (the encode +
@@ -1879,7 +1844,6 @@ object SimilarityQueries extends QueryPack {
   private def pqResCtes(m: Int, subDim: Int, ks: Int, iters: Int,
                         trainSrc: String,
                         corpus: String = "embeddings"): String = {
-    import graft.functions.ExactNum.avgExactSql
     import graft.functions.PortableHash
     val dims = m * subDim
     val seedHash = PortableHash.hash60Sql("CAST(vec_id AS VARCHAR)")
@@ -2017,7 +1981,6 @@ object SimilarityQueries extends QueryPack {
   /** sim16's twin: the shared Lloyd's chain, final-centroid arrays, one
     * more scored assignment, then the per-cluster inertia fold. */
   private def sim16Sql(k: Int, iters: Int): String = {
-    import graft.functions.ExactNum.sumExactSql
     s"""WITH ${kmeansCtes(k.toString, iters)},
        |carrf AS (
        |  SELECT label, list(centroid ORDER BY dim) AS c_arr

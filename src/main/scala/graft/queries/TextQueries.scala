@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.ExactNum._
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal}
 
@@ -513,17 +514,13 @@ object TextQueries extends QueryPack {
       import s.implicits._
       val periods = array(lit(8), lit(12), lit(16), lit(24))
       val derived = dd13Derived(s, dir)
-      def sumF6(c: org.apache.spark.sql.Column) =
-        sum(floor(c * 1e6)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / 1e6
       val found = Dedup.minhashLshDerived(derived, "doc_id", "text",
           shingleK = 3, bands = 4, jaccardThreshold = 0.0,
           targetCollisions = 8, minRows = 2, maxRows = 8,
           preShingles = Some(dd13Shingles(s, dir)))
         .filter($"doc_b" === $"doc_a" + Dd13Off)
         .groupBy(($"doc_a" % 4).as("cls"))
-        .agg(count(lit(1)).as("n_found"), sumF6($"jaccard").as("sum_j"))
+        .agg(count(lit(1)).as("n_found"), sumFloor($"jaccard").as("sum_j"))
       derived.filter($"doc_id" >= Dd13Off)
         .groupBy((($"doc_id" - Dd13Off) % 4).as("cls"))
         .agg(count(lit(1)).as("n_pairs"))
@@ -1303,8 +1300,8 @@ object TextQueries extends QueryPack {
       val ent = grams.groupBy($"doc_id").agg(
           sum($"c").as("n_bigrams"),
           count(lit(1)).as("n_distinct"),
-          graft.functions.ExactNum.sumExact(
-            $"c".cast("double") * log($"c".cast("double"))).as("_clnc"))
+          sumExact($"c".cast("double") * log($"c".cast("double")))
+            .as("_clnc"))
       // entropy's final ln(n) is the one fresh transcendental; the
       // DECIMAL(28,6) round-trip (sumExact's own machinery) absorbs
       // last-ulp ln drift and makes the double bit-portable → the whole
@@ -1313,11 +1310,8 @@ object TextQueries extends QueryPack {
         .select($"doc_id",
           coalesce($"n_bigrams", lit(0L)).as("n_bigrams"),
           coalesce($"n_distinct", lit(0L)).as("n_distinct"),
-          when($"n_bigrams" > 0,
-            (log($"n_bigrams".cast("double")) -
-              $"_clnc" / $"n_bigrams".cast("double"))
-              .cast(graft.functions.ExactNum.Exact).cast("double"))
-            .as("entropy"))
+          when($"n_bigrams" > 0, quantize(log($"n_bigrams".cast("double")) -
+            $"_clnc" / $"n_bigrams".cast("double"))).as("entropy"))
     }),
 
     // n-gram novelty per doc: the fraction of a doc's distinct 3-gram
@@ -1503,12 +1497,6 @@ object TextQueries extends QueryPack {
     "tx23_zipf_fit" -> ((s, dir) => {
       import s.implicits._
       val R = 256
-      def q6(c: org.apache.spark.sql.Column) =
-        c.cast(org.apache.spark.sql.types.DecimalType(28, 6)).cast("double")
-      def sumF6(c: org.apache.spark.sql.Column) =
-        sum(floor(c * 1e6)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / 1e6
       val freq = docs(s, dir)
         .select($"source", explode(tokens($"text")).as("tk"))
         .groupBy($"source", $"tk").agg(count(lit(1)).as("freq"))
@@ -1516,11 +1504,11 @@ object TextQueries extends QueryPack {
           Window.partitionBy($"source").orderBy($"freq".desc, $"tk".asc)))
         .filter($"r" <= R)
         .select($"source",
-          q6(log($"r".cast("double"))).as("x"),
-          q6(log($"freq".cast("double"))).as("y"))
+          quantize(log($"r".cast("double"))).as("x"),
+          quantize(log($"freq".cast("double"))).as("y"))
       xy.groupBy($"source").agg(count(lit(1)).as("n"),
-          sumF6($"x").as("sx"), sumF6($"y").as("sy"),
-          sumF6($"x" * $"y").as("sxy"), sumF6($"x" * $"x").as("sxx"))
+          sumFloor($"x").as("sx"), sumFloor($"y").as("sy"),
+          sumFloor($"x" * $"y").as("sxy"), sumFloor($"x" * $"x").as("sxx"))
         .withColumn("zipf_slope",
           ($"n" * $"sxy" - $"sx" * $"sy") / ($"n" * $"sxx" - $"sx" * $"sx"))
         .withColumn("intercept", ($"sy" - $"zipf_slope" * $"sx") / $"n")
@@ -1534,12 +1522,8 @@ object TextQueries extends QueryPack {
       val df_ = tf.groupBy($"term").agg(count(lit(1)).as("df"))
       val n = d.agg(count(lit(1)).as("n_docs"))
       val scored = tf.join(df_, "term").crossJoin(broadcast(n))
-        .withColumn("score",
-          (($"tf".cast("double")) *
-            log(($"n_docs".cast("double") + 1.0) /
-              ($"df".cast("double") + 1.0)))
-            .cast(org.apache.spark.sql.types.DecimalType(28, 6))
-            .cast("double"))
+        .withColumn("score", quantize(($"tf".cast("double")) *
+          log(($"n_docs".cast("double") + 1.0) / ($"df".cast("double") + 1.0))))
       val w = Window.partitionBy($"doc_id")
         .orderBy($"score".desc, $"term".asc)
       scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -1791,8 +1775,7 @@ object TextQueries extends QueryPack {
        |  WHERE len(regexp_extract_all(text, '\\S+')) >= 1 GROUP BY 1
        |), f AS (
        |  SELECT doc_a % 4 AS cls, CAST(count(*) AS BIGINT) AS n_found,
-       |    (CAST(sum(CAST(floor(jaccard * 1e6) AS DECIMAL(38,0)))
-       |      AS DOUBLE) / 1e6) AS sum_j
+       |    ${sumFloorSql("jaccard")} AS sum_j
        |  FROM ($pairs) q GROUP BY 1
        |)
        |SELECT e.cls,
@@ -2677,21 +2660,13 @@ object TextQueries extends QueryPack {
          |  FROM freq
          |), xy AS (
          |  SELECT source,
-         |    CAST(CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(28,6)) AS DOUBLE)
-         |      AS x,
-         |    CAST(CAST(ln(CAST(freq AS DOUBLE)) AS DECIMAL(28,6))
-         |      AS DOUBLE) AS y
+         |    ${quantizeSql("ln(CAST(r AS DOUBLE))")} AS x,
+         |    ${quantizeSql("ln(CAST(freq AS DOUBLE))")} AS y
          |  FROM ranked WHERE r <= 256
          |), m AS (
          |  SELECT source, count(*) AS n,
-         |    CAST(sum(CAST(floor(x * 1e6) AS DECIMAL(38,0))) AS DOUBLE)
-         |      / 1e6 AS sx,
-         |    CAST(sum(CAST(floor(y * 1e6) AS DECIMAL(38,0))) AS DOUBLE)
-         |      / 1e6 AS sy,
-         |    CAST(sum(CAST(floor(x * y * 1e6) AS DECIMAL(38,0)))
-         |      AS DOUBLE) / 1e6 AS sxy,
-         |    CAST(sum(CAST(floor(x * x * 1e6) AS DECIMAL(38,0)))
-         |      AS DOUBLE) / 1e6 AS sxx
+         |    ${sumFloorSql("x")} AS sx, ${sumFloorSql("y")} AS sy,
+         |    ${sumFloorSql("x * y")} AS sxy, ${sumFloorSql("x * x")} AS sxx
          |  FROM xy GROUP BY source
          |), fit AS (
          |  SELECT source, n, sx, sy,
@@ -2714,10 +2689,8 @@ object TextQueries extends QueryPack {
          |), n AS (SELECT count(*) AS n_docs FROM documents),
          |scored AS (
          |  SELECT doc_id, tf.term AS term, tf, df,
-         |    CAST(CAST(CAST(tf AS DOUBLE) *
-         |      ln((CAST(n_docs AS DOUBLE) + 1.0) /
-         |          (CAST(df AS DOUBLE) + 1.0))
-         |      AS DECIMAL(28,6)) AS DOUBLE) AS score
+         |    ${quantizeSql("CAST(tf AS DOUBLE) * ln((CAST(n_docs AS DOUBLE)" +
+              " + 1.0) / (CAST(df AS DOUBLE) + 1.0))")} AS score
          |  FROM tf JOIN df USING (term) CROSS JOIN n
          |)
          |SELECT doc_id, term, tf, df, score, rank FROM (
@@ -2908,7 +2881,6 @@ object TextQueries extends QueryPack {
     * sim14's fusion oracle can reuse the whole chain as a subquery. */
   private[queries] def bm25RankedSql(
       k: Int, queryWhere: String = "doc % 50 = 0"): String = {
-    import graft.functions.ExactNum.sumExactSql
     val termScore =
       "ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)" +
         " / (CAST(df AS DOUBLE) + 0.5))" +
@@ -2957,8 +2929,10 @@ object TextQueries extends QueryPack {
   }
 
   private lazy val lnTwinSql: Map[String, String] = {
-    import graft.functions.ExactNum.sumExactSql
     val sql = bm25RankedSql(5)
+    // LanguageModel.scoreAndFold's ppl, shared by the tx14 and tx31 twins
+    val ppl = "exp(coalesce(w.logprob, CAST(0 AS DOUBLE))" +
+      " * -1.0 / CAST(b.n_bigrams AS DOUBLE))"
     val tx14Sql =
       s"""WITH toks AS (
          |  SELECT doc_id AS doc, regexp_extract_all(text, '\\S+') AS t
@@ -2998,9 +2972,7 @@ object TextQueries extends QueryPack {
          |SELECT b.doc AS doc_id, b.n_bigrams,
          |  coalesce(w.logprob, CAST(0 AS DOUBLE)) AS logprob,
          |  CASE WHEN b.n_bigrams > 0
-         |    THEN CAST(CAST(exp(coalesce(w.logprob, CAST(0 AS DOUBLE))
-         |      * -1.0 / CAST(b.n_bigrams AS DOUBLE))
-         |      AS DECIMAL(28,6)) AS DOUBLE) END AS ppl
+         |    THEN ${quantizeSql(ppl)} END AS ppl
          |FROM base b LEFT JOIN w USING (doc)""".stripMargin
     val tx15Sql =
       s"""WITH base AS (
@@ -3022,9 +2994,8 @@ object TextQueries extends QueryPack {
          |SELECT b.doc_id, coalesce(e.n_bigrams, 0) AS n_bigrams,
          |  coalesce(e.n_distinct, 0) AS n_distinct,
          |  CASE WHEN e.n_bigrams > 0
-         |    THEN CAST(CAST(ln(CAST(e.n_bigrams AS DOUBLE))
-         |      - e.clnc / CAST(e.n_bigrams AS DOUBLE)
-         |      AS DECIMAL(28,6)) AS DOUBLE) END AS entropy
+         |    THEN ${quantizeSql("ln(CAST(e.n_bigrams AS DOUBLE))" +
+              " - e.clnc / CAST(e.n_bigrams AS DOUBLE)")} END AS entropy
          |FROM base b LEFT JOIN ent e USING (doc_id)""".stripMargin
     val tx31Sql =
       s"""WITH toks AS (
@@ -3069,9 +3040,7 @@ object TextQueries extends QueryPack {
          |SELECT b.doc AS doc_id, b.n_bigrams,
          |  coalesce(w.logprob, CAST(0 AS DOUBLE)) AS logprob,
          |  CASE WHEN b.n_bigrams > 0
-         |    THEN CAST(CAST(exp(coalesce(w.logprob, CAST(0 AS DOUBLE))
-         |      * -1.0 / CAST(b.n_bigrams AS DOUBLE))
-         |      AS DECIMAL(28,6)) AS DOUBLE) END AS ppl
+         |    THEN ${quantizeSql(ppl)} END AS ppl
          |FROM base b LEFT JOIN w USING (doc)""".stripMargin
     Map(
       "tx13_bm25_topk" -> sql,

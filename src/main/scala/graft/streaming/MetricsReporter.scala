@@ -10,6 +10,11 @@ import java.util.concurrent.ConcurrentHashMap
   * StreamingQueryListener that maps each StreamingQueryProgress onto the
   * same metric ids, with the reference's formatting rules
   * (MetricsService.java:117-140: bytes→MB 2dp, ms 2dp, ratios ×100 1dp).
+  *
+  * Two reference series have no id here: max operator latency and
+  * backpressure (`outPoolUsage`). A progress report carries one trigger
+  * duration per micro-batch and Spark has no output-buffer pool, so
+  * either value would be a copy of `avg_latency` or a constant 0.
   */
 class MetricsReporter extends StreamingQueryListener {
 
@@ -31,7 +36,6 @@ class MetricsReporter extends StreamingQueryListener {
     val batchMs = Option(p.durationMs.get("triggerExecution"))
       .map(_.doubleValue).getOrElse(0.0)
     latest.put("avg_latency", fmt2(batchMs))
-    latest.put("max_latency", fmt2(batchMs))
     val stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum
     latest.put("checkpoint_size", fmt2(stateBytes / 1048576.0)) // bytes→MB 2dp
     latest.put("checkpoint_duration",
@@ -40,7 +44,6 @@ class MetricsReporter extends StreamingQueryListener {
     val rt = Runtime.getRuntime
     latest.put("heap_used", fmt2((rt.totalMemory - rt.freeMemory) / 1048576.0))
     latest.put("heap_max", fmt2(rt.maxMemory / 1048576.0))
-    latest.put("backpressure", fmt2(0.0)) // micro-batch model: no outPool analog
     latest.put("cpu_load",
       fmt2(java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage))

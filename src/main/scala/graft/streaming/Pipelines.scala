@@ -42,8 +42,9 @@ object Pipelines {
   }
 
   /** Pipeline A ("Risk", StreamJob.java:55-90): parse → label → latency
-    * stamp → printf line. Stateless; watermark kept for parity (T1) though
-    * nothing downstream consumes it. */
+    * stamp → printf line. Stateless, and it sets no watermark: the
+    * reference assigns one on this branch too (T1), but nothing here
+    * reads it — no window, no state, no join. */
   def riskPipeline(raw: DataFrame, threshold: Double = 1000.0): DataFrame = {
     val parsed = JsonCodec.parseTransactions(raw, col("value"))
       .filter(!col("_corrupt"))

@@ -63,12 +63,10 @@ private object MetricsHelp {
     case "records_in_rate"     => "Input rows per second"
     case "records_out_rate"    => "Processed rows per second"
     case "avg_latency"         => "Micro-batch trigger execution ms"
-    case "max_latency"         => "Max micro-batch trigger execution ms"
     case "checkpoint_size"     => "State store memory in MB"
     case "checkpoint_duration" => "Offset commit duration ms"
     case "heap_used"           => "JVM heap used MB"
     case "heap_max"            => "JVM heap max MB"
-    case "backpressure"        => "Backpressure ratio (0 in micro-batch model)"
     case "cpu_load"            => "System load average"
     case "dropped_late_rows"   => "Rows dropped by watermark"
     case other                 => other

@@ -105,6 +105,9 @@ class StreamingSpec extends AnyFunSuite {
     val ids = Seq("records_in_rate", "records_out_rate", "avg_latency",
       "checkpoint_size", "heap_used", "dropped_late_rows")
     ids.foreach(id => assert(rep.latest.containsKey(id), s"missing $id"))
+    // no series Spark cannot back: no max-latency copy, no constant 0
+    Seq("max_latency", "backpressure").foreach(id =>
+      assert(!rep.latest.containsKey(id), s"unbacked series $id"))
     assert(rep.snapshotJson.startsWith("{"))
   }
 

@@ -133,7 +133,6 @@ class VectorDotFixedSpec extends AnyFunSuite {
   }
 
   test("SQL registration works") {
-    VectorDotFixed.register(spark)
     df.createOrReplaceTempView("vdf")
     val one = spark.sql(
       "SELECT vector_dot_fixed(v, v) AS s FROM vdf LIMIT 1").head()

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorDot
 
 /** The native VectorDot expression: bit-equality with the built-ins-only
-  * HOF fold, SQL registration, null/edge handling. */
+  * HOF fold, the GraftExtensions SQL function, null/edge handling. */
 class VectorDotSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
@@ -40,10 +40,7 @@ class VectorDotSpec extends AnyFunSuite {
     df2.createOrReplaceTempView("vd_ext")
     assert(spark.sql("SELECT vector_dot(a, b) AS d FROM vd_ext")
       .head().getDouble(0) == 23.0)
-  }
-
-  test("registered SQL function works") {
-    VectorDot.register(spark)
+    // multi-row: the SQL path is bit-identical to the HOF fold
     df.createOrReplaceTempView("vd")
     val out = spark.sql(
       "SELECT id, vector_dot(a, b) AS d FROM vd ORDER BY id").collect()
