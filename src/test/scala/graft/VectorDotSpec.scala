@@ -40,6 +40,9 @@ class VectorDotSpec extends AnyFunSuite {
     df2.createOrReplaceTempView("vd_ext")
     assert(spark.sql("SELECT vector_dot(a, b) AS d FROM vd_ext")
       .head().getDouble(0) == 23.0)
+  }
+
+  test("registered SQL function works") {
     // multi-row: the SQL path is bit-identical to the HOF fold
     df.createOrReplaceTempView("vd")
     val out = spark.sql(
