@@ -123,59 +123,56 @@ object JobProbe {
       // per-operator SQL metrics of run 2 — the SQL-tab stand-in: every
       // plan node (subqueries and AQE final plans included) whose timing
       // metrics crossed 200 ms, heaviest first
-      if (sys.env.contains("JOBPROBE_METRICS")) {
-        val seen = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, String, String)]
-        val visited = java.util.Collections.newSetFromMap(
-          new java.util.IdentityHashMap[Object, java.lang.Boolean]())
-        def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-          val fin = p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              a.executedPlan
-            case o => o
-          }
-          fin.foreach {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-                if a ne fin => walk(a)
-            // AQE hides executed operators inside leaf QueryStageExec
-            // wrappers; cached relations hide theirs the same way
-            case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              walk(qs.plan)
-            case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-              walk(im.relation.cachedPlan)
-            case n if visited.add(n) =>
-              val ms = n.metrics.map { case (k, m) =>
-                val v = if (m.metricType == "timing") m.value
-                  else if (m.metricType == "nsTiming") m.value / 1000000L
-                  else -1L
-                (k, v)
-              }.filter(_._2 >= sys.env.getOrElse("JOBPROBE_METRICS", "200").toLong)
-              if (ms.nonEmpty) {
-                val top = ms.values.max
-                // a codegen pipeline's name says nothing about what's
-                // inside — append its operator chain
-                val label = n match {
-                  case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-                    s"${n.nodeName}[" + w.collect {
-                      case c if !c.isInstanceOf[
-                        org.apache.spark.sql.execution.WholeStageCodegenExec] =>
-                        c.nodeName.replace("Execution", "")
-                    }.take(5).mkString(">") + "]"
-                  case _ => n.nodeName
-                }
-                seen += ((top, label,
-                  ms.map { case (k, v) => s"$k=${v / 1000.0}s" }.mkString(" ")))
+      val seen = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, String, String)]
+      val visited = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[Object, java.lang.Boolean]())
+      def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
+        val fin = p match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan
+          case o => o
+        }
+        fin.foreach {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+              if a ne fin => walk(a)
+          // AQE hides executed operators inside leaf QueryStageExec
+          // wrappers; cached relations hide theirs the same way
+          case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+            walk(qs.plan)
+          case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+            walk(im.relation.cachedPlan)
+          case n if visited.add(n) =>
+            val ms = n.metrics.map { case (k, m) =>
+              val v = if (m.metricType == "timing") m.value
+                else if (m.metricType == "nsTiming") m.value / 1000000L
+                else -1L
+              (k, v)
+            }.filter(_._2 >= 200L)
+            if (ms.nonEmpty) {
+              val top = ms.values.max
+              // a codegen pipeline's name says nothing about what's
+              // inside — append its operator chain
+              val label = n match {
+                case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+                  s"${n.nodeName}[" + w.collect {
+                    case c if !c.isInstanceOf[
+                      org.apache.spark.sql.execution.WholeStageCodegenExec] =>
+                      c.nodeName.replace("Execution", "")
+                  }.take(5).mkString(">") + "]"
+                case _ => n.nodeName
               }
-              n.subqueries.foreach(walk)
-            case _ => ()
-          }
+              seen += ((top, label,
+                ms.map { case (k, v) => s"$k=${v / 1000.0}s" }.mkString(" ")))
+            }
+            n.subqueries.foreach(walk)
+          case _ => ()
         }
-        Thread.sleep(300) // listener bus drains before reading lastQe
-        if (lastQe == null) println("  METRIC-DEBUG lastQe is null")
-        if (lastQe != null) walk(lastQe.executedPlan)
-        seen.sortBy(-_._1).take(14).foreach { case (_, nn, ms) =>
-          println(s"  METRIC $nn: $ms")
-        }
+      }
+      Thread.sleep(300) // listener bus drains before reading lastQe
+      if (lastQe != null) walk(lastQe.executedPlan)
+      seen.sortBy(-_._1).take(14).foreach { case (_, nn, ms) =>
+        println(s"  METRIC $nn: $ms")
       }
       spark.catalog.clearCache()
       Thread.sleep(200) // let listener events drain

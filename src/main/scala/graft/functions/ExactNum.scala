@@ -97,7 +97,12 @@ object ExactNum {
   def sumFloorDriver(vals: Iterator[Double], digits: Int = 6): Double = {
     val s = math.pow(10, digits)
     var acc = BigInt(0)
-    vals.foreach(v => acc += BigInt(math.floor(v * s).toLong))
+    vals.foreach(v => acc += BigInt(floorUnits(v, s)))
     acc.doubleValue / s
   }
+
+  /** One value's term of the floor fold at scale `s` (10^digits): Spark's
+    * floor(x·s) as a long, saturating at the long range. Executor-side
+    * folds that merge their own partials (LrBase.train) call it too. */
+  def floorUnits(x: Double, s: Double): Long = math.floor(x * s).toLong
 }

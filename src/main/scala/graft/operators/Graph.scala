@@ -134,6 +134,21 @@ object Graph {
       (col("rank").cast("double") / lit(1000000.0)).as("rank"))
   }
 
+  /** DuckDB connected components over an `edges(src, dst)` CTE that
+    * holds both directions of every edge, for use under WITH RECURSIVE:
+    * the transitive closure `reach`, then `comp` (`node`, cluster_id =
+    * least member) for every node on some edge. Shared by the gr3 and
+    * dd3/pl21/pl23 twins. */
+  def componentsSql(node: String): String =
+    s"""reach(src, dst) AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+       |), comp AS (
+       |  SELECT src AS $node, least(src, min(dst)) AS cluster_id
+       |  FROM reach GROUP BY src
+       |)""".stripMargin
+
   /** DuckDB twin of [[pagerank]] (damping 0.85 / teleport 0.15): the
     * fixed iteration count unrolls into a CTE chain (`r0 … r$iters`),
     * each round the same join + integer-micros fold (`//` is DuckDB
@@ -196,25 +211,12 @@ object Graph {
           "n_nodes", "n_edges", "n_wedges", "n_triangles")
         .withColumn("clustering", lit(null).cast("double"))
     }
-    val deg = e.select(col("s1").as("node"))
-      .union(e.select(col("s2").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-    // deg has |nodes| rows ≪ |edges| but hides behind an aggregate, so
-    // the size estimate defaults pessimistic — broadcast explicitly
-    val ed = e
-      .join(broadcast(deg.select(col("node").as("s1"), col("d").as("d1"))),
-        "s1")
-      .join(broadcast(deg.select(col("node").as("s2"), col("d").as("d2"))),
-        "s2")
-    val lowerFirst = (col("d1") < col("d2")) ||
-      ((col("d1") === col("d2")) && (col("s1") < col("s2")))
+    val deg = degrees(e)
     // spread BEFORE persist: the cached edge table is only ~tens of MB,
     // so AQE coalesces it to one task — but each cached row fans out to
     // its out-degree in the wedge stage below; partition count must
     // follow the DOWNSTREAM fan-out, not the cached bytes
-    val oriented = graft.core.Tables.spread(ed.select(
-        when(lowerFirst, col("s1")).otherwise(col("s2")).as("u"),
-        when(lowerFirst, col("s2")).otherwise(col("s1")).as("v")))
+    val oriented = graft.core.Tables.spread(orient(e, deg))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // wedge-budget guard: the join below materializes Σ out(v)·in(v)
     // probe rows. Degree orientation bounds that by O(E^{3/2}) for any
@@ -227,17 +229,8 @@ object Graph {
     // even that ceiling is inside the budget the exact count (two aggs +
     // a driver collect) is pure overhead — only graphs big enough to
     // possibly trip the guard pay for it
-    if (nEdges.toDouble * math.sqrt(nEdges.toDouble) > maxOrientedWedges) {
-      val wedgeWork = oriented.groupBy(col("u")).agg(count(lit(1)).as("o"))
-        .join(oriented.groupBy(col("v")).agg(count(lit(1)).as("i")),
-          col("u") === col("v"))
-        .agg(coalesce(sum(col("o") * col("i")), lit(0L))).head.getLong(0)
-      require(wedgeWork <= maxOrientedWedges,
-        s"triangleStats: oriented wedge count $wedgeWork exceeds the " +
-          s"$maxOrientedWedges budget — the projection is too dense to " +
-          "enumerate; pre-filter hub groups (cap per-key set size at the " +
-          "edge build) or raise maxOrientedWedges deliberately")
-    }
+    if (nEdges.toDouble * math.sqrt(nEdges.toDouble) > maxOrientedWedges)
+      requireWedgeBudget(wedgeWorkOf(oriented), maxOrientedWedges)
     val maxId = e.agg(max(greatest(col("s1"), col("s2")))).head.getLong(0)
     val tri = closedWedgeCount(oriented, oriented, nEdges, maxId,
       broadcastEdgeLimit, wedgeBroadcastLimit)
@@ -249,12 +242,7 @@ object Graph {
     // clustering is NULL (not NaN) when the graph has no wedges — the
     // coefficient is undefined there, and NULL is the cross-engine-safe
     // encoding (0.0/0 is NaN in Spark but not portable)
-    degStats.crossJoin(tri)
-      .select(col("n_nodes"), lit(nEdges).as("n_edges"), col("n_wedges"),
-        col("n_triangles"),
-        when(col("n_wedges") > 0,
-          lit(3.0) * col("n_triangles") / col("n_wedges"))
-          .as("clustering"))
+    statsRow(degStats, tri, nEdges)
   }
 
   /** The wedge join + closing semi probe over an ALREADY-ORIENTED edge
@@ -315,6 +303,60 @@ object Graph {
     }).agg(count(lit(1)).as("n_triangles"))
   }
 
+  /** Node degrees (node, d) of an (s1, s2) edge list. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("s1").as("node"))
+      .union(e.select(col("s2").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
+
+  /** The degree orientation (u, v) of the (s1, s2) edges `e` with their
+    * [[degrees]] `deg` — the ONE spelling of the rule shared by
+    * [[triangleStats]], [[buildTriangleBase]] and [[orientedWedgeWork]]:
+    * each edge points from the (degree, id)-smaller endpoint to the
+    * larger. */
+  private def orient(e: DataFrame, deg: DataFrame): DataFrame = {
+    // deg has |nodes| rows ≪ |edges| but hides behind an aggregate, so
+    // the size estimate defaults pessimistic — broadcast explicitly
+    val ed = e
+      .join(broadcast(deg.select(col("node").as("s1"), col("d").as("d1"))),
+        "s1")
+      .join(broadcast(deg.select(col("node").as("s2"), col("d").as("d2"))),
+        "s2")
+    val lowerFirst = (col("d1") < col("d2")) ||
+      ((col("d1") === col("d2")) && (col("s1") < col("s2")))
+    ed.select(
+      when(lowerFirst, col("s1")).otherwise(col("s2")).as("u"),
+      when(lowerFirst, col("s2")).otherwise(col("s1")).as("v"))
+  }
+
+  /** Exact Σ out(v)·in(v) of an oriented (u, v) edge table: two
+    * node-sized aggregates + a driver scalar. */
+  private def wedgeWorkOf(oriented: DataFrame): Long =
+    oriented.groupBy(col("u")).agg(count(lit(1)).as("o"))
+      .join(oriented.groupBy(col("v")).agg(count(lit(1)).as("i")),
+        col("u") === col("v"))
+      .agg(coalesce(sum(col("o") * col("i")), lit(0L))).head.getLong(0)
+
+  private def requireWedgeBudget(wedgeWork: Long,
+                                 maxOrientedWedges: Long): Unit =
+    require(wedgeWork <= maxOrientedWedges,
+      s"triangleStats: oriented wedge count $wedgeWork exceeds the " +
+        s"$maxOrientedWedges budget — the projection is too dense to " +
+        "enumerate; pre-filter hub groups (cap per-key set size at the " +
+        "edge build) or raise maxOrientedWedges deliberately")
+
+  /** The one-row triangle stats from a frame carrying n_nodes and
+    * n_wedges and the one-row n_triangles count — one AST, so the served
+    * and in-query paths divide identically. */
+  private def statsRow(degStats: DataFrame, tri: DataFrame,
+                       nEdges: Long): DataFrame =
+    degStats.crossJoin(tri)
+      .select(col("n_nodes"), lit(nEdges).as("n_edges"), col("n_wedges"),
+        col("n_triangles"),
+        when(col("n_wedges") > 0,
+          lit(3.0) * col("n_triangles") / col("n_wedges"))
+          .as("clustering"))
+
   /** Build the durable triangle-base artifact for `edges` under `path`:
     * `oriented/` — the degree-oriented edge table ([[triangleStats]]'s
     * exact orientation rule: each edge points from the (degree, id)-
@@ -333,27 +375,11 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val nEdges = e.count()
-      val deg = e.select(col("s1").as("node"))
-        .union(e.select(col("s2").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-      val ed = e
-        .join(broadcast(deg.select(col("node").as("s1"), col("d").as("d1"))),
-          "s1")
-        .join(broadcast(deg.select(col("node").as("s2"), col("d").as("d2"))),
-          "s2")
-      val lowerFirst = (col("d1") < col("d2")) ||
-        ((col("d1") === col("d2")) && (col("s1") < col("s2")))
-      ed.select(
-          when(lowerFirst, col("s1")).otherwise(col("s2")).as("u"),
-          when(lowerFirst, col("s2")).otherwise(col("s1")).as("v"))
-        .write.mode("overwrite").parquet(s"$path/oriented")
+      val deg = degrees(e)
+      orient(e, deg).write.mode("overwrite").parquet(s"$path/oriented")
       // scalars off the WRITTEN table (one extra scan beats recomputing
       // the orientation joins) — all build-time work
-      val or = spark.read.parquet(s"$path/oriented")
-      val wedgeWork = or.groupBy(col("u")).agg(count(lit(1)).as("o"))
-        .join(or.groupBy(col("v")).agg(count(lit(1)).as("i")),
-          col("u") === col("v"))
-        .agg(coalesce(sum(col("o") * col("i")), lit(0L))).head.getLong(0)
+      val wedgeWork = wedgeWorkOf(spark.read.parquet(s"$path/oriented"))
       val maxId =
         if (nEdges == 0L) 0L
         else e.agg(max(greatest(col("s1"), col("s2")))).head.getLong(0)
@@ -387,12 +413,7 @@ object Graph {
           "n_nodes", "n_edges", "n_wedges", "n_triangles")
         .withColumn("clustering", lit(null).cast("double"))
     }
-    val wedgeWork = m.getAs[Long]("wedge_work")
-    require(wedgeWork <= maxOrientedWedges,
-      s"triangleStats: oriented wedge count $wedgeWork exceeds the " +
-        s"$maxOrientedWedges budget — the projection is too dense to " +
-        "enumerate; pre-filter hub groups (cap per-key set size at the " +
-        "edge build) or raise maxOrientedWedges deliberately")
+    requireWedgeBudget(m.getAs[Long]("wedge_work"), maxOrientedWedges)
     // spread ONLY the probe/stream side: each of its rows fans out to
     // its out-degree in the wedge join, so partitioning must follow the
     // fan-out, not the scanned bytes. The two BUILD sides stay plain
@@ -403,14 +424,8 @@ object Graph {
     val tri = closedWedgeCount(graft.core.Tables.spread(raw), raw,
       nEdges, m.getAs[Long]("max_id"),
       broadcastEdgeLimit, wedgeBroadcastLimit)
-    Seq((m.getAs[Long]("n_nodes"), m.getAs[Long]("n_wedges")))
-      .toDF("n_nodes", "n_wedges")
-      .crossJoin(tri)
-      .select(col("n_nodes"), lit(nEdges).as("n_edges"), col("n_wedges"),
-        col("n_triangles"),
-        when(col("n_wedges") > 0,
-          lit(3.0) * col("n_triangles") / col("n_wedges"))
-          .as("clustering"))
+    statsRow(Seq((m.getAs[Long]("n_nodes"), m.getAs[Long]("n_wedges")))
+      .toDF("n_nodes", "n_wedges"), tri, nEdges)
   }
 
   /** Exact Σ out(v)·in(v) under degree orientation — the number of
@@ -420,23 +435,7 @@ object Graph {
     * [[triangleStatsAuto]] to DECIDE before committing to the join. */
   def orientedWedgeWork(edges: DataFrame): Long = {
     val e = edges.select(col("s1"), col("s2"))
-    val deg = e.select(col("s1").as("node"))
-      .union(e.select(col("s2").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-    val ed = e
-      .join(broadcast(deg.select(col("node").as("s1"), col("d").as("d1"))),
-        "s1")
-      .join(broadcast(deg.select(col("node").as("s2"), col("d").as("d2"))),
-        "s2")
-    val lowerFirst = (col("d1") < col("d2")) ||
-      ((col("d1") === col("d2")) && (col("s1") < col("s2")))
-    val oriented = ed.select(
-      when(lowerFirst, col("s1")).otherwise(col("s2")).as("u"),
-      when(lowerFirst, col("s2")).otherwise(col("s1")).as("v"))
-    oriented.groupBy(col("u")).agg(count(lit(1)).as("o"))
-      .join(oriented.groupBy(col("v")).agg(count(lit(1)).as("i")),
-        col("u") === col("v"))
-      .agg(coalesce(sum(col("o") * col("i")), lit(0L))).head.getLong(0)
+    wedgeWorkOf(orient(e, degrees(e)))
   }
 
   /** [[triangleStats]] with the refusal replaced by the DEGRADE its

@@ -208,6 +208,29 @@ object GraphQueries extends QueryPack {
     ()
   }
 
+  /** The twins' support-2 edge build shared by gr3/gr4/gr7: per-order
+    * distinct parts `d`, and the part pairs `nab` (a < b) co-occurring in
+    * at least two orders. */
+  private val supportEdgesSql =
+    """d AS (
+      |  SELECT DISTINCT l_orderkey AS ok, CAST(l_partkey AS BIGINT)
+      |    AS pk FROM lineitem
+      |), nab AS (
+      |  SELECT x.pk AS a, y.pk AS b
+      |  FROM d x JOIN d y ON x.ok = y.ok AND x.pk < y.pk
+      |  GROUP BY 1, 2 HAVING count(*) >= 2
+      |)""".stripMargin
+
+  /** The gr2/gr6 twins' node degrees `deg` and triple-join triangle count
+    * `tri` over an (s1 < s2) `edges` CTE. */
+  private val degTriSql =
+    """deg AS (SELECT node, count(*) AS d FROM (
+      |          SELECT s1 AS node FROM edges
+      |          UNION ALL SELECT s2 FROM edges) GROUP BY node),
+      |tri AS (SELECT count(*) AS n_triangles FROM edges e1
+      |        JOIN edges e2 ON e1.s2 = e2.s1
+      |        JOIN edges e3 ON e3.s1 = e1.s1 AND e3.s2 = e2.s2)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // gr5's twin: identical hash-sample keep set (shared hash60
     // arithmetic) via a rank window, then the same pair expansion.
@@ -246,37 +269,16 @@ object GraphQueries extends QueryPack {
     },
     // gr3's twin: the q75 edge build + dd3's recursive-CTE closure.
     "gr3_components" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT DISTINCT l_orderkey AS ok, CAST(l_partkey AS BIGINT)
-        |    AS pk FROM lineitem
-        |), nab AS (
-        |  SELECT x.pk AS a, y.pk AS b
-        |  FROM d x JOIN d y ON x.ok = y.ok AND x.pk < y.pk
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), edges AS (
+      s"""WITH RECURSIVE $supportEdgesSql, edges AS (
         |  SELECT a AS src, b AS dst FROM nab
         |  UNION
         |  SELECT b AS src, a AS dst FROM nab
-        |), reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        |), comp AS (
-        |  SELECT src AS part, least(src, min(dst)) AS cluster_id
-        |  FROM reach GROUP BY src
-        |)
+        |), ${Graph.componentsSql("part")}
         |SELECT cluster_id, count(*) AS n_parts
         |FROM comp GROUP BY cluster_id""".stripMargin,
     // gr4's twin: same support-thresholded edge build, same wedge join.
     "gr4_neighbor_jaccard" ->
-      """WITH d AS (
-        |  SELECT DISTINCT l_orderkey AS ok, CAST(l_partkey AS BIGINT)
-        |    AS pk FROM lineitem
-        |), nab AS (
-        |  SELECT x.pk AS a, y.pk AS b
-        |  FROM d x JOIN d y ON x.ok = y.ok AND x.pk < y.pk
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), und AS (
+      s"""WITH $supportEdgesSql, und AS (
         |  SELECT a, b FROM nab UNION ALL SELECT b, a FROM nab
         |), deg AS (
         |  SELECT a AS n, count(*) AS d FROM und GROUP BY a
@@ -304,12 +306,7 @@ object GraphQueries extends QueryPack {
          |         FROM ps a JOIN ps b ON a.ok = b.ok AND a.pk < b.pk),
          |edges AS (SELECT s1, s2 FROM alle
          |          WHERE ($keep) % 1000 < 100),
-         |deg AS (SELECT node, count(*) AS d FROM (
-         |          SELECT s1 AS node FROM edges
-         |          UNION ALL SELECT s2 FROM edges) GROUP BY node),
-         |tri AS (SELECT count(*) AS n_triangles FROM edges e1
-         |        JOIN edges e2 ON e1.s2 = e2.s1
-         |        JOIN edges e3 ON e3.s1 = e1.s1 AND e3.s2 = e2.s2),
+         |$degTriSql,
          |wedges AS (SELECT CAST(coalesce(sum(d * (d - 1) // 2), 0)
          |    AS BIGINT) AS n_wedges FROM deg)
          |SELECT (SELECT count(*) FROM deg) AS n_nodes_sampled,
@@ -325,14 +322,7 @@ object GraphQueries extends QueryPack {
     // inner joins are exact semi-joins. Final read = degrees over e8.
     "gr7_kcore" -> {
       val sb = new StringBuilder
-      sb ++= """d AS (
-        |  SELECT DISTINCT l_orderkey AS ok, CAST(l_partkey AS BIGINT)
-        |    AS pk FROM lineitem
-        |), nab AS (
-        |  SELECT x.pk AS a, y.pk AS b
-        |  FROM d x JOIN d y ON x.ok = y.ok AND x.pk < y.pk
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), e0 AS MATERIALIZED (
+      sb ++= s"""$supportEdgesSql, e0 AS MATERIALIZED (
         |  SELECT a, b FROM nab UNION ALL SELECT b, a FROM nab
         |)""".stripMargin
       for (t <- 1 to 8) sb ++= s""",
@@ -348,16 +338,11 @@ object GraphQueries extends QueryPack {
           |FROM e8 GROUP BY a""".stripMargin
     },
     "gr2_triangles" ->
-      """WITH ps AS (SELECT DISTINCT l_orderkey AS ok,
+      s"""WITH ps AS (SELECT DISTINCT l_orderkey AS ok,
         |    CAST(l_partkey AS BIGINT) AS pk FROM lineitem),
         |edges AS (SELECT DISTINCT a.pk AS s1, b.pk AS s2
         |          FROM ps a JOIN ps b ON a.ok = b.ok AND a.pk < b.pk),
-        |deg AS (SELECT node, count(*) AS d FROM (
-        |          SELECT s1 AS node FROM edges
-        |          UNION ALL SELECT s2 FROM edges) GROUP BY node),
-        |tri AS (SELECT count(*) AS n_triangles FROM edges e1
-        |        JOIN edges e2 ON e1.s2 = e2.s1
-        |        JOIN edges e3 ON e3.s1 = e1.s1 AND e3.s2 = e2.s2),
+        |$degTriSql,
         |wedges AS (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT)
         |    AS n_wedges FROM deg)
         |SELECT (SELECT count(*) FROM deg) AS n_nodes,

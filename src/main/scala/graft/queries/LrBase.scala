@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.ExactNum.sumFloorSql
+import graft.functions.ExactNum.{floorUnits, sumFloorSql}
 import graft.functions.TextFunctions
 
 /** The in-engine logistic-regression trainer shared by pl27 (the
@@ -122,10 +122,10 @@ object LrBase {
             // partition of rows with |x| ~ 1e12 would need ~10^6 rows
             // to overflow) — throw loudly instead of silently wrapping.
             // The cross-partition merge below is already BigInt-exact.
-            s0 = Math.addExact(s0, math.floor(e * 1e6).toLong)
-            s1 = Math.addExact(s1, math.floor(e * x1 * 1e6).toLong)
-            s2 = Math.addExact(s2, math.floor(e * x2 * 1e6).toLong)
-            s3 = Math.addExact(s3, math.floor(e * x3 * 1e6).toLong)
+            s0 = Math.addExact(s0, floorUnits(e, 1e6))
+            s1 = Math.addExact(s1, floorUnits(e * x1, 1e6))
+            s2 = Math.addExact(s2, floorUnits(e * x2, 1e6))
+            s3 = Math.addExact(s3, floorUnits(e * x3, 1e6))
             n += 1L
           }
           }

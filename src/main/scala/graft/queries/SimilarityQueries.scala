@@ -240,19 +240,48 @@ object SimilarityQueries extends QueryPack {
     math.max(4L,
       math.round(math.sqrt(emb(s, dir).count().toDouble))).toInt
 
-  /** The BM25 query set shared by sim14/sim25/sim26: every doc with
-    * doc_id ≡ 0 (mod 50), query text = its first 3 tokens.
-    * (qid, qtext). */
-  private def retrievalQueries(s: SparkSession, dir: String): DataFrame = {
+  /** Recall@5 of the durable index under `indexDir` (nprobe=2) against
+    * exact-L2 top-5 truth over the corpus `e`, for its first 40 vectors:
+    * per-query (query_id, n_hits, recall). Shared by sim20 (fixture
+    * corpus) and sim23 (clustered corpus). */
+  private def annRecall(s: SparkSession, e: DataFrame,
+                        indexDir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.TextFunctions
-    graft.core.Tables.spread(
-        graft.core.Tables.load(s, dir, "documents"))
-      .filter($"doc_id" % 50 === 0)
-      .select($"doc_id".as("qid"),
-        concat_ws(" ", slice(TextFunctions.tokens($"text"), 1, 3))
-          .as("qtext"))
+    val qs = e.filter($"vec_id" < 40)
+    val ann = graft.operators.VectorIndex.query(s,
+        indexDir, qs, "vec_id", "embedding",
+        nprobe = 2, k = 5)
+      .select($"query_id", $"neighbor_id")
+    val c = e.select($"vec_id".as("neighbor_id"),
+      $"embedding".as("cv"),
+      Similarity.dotSeq($"embedding", $"embedding").as("c2"))
+    val q = qs.select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"query_id")
+      .orderBy($"d2".asc, $"neighbor_id".asc)
+    val truth = c.crossJoin(broadcast(q))
+      .filter($"neighbor_id" =!= $"query_id")
+      .withColumn("d2",
+        $"c2" - lit(2.0) * Similarity.dotSeq($"qv", $"cv"))
+      .withColumn("rank", row_number().over(w))
+      .filter($"rank" <= 5)
+      .select($"query_id", $"neighbor_id")
+    truth.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy($"query_id").agg(count(lit(1)).as("n_hits"))
+      .join(qs.select($"vec_id".as("query_id")), Seq("query_id"),
+        "right")
+      .select($"query_id",
+        coalesce($"n_hits", lit(0L)).as("n_hits"),
+        (coalesce($"n_hits", lit(0L)).cast("double") / lit(5.0))
+          .as("recall"))
   }
+
+  /** The served BM25 top-10 leg (query_id, doc_id, rank) of sim14/sim25/
+    * sim26. */
+  private def servedBm25(s: SparkSession, dir: String,
+                         qs: DataFrame): DataFrame =
+    TermFreqBase.bm25Served(s, dir, qs, k = 10)
+      .select(col("query_id"), col("doc_id"), col("rank"))
 
   /** ONE brute cosine scan (query_id, doc_id, cos) over the %50 query
     * panel — feeds sim25's dense leg AND the semantic relevance
@@ -283,9 +312,10 @@ object SimilarityQueries extends QueryPack {
                       cosq: DataFrame): DataFrame = {
     import s.implicits._
     import graft.functions.TextFunctions
-    val qTerms = retrievalQueries(s, dir).select($"qid".as("query_id"),
-      explode(array_distinct(TextFunctions.tokens($"qtext")))
-        .as("term"))
+    val qTerms = TermFreqBase.retrievalQueries(s, dir)
+      .select($"qid".as("query_id"),
+        explode(array_distinct(TextFunctions.tokens($"qtext")))
+          .as("term"))
     val tsig = TermFreqBase.tf(s, dir).select($"doc_id", $"term")
       .join(broadcast(qTerms), "term")
       .groupBy($"query_id", $"doc_id").agg(count(lit(1)).as("nt"))
@@ -385,6 +415,167 @@ object SimilarityQueries extends QueryPack {
 
   private def ndcgMeanSql(c: String): String =
     quantizeSql(s"${sumExactSql(c)} / count(*)")
+
+  /** The sim14/sim25/sim26 twins' leading CTEs: `sparse` — tx13's BM25
+    * chain at k=10 as (query_id, doc_id, `rank`) — and `nv`, every
+    * vector with its norm. */
+  private def sparseNvSql(rank: String): String =
+    s"""sparse AS (
+       |  SELECT query_id, doc_id, $rank
+       |  FROM (${TextQueries.bm25RankedSql(10)}) s
+       |), nv AS (
+       |  SELECT vec_id, embedding,
+       |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
+       |  FROM embeddings
+       |)""".stripMargin
+
+  /** The sim25/sim26 twins' brute cosine scan `cosq` (query_id, doc_id,
+    * cos) over the %50 query panel, self excluded; reads `nv`. */
+  private val cosqSql =
+    s"""cosq AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
+       |    ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
+       |      AS cos
+       |  FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
+       |  WHERE q.vec_id % 50 = 0
+       |)""".stripMargin
+
+  /** The sim25/sim26 twins' tail after their `sparse`, `dense` and `cosq`
+    * CTEs: the RRF fused list `flist`, the two-channel relevance pool
+    * `rel`, IDCG from per-query grade counts, one DCG per list and the
+    * per-query + rollup nDCG rows; the dense list's columns are named
+    * ndcg_`dense`. */
+  private def ndcgTailSql(dense: String): String =
+    s"""fus AS (
+       |  SELECT COALESCE(s.query_id, d.query_id) AS query_id,
+       |    COALESCE(s.doc_id, d.doc_id) AS doc_id,
+       |    COALESCE(1.0 / (60.0 + CAST(s.rank AS DOUBLE)), 0.0) +
+       |    COALESCE(1.0 / (60.0 + CAST(d.rank AS DOUBLE)), 0.0) AS rrf
+       |  FROM sparse s FULL OUTER JOIN dense d
+       |    ON s.query_id = d.query_id AND s.doc_id = d.doc_id
+       |), flist AS (
+       |  SELECT query_id, doc_id, rank FROM (
+       |    SELECT query_id, doc_id, row_number() OVER (
+       |      PARTITION BY query_id ORDER BY rrf DESC, doc_id ASC)
+       |      AS rank
+       |    FROM fus) z
+       |  WHERE rank <= 10
+       |), toks AS (
+       |  SELECT doc_id AS doc, regexp_extract_all(text, '\\S+') AS t
+       |  FROM documents
+       |), tfq AS (
+       |  SELECT doc, term, count(*) AS tf FROM (
+       |    SELECT doc, unnest(t) AS term FROM toks) u GROUP BY doc, term
+       |), qt AS (
+       |  SELECT doc AS query_id, unnest(list_distinct(t[1:3])) AS term
+       |  FROM toks WHERE doc % 50 = 0
+       |), tsig AS (
+       |  SELECT q.query_id, f.doc AS doc_id,
+       |    CASE WHEN count(*) >= 3 THEN 2 ELSE 1 END AS tr
+       |  FROM qt q JOIN tfq f USING (term)
+       |  GROUP BY 1, 2 HAVING count(*) >= 2
+       |), vsig AS (
+       |  SELECT query_id, doc_id, 1 AS vr FROM cosq WHERE cos >= 0.35
+       |), rel AS (
+       |  SELECT COALESCE(t.query_id, v.query_id) AS query_id,
+       |    COALESCE(t.doc_id, v.doc_id) AS doc_id,
+       |    CAST(coalesce(t.tr, 0) + coalesce(v.vr, 0) AS BIGINT) AS rel
+       |  FROM tsig t FULL OUTER JOIN vsig v
+       |    ON t.query_id = v.query_id AND t.doc_id = v.doc_id
+       |), gc AS (
+       |  SELECT q.query_id,
+       |    coalesce(sum(CASE WHEN rel = 3 THEN 1 ELSE 0 END), 0) AS n3,
+       |    coalesce(sum(CASE WHEN rel = 2 THEN 1 ELSE 0 END), 0) AS n2,
+       |    coalesce(sum(CASE WHEN rel = 1 THEN 1 ELSE 0 END), 0) AS n1
+       |  FROM (SELECT doc_id AS query_id FROM documents
+       |        WHERE doc_id % 50 = 0) q
+       |  LEFT JOIN rel ON rel.query_id = q.query_id
+       |  GROUP BY 1
+       |), idcg AS (
+       |  SELECT query_id,
+       |    ${sumExactSql(s"(${gainSql("g")}) / (ln(i + 1.0) / ln(2.0))")}
+       |      AS idcg
+       |  FROM (SELECT query_id, i,
+       |      CASE WHEN i <= n3 THEN 3 WHEN i <= n3 + n2 THEN 2
+       |        WHEN i <= n3 + n2 + n1 THEN 1 ELSE 0 END AS g
+       |    FROM gc CROSS JOIN
+       |      (SELECT unnest(generate_series(1, 10)) AS i) p) z
+       |  GROUP BY 1
+       |), dcg_s AS (
+       |  ${dcgCte("sparse")}
+       |), dcg_d AS (
+       |  ${dcgCte("dense")}
+       |), dcg_f AS (
+       |  ${dcgCte("flist")}
+       |), perq AS (
+       |  SELECT i.query_id, ${ndcgSql("s")} AS ndcg_sparse,
+       |    ${ndcgSql("d")} AS ndcg_$dense, ${ndcgSql("f")} AS ndcg_fused
+       |  FROM idcg i
+       |  LEFT JOIN dcg_s s USING (query_id)
+       |  LEFT JOIN dcg_d d USING (query_id)
+       |  LEFT JOIN dcg_f f USING (query_id)
+       |)
+       |SELECT query_id, count(*) AS n_q,
+       |  ${ndcgMeanSql("ndcg_sparse")} AS ndcg_sparse,
+       |  ${ndcgMeanSql(s"ndcg_$dense")} AS ndcg_$dense,
+       |  ${ndcgMeanSql("ndcg_fused")} AS ndcg_fused
+       |FROM perq GROUP BY ROLLUP(query_id)""".stripMargin
+
+  /** The sim24/sim26 twins' refine rescore: each `ann0` shortlist row
+    * (query_id, neighbor_id) rescored by the exact-fold d² against its
+    * `qv` query vector over `corpus`, ranked by (d2, neighbor_id). */
+  private def refineRankSql(corpus: String): String =
+    s"""SELECT r.query_id, r.neighbor_id, r.d2,
+       |    row_number() OVER (PARTITION BY r.query_id
+       |      ORDER BY r.d2 ASC, r.neighbor_id ASC) AS rank
+       |  FROM (
+       |    SELECT a.query_id, a.neighbor_id,
+       |      ${dotSql("c.embedding", "c.embedding")}
+       |        - 2.0 * ${dotSql("q.qvec", "c.embedding")} AS d2
+       |    FROM ann0 a
+       |    JOIN $corpus c ON c.vec_id = a.neighbor_id
+       |    JOIN qv q ON q.query_id = a.query_id) r""".stripMargin
+
+  /** The sim20/sim23 twins' recall tail after their `ann` CTE: the first
+    * 40 vectors of `corpus` as queries `qv`, exact-L2 top-5 `truth` via
+    * the shared folds, `hits` per query, and (query_id, n_hits, recall). */
+  private def recallSql(corpus: String): String =
+    s"""qv AS (
+       |  SELECT vec_id AS query_id, embedding AS qvec
+       |  FROM $corpus WHERE vec_id < 40
+       |), cv AS (
+       |  SELECT vec_id AS neighbor_id, embedding AS cvec,
+       |    ${dotSql("embedding", "embedding")} AS c2
+       |  FROM $corpus
+       |), truth AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT q.query_id, c.neighbor_id,
+       |      row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY c.c2 - 2.0 * ${dotSql("q.qvec", "c.cvec")} ASC,
+       |          c.neighbor_id ASC) AS rank
+       |    FROM cv c CROSS JOIN qv q
+       |    WHERE c.neighbor_id <> q.query_id) t
+       |  WHERE rank <= 5
+       |), hits AS (
+       |  SELECT t.query_id, count(*) AS n_hits
+       |  FROM truth t JOIN ann a
+       |    ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
+       |  GROUP BY 1
+       |)
+       |SELECT q.query_id, coalesce(h.n_hits, 0) AS n_hits,
+       |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 5.0 AS recall
+       |FROM qv q LEFT JOIN hits h USING (query_id)""".stripMargin
+
+  /** The sim13/sim15 twins' exploded view `ex` (vec_id, dim, x): one row
+    * per embedding element, dim 0-based. */
+  private val explodedSql =
+    """ex AS (
+      |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
+      |    CAST(embedding[i] AS DOUBLE) AS x
+      |  FROM (SELECT vec_id, embedding,
+      |          unnest(generate_series(1, len(embedding))) AS i
+      |        FROM embeddings) p
+      |)""".stripMargin
 
   /** DuckDB twin of Similarity.dotSeq: sequential fold over the zipped
     * product list, same order as Spark's `aggregate`. */
@@ -593,37 +784,8 @@ object SimilarityQueries extends QueryPack {
     // (m, ks) with pruning eliminated, and its planted near-copies
     // recall at 1.0 through the pruned path. The knobs recall buys
     // into are nprobe, m, ks.
-    "sim20_ann_recall" -> ((s, dir) => {
-      import s.implicits._
-      val e = emb(s, dir)
-      val qs = e.filter($"vec_id" < 40)
-      val ann = graft.operators.VectorIndex.query(s,
-          vectorIndexDir(s, dir), qs, "vec_id", "embedding",
-          nprobe = 2, k = 5)
-        .select($"query_id", $"neighbor_id")
-      val c = e.select($"vec_id".as("neighbor_id"),
-        $"embedding".as("cv"),
-        Similarity.dotSeq($"embedding", $"embedding").as("c2"))
-      val q = qs.select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"query_id")
-        .orderBy($"d2".asc, $"neighbor_id".asc)
-      val truth = c.crossJoin(broadcast(q))
-        .filter($"neighbor_id" =!= $"query_id")
-        .withColumn("d2",
-          $"c2" - lit(2.0) * Similarity.dotSeq($"qv", $"cv"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 5)
-        .select($"query_id", $"neighbor_id")
-      truth.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy($"query_id").agg(count(lit(1)).as("n_hits"))
-        .join(qs.select($"vec_id".as("query_id")), Seq("query_id"),
-          "right")
-        .select($"query_id",
-          coalesce($"n_hits", lit(0L)).as("n_hits"),
-          (coalesce($"n_hits", lit(0L)).cast("double") / lit(5.0))
-            .as("recall"))
-    }),
+    "sim20_ann_recall" -> ((s, dir) =>
+      annRecall(s, emb(s, dir), vectorIndexDir(s, dir))),
 
     // sim20's evaluation on the CLUSTERED derived corpus (clusteredVecs)
     // — the oracled counterpart of SimilaritySpec's raw 0.20 → residual
@@ -635,37 +797,8 @@ object SimilarityQueries extends QueryPack {
     // brute truth from scratch). SimilaritySpec additionally pins the
     // MEAN recall ≥ 0.4 at sf0.001 so the demonstration cannot decay
     // into a structural green.
-    "sim23_clustered_recall" -> ((s, dir) => {
-      import s.implicits._
-      val e = clusteredVecs(s, dir)
-      val qs = e.filter($"vec_id" < 40)
-      val ann = graft.operators.VectorIndex.query(s,
-          vectorIndexClusteredDir(s, dir), qs, "vec_id", "embedding",
-          nprobe = 2, k = 5)
-        .select($"query_id", $"neighbor_id")
-      val c = e.select($"vec_id".as("neighbor_id"),
-        $"embedding".as("cv"),
-        Similarity.dotSeq($"embedding", $"embedding").as("c2"))
-      val q = qs.select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"query_id")
-        .orderBy($"d2".asc, $"neighbor_id".asc)
-      val truth = c.crossJoin(broadcast(q))
-        .filter($"neighbor_id" =!= $"query_id")
-        .withColumn("d2",
-          $"c2" - lit(2.0) * Similarity.dotSeq($"qv", $"cv"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 5)
-        .select($"query_id", $"neighbor_id")
-      truth.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy($"query_id").agg(count(lit(1)).as("n_hits"))
-        .join(qs.select($"vec_id".as("query_id")), Seq("query_id"),
-          "right")
-        .select($"query_id",
-          coalesce($"n_hits", lit(0L)).as("n_hits"),
-          (coalesce($"n_hits", lit(0L)).cast("double") / lit(5.0))
-            .as("recall"))
-    }),
+    "sim23_clustered_recall" -> ((s, dir) =>
+      annRecall(s, clusteredVecs(s, dir), vectorIndexClusteredDir(s, dir))),
 
     // IVFADC + exact re-rank (Jégou et al. 2011's IVFADC+R topology,
     // VectorIndex.queryRefined): a 20-deep ADC shortlist from the
@@ -868,23 +1001,7 @@ object SimilarityQueries extends QueryPack {
     // demonstration at √N cells.
     "sim14_hybrid_rrf" -> ((s, dir) => {
       import s.implicits._
-      import graft.functions.TextFunctions
-      val base = graft.core.Tables.spread(
-        graft.core.Tables.load(s, dir, "documents"))
-      val qs = base.filter($"doc_id" % 50 === 0)
-        .select($"doc_id".as("qid"),
-          concat_ws(" ", slice(TextFunctions.tokens($"text"), 1, 3))
-            .as("qtext"))
-      val sparse = graft.operators.Retrieval
-        .bm25TopKServed(
-          TermFreqBase.tf(s, dir).select(col("doc_id").as("doc"),
-            col("term"), col("tf")),
-          TermFreqBase.dl(s, dir).select(col("doc_id").as("doc"),
-            col("dl")),
-          TermFreqBase.docFreq(s, dir),
-          TermFreqBase.stats(s, dir),
-          qs, "qid", "qtext", k = 10)
-        .select($"query_id", $"doc_id", $"rank")
+      val sparse = servedBm25(s, dir, TermFreqBase.retrievalQueries(s, dir))
       val e = emb(s, dir)
       val dense = Similarity
         .cosineTopK(e, e.filter($"vec_id" % 50 === 0), "vec_id",
@@ -926,20 +1043,12 @@ object SimilarityQueries extends QueryPack {
     // rollup means re-quantized after division.
     "sim25_retrieval_ndcg" -> ((s, dir) => {
       import s.implicits._
-      val qs = retrievalQueries(s, dir)
+      val qs = TermFreqBase.retrievalQueries(s, dir)
       // each top-10 list feeds TWO consumers (its DCG leg + the RRF
       // fusion) — persisted (≤ queries·10 rows) so the BM25 scoring
       // chain and the cosine rank window run once, not per consumer;
       // release is GC-scoped with the other persists below
-      val sparse = graft.operators.Retrieval.bm25TopKServed(
-          TermFreqBase.tf(s, dir).select(col("doc_id").as("doc"),
-            col("term"), col("tf")),
-          TermFreqBase.dl(s, dir).select(col("doc_id").as("doc"),
-            col("dl")),
-          TermFreqBase.docFreq(s, dir),
-          TermFreqBase.stats(s, dir),
-          qs, "qid", "qtext", k = 10)
-        .select($"query_id", $"doc_id", $"rank")
+      val sparse = servedBm25(s, dir, qs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // ONE brute cosine scan feeds BOTH the dense top-10 (value- and
       // tie-break-identical to sim14's cosineTopK leg) and the semantic
@@ -1008,16 +1117,8 @@ object SimilarityQueries extends QueryPack {
     // honest serving-quality number for THIS index topology.
     "sim26_indexed_retrieval_ndcg" -> ((s, dir) => {
       import s.implicits._
-      val qs = retrievalQueries(s, dir)
-      val sparse = graft.operators.Retrieval.bm25TopKServed(
-          TermFreqBase.tf(s, dir).select(col("doc_id").as("doc"),
-            col("term"), col("tf")),
-          TermFreqBase.dl(s, dir).select(col("doc_id").as("doc"),
-            col("dl")),
-          TermFreqBase.docFreq(s, dir),
-          TermFreqBase.stats(s, dir),
-          qs, "qid", "qtext", k = 10)
-        .select($"query_id", $"doc_id", $"rank")
+      val qs = TermFreqBase.retrievalQueries(s, dir)
+      val sparse = servedBm25(s, dir, qs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val e = emb(s, dir)
       val indexed = graft.operators.VectorIndex.queryRefined(s,
@@ -1189,14 +1290,7 @@ object SimilarityQueries extends QueryPack {
     // cosine ranking as subqueries, fused with the identical
     // 1/(60+rank) AST.
     "sim14_hybrid_rrf" ->
-      s"""WITH sparse AS (
-         |  SELECT query_id, doc_id, rank AS r_sparse
-         |  FROM (${TextQueries.bm25RankedSql(10)}) s
-         |), nv AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings
-         |), dense AS (
+      s"""WITH ${sparseNvSql("rank AS r_sparse")}, dense AS (
          |  SELECT query_id, doc_id, rank AS r_dense FROM (
          |    SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
          |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
@@ -1229,102 +1323,15 @@ object SimilarityQueries extends QueryPack {
     // IDENTICAL to the Spark side's qs (ADVICE r14: deriving it from qt
     // would drop a zero-token query doc, an engine divergence; current
     // fixtures have none, so the hash is unchanged).
-    "sim25_retrieval_ndcg" -> {
-      s"""WITH sparse AS (
-         |  SELECT query_id, doc_id, rank
-         |  FROM (${TextQueries.bm25RankedSql(10)}) s
-         |), nv AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings
-         |), cosq AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-         |    ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-         |      AS cos
-         |  FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id % 50 = 0
-         |), dense AS (
+    "sim25_retrieval_ndcg" ->
+      s"""WITH ${sparseNvSql("rank")}, $cosqSql, dense AS (
          |  SELECT query_id, doc_id, rank FROM (
          |    SELECT query_id, doc_id, row_number() OVER (
          |      PARTITION BY query_id ORDER BY cos DESC, doc_id ASC)
          |      AS rank
          |    FROM cosq) d
          |  WHERE rank <= 10
-         |), fus AS (
-         |  SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-         |    COALESCE(s.doc_id, d.doc_id) AS doc_id,
-         |    COALESCE(1.0 / (60.0 + CAST(s.rank AS DOUBLE)), 0.0) +
-         |    COALESCE(1.0 / (60.0 + CAST(d.rank AS DOUBLE)), 0.0) AS rrf
-         |  FROM sparse s FULL OUTER JOIN dense d
-         |    ON s.query_id = d.query_id AND s.doc_id = d.doc_id
-         |), flist AS (
-         |  SELECT query_id, doc_id, rank FROM (
-         |    SELECT query_id, doc_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY rrf DESC, doc_id ASC)
-         |      AS rank
-         |    FROM fus) z
-         |  WHERE rank <= 10
-         |), toks AS (
-         |  SELECT doc_id AS doc, regexp_extract_all(text, '\\S+') AS t
-         |  FROM documents
-         |), tfq AS (
-         |  SELECT doc, term, count(*) AS tf FROM (
-         |    SELECT doc, unnest(t) AS term FROM toks) u GROUP BY doc, term
-         |), qt AS (
-         |  SELECT doc AS query_id, unnest(list_distinct(t[1:3])) AS term
-         |  FROM toks WHERE doc % 50 = 0
-         |), tsig AS (
-         |  SELECT q.query_id, f.doc AS doc_id,
-         |    CASE WHEN count(*) >= 3 THEN 2 ELSE 1 END AS tr
-         |  FROM qt q JOIN tfq f USING (term)
-         |  GROUP BY 1, 2 HAVING count(*) >= 2
-         |), vsig AS (
-         |  SELECT query_id, doc_id, 1 AS vr FROM cosq WHERE cos >= 0.35
-         |), rel AS (
-         |  SELECT COALESCE(t.query_id, v.query_id) AS query_id,
-         |    COALESCE(t.doc_id, v.doc_id) AS doc_id,
-         |    CAST(coalesce(t.tr, 0) + coalesce(v.vr, 0) AS BIGINT) AS rel
-         |  FROM tsig t FULL OUTER JOIN vsig v
-         |    ON t.query_id = v.query_id AND t.doc_id = v.doc_id
-         |), gc AS (
-         |  SELECT q.query_id,
-         |    coalesce(sum(CASE WHEN rel = 3 THEN 1 ELSE 0 END), 0) AS n3,
-         |    coalesce(sum(CASE WHEN rel = 2 THEN 1 ELSE 0 END), 0) AS n2,
-         |    coalesce(sum(CASE WHEN rel = 1 THEN 1 ELSE 0 END), 0) AS n1
-         |  FROM (SELECT doc_id AS query_id FROM documents
-         |        WHERE doc_id % 50 = 0) q
-         |  LEFT JOIN rel ON rel.query_id = q.query_id
-         |  GROUP BY 1
-         |), idcg AS (
-         |  SELECT query_id,
-         |    ${sumExactSql(s"(${gainSql("g")}) / (ln(i + 1.0) / ln(2.0))")}
-         |      AS idcg
-         |  FROM (SELECT query_id, i,
-         |      CASE WHEN i <= n3 THEN 3 WHEN i <= n3 + n2 THEN 2
-         |        WHEN i <= n3 + n2 + n1 THEN 1 ELSE 0 END AS g
-         |    FROM gc CROSS JOIN
-         |      (SELECT unnest(generate_series(1, 10)) AS i) p) z
-         |  GROUP BY 1
-         |), dcg_s AS (
-         |  ${dcgCte("sparse")}
-         |), dcg_d AS (
-         |  ${dcgCte("dense")}
-         |), dcg_f AS (
-         |  ${dcgCte("flist")}
-         |), perq AS (
-         |  SELECT i.query_id, ${ndcgSql("s")} AS ndcg_sparse,
-         |    ${ndcgSql("d")} AS ndcg_dense, ${ndcgSql("f")} AS ndcg_fused
-         |  FROM idcg i
-         |  LEFT JOIN dcg_s s USING (query_id)
-         |  LEFT JOIN dcg_d d USING (query_id)
-         |  LEFT JOIN dcg_f f USING (query_id)
-         |)
-         |SELECT query_id, count(*) AS n_q,
-         |  ${ndcgMeanSql("ndcg_sparse")} AS ndcg_sparse,
-         |  ${ndcgMeanSql("ndcg_dense")} AS ndcg_dense,
-         |  ${ndcgMeanSql("ndcg_fused")} AS ndcg_fused
-         |FROM perq GROUP BY ROLLUP(query_id)""".stripMargin
-    },
+         |), ${ndcgTailSql("dense")}""".stripMargin,
     // sim26's twin — the honest from-scratch oracle for BOTH serve
     // paths at once: the dense list re-derives the WHOLE IVFADC chain
     // (sim22's derived-√N-cell twin at shortlist depth 30, the sim24
@@ -1333,126 +1340,24 @@ object SimilarityQueries extends QueryPack {
     // pool), and the nDCG arithmetic is sim25's twin verbatim with
     // ndcg_indexed replacing ndcg_dense. cosq exists here only for the
     // semantic relevance channel.
-    "sim26_indexed_retrieval_ndcg" -> {
-      s"""WITH sparse AS (
-         |  SELECT query_id, doc_id, rank
-         |  FROM (${TextQueries.bm25RankedSql(10)}) s
-         |), ann0 AS (
+    "sim26_indexed_retrieval_ndcg" ->
+      s"""WITH ${sparseNvSql("rank")}, $cosqSql, ann0 AS (
          |${sim22Sql(2, 2, 8, 8, 8, 2, 30, queryWhere = "p._vid % 50 = 0")}
          |), qv AS (
          |  SELECT vec_id AS query_id, embedding AS qvec
          |  FROM embeddings WHERE vec_id % 50 = 0
          |), dense AS (
-         |  SELECT query_id, doc_id, rank FROM (
-         |    SELECT r.query_id, r.neighbor_id AS doc_id,
-         |      row_number() OVER (PARTITION BY r.query_id
-         |        ORDER BY r.d2 ASC, r.neighbor_id ASC) AS rank
-         |    FROM (
-         |      SELECT a.query_id, a.neighbor_id,
-         |        ${dotSql("c.embedding", "c.embedding")}
-         |          - 2.0 * ${dotSql("q.qvec", "c.embedding")} AS d2
-         |      FROM ann0 a
-         |      JOIN embeddings c ON c.vec_id = a.neighbor_id
-         |      JOIN qv q ON q.query_id = a.query_id) r) t
+         |  SELECT query_id, neighbor_id AS doc_id, rank
+         |  FROM (${refineRankSql("embeddings")}) t
          |  WHERE rank <= 10
-         |), nv AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings
-         |), cosq AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-         |    ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-         |      AS cos
-         |  FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id % 50 = 0
-         |), fus AS (
-         |  SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-         |    COALESCE(s.doc_id, d.doc_id) AS doc_id,
-         |    COALESCE(1.0 / (60.0 + CAST(s.rank AS DOUBLE)), 0.0) +
-         |    COALESCE(1.0 / (60.0 + CAST(d.rank AS DOUBLE)), 0.0) AS rrf
-         |  FROM sparse s FULL OUTER JOIN dense d
-         |    ON s.query_id = d.query_id AND s.doc_id = d.doc_id
-         |), flist AS (
-         |  SELECT query_id, doc_id, rank FROM (
-         |    SELECT query_id, doc_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY rrf DESC, doc_id ASC)
-         |      AS rank
-         |    FROM fus) z
-         |  WHERE rank <= 10
-         |), toks AS (
-         |  SELECT doc_id AS doc, regexp_extract_all(text, '\\S+') AS t
-         |  FROM documents
-         |), tfq AS (
-         |  SELECT doc, term, count(*) AS tf FROM (
-         |    SELECT doc, unnest(t) AS term FROM toks) u GROUP BY doc, term
-         |), qt AS (
-         |  SELECT doc AS query_id, unnest(list_distinct(t[1:3])) AS term
-         |  FROM toks WHERE doc % 50 = 0
-         |), tsig AS (
-         |  SELECT q.query_id, f.doc AS doc_id,
-         |    CASE WHEN count(*) >= 3 THEN 2 ELSE 1 END AS tr
-         |  FROM qt q JOIN tfq f USING (term)
-         |  GROUP BY 1, 2 HAVING count(*) >= 2
-         |), vsig AS (
-         |  SELECT query_id, doc_id, 1 AS vr FROM cosq WHERE cos >= 0.35
-         |), rel AS (
-         |  SELECT COALESCE(t.query_id, v.query_id) AS query_id,
-         |    COALESCE(t.doc_id, v.doc_id) AS doc_id,
-         |    CAST(coalesce(t.tr, 0) + coalesce(v.vr, 0) AS BIGINT) AS rel
-         |  FROM tsig t FULL OUTER JOIN vsig v
-         |    ON t.query_id = v.query_id AND t.doc_id = v.doc_id
-         |), gc AS (
-         |  SELECT q.query_id,
-         |    coalesce(sum(CASE WHEN rel = 3 THEN 1 ELSE 0 END), 0) AS n3,
-         |    coalesce(sum(CASE WHEN rel = 2 THEN 1 ELSE 0 END), 0) AS n2,
-         |    coalesce(sum(CASE WHEN rel = 1 THEN 1 ELSE 0 END), 0) AS n1
-         |  FROM (SELECT doc_id AS query_id FROM documents
-         |        WHERE doc_id % 50 = 0) q
-         |  LEFT JOIN rel ON rel.query_id = q.query_id
-         |  GROUP BY 1
-         |), idcg AS (
-         |  SELECT query_id,
-         |    ${sumExactSql(s"(${gainSql("g")}) / (ln(i + 1.0) / ln(2.0))")}
-         |      AS idcg
-         |  FROM (SELECT query_id, i,
-         |      CASE WHEN i <= n3 THEN 3 WHEN i <= n3 + n2 THEN 2
-         |        WHEN i <= n3 + n2 + n1 THEN 1 ELSE 0 END AS g
-         |    FROM gc CROSS JOIN
-         |      (SELECT unnest(generate_series(1, 10)) AS i) p) z
-         |  GROUP BY 1
-         |), dcg_s AS (
-         |  ${dcgCte("sparse")}
-         |), dcg_i AS (
-         |  ${dcgCte("dense")}
-         |), dcg_f AS (
-         |  ${dcgCte("flist")}
-         |), perq AS (
-         |  SELECT i.query_id, ${ndcgSql("s")} AS ndcg_sparse,
-         |    ${ndcgSql("d")} AS ndcg_indexed, ${ndcgSql("f")} AS ndcg_fused
-         |  FROM idcg i
-         |  LEFT JOIN dcg_s s USING (query_id)
-         |  LEFT JOIN dcg_i d USING (query_id)
-         |  LEFT JOIN dcg_f f USING (query_id)
-         |)
-         |SELECT query_id, count(*) AS n_q,
-         |  ${ndcgMeanSql("ndcg_sparse")} AS ndcg_sparse,
-         |  ${ndcgMeanSql("ndcg_indexed")} AS ndcg_indexed,
-         |  ${ndcgMeanSql("ndcg_fused")} AS ndcg_fused
-         |FROM perq GROUP BY ROLLUP(query_id)""".stripMargin
-    },
+         |), ${ndcgTailSql("indexed")}""".stripMargin,
     // sim13's twin pairs dimensions by a self-join of the exploded view
     // (the oracle can afford the N·d² shuffle the Spark side's in-row
     // expansion avoids); same fixed-point floor folds (a rounding
     // double→decimal cast would diverge at 12 digits — see
     // Similarity.covarianceMatrix), same cov/corr AST.
     "sim13_covariance" ->
-      s"""WITH ex AS (
-        |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-        |    CAST(embedding[i] AS DOUBLE) AS x
-        |  FROM (SELECT vec_id, embedding,
-        |          unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings) p
-        |), stats AS (
+      s"""WITH $explodedSql, stats AS (
         |  SELECT dim, count(*) AS n, ${sumFloorSql("x", 12)} AS s,
         |    ${sumFloorSql("x * x", 12)} AS s2
         |  FROM ex GROUP BY dim
@@ -1474,13 +1379,7 @@ object SimilarityQueries extends QueryPack {
     // sim15's twin: same exploded view, same fixed-point stat folds,
     // same mean/std/z AST.
     "sim15_standardize" ->
-      s"""WITH ex AS (
-        |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-        |    CAST(embedding[i] AS DOUBLE) AS x
-        |  FROM (SELECT vec_id, embedding,
-        |          unnest(generate_series(1, len(embedding))) AS i
-        |        FROM embeddings) p
-        |), stats AS (
+      s"""WITH $explodedSql, stats AS (
         |  SELECT dim,
         |    ${sumFloorSql("x", 12)} / count(*) AS mean,
         |    sqrt((${sumFloorSql("x * x", 12)}
@@ -1559,31 +1458,7 @@ object SimilarityQueries extends QueryPack {
          |${sim18Sql(8, 2, 2, 8, 8, 8, 2, 5)}
          |), ann AS (
          |  SELECT query_id, neighbor_id FROM ann0
-         |), qv AS (
-         |  SELECT vec_id AS query_id, embedding AS qvec
-         |  FROM embeddings WHERE vec_id < 40
-         |), cv AS (
-         |  SELECT vec_id AS neighbor_id, embedding AS cvec,
-         |    ${dotSql("embedding", "embedding")} AS c2
-         |  FROM embeddings
-         |), truth AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.query_id, c.neighbor_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY c.c2 - 2.0 * ${dotSql("q.qvec", "c.cvec")} ASC,
-         |          c.neighbor_id ASC) AS rank
-         |    FROM cv c CROSS JOIN qv q
-         |    WHERE c.neighbor_id <> q.query_id) t
-         |  WHERE rank <= 5
-         |), hits AS (
-         |  SELECT t.query_id, count(*) AS n_hits
-         |  FROM truth t JOIN ann a
-         |    ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-         |  GROUP BY 1
-         |)
-         |SELECT q.query_id, coalesce(h.n_hits, 0) AS n_hits,
-         |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM qv q LEFT JOIN hits h USING (query_id)""".stripMargin,
+         |), ${recallSql("embeddings")}""".stripMargin,
     // sim23's twin: the derived clustered vectors as an outer CTE
     // (visible inside ann0's nested WITH), the whole IVFADC chain
     // re-derived over them (training AND membership on cvecs), exact-L2
@@ -1595,31 +1470,7 @@ object SimilarityQueries extends QueryPack {
                      corpus = "cvecs")}
          |), ann AS (
          |  SELECT query_id, neighbor_id FROM ann0
-         |), qv AS (
-         |  SELECT vec_id AS query_id, embedding AS qvec
-         |  FROM cvecs WHERE vec_id < 40
-         |), cv AS (
-         |  SELECT vec_id AS neighbor_id, embedding AS cvec,
-         |    ${dotSql("embedding", "embedding")} AS c2
-         |  FROM cvecs
-         |), truth AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.query_id, c.neighbor_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY c.c2 - 2.0 * ${dotSql("q.qvec", "c.cvec")} ASC,
-         |          c.neighbor_id ASC) AS rank
-         |    FROM cv c CROSS JOIN qv q
-         |    WHERE c.neighbor_id <> q.query_id) t
-         |  WHERE rank <= 5
-         |), hits AS (
-         |  SELECT t.query_id, count(*) AS n_hits
-         |  FROM truth t JOIN ann a
-         |    ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-         |  GROUP BY 1
-         |)
-         |SELECT q.query_id, coalesce(h.n_hits, 0) AS n_hits,
-         |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM qv q LEFT JOIN hits h USING (query_id)""".stripMargin,
+         |), ${recallSql("cvecs")}""".stripMargin,
     // sim24's twin: the sim23 chain at shortlist depth 20, rescored by
     // the exact-fold d² and re-ranked — the refine arithmetic is pinned
     // end to end, not just the hit sets.
@@ -1632,17 +1483,8 @@ object SimilarityQueries extends QueryPack {
          |  SELECT vec_id AS query_id, embedding AS qvec
          |  FROM cvecs WHERE vec_id < 40
          |)
-         |SELECT query_id, neighbor_id, d2 AS d2_shifted, rank FROM (
-         |  SELECT r.query_id, r.neighbor_id, r.d2,
-         |    row_number() OVER (PARTITION BY r.query_id
-         |      ORDER BY r.d2 ASC, r.neighbor_id ASC) AS rank
-         |  FROM (
-         |    SELECT a.query_id, a.neighbor_id,
-         |      ${dotSql("c.embedding", "c.embedding")}
-         |        - 2.0 * ${dotSql("q.qvec", "c.embedding")} AS d2
-         |    FROM ann0 a
-         |    JOIN cvecs c ON c.vec_id = a.neighbor_id
-         |    JOIN qv q ON q.query_id = a.query_id) r) t
+         |SELECT query_id, neighbor_id, d2 AS d2_shifted, rank
+         |FROM (${refineRankSql("cvecs")}) t
          |WHERE rank <= 5""".stripMargin,
     // sim21's twin: one scored CTE carrying all four fold dots (DuckDB
     // a[1:d] slices feed the same sequential fold), one ranked CTE per
@@ -1708,26 +1550,52 @@ object SimilarityQueries extends QueryPack {
   private def pqCtes(m: Int, subDim: Int, ks: Int, iters: Int,
                      queryWhere: String,
                      trainSrc: String = "embeddings"): String = {
-    import graft.functions.PortableHash
-    val seedHash = PortableHash.hash60Sql("CAST(vec_id AS VARCHAR)")
     // training stages see only trainSrc's vectors; psubq (the encode +
     // query-LUT base) always covers the full corpus — the sim18 split
     // where frozen codebooks come from history but encode old ∪ new.
+    s"""psubq AS (
+       |  SELECT vec_id AS _vid, CAST(sx.sub AS BIGINT) AS sub,
+       |    embedding[(sx.sub * $subDim + 1):(sx.sub * $subDim + $subDim)]
+       |      AS sv
+       |  FROM embeddings CROSS JOIN
+       |    (SELECT unnest(generate_series(0, ${m - 1})) AS sub) sx
+       |), ${pqTrainSql(subDim, ks, iters, trainSrc)}, plut AS (
+       |  SELECT q._vid AS query_id, q.sub, c.code,
+       |    ${dotSql("q.sv", "q.sv")}
+       |      - 2.0 * ${dotSql("q.sv", "c.c_arr")} + c.c2 AS d
+       |  FROM psubq q JOIN pccF c USING (sub)
+       |  WHERE $queryWhere
+       |)""".stripMargin
+  }
+
+  /** The PQ training chain over a `psubq` CTE (_vid, sub, sv), shared by
+    * [[pqCtes]] and [[pqResCtes]]: `ks` hash-seeded codebooks drawn from
+    * `trainSrc`, `iters - 1` unrolled Lloyd's updates keyed by (sub,
+    * code) over training rows only, the final codebook `pccF` with its
+    * squared norms, and the final encode `penc` of every psubq row. */
+  private def pqTrainSql(subDim: Int, ks: Int, iters: Int,
+                         trainSrc: String): String = {
+    import graft.functions.PortableHash
+    val seedHash = PortableHash.hash60Sql("CAST(vec_id AS VARCHAR)")
     val trainJoin = if (trainSrc == "embeddings") ""
       else s" JOIN $trainSrc _tr ON _tr.vec_id = q._vid"
+    // each psubq row's nearest code under codebook `cc` (ties to the
+    // lower code): the training assignment and the final encode
+    def nearest(cc: String, join: String): String =
+      s"""SELECT _vid, sub, code FROM (
+         |    SELECT q._vid, q.sub, c.code,
+         |      row_number() OVER (PARTITION BY q._vid, q.sub
+         |        ORDER BY c.c2 - 2.0 * ${dotSql("q.sv", "c.c_arr")} ASC,
+         |          c.code ASC) AS rn
+         |    FROM psubq q JOIN $cc c USING (sub)$join) t
+         |  WHERE rn = 1""".stripMargin
     val iterCtes = (2 to iters).map { it =>
       val prev = it - 1
       s"""pcc$prev AS (
          |  SELECT sub, code, c_arr, ${dotSql("c_arr", "c_arr")} AS c2
          |  FROM pcb$prev
          |), pasg$prev AS (
-         |  SELECT _vid, sub, code FROM (
-         |    SELECT q._vid, q.sub, c.code,
-         |      row_number() OVER (PARTITION BY q._vid, q.sub
-         |        ORDER BY c.c2 - 2.0 * ${dotSql("q.sv", "c.c_arr")} ASC,
-         |          c.code ASC) AS rn
-         |    FROM psubq q JOIN pcc$prev c USING (sub)$trainJoin) t
-         |  WHERE rn = 1
+         |  ${nearest(s"pcc$prev", trainJoin)}
          |), pcbe$it AS (
          |  SELECT sub, code, CAST(pos AS BIGINT) AS dim,
          |    ${avgExactSql("CAST(x AS DOUBLE)")} AS centroid
@@ -1742,13 +1610,7 @@ object SimilarityQueries extends QueryPack {
          |  FROM pcbe$it GROUP BY sub, code
          |)""".stripMargin
     }.mkString(", ")
-    s"""psubq AS (
-       |  SELECT vec_id AS _vid, CAST(sx.sub AS BIGINT) AS sub,
-       |    embedding[(sx.sub * $subDim + 1):(sx.sub * $subDim + $subDim)]
-       |      AS sv
-       |  FROM embeddings CROSS JOIN
-       |    (SELECT unnest(generate_series(0, ${m - 1})) AS sub) sx
-       |), pseeds AS (
+    s"""pseeds AS (
        |  SELECT vec_id AS _vid, CAST(rn - 1 AS BIGINT) AS code
        |  FROM (SELECT vec_id,
        |          row_number() OVER (ORDER BY $seedHash, vec_id) AS rn
@@ -1762,21 +1624,19 @@ object SimilarityQueries extends QueryPack {
        |  SELECT sub, code, c_arr, ${dotSql("c_arr", "c_arr")} AS c2
        |  FROM pcb$iters
        |), penc AS (
-       |  SELECT _vid, sub, code FROM (
-       |    SELECT q._vid, q.sub, c.code,
-       |      row_number() OVER (PARTITION BY q._vid, q.sub
-       |        ORDER BY c.c2 - 2.0 * ${dotSql("q.sv", "c.c_arr")} ASC,
-       |          c.code ASC) AS rn
-       |    FROM psubq q JOIN pccF c USING (sub)) t
-       |  WHERE rn = 1
-       |), plut AS (
-       |  SELECT q._vid AS query_id, q.sub, c.code,
-       |    ${dotSql("q.sv", "q.sv")}
-       |      - 2.0 * ${dotSql("q.sv", "c.c_arr")} + c.c2 AS d
-       |  FROM psubq q JOIN pccF c USING (sub)
-       |  WHERE $queryWhere
+       |  ${nearest("pccF", "")}
        |)""".stripMargin
   }
+
+  /** The ADC top-k of a `scored` CTE (query_id, _vid, d0 … d{m-1}),
+    * shared by [[sim10Sql]] and [[ivfPqSql]]. */
+  private def adcTopKSql(m: Int, k: Int): String =
+    s"""SELECT query_id, _vid AS neighbor_id, adc_dist, rank FROM (
+       |  SELECT query_id, _vid, ${pivotSum(m)} AS adc_dist,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY ${pivotSum(m)} ASC, _vid ASC) AS rank
+       |  FROM scored) r
+       |WHERE rank <= $k""".stripMargin
 
   private def pivotCols(m: Int): String = (0 until m).map(s =>
     s"max(CASE WHEN e.sub = $s THEN d END) AS d$s").mkString(",\n    ")
@@ -1792,12 +1652,7 @@ object SimilarityQueries extends QueryPack {
        |    AND e._vid <> l.query_id
        |  GROUP BY l.query_id, e._vid
        |)
-       |SELECT query_id, _vid AS neighbor_id, adc_dist, rank FROM (
-       |  SELECT query_id, _vid, ${pivotSum(m)} AS adc_dist,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY ${pivotSum(m)} ASC, _vid ASC) AS rank
-       |  FROM scored) r
-       |WHERE rank <= $k""".stripMargin
+       |${adcTopKSql(m, k)}""".stripMargin
 
   /** sim11's DuckDB twin: the shared coarse k-means chain + per-row
     * fold cell assignment (rank window — rn=1 is membership, rn ≤
@@ -1844,38 +1699,7 @@ object SimilarityQueries extends QueryPack {
   private def pqResCtes(m: Int, subDim: Int, ks: Int, iters: Int,
                         trainSrc: String,
                         corpus: String = "embeddings"): String = {
-    import graft.functions.PortableHash
     val dims = m * subDim
-    val seedHash = PortableHash.hash60Sql("CAST(vec_id AS VARCHAR)")
-    val trainJoin = if (trainSrc == "embeddings") ""
-      else s" JOIN $trainSrc _tr ON _tr.vec_id = q._vid"
-    val iterCtes = (2 to iters).map { it =>
-      val prev = it - 1
-      s"""pcc$prev AS (
-         |  SELECT sub, code, c_arr, ${dotSql("c_arr", "c_arr")} AS c2
-         |  FROM pcb$prev
-         |), pasg$prev AS (
-         |  SELECT _vid, sub, code FROM (
-         |    SELECT q._vid, q.sub, c.code,
-         |      row_number() OVER (PARTITION BY q._vid, q.sub
-         |        ORDER BY c.c2 - 2.0 * ${dotSql("q.sv", "c.c_arr")} ASC,
-         |          c.code ASC) AS rn
-         |    FROM psubq q JOIN pcc$prev c USING (sub)$trainJoin) t
-         |  WHERE rn = 1
-         |), pcbe$it AS (
-         |  SELECT sub, code, CAST(pos AS BIGINT) AS dim,
-         |    ${avgExactSql("CAST(x AS DOUBLE)")} AS centroid
-         |  FROM (SELECT a.sub, a.code, s.sv[pos] AS x, pos
-         |        FROM pasg$prev a
-         |        JOIN psubq s USING (_vid, sub)
-         |        CROSS JOIN (SELECT unnest(generate_series(1, $subDim))
-         |                    AS pos) p) z
-         |  GROUP BY sub, code, dim
-         |), pcb$it AS (
-         |  SELECT sub, code, list(centroid ORDER BY dim) AS c_arr
-         |  FROM pcbe$it GROUP BY sub, code
-         |)""".stripMargin
-    }.mkString(", ")
     s"""ires AS (
        |  SELECT a._vid, a.label,
        |    list_transform(generate_series(1, $dims),
@@ -1890,28 +1714,7 @@ object SimilarityQueries extends QueryPack {
        |      AS sv
        |  FROM ires CROSS JOIN
        |    (SELECT unnest(generate_series(0, ${m - 1})) AS sub) sx
-       |), pseeds AS (
-       |  SELECT vec_id AS _vid, CAST(rn - 1 AS BIGINT) AS code
-       |  FROM (SELECT vec_id,
-       |          row_number() OVER (ORDER BY $seedHash, vec_id) AS rn
-       |        FROM $trainSrc) t
-       |  WHERE rn <= $ks
-       |), pcb1 AS (
-       |  SELECT s.sub, sd.code,
-       |    list_transform(s.sv, x -> CAST(x AS DOUBLE)) AS c_arr
-       |  FROM pseeds sd JOIN psubq s ON s._vid = sd._vid
-       |), $iterCtes, pccF AS (
-       |  SELECT sub, code, c_arr, ${dotSql("c_arr", "c_arr")} AS c2
-       |  FROM pcb$iters
-       |), penc AS (
-       |  SELECT _vid, sub, code FROM (
-       |    SELECT q._vid, q.sub, c.code,
-       |      row_number() OVER (PARTITION BY q._vid, q.sub
-       |        ORDER BY c.c2 - 2.0 * ${dotSql("q.sv", "c.c_arr")} ASC,
-       |          c.code ASC) AS rn
-       |    FROM psubq q JOIN pccF c USING (sub)) t
-       |  WHERE rn = 1
-       |)""".stripMargin
+       |), ${pqTrainSql(subDim, ks, iters, trainSrc)}""".stripMargin
   }
 
   private def ivfPqSql(coarseKExpr: String, coarseIters: Int, nprobe: Int,
@@ -1970,12 +1773,7 @@ object SimilarityQueries extends QueryPack {
        |  WHERE e._vid <> c.query_id
        |  GROUP BY c.query_id, e._vid
        |)
-       |SELECT query_id, _vid AS neighbor_id, adc_dist, rank FROM (
-       |  SELECT query_id, _vid, ${pivotSum(m)} AS adc_dist,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY ${pivotSum(m)} ASC, _vid ASC) AS rank
-       |  FROM scored) r
-       |WHERE rank <= $k""".stripMargin
+       |${adcTopKSql(m, k)}""".stripMargin
   }
 
   /** sim16's twin: the shared Lloyd's chain, final-centroid arrays, one

@@ -55,4 +55,26 @@ object TermFreqBase {
           .agg(count(lit(1)).as("n_docs")))
         .select(col("n_docs"), (col("_s") / col("n_docs")).as("avgdl"))
     }
+
+  /** The BM25 query panel shared by tx13/sim14/sim25/sim26: every doc
+    * with doc_id ≡ 0 (mod 50), query text = its first 3 tokens.
+    * (qid, qtext). */
+  def retrievalQueries(s: SparkSession, dir: String): DataFrame =
+    graft.core.Tables.spread(graft.core.Tables.load(s, dir, "documents"))
+      .filter(col("doc_id") % 50 === 0)
+      .select(col("doc_id").as("qid"),
+        concat_ws(" ",
+          slice(graft.functions.TextFunctions.tokens(col("text")), 1, 3))
+          .as("qtext"))
+
+  /** BM25 top-`k` for the (qid, qtext) queries `qs`, served from this
+    * index WITH its materialized statistics (dl / docfreq / avgdl) — the
+    * IR deployment shape: index + stats are one durable build, queries
+    * pay only the scoring join. */
+  def bm25Served(s: SparkSession, dir: String, qs: DataFrame,
+                 k: Int): DataFrame =
+    graft.operators.Retrieval.bm25TopKServed(
+      tf(s, dir).select(col("doc_id").as("doc"), col("term"), col("tf")),
+      dl(s, dir).select(col("doc_id").as("doc"), col("dl")),
+      docFreq(s, dir), stats(s, dir), qs, "qid", "qtext", k = k)
 }

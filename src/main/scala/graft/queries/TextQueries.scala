@@ -739,17 +739,9 @@ object TextQueries extends QueryPack {
     // collect discipline). Fully hash-oracled: exp through the
     // DECIMAL(28,6) round-trip, moment folds order-insensitive, the
     // Newton update an identical double expression on both engines.
-    "tx27_platt_calibration" -> ((s, dir) => {
-      import s.implicits._
-      val hist = docs(s, dir)
-        .select($"doc_id", $"lang",
-          margin($"text").as("m"))
-        .groupBy($"m")
-        .agg(count(lit(1)).as("n"),
-          sum(($"lang" === "en").cast("long")).as("k"))
-      graft.operators.Calibration.plattCalibrate(hist, "m", "n", "k",
-        iters = 3)
-    }),
+    "tx27_platt_calibration" -> ((s, dir) =>
+      graft.operators.Calibration.plattCalibrate(marginHist(s, dir),
+        "m", "n", "k", iters = 3)),
 
     // Operating-point selection for the calibrated classifier: sweep
     // every distinct margin as the keep threshold and emit the full
@@ -762,12 +754,7 @@ object TextQueries extends QueryPack {
     // integers, fully hash-oracled.
     "tx28_threshold_select" -> ((s, dir) => {
       import s.implicits._
-      val hist = docs(s, dir)
-        .select($"doc_id", $"lang",
-          margin($"text").as("m"))
-        .groupBy($"m")
-        .agg(count(lit(1)).as("n"),
-          sum(($"lang" === "en").cast("long")).as("k"))
+      val hist = marginHist(s, dir)
       val wCum = Window.orderBy($"m".desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.partitionBy()
@@ -800,12 +787,7 @@ object TextQueries extends QueryPack {
     // integers — bit-deterministic, fully hash-oracled.
     "tx33_roc_auc" -> ((s, dir) => {
       import s.implicits._
-      val hist = docs(s, dir)
-        .select($"doc_id", $"lang",
-          margin($"text").as("m"))
-        .groupBy($"m")
-        .agg(count(lit(1)).as("n"),
-          sum(($"lang" === "en").cast("long")).as("k"))
+      val hist = marginHist(s, dir)
       val wAsc = Window.orderBy($"m".asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       hist
@@ -1227,26 +1209,9 @@ object TextQueries extends QueryPack {
     // BM25 top-5 retrieval: every 50th doc's first 3 tokens as the
     // query load. Full hash oracle: per-term scores (ln in IDF) are
     // decimal-quantized pre-fold, so the summed score is bit-portable.
-    "tx13_bm25_topk" -> ((s, dir) => {
-      import s.implicits._
-      val base = docs(s, dir)
-      val qs = graft.core.Tables.spread(base)
-        .filter($"doc_id" % 50 === 0)
-        .select($"doc_id".as("qid"),
-          concat_ws(" ", slice(tokens($"text"), 1, 3)).as("qtext"))
-      // served from the shared inverted index (TermFreqBase) WITH its
-      // materialized statistics (dl / docfreq / avgdl) — the IR
-      // deployment shape: index + stats are one durable build, queries
-      // pay only the scoring join
-      graft.operators.Retrieval.bm25TopKServed(
-        TermFreqBase.tf(s, dir).select(col("doc_id").as("doc"),
-          col("term"), col("tf")),
-        TermFreqBase.dl(s, dir).select(col("doc_id").as("doc"),
-          col("dl")),
-        TermFreqBase.docFreq(s, dir),
-        TermFreqBase.stats(s, dir),
-        qs, "qid", "qtext", k = 5)
-    }),
+    "tx13_bm25_topk" -> ((s, dir) =>
+      TermFreqBase.bm25Served(s, dir, TermFreqBase.retrievalQueries(s, dir),
+        k = 5)),
 
     // TX36 — BM25 served from the INCREMENTALLY-MAINTAINED durable
     // text index (VERDICT r14 #2; graft.operators.TextIndex): the
@@ -1598,6 +1563,18 @@ object TextQueries extends QueryPack {
     ctes.toString
   }
 
+  /** The tx27/tx28/tx33 (margin, n, k) histogram: docs per distinct
+    * classifier margin `m`, `k` of them lang = "en" — one corpus pass. */
+  private def marginHist(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    docs(s, dir)
+      .select($"doc_id", $"lang",
+        margin($"text").as("m"))
+      .groupBy($"m")
+      .agg(count(lit(1)).as("n"),
+        sum(($"lang" === "en").cast("long")).as("k"))
+  }
+
   private val ClassifierBuckets = 4096
   private[graft] def tokenWeight(t: org.apache.spark.sql.Column) =
     (graft.functions.PortableHash.hash60(t) % ClassifierBuckets) * 131L %
@@ -1613,6 +1590,24 @@ object TextQueries extends QueryPack {
   private def tokenWeightSql(e: String): String =
     s"(((${graft.functions.PortableHash.hash60Sql(e)} % $ClassifierBuckets)" +
       s" * 131) % 401 - 200)"
+
+  /** The tx27/tx28/tx33 twins' margin histogram: a SELECT of (m, n, k)
+    * — the tx19 margin SQL per doc (0 for a doc with no tokens), docs per
+    * margin, `k` of them lang = 'en'. */
+  private val marginHistSql =
+    raw"""  SELECT m, count(*) AS n,
+       |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS k
+       |  FROM (
+       |    SELECT d.doc_id, d.lang, COALESCE(tw.margin, 0) AS m
+       |    FROM documents d LEFT JOIN (
+       |      SELECT doc_id, CAST(sum(${tokenWeightSql("t")}) AS BIGINT)
+       |        AS margin
+       |      FROM (SELECT doc_id,
+       |              unnest(regexp_extract_all(text, '\S+')) AS t
+       |            FROM documents) tok
+       |      GROUP BY doc_id) tw ON d.doc_id = tw.doc_id) pm
+       |  GROUP BY m""".stripMargin
 
   /** Shared CTE prefix producing the per-doc DISTINCT 3-gram shingle
     * table (`sh`) — the SQL twin of [[sharedShingles]]; reused by the
@@ -1651,6 +1646,18 @@ object TextQueries extends QueryPack {
       |  JOIN sizes sa ON sa.doc_id = doc_a
       |  JOIN sizes sb ON sb.doc_id = doc_b
       |)""".stripMargin
+
+  /** dd3's recursive-CTE connected components over [[ngramPairCtes]]
+    * (pairs at jaccard ≥ 0.008, both directions, transitively closed):
+    * `comp` (doc, cluster_id = least member) for every doc in some pair;
+    * shared by the dd3, pl21 and pl23 twins under WITH RECURSIVE. */
+  private val componentSql = ngramPairCtes + "," +
+    s"""
+      |edges AS (
+      |  SELECT doc_a AS src, doc_b AS dst FROM pairs WHERE jaccard >= 0.008
+      |  UNION
+      |  SELECT doc_b AS src, doc_a AS dst FROM pairs WHERE jaccard >= 0.008
+      |), ${graft.operators.Graph.componentsSql("doc")}""".stripMargin
 
   /** The MinHash+LSH DuckDB twin, mirroring Dedup.minhashLsh stage by
     * stage with rows-per-band DERIVED from a count — the SQL analog of
@@ -1857,6 +1864,17 @@ object TextQueries extends QueryPack {
       "CAST(doc_id % 256 AS VARCHAR) || '.' || " +
       "CAST((doc_id * 7) % 256 AS VARCHAR) || '.0.1'"
 
+  /** The tx25/tx32 twins' rendered URL per doc: `par` (the page count
+    * the renderer draws from) and `u` (doc_id, url). */
+  private val renderedUrlsSql =
+    s"""par AS (
+       |  SELECT greatest(50, count(*) // 10) AS npages FROM documents
+       |), u AS (
+       |  SELECT doc_id,
+       |    ${graft.operators.UrlCanon.renderUrlSql("doc_id", "npages")}
+       |    AS url FROM documents CROSS JOIN par
+       |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     "tx24_html_extract" -> graft.operators.HtmlExtract.extractSql(
       "doc_id",
@@ -1864,13 +1882,7 @@ object TextQueries extends QueryPack {
         graft.operators.HtmlExtract.renderHtmlSql("doc_id", "text") +
         " AS html FROM documents) r"),
     "tx25_url_canon" ->
-      s"""WITH par AS (
-         |  SELECT greatest(50, count(*) // 10) AS npages FROM documents
-         |), u AS (
-         |  SELECT doc_id,
-         |    ${graft.operators.UrlCanon.renderUrlSql("doc_id", "npages")}
-         |    AS url FROM documents CROSS JOIN par
-         |), c AS (
+      s"""WITH $renderedUrlsSql, c AS (
          |  SELECT doc_id, url,
          |    ${graft.operators.UrlCanon.canonicalizeSql("url")}
          |      AS canonical_url
@@ -1883,13 +1895,7 @@ object TextQueries extends QueryPack {
          |  count(*) OVER (PARTITION BY canonical_url) AS n_same_url
          |FROM c""".stripMargin,
     "tx32_domain_mix" ->
-      s"""WITH par AS (
-         |  SELECT greatest(50, count(*) // 10) AS npages FROM documents
-         |), u AS (
-         |  SELECT doc_id,
-         |    ${graft.operators.UrlCanon.renderUrlSql("doc_id", "npages")}
-         |    AS url FROM documents CROSS JOIN par
-         |), c AS (
+      s"""WITH $renderedUrlsSql, c AS (
          |  SELECT doc_id,
          |    ${graft.operators.UrlCanon.canonicalizeSql("url")}
          |      AS canonical_url
@@ -2337,37 +2343,12 @@ object TextQueries extends QueryPack {
     // tx27's twin: the tx19 margin SQL aggregated to the histogram, the
     // identical 3-round Newton unroll as CTEs.
     "tx27_platt_calibration" -> graft.operators.Calibration.plattSql(
-      raw"""  SELECT m, count(*) AS n,
-         |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS k
-         |  FROM (
-         |    SELECT d.doc_id, d.lang, COALESCE(tw.margin, 0) AS m
-         |    FROM documents d LEFT JOIN (
-         |      SELECT doc_id, CAST(sum(${tokenWeightSql("t")}) AS BIGINT)
-         |        AS margin
-         |      FROM (SELECT doc_id,
-         |              unnest(regexp_extract_all(text, '\S+')) AS t
-         |            FROM documents) tok
-         |      GROUP BY doc_id) tw ON d.doc_id = tw.doc_id) pm
-         |  GROUP BY m""".stripMargin, iters = 3),
+      marginHistSql, iters = 3),
     // tx28's twin: same histogram, same cumulative sweep, same integer
     // ratio ASTs, same (f1 DESC, m DESC) argmax rule.
     "tx28_threshold_select" ->
-      raw"""WITH tw AS (
-         |  SELECT doc_id, CAST(sum(${tokenWeightSql("t")}) AS BIGINT)
-         |    AS margin
-         |  FROM (SELECT doc_id,
-         |          unnest(regexp_extract_all(text, '\S+')) AS t
-         |        FROM documents) tok
-         |  GROUP BY doc_id
-         |), pm AS (
-         |  SELECT d.doc_id, d.lang, COALESCE(tw.margin, 0) AS m
-         |  FROM documents d LEFT JOIN tw ON d.doc_id = tw.doc_id
-         |), hist AS (
-         |  SELECT m, count(*) AS n,
-         |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS k
-         |  FROM pm GROUP BY m
+      s"""WITH hist AS (
+         |$marginHistSql
          |), curve AS (
          |  SELECT m, n, k,
          |    sum(k) OVER (ORDER BY m DESC
@@ -2392,21 +2373,8 @@ object TextQueries extends QueryPack {
     // tx33's twin: same margin histogram, Mann-Whitney 2U as an exact
     // DECIMAL(38,0) sum, one integer-operand IEEE division.
     "tx33_roc_auc" ->
-      raw"""WITH tw AS (
-         |  SELECT doc_id, CAST(sum(${tokenWeightSql("t")}) AS BIGINT)
-         |    AS margin
-         |  FROM (SELECT doc_id,
-         |          unnest(regexp_extract_all(text, '\S+')) AS t
-         |        FROM documents) tok
-         |  GROUP BY doc_id
-         |), pm AS (
-         |  SELECT d.doc_id, d.lang, COALESCE(tw.margin, 0) AS m
-         |  FROM documents d LEFT JOIN tw ON d.doc_id = tw.doc_id
-         |), hist AS (
-         |  SELECT m, count(*) AS n,
-         |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS k
-         |  FROM pm GROUP BY m
+      s"""WITH hist AS (
+         |$marginHistSql
          |), c AS (
          |  SELECT k, n - k AS neg,
          |    sum(n - k) OVER (ORDER BY m ASC
@@ -2786,19 +2754,7 @@ object TextQueries extends QueryPack {
     "pl23_leakfree_split" -> {
       val h = graft.functions.PortableHash.hash60Sql(
         "CAST(cluster_id AS VARCHAR)")
-      s"""WITH RECURSIVE $ngramPairCtes,
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs WHERE jaccard >= 0.008
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM pairs WHERE jaccard >= 0.008
-         |), reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-         |), comp AS (
-         |  SELECT src AS doc, least(src, min(dst)) AS cluster_id
-         |  FROM reach GROUP BY src
-         |), wc AS (
+      s"""WITH RECURSIVE $componentSql, wc AS (
          |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
          |  FROM documents d LEFT JOIN comp c ON c.doc = d.doc_id
          |)
@@ -2819,19 +2775,7 @@ object TextQueries extends QueryPack {
            |  + (1.0 - abs(CAST(length(text) AS DOUBLE) / CAST(NULLIF($nTok, 0) AS DOUBLE) - 5.0) / 10.0)
            |  - (CAST($nPunct AS DOUBLE) / CAST(NULLIF(CAST(length(text) AS BIGINT), 0) AS DOUBLE)) * 5.0,
            |  CAST(0 AS DOUBLE))""".stripMargin
-      s"""WITH RECURSIVE $ngramPairCtes,
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs WHERE jaccard >= 0.008
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM pairs WHERE jaccard >= 0.008
-         |), reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-         |), comp AS (
-         |  SELECT src AS doc, least(src, min(dst)) AS cluster_id
-         |  FROM reach GROUP BY src
-         |), q AS (
+      s"""WITH RECURSIVE $componentSql, q AS (
          |  SELECT doc_id, $quality AS quality FROM documents
          |), wc AS (
          |  SELECT q.doc_id, COALESCE(c.cluster_id, q.doc_id) AS cluster_id,
@@ -2844,18 +2788,8 @@ object TextQueries extends QueryPack {
          |FROM wc""".stripMargin
     },
     "dd3_cluster" ->
-      s"""WITH RECURSIVE $ngramPairCtes,
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs WHERE jaccard >= 0.008
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM pairs WHERE jaccard >= 0.008
-         |), reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-         |)
-         |SELECT src AS doc, least(src, min(dst)) AS cluster_id
-         |FROM reach GROUP BY src""".stripMargin,
+      s"""WITH RECURSIVE $componentSql
+         |SELECT doc, cluster_id FROM comp""".stripMargin,
     "mm1_binary_meta" ->
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -2930,10 +2864,12 @@ object TextQueries extends QueryPack {
 
   private lazy val lnTwinSql: Map[String, String] = {
     val sql = bm25RankedSql(5)
-    // LanguageModel.scoreAndFold's ppl, shared by the tx14 and tx31 twins
-    val ppl = "exp(coalesce(w.logprob, CAST(0 AS DOUBLE))" +
-      " * -1.0 / CAST(b.n_bigrams AS DOUBLE))"
-    val tx14Sql =
+    // the tx14/tx31 twins: tokens `toks`, per-doc bigrams `bg`, then the
+    // model's CTEs ending in per-doc `w` (doc, logprob); the bigram count
+    // and LanguageModel.scoreAndFold's ppl are shared
+    def lmPplSql(modelCtes: String): String = {
+      val ppl = "exp(coalesce(w.logprob, CAST(0 AS DOUBLE))" +
+        " * -1.0 / CAST(b.n_bigrams AS DOUBLE))"
       s"""WITH toks AS (
          |  SELECT doc_id AS doc, regexp_extract_all(text, '\\S+') AS t
          |  FROM documents
@@ -2942,7 +2878,21 @@ object TextQueries extends QueryPack {
          |  FROM (SELECT doc, t,
          |          unnest(generate_series(1, len(t) - 1)) AS i
          |        FROM toks) x
-         |), vocab AS (
+         |), $modelCtes, base AS (
+         |  -- coalesce: NULL text must count 0 bigrams (Spark zero-fills)
+         |  SELECT doc,
+         |    greatest(coalesce(CAST(len(t) AS BIGINT), 0) - 1, 0)
+         |      AS n_bigrams
+         |  FROM toks
+         |)
+         |SELECT b.doc AS doc_id, b.n_bigrams,
+         |  coalesce(w.logprob, CAST(0 AS DOUBLE)) AS logprob,
+         |  CASE WHEN b.n_bigrams > 0
+         |    THEN ${quantizeSql(ppl)} END AS ppl
+         |FROM base b LEFT JOIN w USING (doc)""".stripMargin
+    }
+    val tx14Sql =
+      lmPplSql(s"""vocab AS (
          |  SELECT count(DISTINCT w) AS v FROM (
          |    SELECT unnest(t) AS w FROM toks) u
          |), model AS (
@@ -2962,18 +2912,7 @@ object TextQueries extends QueryPack {
          |    JOIN prefix p USING (w1)
          |    CROSS JOIN vocab vv) z
          |  GROUP BY doc
-         |), base AS (
-         |  -- coalesce: NULL text must count 0 bigrams (Spark zero-fills)
-         |  SELECT doc,
-         |    greatest(coalesce(CAST(len(t) AS BIGINT), 0) - 1, 0)
-         |      AS n_bigrams
-         |  FROM toks
-         |)
-         |SELECT b.doc AS doc_id, b.n_bigrams,
-         |  coalesce(w.logprob, CAST(0 AS DOUBLE)) AS logprob,
-         |  CASE WHEN b.n_bigrams > 0
-         |    THEN ${quantizeSql(ppl)} END AS ppl
-         |FROM base b LEFT JOIN w USING (doc)""".stripMargin
+         |)""".stripMargin)
     val tx15Sql =
       s"""WITH base AS (
          |  SELECT doc_id, coalesce(text, '') AS t FROM documents
@@ -2998,15 +2937,7 @@ object TextQueries extends QueryPack {
               " - e.clnc / CAST(e.n_bigrams AS DOUBLE)")} END AS entropy
          |FROM base b LEFT JOIN ent e USING (doc_id)""".stripMargin
     val tx31Sql =
-      s"""WITH toks AS (
-         |  SELECT doc_id AS doc, regexp_extract_all(text, '\\S+') AS t
-         |  FROM documents
-         |), bg AS (
-         |  SELECT doc, t[i] AS w1, t[i+1] AS w2
-         |  FROM (SELECT doc, t,
-         |          unnest(generate_series(1, len(t) - 1)) AS i
-         |        FROM toks) x
-         |), db AS (
+      lmPplSql(s"""db AS (
          |  SELECT doc, w1, w2, count(*) AS n_occ FROM bg
          |  GROUP BY doc, w1, w2
          |), model AS (
@@ -3031,17 +2962,7 @@ object TextQueries extends QueryPack {
          |    JOIN cont c USING (w2)
          |    CROSS JOIN tot t) z
          |  GROUP BY doc
-         |), base AS (
-         |  SELECT doc,
-         |    greatest(coalesce(CAST(len(t) AS BIGINT), 0) - 1, 0)
-         |      AS n_bigrams
-         |  FROM toks
-         |)
-         |SELECT b.doc AS doc_id, b.n_bigrams,
-         |  coalesce(w.logprob, CAST(0 AS DOUBLE)) AS logprob,
-         |  CASE WHEN b.n_bigrams > 0
-         |    THEN ${quantizeSql(ppl)} END AS ppl
-         |FROM base b LEFT JOIN w USING (doc)""".stripMargin
+         |)""".stripMargin)
     Map(
       "tx13_bm25_topk" -> sql,
       // tx36's twin: BM25 re-derived FROM SCRATCH over the full corpus

@@ -175,33 +175,29 @@ object Sources {
     try {
       ensureTable(conn, cfg.table, schema)
       ensureKeyIndex(conn, cfg.table, keyCols)
-      conn.setAutoCommit(false)
-      val del = conn.prepareStatement(
-        s"DELETE FROM ${cfg.table} WHERE " +
-          keyCols.map(k => s"$k = ?").mkString(" AND "))
-      try {
-        keys.distinct.foreach { k =>
-          k.zipWithIndex.foreach { case (v, i) => del.setObject(i + 1, v) }
-          del.addBatch()
-        }
-        del.executeBatch()
-      } finally del.close()
-      val colNames = schema.fieldNames.mkString(", ")
-      val holes = schema.fields.map(_ => "?").mkString(", ")
-      val ins = conn.prepareStatement(
-        s"INSERT INTO ${cfg.table} ($colNames) VALUES ($holes)")
-      try {
-        rows.foreach { r =>
-          schema.indices.foreach(i => ins.setObject(i + 1, r.get(i)))
-          ins.addBatch()
-        }
-        ins.executeBatch()
-      } finally ins.close()
-      conn.commit()
-    } catch {
-      case e: Throwable =>
-        try conn.rollback() catch { case _: Throwable => () }
-        throw e
+      inTransaction(conn) {
+        val del = conn.prepareStatement(
+          s"DELETE FROM ${cfg.table} WHERE " +
+            keyCols.map(k => s"$k = ?").mkString(" AND "))
+        try {
+          keys.distinct.foreach { k =>
+            k.zipWithIndex.foreach { case (v, i) => del.setObject(i + 1, v) }
+            del.addBatch()
+          }
+          del.executeBatch()
+        } finally del.close()
+        val colNames = schema.fieldNames.mkString(", ")
+        val holes = schema.fields.map(_ => "?").mkString(", ")
+        val ins = conn.prepareStatement(
+          s"INSERT INTO ${cfg.table} ($colNames) VALUES ($holes)")
+        try {
+          rows.foreach { r =>
+            schema.indices.foreach(i => ins.setObject(i + 1, r.get(i)))
+            ins.addBatch()
+          }
+          ins.executeBatch()
+        } finally ins.close()
+      }
     } finally conn.close()
   }
 
@@ -268,8 +264,7 @@ object Sources {
         val pid = org.apache.spark.TaskContext.getPartitionId().toLong
         val conn = java.sql.DriverManager.getConnection(
           cfg.url, cfg.user, cfg.password)
-        try {
-          conn.setAutoCommit(false)
+        try inTransaction(conn) {
           val del = conn.prepareStatement(
             s"DELETE FROM $stage WHERE graft_pt = ?")
           try { del.setLong(1, pid); del.executeUpdate() } finally del.close()
@@ -285,19 +280,13 @@ object Sources {
             }
             ins.executeBatch()
           } finally ins.close()
-          conn.commit()
-        } catch {
-          case e: Throwable =>
-            try conn.rollback() catch { case _: Throwable => () }
-            throw e
         } finally conn.close()
       }
     }
 
     val conn = java.sql.DriverManager.getConnection(
       cfg.url, cfg.user, cfg.password)
-    try {
-      conn.setAutoCommit(false)
+    try inTransaction(conn) {
       val st = conn.createStatement()
       try {
         // distinct FULL rows first: a speculative / zombie task attempt
@@ -324,12 +313,23 @@ object Sources {
           s"SELECT DISTINCT ${colNames.mkString(", ")} FROM $stage")
         st.executeUpdate(s"DELETE FROM $stage")
       } finally st.close()
-      conn.commit()
-    } catch {
-      case e: Throwable =>
-        try conn.rollback() catch { case _: Throwable => () }
-        throw e
     } finally conn.close()
+  }
+
+  /** Runs `body` as ONE transaction on `conn`: autocommit off, body,
+    * commit. On any throwable the transaction is rolled back and the
+    * throwable rethrown; a rollback that fails too is attached to it as
+    * a suppressed exception, never dropped. DDL (`ensureTable`,
+    * `ensureKeyIndex`) stays outside: Postgres aborts a whole transaction
+    * on a failed `CREATE`, even an already-exists one. */
+  private def inTransaction(conn: java.sql.Connection)(body: => Unit): Unit = {
+    conn.setAutoCommit(false)
+    try { body; conn.commit() }
+    catch {
+      case e: Throwable =>
+        try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+        throw e
+    }
   }
 
   /** Streaming fact-table JDBC sink: [[stagedUpsertBatch]] per

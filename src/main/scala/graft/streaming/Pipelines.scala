@@ -20,6 +20,11 @@ object Pipelines {
   /** Event-time column derived from the epoch-millis `timestamp` field. */
   val eventTime: Column = timestamp_millis(col("timestamp"))
 
+  /** The wire parse all three reference pipelines start from: the JSON
+    * `value` column → transaction columns, corrupt rows dropped. */
+  private def parseWire(raw: DataFrame): DataFrame =
+    JsonCodec.parseTransactions(raw, col("value")).filter(!col("_corrupt"))
+
   /** Pipeline B ("Metrics", StreamJob.java:94-218): parse → watermark →
     * 10 s tumbling window → conditional aggregate → metric JSON line.
     *
@@ -28,8 +33,7 @@ object Pipelines {
     */
   def metricsPipeline(raw: DataFrame, watermark: String = "0 seconds",
                       windowDur: String = "10 seconds"): DataFrame = {
-    val parsed = JsonCodec.parseTransactions(raw, col("value"))
-      .filter(!col("_corrupt"))
+    val parsed = parseWire(raw)
       .withColumn("event_time", eventTime)
       .withWatermark("event_time", watermark)
     val m = WindowMetrics.tumbling(parsed, col("event_time"),
@@ -46,8 +50,7 @@ object Pipelines {
     * reference assigns one on this branch too (T1), but nothing here
     * reads it — no window, no state, no join. */
   def riskPipeline(raw: DataFrame, threshold: Double = 1000.0): DataFrame = {
-    val parsed = JsonCodec.parseTransactions(raw, col("value"))
-      .filter(!col("_corrupt"))
+    val parsed = parseWire(raw)
     val labeled = RiskLabeler.labelWithLatency(
       parsed, col("amount"), col("timestamp"), threshold)
     RiskLabeler.formatted(labeled, col("transactionId"), col("amount"))
@@ -110,8 +113,7 @@ object Pipelines {
     * streaming-equals-batch equivalence tests. */
   def riskPipelineDeterministic(raw: DataFrame,
                                 threshold: Double = 1000.0): DataFrame = {
-    val parsed = JsonCodec.parseTransactions(raw, col("value"))
-      .filter(!col("_corrupt"))
+    val parsed = parseWire(raw)
     RiskLabeler.formatted(
       RiskLabeler.label(parsed, col("amount"), threshold),
       col("transactionId"), col("amount"))

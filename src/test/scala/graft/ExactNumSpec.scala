@@ -91,6 +91,12 @@ class ExactNumSpec extends AnyFunSuite {
         assert(byCol(g) == bits(sumFloorDriver(xs.reverseIterator, digits)))
       }
       assert(byCol(4).isEmpty) // all-null group folds to null
+      // floorUnits, each driver fold's per-value term, equals Spark's
+      // floor(x·10^d) on every non-null row (near-limit ones included)
+      val s = math.pow(10, digits)
+      df.filter(col("x").isNotNull)
+        .select(col("x"), floor(col("x") * s)).as[(Double, Long)].collect()
+        .foreach { case (x, f) => assert(floorUnits(x, s) == f, s"x=$x") }
     }
     // floor, not truncation: -1.5e-6 contributes -2e-6
     assert(sumFloorDriver(Iterator(-1.5e-6)) == -2e-6)

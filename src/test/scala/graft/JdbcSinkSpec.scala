@@ -52,6 +52,22 @@ class JdbcSinkSpec extends AnyFunSuite {
     assert(rows(t) == Seq((1000L, 5L), (2000L, 9L), (3000L, 1L)))
   }
 
+  test("upsertBatch: a batch whose INSERT fails after its DELETE leaves " +
+      "the previous rows in place") {
+    val t = "m_rollback"
+    Sources.upsertBatch(
+      Seq((1000L, 5L, "a"), (2000L, 7L, "b"))
+        .toDF("window_start", "cnt", "line"), cfgFor(t))
+    // the table has no `extra` column: window 1000's DELETE runs, then
+    // the INSERT fails — the one transaction must undo the DELETE
+    intercept[java.sql.SQLException] {
+      Sources.upsertBatch(
+        Seq((1000L, 9L, "a2", 1L)).toDF("window_start", "cnt", "line", "extra"),
+        cfgFor(t))
+    }
+    assert(rows(t) == Seq((1000L, 5L), (2000L, 7L)))
+  }
+
   test("upsertBatch: composite keys upsert per (window, key) tuple") {
     val t = "m_composite"
     Sources.upsertBatch(
