@@ -1,14 +1,39 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.functions.TextFunctions._
 import graft.operators.Multimodal
 
 /** Text-analysis edge cases + multimodal decode plumbing. */
-class TextFunctionsSpec extends AnyFunSuite {
+class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
   lazy val spark = TestSession.spark
   import spark.implicits._
+
+  implicit val signaler: Signaler = ThreadSignaler
+
+  /** Runs a driver-side decoder on a pool thread and waits for it under
+    * `failAfter`: a chunk walk that stops advancing spins without ever
+    * checking for interrupts, so the wait, not the walk, is what the
+    * time limit interrupts — a lost loop guard fails the test instead of
+    * hanging the suite. A timeout is reported at the caller's line. */
+  private def bounded[T](decode: => T)(
+      implicit pos: org.scalactic.source.Position): T = {
+    val f = Future(decode)(ExecutionContext.global)
+    failAfter(10.seconds)(Await.result(f, Duration.Inf))
+  }
+
+  /** Overwrites the little-endian u32 at `o` of a copy of `b`. */
+  private def withLe32(b: Array[Byte], o: Int, v: Long): Array[Byte] = {
+    val c = b.clone()
+    (0 until 4).foreach(i => c(o + i) = ((v >>> (8 * i)) & 0xff).toByte)
+    c
+  }
 
   test("token counting is whitespace-robust") {
     val out = Seq("a  b\t c", "", "   ", "single")
@@ -127,6 +152,23 @@ class TextFunctionsSpec extends AnyFunSuite {
     val fb = Multimodal.decodeAudioMeta(spark, junk, "doc_id", "payload")
       .collect().head
     assert(fb.format == "unknown" && fb.n_samples == 3L)
+    // malformed headers, decoded driver-side (offsets: fmt length at 16,
+    // data length at 40, samples from 44)
+    val one = wavs.filter(col("doc_id") === 1L).collect().head
+      .getAs[Array[Byte]]("payload")
+    // fmt length 0xFFFFFFF8: the word-aligned advance is 0 — malformed,
+    // never a walk that spins on the same chunk
+    assert(bounded(Multimodal.decodeWavMeta(1L,
+      withLe32(one, 16, 0xFFFFFFF8L))).isEmpty)
+    // a data length past the buffer is clamped to the bytes present
+    val overrun = bounded(Multimodal.decodeWavMeta(1L,
+      withLe32(one, 40, 1000000L)))
+    assert(overrun.exists(m => m.n_samples == 160L && m.duration_ms == 20L),
+      s"$overrun")
+    // a fmt chunk declaring len < 16 is not read: its fields would spill
+    // past the chunk (here into the pad byte), so there is no fmt at all
+    assert(bounded(Multimodal.decodeWavMeta(1L,
+      withLe32(one, 16, 15L))).isEmpty)
   }
 
   test("multimodal: MP4 render → box-walk decode round trip; corrupt falls back") {
@@ -158,6 +200,11 @@ class TextFunctionsSpec extends AnyFunSuite {
         Seq((8L, corrupt)).toDF("doc_id", "payload"), "doc_id", "payload")
       .collect().head
     assert(cb.format == "unknown")
+    // a tkhd box size < 8 inside the first trak (ftyp 20 + moov header 8
+    // + mvhd 108 + trak header 8 = 144) is malformed, not skipped
+    val badTkhd = bytes.clone()
+    badTkhd(144) = 0; badTkhd(145) = 0; badTkhd(146) = 0; badTkhd(147) = 4
+    assert(bounded(Multimodal.decodeMp4Meta(8L, badTkhd)).isEmpty)
   }
 
   test("multimodal: AVI render → RIFF hdrl decode round trip; corrupt falls back") {
@@ -192,6 +239,10 @@ class TextFunctionsSpec extends AnyFunSuite {
         Seq((8L, corrupt)).toDF("doc_id", "payload"), "doc_id", "payload")
       .collect().head
     assert(cb.format == "unknown")
+    // a corrupt top-level LIST length (at 16; advance 0) is malformed
+    // even though the hdrl walk already found avih
+    assert(bounded(Multimodal.decodeAviMeta(8L,
+      withLe32(bytes, 16, 0xFFFFFFF8L))).isEmpty)
   }
 
   test("multimodal: TIFF render → IFD/EXIF decode round trip in BOTH " +
@@ -399,5 +450,16 @@ class TextFunctionsSpec extends AnyFunSuite {
     val fb = Multimodal.pcmStats(spark, junk, "doc_id", "payload")
       .collect().head
     assert(fb.n_samples == 0L && fb.peak == 0 && fb.rms == 0.0)
+    // malformed headers, decoded driver-side (the WAV meta test's
+    // offsets): advance 0 and a fmt len < 16 give None; a data length
+    // past the buffer reads only the samples present
+    val bytes = wavs.filter(col("doc_id") === 1L).collect().head
+      .getAs[Array[Byte]]("payload")
+    assert(bounded(Multimodal.decodeWavPcm(1L,
+      withLe32(bytes, 16, 0xFFFFFFF8L))).isEmpty)
+    assert(bounded(Multimodal.decodeWavPcm(1L,
+      withLe32(bytes, 40, 1000000L))) == Some(got(1L)))
+    assert(bounded(Multimodal.decodeWavPcm(1L,
+      withLe32(bytes, 16, 15L))).isEmpty)
   }
 }
