@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * elements skipped.
   *
   * Each term is exactly `Similarity.term(x · sg)` (floor to the shared
-  * 1e12 fixed-point scale, then the Catalyst double→long cast), and the
+  * 1e12 fixed-point scale, then the Catalyst double→long cast — the
+  * [[ExactNum.floorUnits]] term at [[ExactNum.FixedScale]]), and the
   * per-element terms are INTEGERS, so the sum is associative — this
   * per-row loop is bit-identical to the former shape that exploded the
   * vector to (id, dim, x) rows and ran one SUM aggregate per plane
@@ -31,11 +32,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   */
 case class VectorDotFixed(left: Expression, right: Expression)
     extends BinaryExpression {
-
-  /** The shared fixed-point scale — [[graft.operators.Similarity.Scale]];
-    * duplicated as a literal so the functions package keeps no operators
-    * dependency (the spec pins the two constants equal). */
-  val Scale: Double = 1e12
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def okLeft(t: DataType) = t match {
@@ -71,7 +67,7 @@ case class VectorDotFixed(left: Expression, right: Expression)
       if (!x.isNullAt(i) && !y.isNullAt(i)) {
         val p = x.getFloat(i).toDouble *
           (if (rd) y.getDouble(i) else y.getFloat(i).toDouble)
-        acc += math.floor(p * Scale).toLong
+        acc += ExactNum.floorUnits(p, ExactNum.FixedScale)
       }
       i += 1
     }
@@ -92,7 +88,7 @@ case class VectorDotFixed(left: Expression, right: Expression)
          |for (int $i = 0; $i < $n; $i++) {
          |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
          |    double $p = ((double) $a.getFloat($i)) * $getR;
-         |    $acc += (long) java.lang.Math.floor($p * 1.0E12);
+         |    $acc += graft.functions.ExactNum.floorUnits($p, ${ExactNum.FixedScale});
          |  }
          |}
          |${ev.value} = $acc;

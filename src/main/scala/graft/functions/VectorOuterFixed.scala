@@ -16,10 +16,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * `flatten(transform(sequence(0,d−1), i => transform(sequence(i,d−1),
   * j => floor(x_i·x_j·1e12)::long)))`.
   *
-  * Each element is the same double product + Math.floor + d2l cast the
-  * Catalyst `floor(p · 1e12)` AST evaluates, so downstream DECIMAL(38,0)
-  * folds are bit-identical (VectorOuterFixedSpec pins term-for-term
-  * equality with the HOF construction). What it buys (optimization r15,
+  * Each element is the [[ExactNum.floorUnits]] term of the same double
+  * product — the floor + d2l cast the Catalyst `floor(p · 1e12)` AST
+  * evaluates — so downstream DECIMAL(38,0) folds are bit-identical
+  * (VectorOuterFixedSpec pins term-for-term equality with the HOF
+  * construction). What it buys (optimization r15,
   * guide §4 — eliminate non-codegen expressions in the hot path):
   * higher-order functions evaluate their lambda interpreted per element,
   * so the d(d+1)/2-struct nested-transform expansion cost ~300 µs/row at
@@ -83,7 +84,7 @@ object VectorOuterFixed {
       var j = i
       while (j < d) {
         val xj = if (isDouble) v.getDouble(j) else v.getFloat(j).toDouble
-        out(k) = java.lang.Math.floor(xi * xj * 1.0e12).toLong
+        out(k) = ExactNum.floorUnits(xi * xj, ExactNum.FixedScale)
         k += 1
         j += 1
       }
@@ -93,7 +94,7 @@ object VectorOuterFixed {
       var i2 = 0
       while (i2 < d) {
         val xi = if (isDouble) v.getDouble(i2) else v.getFloat(i2).toDouble
-        out(quad + i2) = java.lang.Math.floor(xi * 1.0e12).toLong
+        out(quad + i2) = ExactNum.floorUnits(xi, ExactNum.FixedScale)
         i2 += 1
       }
     }

@@ -2,9 +2,12 @@ package graft.operators
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: image/audio/video payloads as opaque `binary`
@@ -46,6 +49,87 @@ object Multimodal {
     else if ((bytes(0) & 0xff) == 0x89 && bytes(1) == 'P' && bytes(2) == 'N' &&
       bytes(3) == 'G') "png"
     else "unknown"
+
+  /** The payload-operator scaffold every decoder below runs on:
+    * (id cast to long, payload) rows mapped per partition — codec/model
+    * init per task, not per row. The input should be pre-repartitioned
+    * so Σbytes per partition is bounded (see [[repartitionByBytes]]). */
+  private def payloadOp[T <: Product : TypeTag](df: DataFrame, idCol: String,
+      binCol: String)(f: Iterator[(Long, Array[Byte])] => Iterator[T]): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long"), col(binCol))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(f)
+  }
+
+  /** The fixture-renderer scaffold: (id cast to long, `cols`…) rows →
+    * (id, payload) rows, encoder init per partition. */
+  private def renderOp[R <: Product : TypeTag](df: DataFrame, idCol: String,
+      cols: Column*)(render: R => (Long, Array[Byte])): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long") +: cols: _*).as[R]
+      .mapPartitions(_.map(render)).toDF(idCol, "payload")
+  }
+
+  /** Byte count of a payload for the stub-fallback rows (0 for null). */
+  private def nBytes(bytes: Array[Byte]): Int =
+    if (bytes == null) 0 else bytes.length
+
+  /** Unsigned reads of a payload in one byte order — the reader of every
+    * byte-walk decoder below. An offset past the buffer throws, and each
+    * decoder's catch turns that into None. */
+  private final class ByteReader(bytes: Array[Byte], littleEndian: Boolean) {
+    def u8(o: Int): Int = bytes(o) & 0xff
+    def u16(o: Int): Int =
+      if (littleEndian) u8(o) | (u8(o + 1) << 8) else (u8(o) << 8) | u8(o + 1)
+    def u32(o: Int): Long =
+      if (littleEndian) (u16(o + 2).toLong << 16) | u16(o)
+      else (u16(o).toLong << 16) | u16(o + 2)
+    def tag(o: Int): String = new String(bytes, o, 4, "US-ASCII")
+    def length: Int = bytes.length
+  }
+
+  /** The RIFF chunk walk (WAV, AVI and AVI's `hdrl` list): calls
+    * `visit(id, offset, len)` on each chunk header in [from, end) until
+    * it returns false. Returns false for a malformed walk: a corrupt
+    * length can make the word-aligned advance 8 + len + pad non-positive,
+    * and without this check the walk spins forever and wedges the task. */
+  private def riffChunks(r: ByteReader, from: Int, end: Int)(
+      visit: (String, Int, Long) => Boolean): Boolean = {
+    var off = from
+    var more = true
+    while (more && off + 8 <= end) {
+      val len = r.u32(off + 4)
+      more = visit(r.tag(off), off, len)
+      val advance = 8 + len.toInt + (len.toInt & 1)
+      if (advance <= 0) return false
+      off += advance
+    }
+    true
+  }
+
+  /** The ISO-BMFF box walk (MP4's top level, `moov` and `trak`): calls
+    * `visit(type, offset, size)` on each box header in [from, end) until
+    * it returns false. Returns false for a malformed walk: a u32 size
+    * below 8 or past the buffer (incl. > Int.MaxValue, which would go
+    * negative under .toInt and walk the cursor backwards) is malformed by
+    * definition — and so are size==1 (a 64-bit largesize, out of scope
+    * for metadata headers) and size==0 ("to end of file", only legal for
+    * the last box). */
+  private def isoBoxes(r: ByteReader, from: Int, end: Int)(
+      visit: (String, Int, Long) => Boolean): Boolean = {
+    var off = from
+    var more = true
+    while (more && off + 8 <= end) {
+      val size = r.u32(off)
+      more = visit(r.tag(off + 4), off, size)
+      if (size < 8 || size > r.length) return false
+      off += size.toInt
+    }
+    true
+  }
 
   // per-row ImageIO calls would otherwise allocate a disk-backed
   // FileCacheImageInputStream (a temp file create/write/delete per row —
@@ -90,7 +174,7 @@ object Multimodal {
     * the payload bytes instead of decoding them. A deployment with
     * ffmpeg/audio bindings plugs the real codec behind the same seam. */
   def fakeDecode(id: Long, bytes: Array[Byte]): MediaMeta = {
-    val n = if (bytes == null) 0 else bytes.length
+    val n = nBytes(bytes)
     val h = bytes.take(16).foldLeft(17L)((acc, b) => acc * 31 + (b & 0xff))
     MediaMeta(
       doc_id = id,
@@ -132,51 +216,42 @@ object Multimodal {
 
   /** The decode operator: per-partition batched decode of binary payloads
     * into typed metadata — real imageio header decode for JPEG/PNG,
-    * deterministic stub for everything else. `mapPartitions` keeps decoder
-    * init per-task not per-row, and the input should be pre-repartitioned
-    * so Σbytes per partition is bounded (see `repartitionByBytes`). */
-  def decodeMeta(spark: SparkSession, df: DataFrame, idCol: String,
-                 binCol: String): Dataset[MediaMeta] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeImageMeta(id, bytes).getOrElse(fakeDecode(id, bytes))
-        }
-      }
-  }
+    * deterministic stub for everything else. */
+  def decodeMeta(df: DataFrame, idCol: String,
+                 binCol: String): Dataset[MediaMeta] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      decodeImageMeta(id, bytes).getOrElse(fakeDecode(id, bytes))
+    })
 
   /** Deterministic PNG rendering: (id, width, height) → real PNG payload
     * with LCG-seeded pixels. This is the fixture-side generator that lets
     * the decode/resize operators be exercised — and oracle-checked — on
     * real image bytes built from fixture columns (the container ships no
     * image files). Encoder init is per-partition; dims should be small. */
-  def renderPng(spark: SparkSession, df: DataFrame, idCol: String,
-                wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(wCol).cast("int"),
-        col(hCol).cast("int"))
-      .as[(Long, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, w, h) =>
-          val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-          var s = id * 6364136223846793005L + 1442695040888963407L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              s = s * 6364136223846793005L + 1442695040888963407L
-              img.setRGB(x, y, ((s >>> 40) & 0xffffff).toInt)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new ByteArrayOutputStream()
-          ImageIO.write(img, "png", baos)
-          (id, baos.toByteArray)
+  def renderPng(df: DataFrame, idCol: String, wCol: String,
+                hCol: String): DataFrame =
+    renderOp[(Long, Int, Int)](df, idCol, col(wCol).cast("int"),
+        col(hCol).cast("int")) { case (id, w, h) =>
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      var s = id * 6364136223846793005L + 1442695040888963407L
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          s = s * 6364136223846793005L + 1442695040888963407L
+          img.setRGB(x, y, ((s >>> 40) & 0xffffff).toInt)
+          x += 1
         }
-      }.toDF(idCol, "payload")
+        y += 1
+      }
+      (id, pngBytes(img))
+    }
+
+  /** PNG encode of a rendered or resized image. */
+  private def pngBytes(img: BufferedImage): Array[Byte] = {
+    val baos = new ByteArrayOutputStream()
+    ImageIO.write(img, "png", baos)
+    baos.toByteArray
   }
 
   /** Typed output of [[extractFeaturesStub]]: fixed-dim embedding per doc. */
@@ -189,17 +264,13 @@ object Multimodal {
     * per task, not per row), the fixed-dim `array<float>` output schema
     * that downstream similarity operators consume, and byte-bounded input
     * partitions via [[repartitionByBytes]]. */
-  def extractFeaturesStub(spark: SparkSession, df: DataFrame, idCol: String,
-                          binCol: String, dim: Int): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-task "model load" happens here in a real featurizer
-        val f = stubFeatures(dim) _
-        it.map { case (id, bytes) => MediaFeatures(id, dim, f(bytes)) }
-      }
-  }
+  def extractFeaturesStub(df: DataFrame, idCol: String, binCol: String,
+                          dim: Int): Dataset[MediaFeatures] =
+    payloadOp(df, idCol, binCol) { it =>
+      // per-task "model load" happens here in a real featurizer
+      val f = stubFeatures(dim) _
+      it.map { case (id, bytes) => MediaFeatures(id, dim, f(bytes)) }
+    }
 
   /** REAL feature extraction for image payloads: decode via imageio, then
     * `dim` deterministic features — mean luminance (0..1) over the pixel
@@ -207,40 +278,45 @@ object Multimodal {
     * double divide: bit-stable under any pixel visit order. Non-image
     * payloads fall back to the stub LCG featurizer, so the operator stays
     * total over a mixed corpus. */
-  def extractImageFeatures(spark: SparkSession, df: DataFrame, idCol: String,
-                           binCol: String, dim: Int): Dataset[MediaFeatures] = {
-    import spark.implicits._
+  def extractImageFeatures(df: DataFrame, idCol: String, binCol: String,
+                           dim: Int): Dataset[MediaFeatures] = {
     val stub = stubFeatures(dim) _
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // a real vision model would load per task here, not per row
-        it.map { case (id, bytes) =>
-          val img = readImage(bytes)
-          if (img == null) MediaFeatures(id, dim, stub(bytes))
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            val sums = new Array[Long](dim)
-            val counts = new Array[Long](dim)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                val lum = ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-                val d = (x + y * w) % dim
-                sums(d) += lum; counts(d) += 1
-                x += 1
-              }
-              y += 1
-            }
-            val emb = Array.tabulate(dim)(d =>
-              if (counts(d) == 0) 0.0f
-              else (sums(d).toDouble / (counts(d) * 765.0)).toFloat)
-            MediaFeatures(id, dim, emb.toSeq)
-          }
-        }
+    // a real vision model would load per task here, not per row
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      val img = readImage(bytes)
+      if (img == null) MediaFeatures(id, dim, stub(bytes))
+      else {
+        val w = img.getWidth
+        val (sums, counts) = lumBins(img, dim)((x, y) => (x + y * w) % dim)
+        val emb = Array.tabulate(dim)(d =>
+          if (counts(d) == 0) 0.0f
+          else (sums(d).toDouble / (counts(d) * 765.0)).toFloat)
+        MediaFeatures(id, dim, emb.toSeq)
       }
+    })
+  }
+
+  /** Integer luminance R+G+B (0..765) of every pixel, summed into `nBins`
+    * bins by `bin(x, y)`, with each bin's pixel count — the pixel pass
+    * shared by [[extractImageFeatures]] and [[imageAHash]]. Integer sums
+    * are exact under any pixel visit order. */
+  private def lumBins(img: BufferedImage, nBins: Int)(
+      bin: (Int, Int) => Int): (Array[Long], Array[Long]) = {
+    val sums = new Array[Long](nBins)
+    val counts = new Array[Long](nBins)
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val rgb = img.getRGB(x, y)
+        val b = bin(x, y)
+        sums(b) += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+        counts(b) += 1
+        x += 1
+      }
+      y += 1
+    }
+    (sums, counts)
   }
 
   /** The stub LCG featurizer body, shared by [[extractFeaturesStub]] and
@@ -264,56 +340,44 @@ object Multimodal {
     * (targetW, targetH) — round-tripped through [[decodeMeta]] in the
     * oracle query. Non-image payloads fall back to [[resizeStub]]'s
     * deterministic byte-fold. */
-  def resizeImage(spark: SparkSession, df: DataFrame, idCol: String,
-                  binCol: String, targetW: Int, targetH: Int): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    val stubLen = math.max(16, targetW * targetH / 64)
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val img = readImage(bytes)
-          if (img == null) {
-            val src = if (bytes == null || bytes.isEmpty) Array[Byte](0) else bytes
-            val out = Array.tabulate(stubLen)(i =>
-              (src(i % src.length) ^ (i & 0x7f)).toByte)
-            ResizedMedia(id, targetW, targetH, stubLen.toLong, out)
-          } else {
-            val dst = new BufferedImage(targetW, targetH,
-              BufferedImage.TYPE_INT_RGB)
-            val g = dst.createGraphics()
-            g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(img, 0, 0, targetW, targetH, null)
-            g.dispose()
-            val baos = new ByteArrayOutputStream()
-            ImageIO.write(dst, "png", baos)
-            val out = baos.toByteArray
-            ResizedMedia(id, targetW, targetH, out.length.toLong, out)
-          }
-        }
+  def resizeImage(df: DataFrame, idCol: String, binCol: String,
+                  targetW: Int, targetH: Int): Dataset[ResizedMedia] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      val img = readImage(bytes)
+      if (img == null) stubResized(id, bytes, targetW, targetH)
+      else {
+        val dst = new BufferedImage(targetW, targetH,
+          BufferedImage.TYPE_INT_RGB)
+        val g = dst.createGraphics()
+        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+        g.drawImage(img, 0, 0, targetW, targetH, null)
+        g.dispose()
+        val out = pngBytes(dst)
+        ResizedMedia(id, targetW, targetH, out.length.toLong, out)
       }
-  }
+    })
 
   /** Resize: binary payload → payload re-encoded at (targetW, targetH).
     * ===== STUB ===== decode+scale+encode is faked as a deterministic
     * byte-fold (no codecs in this container). Real: the binary-in /
     * binary-out operator shape, output sized ∝ target area (so downstream
     * [[repartitionByBytes]] stays meaningful), per-partition batching. */
-  def resizeStub(spark: SparkSession, df: DataFrame, idCol: String,
-                 binCol: String, targetW: Int, targetH: Int): Dataset[ResizedMedia] = {
-    import spark.implicits._
+  def resizeStub(df: DataFrame, idCol: String, binCol: String,
+                 targetW: Int, targetH: Int): Dataset[ResizedMedia] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      stubResized(id, bytes, targetW, targetH)
+    })
+
+  /** [[resizeStub]]'s byte-fold, also [[resizeImage]]'s non-image
+    * fallback. */
+  private def stubResized(id: Long, bytes: Array[Byte], targetW: Int,
+                          targetH: Int): ResizedMedia = {
     val outLen = math.max(16, targetW * targetH / 64)
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val src = if (bytes == null || bytes.isEmpty) Array[Byte](0) else bytes
-          val out = Array.tabulate(outLen)(i =>
-            (src(i % src.length) ^ (i & 0x7f)).toByte)
-          ResizedMedia(id, targetW, targetH, outLen.toLong, out)
-        }
-      }
+    val src = if (bytes == null || bytes.isEmpty) Array[Byte](0) else bytes
+    val out = Array.tabulate(outLen)(i =>
+      (src(i % src.length) ^ (i & 0x7f)).toByte)
+    ResizedMedia(id, targetW, targetH, outLen.toLong, out)
   }
 
   /** Typed metadata of an audio payload. */
@@ -325,49 +389,50 @@ object Multimodal {
     * fmt chunk → sample rate / channels / bit depth, data chunk → sample
     * count and duration. O(header) like [[decodeImageMeta]]. Returns None
     * for non-WAV or malformed payloads (caller falls back or filters). */
-  def decodeWavMeta(id: Long, bytes: Array[Byte]): Option[AudioMeta] = {
-    def u16(o: Int) = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def u32(o: Int) = (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-    def tag(o: Int) = new String(bytes, o, 4, "US-ASCII")
-    try {
-      if (bytes == null || bytes.length < 44 || tag(0) != "RIFF" ||
-        tag(8) != "WAVE") None
-      else {
-        // walk chunks: fmt_ then data (a real-world WAV may interleave
-        // others — LIST, fact — so never assume fixed offsets past 12)
-        var off = 12
-        var meta: Option[(Int, Int, Int)] = None
-        var dataLen = -1L
-        var malformed = false
-        while (!malformed && off + 8 <= bytes.length &&
-          (meta.isEmpty || dataLen < 0)) {
-          val id4 = tag(off); val len = u32(off + 4)
-          // the fmt fields live in THIS chunk's bytes: a declared len<16
-          // must not let the reads spill into the next chunk's payload
-          if (id4 == "fmt " && len >= 16 && off + 24 <= bytes.length)
-            meta = Some((u32(off + 4 + 8).toInt, u16(off + 4 + 6),
-              u16(off + 4 + 18)))
-          else if (id4 == "data")
-            // clamp to the bytes actually present — a corrupt header's
-            // inflated declared length must not inflate n_samples/duration
-            dataLen = math.min(len, math.max(0L, bytes.length - off - 8L))
-          val advance = 8 + len.toInt + (len.toInt & 1) // word-aligned
-          // a corrupt length field can make the advance non-positive —
-          // without this check the walk spins forever and wedges the task
-          if (advance <= 0) malformed = true else off += advance
-        }
-        if (malformed) None
-        else meta.flatMap { case (rate, ch, bits) =>
-          if (dataLen < 0 || rate <= 0 || ch <= 0 || bits <= 0) None
-          else {
-            val nSamples = dataLen / (ch * bits / 8)
-            Some(AudioMeta(id, "wav", rate, ch, bits, nSamples,
-              nSamples * 1000L / rate))
-          }
+  def decodeWavMeta(id: Long, bytes: Array[Byte]): Option[AudioMeta] =
+    try wavChunks(bytes).flatMap { w =>
+      w.fmt.flatMap { case (rate, ch, bits) =>
+        if (w.dataLen < 0 || rate <= 0 || ch <= 0 || bits <= 0) None
+        else {
+          val nSamples = w.dataLen / (ch * bits / 8)
+          Some(AudioMeta(id, "wav", rate, ch, bits, nSamples,
+            nSamples * 1000L / rate))
         }
       }
     } catch { case _: Exception => None }
+
+  /** What the RIFF walk of a WAV payload found: the fmt chunk's (sample
+    * rate, channels, bits per sample), and the data chunk's offset and
+    * length (-1 when absent). */
+  private case class WavChunks(fmt: Option[(Int, Int, Int)], dataOff: Int,
+                               dataLen: Long)
+
+  /** The fmt/data walk of both WAV decoders; None for non-WAV or malformed
+    * payloads. Chunks are walked, never assumed at fixed offsets past 12:
+    * a real-world WAV may interleave others (LIST, fact). */
+  private def wavChunks(bytes: Array[Byte]): Option[WavChunks] = {
+    val r = new ByteReader(bytes, littleEndian = true)
+    if (bytes == null || bytes.length < 44 || r.tag(0) != "RIFF" ||
+      r.tag(8) != "WAVE") None
+    else {
+      var fmt: Option[(Int, Int, Int)] = None
+      var dataOff = -1
+      var dataLen = -1L
+      val ok = riffChunks(r, 12, bytes.length) { (id4, off, len) =>
+        // the fmt fields live in THIS chunk's bytes: a declared len<16
+        // must not let the reads spill into the next chunk's payload
+        if (id4 == "fmt " && len >= 16 && off + 24 <= bytes.length)
+          fmt = Some((r.u32(off + 12).toInt, r.u16(off + 10), r.u16(off + 22)))
+        else if (id4 == "data") {
+          dataOff = off + 8
+          // clamp to the bytes actually present — a corrupt header's
+          // inflated declared length must not inflate n_samples/duration
+          dataLen = math.min(len, math.max(0L, bytes.length - off - 8L))
+        }
+        fmt.isEmpty || dataOff < 0
+      }
+      if (ok) Some(WavChunks(fmt, dataOff, dataLen)) else None
+    }
   }
 
   /** Deterministic mono 16-bit PCM WAV rendering: (id, n_samples,
@@ -375,53 +440,44 @@ object Multimodal {
     * fixture-side generator for exercising [[decodeWavMeta]] on real
     * audio bytes built from fixture columns (no audio files ship in the
     * container). */
-  def renderWav(spark: SparkSession, df: DataFrame, idCol: String,
-                nSamplesCol: String, rateCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(nSamplesCol).cast("int"),
-        col(rateCol).cast("int"))
-      .as[(Long, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, n, rate) =>
-          val dataLen = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-            .put("WAVE".getBytes("US-ASCII"))
-          bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1).putShort(1) // PCM, mono
-            .putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
-          bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-          var s = id * 6364136223846793005L + 1442695040888963407L
-          var i = 0
-          while (i < n) {
-            s = s * 6364136223846793005L + 1442695040888963407L
-            bb.putShort((s >>> 48).toShort)
-            i += 1
-          }
-          (id, bb.array())
-        }
-      }.toDF(idCol, "payload")
+  def renderWav(df: DataFrame, idCol: String, nSamplesCol: String,
+                rateCol: String): DataFrame =
+    renderOp[(Long, Int, Int)](df, idCol, col(nSamplesCol).cast("int"),
+        col(rateCol).cast("int")) { case (id, n, rate) =>
+      val bb = wavHeader(n, rate)
+      var s = id * 6364136223846793005L + 1442695040888963407L
+      var i = 0
+      while (i < n) {
+        s = s * 6364136223846793005L + 1442695040888963407L
+        bb.putShort((s >>> 48).toShort)
+        i += 1
+      }
+      (id, bb.array())
+    }
+
+  /** The RIFF/WAVE header of a mono 16-bit PCM payload of `n` samples at
+    * `rate`, in a buffer sized for the samples the caller appends. */
+  private def wavHeader(n: Int, rate: Int): ByteBuffer = {
+    val dataLen = n * 2
+    val bb = ByteBuffer.allocate(44 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
+      .put("WAVE".getBytes("US-ASCII"))
+    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1).putShort(1) // PCM, mono
+      .putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
+    bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
   }
 
   /** Audio decode operator: WAV payloads → typed metadata via the real
     * RIFF parser; non-WAV payloads fall back to a deterministic stub row
     * (format "unknown", dims from the byte fold) so the operator stays
     * total over a mixed corpus. */
-  def decodeAudioMeta(spark: SparkSession, df: DataFrame, idCol: String,
-                      binCol: String): Dataset[AudioMeta] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeWavMeta(id, bytes).getOrElse {
-            val n = if (bytes == null) 0L else bytes.length.toLong
-            AudioMeta(id, "unknown", 0, 0, 0, n, 0L)
-          }
-        }
-      }
-  }
+  def decodeAudioMeta(df: DataFrame, idCol: String,
+                      binCol: String): Dataset[AudioMeta] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      decodeWavMeta(id, bytes).getOrElse(
+        AudioMeta(id, "unknown", 0, 0, 0, nBytes(bytes).toLong, 0L))
+    })
 
   /** Deterministic mono 16-bit PCM SQUARE-WAVE WAV rendering: sample_i =
     * +amp for even i, −amp for odd — every decoded-feature expectation
@@ -429,107 +485,59 @@ object Multimodal {
     * fixture columns, so the PCM DECODE path gets an arithmetic DuckDB
     * twin (the LCG renderer's samples would need 64-bit wrapping
     * multiplication, which DuckDB refuses). */
-  def renderWavSquare(spark: SparkSession, df: DataFrame, idCol: String,
-                      nSamplesCol: String, rateCol: String,
-                      ampCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(nSamplesCol).cast("int"),
-        col(rateCol).cast("int"), col(ampCol).cast("int"))
-      .as[(Long, Int, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, n, rate, amp) =>
-          val dataLen = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-            .put("WAVE".getBytes("US-ASCII"))
-          bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1).putShort(1) // PCM, mono
-            .putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
-          bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-          var i = 0
-          while (i < n) {
-            bb.putShort(if ((i & 1) == 0) amp.toShort else (-amp).toShort)
-            i += 1
-          }
-          (id, bb.array())
+  def renderWavSquare(df: DataFrame, idCol: String, nSamplesCol: String,
+                      rateCol: String, ampCol: String): DataFrame =
+    renderOp[(Long, Int, Int, Int)](df, idCol, col(nSamplesCol).cast("int"),
+        col(rateCol).cast("int"), col(ampCol).cast("int")) {
+      case (id, n, rate, amp) =>
+        val bb = wavHeader(n, rate)
+        var i = 0
+        while (i < n) {
+          bb.putShort(if ((i & 1) == 0) amp.toShort else (-amp).toShort)
+          i += 1
         }
-      }.toDF(idCol, "payload")
-  }
+        (id, bb.array())
+    }
 
   /** Decoded-sample statistics of a 16-bit PCM WAV payload. */
   case class AudioPcmStats(doc_id: Long, n_samples: Long, peak: Int,
                            sum_samples: Long, rms: Double)
 
-  /** REAL PCM sample decode: walk RIFF chunks to fmt/data (the
-    * [[decodeWavMeta]] discipline), then read every little-endian int16
+  /** REAL PCM sample decode: walk RIFF chunks to fmt/data (the walk
+    * [[decodeWavMeta]] shares), then read every little-endian int16
     * sample in the data chunk and fold peak / Σx / Σx² in one pass —
     * rms = √(Σx²/n). O(payload) but single-pass and allocation-free;
     * None for non-WAV, non-16-bit, or malformed payloads. */
-  def decodeWavPcm(id: Long, bytes: Array[Byte]): Option[AudioPcmStats] = {
-    def u16(o: Int) = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def u32(o: Int) = (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-    def tag(o: Int) = new String(bytes, o, 4, "US-ASCII")
-    try {
-      if (bytes == null || bytes.length < 44 || tag(0) != "RIFF" ||
-        tag(8) != "WAVE") None
-      else {
-        var off = 12
-        var bits = -1
-        var dataOff = -1
-        var dataLen = -1L
-        var malformed = false
-        while (!malformed && off + 8 <= bytes.length &&
-          (bits < 0 || dataOff < 0)) {
-          val id4 = tag(off); val len = u32(off + 4)
-          if (id4 == "fmt " && len >= 16 && off + 24 <= bytes.length)
-            bits = u16(off + 4 + 18)
-          else if (id4 == "data") {
-            dataOff = off + 8
-            dataLen = math.min(len, math.max(0L, bytes.length - off - 8L))
-          }
-          val advance = 8 + len.toInt + (len.toInt & 1)
-          if (advance <= 0) malformed = true else off += advance
+  def decodeWavPcm(id: Long, bytes: Array[Byte]): Option[AudioPcmStats] =
+    try wavChunks(bytes)
+      .filter(w => w.fmt.exists(_._3 == 16) && w.dataLen >= 2)
+      .map { w =>
+        val r = new ByteReader(bytes, littleEndian = true)
+        val n = (w.dataLen / 2).toInt
+        var peak = 0
+        var sum = 0L
+        var sumSq = 0L
+        var i = 0
+        while (i < n) {
+          val s = r.u16(w.dataOff + i * 2).toShort.toInt
+          val a = math.abs(s)
+          if (a > peak) peak = a
+          sum += s
+          sumSq += s.toLong * s.toLong
+          i += 1
         }
-        if (malformed || bits != 16 || dataOff < 0 || dataLen < 2) None
-        else {
-          val n = (dataLen / 2).toInt
-          var peak = 0
-          var sum = 0L
-          var sumSq = 0L
-          var i = 0
-          while (i < n) {
-            val o = dataOff + i * 2
-            val s = ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort.toInt
-            val a = math.abs(s)
-            if (a > peak) peak = a
-            sum += s
-            sumSq += s.toLong * s.toLong
-            i += 1
-          }
-          Some(AudioPcmStats(id, n.toLong, peak, sum,
-            math.sqrt(sumSq.toDouble / n.toDouble)))
-        }
-      }
-    } catch { case _: Exception => None }
-  }
+        AudioPcmStats(id, n.toLong, peak, sum,
+          math.sqrt(sumSq.toDouble / n.toDouble))
+      } catch { case _: Exception => None }
 
   /** PCM feature-extraction operator over a binary WAV column —
     * mapPartitions like the other decoders; undecodable payloads fall
     * back to an all-zero stats row so the operator stays total. */
-  def pcmStats(spark: SparkSession, df: DataFrame, idCol: String,
-               binCol: String): Dataset[AudioPcmStats] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeWavPcm(id, bytes)
-            .getOrElse(AudioPcmStats(id, 0L, 0, 0L, 0.0))
-        }
-      }
-  }
+  def pcmStats(df: DataFrame, idCol: String,
+               binCol: String): Dataset[AudioPcmStats] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      decodeWavPcm(id, bytes).getOrElse(AudioPcmStats(id, 0L, 0, 0L, 0.0))
+    })
 
   /** Typed metadata of a video-container payload. */
   case class VideoMeta(doc_id: Long, format: String, timescale: Int,
@@ -541,78 +549,61 @@ object Multimodal {
     * walk the top-level box list to `moov`, read `mvhd` (timescale,
     * duration — v0 and v1 layouts), count `trak` children, and read the
     * first track's `tkhd` 16.16 fixed-point width/height. Big-endian
-    * reads (ISO-BMFF), loop-guarded against corrupt size fields exactly
-    * like the RIFF walk. Returns None for non-MP4 or malformed payloads. */
+    * reads (ISO-BMFF); every level walks through [[isoBoxes]], which
+    * guards against corrupt size fields. Returns None for non-MP4 or
+    * malformed payloads. */
   def decodeMp4Meta(id: Long, bytes: Array[Byte]): Option[VideoMeta] = {
-    def u32(o: Int): Long = ((bytes(o) & 0xffL) << 24) |
-      ((bytes(o + 1) & 0xffL) << 16) | ((bytes(o + 2) & 0xffL) << 8) |
-      (bytes(o + 3) & 0xffL)
-    def tag(o: Int) = new String(bytes, o, 4, "US-ASCII")
+    val r = new ByteReader(bytes, littleEndian = false)
     try {
-      if (bytes == null || bytes.length < 16 || tag(4) != "ftyp") None
+      if (bytes == null || bytes.length < 16 || r.tag(4) != "ftyp") None
       else {
-        // top-level walk to moov (size==1 would mean a 64-bit largesize —
-        // out of scope for metadata headers, treated as malformed; size==0
-        // means "to end of file", only legal for the last box)
-        var off = 0
         var moov = -1
         var moovEnd = -1
-        var malformed = false
-        while (!malformed && moov < 0 && off + 8 <= bytes.length) {
-          val size = u32(off)
-          if (tag(off + 4) == "moov") {
+        val topOk = isoBoxes(r, 0, bytes.length) { (typ, off, size) =>
+          if (typ == "moov") {
             moov = off
             moovEnd = math.min(bytes.length.toLong, off + size).toInt
           }
-          // a u32 size past the buffer (incl. > Int.MaxValue, which would
-          // go negative under .toInt and walk the cursor backwards) is
-          // malformed by definition, not an exception-handler case
-          if (size < 8 || size > bytes.length) malformed = true
-          else off += size.toInt
+          moov < 0
         }
-        if (malformed || moov < 0) None
+        if (!topOk || moov < 0) None
         else {
           var ts = 0L; var durUnits = -1L; var nTraks = 0
           var w = 0; var h = 0
-          var o = moov + 8
-          while (!malformed && o + 8 <= moovEnd) {
-            val size = u32(o); val id4 = tag(o + 4)
-            if (id4 == "mvhd" && o + 32 <= moovEnd) {
-              val ver = bytes(o + 8) & 0xff
-              if (ver == 0) { ts = u32(o + 20); durUnits = u32(o + 24) }
-              else if (o + 44 <= moovEnd) { // v1: 64-bit times
-                ts = u32(o + 28)
-                durUnits = (u32(o + 32) << 32) | u32(o + 36)
+          var trakOk = true
+          val moovOk = isoBoxes(r, moov + 8, moovEnd) { (typ, o, size) =>
+            if (typ == "mvhd" && o + 32 <= moovEnd) {
+              if (r.u8(o + 8) == 0) {
+                ts = r.u32(o + 20); durUnits = r.u32(o + 24)
+              } else if (o + 44 <= moovEnd) { // v1: 64-bit times
+                ts = r.u32(o + 28)
+                durUnits = (r.u32(o + 32) << 32) | r.u32(o + 36)
               }
-            } else if (id4 == "trak") {
+            } else if (typ == "trak") {
               nTraks += 1
               // only the first trak's tkhd supplies dims (the fixture
               // renders identical dims per track; a real corpus would
               // surface per-track rows via a trak-exploding variant)
               if (nTraks == 1) {
                 val trakEnd = math.min(moovEnd.toLong, o + size).toInt
-                var t = o + 8
-                while (!malformed && t + 8 <= trakEnd) {
-                  val tsz = u32(t)
-                  if (tag(t + 4) == "tkhd") {
-                    val ver = bytes(t + 8) & 0xff
-                    val wOff = if (ver == 0) t + 84 else t + 96
+                trakOk = isoBoxes(r, o + 8, trakEnd) { (inner, t, _) =>
+                  if (inner == "tkhd") {
+                    val wOff = if (r.u8(t + 8) == 0) t + 84 else t + 96
                     if (wOff + 8 <= trakEnd) {
-                      w = (u32(wOff) >> 16).toInt   // 16.16 fixed point
-                      h = (u32(wOff + 4) >> 16).toInt
+                      w = (r.u32(wOff) >> 16).toInt   // 16.16 fixed point
+                      h = (r.u32(wOff + 4) >> 16).toInt
                     }
                   }
-                  if (tsz < 8 || tsz > bytes.length) malformed = true
-                  else t += tsz.toInt
+                  true
                 }
               }
             }
-            if (size < 8 || size > bytes.length) malformed = true
-            else o += size.toInt
+            trakOk
           }
           // a u32 timescale above Int.MaxValue cannot be represented in
           // the Int metadata field — malformed, not a negative timescale
-          if (malformed || ts <= 0 || ts > Int.MaxValue || durUnits < 0) None
+          if (!moovOk || !trakOk || ts <= 0 || ts > Int.MaxValue ||
+            durUnits < 0) None
           else Some(VideoMeta(id, "mp4", ts.toInt,
             durUnits * 1000L / ts, nTraks, w, h))
         }
@@ -625,56 +616,51 @@ object Multimodal {
     * — the fixture-side generator for exercising [[decodeMp4Meta]] on
     * real ISO-BMFF bytes built from fixture columns (no video files ship
     * in the container). Box layouts follow ISO/IEC 14496-12 v0 boxes. */
-  def renderMp4(spark: SparkSession, df: DataFrame, idCol: String,
-                timescaleCol: String, durUnitsCol: String,
-                nTracksCol: String, wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(timescaleCol).cast("int"),
-        col(durUnitsCol).cast("long"), col(nTracksCol).cast("int"),
-        col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Int, Long, Int, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, ts, dur, nTracks, w, h) =>
-          val moovSize = 8 + 108 + nTracks * 100
-          val bb = java.nio.ByteBuffer.allocate(20 + moovSize)
-            .order(java.nio.ByteOrder.BIG_ENDIAN)
-          // ftyp
-          bb.putInt(20).put("ftyp".getBytes("US-ASCII"))
-            .put("isom".getBytes("US-ASCII")).putInt(0x200)
-            .put("isom".getBytes("US-ASCII"))
-          // moov > mvhd (v0, 108 bytes)
-          bb.putInt(moovSize).put("moov".getBytes("US-ASCII"))
-          bb.putInt(108).put("mvhd".getBytes("US-ASCII"))
-            .putInt(0)                 // version/flags
-            .putInt(0).putInt(0)       // ctime/mtime
-            .putInt(ts).putInt(dur.toInt)
-            .putInt(0x00010000).putShort(0x0100.toShort).putShort(0)
-          bb.putLong(0)                // reserved
-          // unity matrix
-          bb.putInt(0x00010000).putInt(0).putInt(0)
-          bb.putInt(0).putInt(0x00010000).putInt(0)
-          bb.putInt(0).putInt(0).putInt(0x40000000)
-          (0 until 6).foreach(_ => bb.putInt(0)) // pre_defined
-          bb.putInt(nTracks + 1)       // next_track_ID
-          // trak > tkhd (v0, 92 bytes) per track
-          (1 to nTracks).foreach { tid =>
-            bb.putInt(100).put("trak".getBytes("US-ASCII"))
-            bb.putInt(92).put("tkhd".getBytes("US-ASCII"))
-              .putInt(3)               // version 0, flags enabled|in-movie
-              .putInt(0).putInt(0)     // ctime/mtime
-              .putInt(tid).putInt(0)   // track_ID, reserved
-              .putInt(dur.toInt)
-            bb.putLong(0)              // reserved
-            bb.putShort(0).putShort(0).putShort(0).putShort(0)
-            bb.putInt(0x00010000).putInt(0).putInt(0)
-            bb.putInt(0).putInt(0x00010000).putInt(0)
-            bb.putInt(0).putInt(0).putInt(0x40000000)
-            bb.putInt(w << 16).putInt(h << 16) // 16.16 fixed point
-          }
-          (id, bb.array())
-        }
-      }.toDF(idCol, "payload")
-  }
+  def renderMp4(df: DataFrame, idCol: String, timescaleCol: String,
+                durUnitsCol: String, nTracksCol: String, wCol: String,
+                hCol: String): DataFrame =
+    renderOp[(Long, Int, Long, Int, Int, Int)](df, idCol,
+        col(timescaleCol).cast("int"), col(durUnitsCol).cast("long"),
+        col(nTracksCol).cast("int"), col(wCol).cast("int"),
+        col(hCol).cast("int")) { case (id, ts, dur, nTracks, w, h) =>
+      val moovSize = 8 + 108 + nTracks * 100
+      val bb = ByteBuffer.allocate(20 + moovSize)
+        .order(ByteOrder.BIG_ENDIAN)
+      // ftyp
+      bb.putInt(20).put("ftyp".getBytes("US-ASCII"))
+        .put("isom".getBytes("US-ASCII")).putInt(0x200)
+        .put("isom".getBytes("US-ASCII"))
+      // moov > mvhd (v0, 108 bytes)
+      bb.putInt(moovSize).put("moov".getBytes("US-ASCII"))
+      bb.putInt(108).put("mvhd".getBytes("US-ASCII"))
+        .putInt(0)                 // version/flags
+        .putInt(0).putInt(0)       // ctime/mtime
+        .putInt(ts).putInt(dur.toInt)
+        .putInt(0x00010000).putShort(0x0100.toShort).putShort(0)
+      bb.putLong(0)                // reserved
+      // unity matrix
+      bb.putInt(0x00010000).putInt(0).putInt(0)
+      bb.putInt(0).putInt(0x00010000).putInt(0)
+      bb.putInt(0).putInt(0).putInt(0x40000000)
+      (0 until 6).foreach(_ => bb.putInt(0)) // pre_defined
+      bb.putInt(nTracks + 1)       // next_track_ID
+      // trak > tkhd (v0, 92 bytes) per track
+      (1 to nTracks).foreach { tid =>
+        bb.putInt(100).put("trak".getBytes("US-ASCII"))
+        bb.putInt(92).put("tkhd".getBytes("US-ASCII"))
+          .putInt(3)               // version 0, flags enabled|in-movie
+          .putInt(0).putInt(0)     // ctime/mtime
+          .putInt(tid).putInt(0)   // track_ID, reserved
+          .putInt(dur.toInt)
+        bb.putLong(0)              // reserved
+        bb.putShort(0).putShort(0).putShort(0).putShort(0)
+        bb.putInt(0x00010000).putInt(0).putInt(0)
+        bb.putInt(0).putInt(0x00010000).putInt(0)
+        bb.putInt(0).putInt(0).putInt(0x40000000)
+        bb.putInt(w << 16).putInt(h << 16) // 16.16 fixed point
+      }
+      (id, bb.array())
+    }
 
   /** Typed metadata of an AVI payload. */
   case class AviMeta(doc_id: Long, format: String, frame_us: Long,
@@ -682,48 +668,40 @@ object Multimodal {
                      height: Int, duration_ms: Long)
 
   /** REAL AVI (RIFF) container metadata decode — the second RIFF walker
-    * next to [[decodeWavMeta]], little-endian, O(header), loop-guarded:
-    * `RIFF…AVI ` → `LIST hdrl` → `avih` main header (µs/frame, total
-    * frames, stream count, dims). Returns None for non-AVI or malformed
-    * payloads. */
+    * next to [[decodeWavMeta]], little-endian, O(header), loop-guarded by
+    * [[riffChunks]] at both levels: `RIFF…AVI ` → `LIST hdrl` → `avih`
+    * main header (µs/frame, total frames, stream count, dims). Returns
+    * None for non-AVI or malformed payloads. */
   def decodeAviMeta(id: Long, bytes: Array[Byte]): Option[AviMeta] = {
-    def u32(o: Int) = (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-    def tag(o: Int) = new String(bytes, o, 4, "US-ASCII")
+    val r = new ByteReader(bytes, littleEndian = true)
     try {
-      if (bytes == null || bytes.length < 24 || tag(0) != "RIFF" ||
-        tag(8) != "AVI ") None
+      if (bytes == null || bytes.length < 24 || r.tag(0) != "RIFF" ||
+        r.tag(8) != "AVI ") None
       else {
-        var off = 12
         var meta: Option[AviMeta] = None
-        var malformed = false
-        while (!malformed && meta.isEmpty && off + 8 <= bytes.length) {
-          val id4 = tag(off); val len = u32(off + 4)
+        var hdrlOk = true
+        val ok = riffChunks(r, 12, bytes.length) { (id4, off, len) =>
           if (id4 == "LIST" && off + 12 <= bytes.length &&
-            tag(off + 8) == "hdrl") {
+            r.tag(off + 8) == "hdrl") {
             // walk the hdrl list for the avih main header
-            var o = off + 12
             val listEnd = math.min(bytes.length.toLong, off + 8 + len).toInt
-            while (!malformed && meta.isEmpty && o + 8 <= listEnd) {
-              val cid = tag(o); val clen = u32(o + 4)
+            hdrlOk = riffChunks(r, off + 12, listEnd) { (cid, o, clen) =>
               if (cid == "avih" && clen >= 40 && o + 8 + 40 <= listEnd) {
-                val frameUs = u32(o + 8)
-                val nFrames = u32(o + 8 + 16)
-                val nStreams = u32(o + 8 + 24).toInt
-                val w = u32(o + 8 + 32).toInt
-                val h = u32(o + 8 + 36).toInt
+                val frameUs = r.u32(o + 8)
+                val nFrames = r.u32(o + 8 + 16)
+                val nStreams = r.u32(o + 8 + 24).toInt
+                val w = r.u32(o + 8 + 32).toInt
+                val h = r.u32(o + 8 + 36).toInt
                 if (frameUs > 0)
                   meta = Some(AviMeta(id, "avi", frameUs, nFrames, nStreams,
                     w, h, frameUs * nFrames / 1000L))
               }
-              val adv = 8 + clen.toInt + (clen.toInt & 1)
-              if (adv <= 0) malformed = true else o += adv
+              meta.isEmpty
             }
           }
-          val advance = 8 + len.toInt + (len.toInt & 1)
-          if (advance <= 0) malformed = true else off += advance
+          hdrlOk && meta.isEmpty
         }
-        if (malformed) None else meta
+        if (ok && hdrlOk) meta else None
       }
     } catch { case _: Exception => None }
   }
@@ -731,74 +709,53 @@ object Multimodal {
   /** Deterministic minimal-AVI rendering: (id, µs/frame, frames,
     * streams, w, h) → a real `RIFF(AVI  LIST(hdrl avih))` container for
     * exercising [[decodeAviMeta]] on genuine bytes. */
-  def renderAvi(spark: SparkSession, df: DataFrame, idCol: String,
-                frameUsCol: String, nFramesCol: String, nStreamsCol: String,
-                wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(frameUsCol).cast("long"),
-        col(nFramesCol).cast("long"), col(nStreamsCol).cast("int"),
-        col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Long, Long, Int, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, frameUs, nFrames, nStreams, w, h) =>
-          val avihLen = 56
-          val hdrlLen = 4 + 8 + avihLen       // "hdrl" + avih chunk
-          val riffLen = 4 + 8 + hdrlLen       // "AVI " + LIST chunk
-          val bb = java.nio.ByteBuffer.allocate(8 + riffLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(riffLen)
-            .put("AVI ".getBytes("US-ASCII"))
-          bb.put("LIST".getBytes("US-ASCII")).putInt(hdrlLen)
-            .put("hdrl".getBytes("US-ASCII"))
-          bb.put("avih".getBytes("US-ASCII")).putInt(avihLen)
-            .putInt(frameUs.toInt)  // dwMicroSecPerFrame
-            .putInt(0).putInt(0).putInt(0)
-            .putInt(nFrames.toInt)  // dwTotalFrames
-            .putInt(0)
-            .putInt(nStreams)       // dwStreams
-            .putInt(0)
-            .putInt(w).putInt(h)    // dwWidth / dwHeight
-            .putInt(0).putInt(0).putInt(0).putInt(0)
-          (id, bb.array())
-        }
-      }.toDF(idCol, "payload")
-  }
+  def renderAvi(df: DataFrame, idCol: String, frameUsCol: String,
+                nFramesCol: String, nStreamsCol: String, wCol: String,
+                hCol: String): DataFrame =
+    renderOp[(Long, Long, Long, Int, Int, Int)](df, idCol,
+        col(frameUsCol).cast("long"), col(nFramesCol).cast("long"),
+        col(nStreamsCol).cast("int"), col(wCol).cast("int"),
+        col(hCol).cast("int")) { case (id, frameUs, nFrames, nStreams, w, h) =>
+      val avihLen = 56
+      val hdrlLen = 4 + 8 + avihLen       // "hdrl" + avih chunk
+      val riffLen = 4 + 8 + hdrlLen       // "AVI " + LIST chunk
+      val bb = ByteBuffer.allocate(8 + riffLen)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(riffLen)
+        .put("AVI ".getBytes("US-ASCII"))
+      bb.put("LIST".getBytes("US-ASCII")).putInt(hdrlLen)
+        .put("hdrl".getBytes("US-ASCII"))
+      bb.put("avih".getBytes("US-ASCII")).putInt(avihLen)
+        .putInt(frameUs.toInt)  // dwMicroSecPerFrame
+        .putInt(0).putInt(0).putInt(0)
+        .putInt(nFrames.toInt)  // dwTotalFrames
+        .putInt(0)
+        .putInt(nStreams)       // dwStreams
+        .putInt(0)
+        .putInt(w).putInt(h)    // dwWidth / dwHeight
+        .putInt(0).putInt(0).putInt(0).putInt(0)
+      (id, bb.array())
+    }
 
   /** AVI decode operator with the standard stub-fallback totality
     * contract (see [[decodeVideoMeta]]). */
-  def decodeAviMetaOp(spark: SparkSession, df: DataFrame, idCol: String,
-                      binCol: String): Dataset[AviMeta] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeAviMeta(id, bytes).getOrElse {
-            val n = if (bytes == null) 0 else bytes.length
-            AviMeta(id, "unknown", 0L, 0L, 0, n, 0, 0L)
-          }
-        }
-      }
-  }
+  def decodeAviMetaOp(df: DataFrame, idCol: String,
+                      binCol: String): Dataset[AviMeta] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      decodeAviMeta(id, bytes).getOrElse(
+        AviMeta(id, "unknown", 0L, 0L, 0, nBytes(bytes), 0, 0L))
+    })
 
   /** Video-container decode operator: MP4 payloads → typed metadata via
     * the real box-walk parser; non-MP4 payloads fall back to a
     * deterministic stub row so the operator stays total over a mixed
     * corpus (same contract as [[decodeAudioMeta]]). */
-  def decodeVideoMeta(spark: SparkSession, df: DataFrame, idCol: String,
-                      binCol: String): Dataset[VideoMeta] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeMp4Meta(id, bytes).getOrElse {
-            val n = if (bytes == null) 0 else bytes.length
-            VideoMeta(id, "unknown", 0, 0L, 0, n, 0)
-          }
-        }
-      }
-  }
+  def decodeVideoMeta(df: DataFrame, idCol: String,
+                      binCol: String): Dataset[VideoMeta] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      decodeMp4Meta(id, bytes).getOrElse(
+        VideoMeta(id, "unknown", 0, 0L, 0, nBytes(bytes), 0))
+    })
 
   /** Frame sampling for video-like columns (`array<binary>` of frames):
     * keep every `everyN`-th frame, preserving frame index. Pure
@@ -860,35 +817,27 @@ object Multimodal {
     * gray (50) otherwise. The SAME image content rendered at different
     * (w, h) resolutions produces the same average-hash — which is the
     * perceptual property mm8's fixture exercises. */
-  def renderBlockPng(spark: SparkSession, df: DataFrame, idCol: String,
-                     loCol: String, hiCol: String,
-                     wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(loCol).cast("long"),
-        col(hiCol).cast("long"), col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Long, Long, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, lo, hi, w, h) =>
-          val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val b = (y * 8 / h) * 8 + (x * 8 / w)
-              val bit =
-                if (b < 32) (lo >>> b) & 1L else (hi >>> (b - 32)) & 1L
-              val g = if (bit == 1L) 200 else 50
-              img.setRGB(x, y, (g << 16) | (g << 8) | g)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new ByteArrayOutputStream()
-          ImageIO.write(img, "png", baos)
-          (id, baos.toByteArray)
+  def renderBlockPng(df: DataFrame, idCol: String, loCol: String,
+                     hiCol: String, wCol: String, hCol: String): DataFrame =
+    renderOp[(Long, Long, Long, Int, Int)](df, idCol, col(loCol).cast("long"),
+        col(hiCol).cast("long"), col(wCol).cast("int"),
+        col(hCol).cast("int")) { case (id, lo, hi, w, h) =>
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val b = (y * 8 / h) * 8 + (x * 8 / w)
+          val bit =
+            if (b < 32) (lo >>> b) & 1L else (hi >>> (b - 32)) & 1L
+          val g = if (bit == 1L) 200 else 50
+          img.setRGB(x, y, (g << 16) | (g << 8) | g)
+          x += 1
         }
-      }.toDF(idCol, "payload")
-  }
+        y += 1
+      }
+      (id, pngBytes(img))
+    }
 
   /** REAL perceptual average-hash (aHash) over decoded pixels: imageio
     * decode → integer luminance sums over an 8×8 block grid → bit b set
@@ -903,47 +852,28 @@ object Multimodal {
     * Scale shape: narrow per-row decode (mapPartitions, codec init per
     * task) → one small (doc, lo, hi) table; pair generation belongs to
     * [[Dedup.hammingNearDup]]'s banded join, never here. */
-  def imageAHash(spark: SparkSession, df: DataFrame, idCol: String,
-                 binCol: String): Dataset[AHashRow] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val img = readImage(bytes)
-          if (img == null) None
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            val sums = new Array[Long](64)
-            val counts = new Array[Long](64)
-            var total = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                val lum =
-                  ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-                val b = (y * 8 / h) * 8 + (x * 8 / w)
-                sums(b) += lum; counts(b) += 1; total += lum
-                x += 1
-              }
-              y += 1
-            }
-            val totalPix = w.toLong * h
-            var lo = 0L; var hi = 0L
-            var b = 0
-            while (b < 64) {
-              if (counts(b) > 0 && sums(b) * totalPix > total * counts(b)) {
-                if (b < 32) lo |= 1L << b else hi |= 1L << (b - 32)
-              }
-              b += 1
-            }
-            Some(AHashRow(id, lo, hi))
+  def imageAHash(df: DataFrame, idCol: String,
+                 binCol: String): Dataset[AHashRow] =
+    payloadOp(df, idCol, binCol)(_.flatMap { case (id, bytes) =>
+      val img = readImage(bytes)
+      if (img == null) None
+      else {
+        val (w, h) = (img.getWidth, img.getHeight)
+        val (sums, counts) =
+          lumBins(img, 64)((x, y) => (y * 8 / h) * 8 + (x * 8 / w))
+        val total = sums.sum
+        val totalPix = w.toLong * h
+        var lo = 0L; var hi = 0L
+        var b = 0
+        while (b < 64) {
+          if (counts(b) > 0 && sums(b) * totalPix > total * counts(b)) {
+            if (b < 32) lo |= 1L << b else hi |= 1L << (b - 32)
           }
+          b += 1
         }
+        Some(AHashRow(id, lo, hi))
       }
-  }
+    })
 
   /** Typed metadata of a TIFF/EXIF payload. */
   case class TiffMeta(doc_id: Long, format: String, byte_order: String,
@@ -970,14 +900,8 @@ object Multimodal {
         case (0x4d, 0x4d) => false
         case _ => return None
       }
-      def u16(o: Int): Int =
-        if (le) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-        else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-      def u32(o: Int): Long =
-        if (le) (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-          ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-        else ((bytes(o) & 0xffL) << 24) | ((bytes(o + 1) & 0xffL) << 16) |
-          ((bytes(o + 2) & 0xffL) << 8) | (bytes(o + 3) & 0xffL)
+      val r = new ByteReader(bytes, littleEndian = le)
+      import r.{u16, u32}
       if (u16(2) != 42) return None
       // value of one IFD entry at `o`: SHORT reads 2 bytes, LONG 4. The
       // count field (o+4) decides inline vs offset: count·typeSize > 4
@@ -1030,61 +954,47 @@ object Multimodal {
 
   /** TIFF decode operator — total over a mixed corpus via the stub-row
     * fallback (the [[decodeVideoMeta]] contract). */
-  def decodeTiffMetaOp(spark: SparkSession, df: DataFrame, idCol: String,
-                       binCol: String): Dataset[TiffMeta] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeTiffMeta(id, bytes).getOrElse {
-            val n = if (bytes == null) 0 else bytes.length
-            TiffMeta(id, "unknown", "", n, 0L, 0, 0, 0)
-          }
-        }
-      }
-  }
+  def decodeTiffMetaOp(df: DataFrame, idCol: String,
+                       binCol: String): Dataset[TiffMeta] =
+    payloadOp(df, idCol, binCol)(_.map { case (id, bytes) =>
+      decodeTiffMeta(id, bytes).getOrElse(
+        TiffMeta(id, "unknown", "", nBytes(bytes), 0L, 0, 0, 0))
+    })
 
   /** Deterministic minimal-TIFF rendering: (id, byte-order flag, width,
     * height, bits-per-sample, orientation, iso) → a real TIFF header +
     * IFD0 (7 entries incl. the Exif sub-IFD pointer) + Exif IFD (ISO) —
     * the fixture generator for [[decodeTiffMeta]], emitting BOTH byte
     * orders so the endian-switched read path is exercised end to end. */
-  def renderTiff(spark: SparkSession, df: DataFrame, idCol: String,
-                 leCol: String, wCol: String, hCol: String, bpsCol: String,
-                 orientCol: String, isoCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(leCol).cast("boolean"),
-        col(wCol).cast("long"), col(hCol).cast("long"),
-        col(bpsCol).cast("int"), col(orientCol).cast("int"),
-        col(isoCol).cast("int"))
-      .as[(Long, Boolean, Long, Long, Int, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, le, w, h, bps, orient, iso) =>
-          val order = if (le) java.nio.ByteOrder.LITTLE_ENDIAN
-            else java.nio.ByteOrder.BIG_ENDIAN
-          val bb = java.nio.ByteBuffer.allocate(116).order(order)
-          bb.put((if (le) "II" else "MM").getBytes("US-ASCII"))
-          bb.putShort(42).putInt(8)
-          def entry(tag: Int, typ: Int, value: Long): Unit = {
-            bb.putShort(tag.toShort).putShort(typ.toShort).putInt(1)
-            if (typ == 3) { bb.putShort(value.toInt.toShort); bb.putShort(0) }
-            else bb.putInt(value.toInt)
-          }
-          bb.putShort(7)                    // IFD0: 7 entries
-          entry(256, 4, w)                  // ImageWidth  (LONG)
-          entry(257, 4, h)                  // ImageLength (LONG)
-          entry(258, 3, bps)                // BitsPerSample
-          entry(259, 3, 1)                  // Compression: none
-          entry(262, 3, 1)                  // Photometric: BlackIsZero
-          entry(274, 3, orient)             // Orientation
-          entry(0x8769, 4, 98)              // Exif IFD pointer
-          bb.putInt(0)                      // next IFD: none
-          bb.putShort(1)                    // Exif IFD at 98: 1 entry
-          entry(0x8827, 3, iso)             // ISOSpeedRatings
-          bb.putInt(0)
-          (id, bb.array())
+  def renderTiff(df: DataFrame, idCol: String, leCol: String, wCol: String,
+                 hCol: String, bpsCol: String, orientCol: String,
+                 isoCol: String): DataFrame =
+    renderOp[(Long, Boolean, Long, Long, Int, Int, Int)](df, idCol,
+        col(leCol).cast("boolean"), col(wCol).cast("long"),
+        col(hCol).cast("long"), col(bpsCol).cast("int"),
+        col(orientCol).cast("int"), col(isoCol).cast("int")) {
+      case (id, le, w, h, bps, orient, iso) =>
+        val order = if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+        val bb = ByteBuffer.allocate(116).order(order)
+        bb.put((if (le) "II" else "MM").getBytes("US-ASCII"))
+        bb.putShort(42).putInt(8)
+        def entry(tag: Int, typ: Int, value: Long): Unit = {
+          bb.putShort(tag.toShort).putShort(typ.toShort).putInt(1)
+          if (typ == 3) { bb.putShort(value.toInt.toShort); bb.putShort(0) }
+          else bb.putInt(value.toInt)
         }
-      }.toDF(idCol, "payload")
-  }
+        bb.putShort(7)                    // IFD0: 7 entries
+        entry(256, 4, w)                  // ImageWidth  (LONG)
+        entry(257, 4, h)                  // ImageLength (LONG)
+        entry(258, 3, bps)                // BitsPerSample
+        entry(259, 3, 1)                  // Compression: none
+        entry(262, 3, 1)                  // Photometric: BlackIsZero
+        entry(274, 3, orient)             // Orientation
+        entry(0x8769, 4, 98)              // Exif IFD pointer
+        bb.putInt(0)                      // next IFD: none
+        bb.putShort(1)                    // Exif IFD at 98: 1 entry
+        entry(0x8827, 3, iso)             // ISOSpeedRatings
+        bb.putInt(0)
+        (id, bb.array())
+    }
 }

@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Fixed-point scale for cross-row sums: 1e-12 resolution. */
-  val Scale: Double = 1e12
+  /** Fixed-point scale for cross-row sums: 1e-12 resolution, the same
+    * scale as the native fixed-point kernels' terms. */
+  val Scale: Double = graft.functions.ExactNum.FixedScale
 
   /** Engine-portable per-row dot product: sequential double fold, executed
     * by the native codegen'd [[graft.functions.VectorDot]] expression (see

@@ -552,9 +552,9 @@ object TextQueries extends QueryPack {
       val withDims = docs(s, dir).select($"doc_id",
         (lit(1) + $"doc_id" % 37).cast("int").as("w"),
         (lit(1) + $"doc_id" % 23).cast("int").as("h"))
-      val pngs = Multimodal.renderPng(s, graft.core.Tables.spread(withDims),
+      val pngs = Multimodal.renderPng(graft.core.Tables.spread(withDims),
         "doc_id", "w", "h")
-      Multimodal.decodeMeta(s, pngs, "doc_id", "payload")
+      Multimodal.decodeMeta(pngs, "doc_id", "payload")
         .select($"doc_id", $"format", $"width", $"height")
     }),
 
@@ -567,11 +567,11 @@ object TextQueries extends QueryPack {
       val withDims = docs(s, dir).select($"doc_id",
         (lit(4) + $"doc_id" % 29).cast("int").as("w"),
         (lit(4) + $"doc_id" % 19).cast("int").as("h"))
-      val pngs = Multimodal.renderPng(s, graft.core.Tables.spread(withDims),
+      val pngs = Multimodal.renderPng(graft.core.Tables.spread(withDims),
         "doc_id", "w", "h")
-      val resized = Multimodal.resizeImage(s, pngs, "doc_id", "payload", 16, 12)
+      val resized = Multimodal.resizeImage(pngs, "doc_id", "payload", 16, 12)
         .select(col("doc_id"), col("payload"))
-      Multimodal.decodeMeta(s, resized, "doc_id", "payload")
+      Multimodal.decodeMeta(resized, "doc_id", "payload")
         .select($"doc_id", $"format", $"width", $"height")
     }),
 
@@ -583,9 +583,9 @@ object TextQueries extends QueryPack {
       val withAudio = docs(s, dir).select($"doc_id",
         (lit(100) + $"doc_id" % 400).cast("int").as("n_samples"),
         when($"doc_id" % 2 === 0, 8000).otherwise(16000).as("rate"))
-      val wavs = Multimodal.renderWav(s, graft.core.Tables.spread(withAudio),
+      val wavs = Multimodal.renderWav(graft.core.Tables.spread(withAudio),
         "doc_id", "n_samples", "rate")
-      Multimodal.decodeAudioMeta(s, wavs, "doc_id", "payload")
+      Multimodal.decodeAudioMeta(wavs, "doc_id", "payload")
         .select($"doc_id", $"format", $"sample_rate", $"channels",
           $"bits_per_sample", $"n_samples", $"duration_ms")
     }),
@@ -616,9 +616,9 @@ object TextQueries extends QueryPack {
         (lit(1) + $"doc_id" % 3).cast("int").as("n_tracks"),
         (lit(160) + ($"doc_id" % 8) * 16).cast("int").as("w"),
         (lit(90) + ($"doc_id" % 6) * 30).cast("int").as("h"))
-      val mp4s = Multimodal.renderMp4(s, graft.core.Tables.spread(withVideo),
+      val mp4s = Multimodal.renderMp4(graft.core.Tables.spread(withVideo),
         "doc_id", "ts", "dur", "n_tracks", "w", "h")
-      Multimodal.decodeVideoMeta(s, mp4s, "doc_id", "payload")
+      Multimodal.decodeVideoMeta(mp4s, "doc_id", "payload")
         .select($"doc_id", $"format", $"timescale", $"duration_ms",
           $"n_tracks", $"width", $"height")
     }),
@@ -634,9 +634,9 @@ object TextQueries extends QueryPack {
         (lit(1) + $"doc_id" % 2).cast("int").as("n_streams"),
         (lit(320) + ($"doc_id" % 4) * 160).cast("int").as("w"),
         (lit(240) + ($"doc_id" % 3) * 120).cast("int").as("h"))
-      val avis = Multimodal.renderAvi(s, graft.core.Tables.spread(withAvi),
+      val avis = Multimodal.renderAvi(graft.core.Tables.spread(withAvi),
         "doc_id", "frame_us", "n_frames", "n_streams", "w", "h")
-      Multimodal.decodeAviMetaOp(s, avis, "doc_id", "payload")
+      Multimodal.decodeAviMetaOp(avis, "doc_id", "payload")
         .select($"doc_id", $"format", $"frame_us", $"n_frames",
           $"n_streams", $"width", $"height", $"duration_ms")
     }),
@@ -832,10 +832,10 @@ object TextQueries extends QueryPack {
         when($"doc_id" % 2 === 0, 8).otherwise(16).cast("int").as("bps"),
         (lit(1) + $"doc_id" % 8).cast("int").as("orient"),
         ((lit(1) + $"doc_id" % 32) * 100).cast("int").as("iso"))
-      val tiffs = Multimodal.renderTiff(s,
+      val tiffs = Multimodal.renderTiff(
         graft.core.Tables.spread(withTiff),
         "doc_id", "le", "w", "h", "bps", "orient", "iso")
-      Multimodal.decodeTiffMetaOp(s, tiffs, "doc_id", "payload")
+      Multimodal.decodeTiffMetaOp(tiffs, "doc_id", "payload")
         .select($"doc_id", $"format", $"byte_order", $"width", $"height",
           $"bits_per_sample", $"orientation", $"iso")
     }),
@@ -864,9 +864,9 @@ object TextQueries extends QueryPack {
         shiftrightunsigned(w60, 32).as("hi"),
         (lit(8) * (lit(1) + $"doc_id" % 4)).cast("int").as("w"),
         (lit(8) * (lit(1) + $"doc_id" % 3)).cast("int").as("h"))
-      val pngs = Multimodal.renderBlockPng(s,
+      val pngs = Multimodal.renderBlockPng(
         graft.core.Tables.spread(patterned), "doc_id", "lo", "hi", "w", "h")
-      val hashes = Multimodal.imageAHash(s, pngs, "doc_id", "payload")
+      val hashes = Multimodal.imageAHash(pngs, "doc_id", "payload")
       Dedup.hammingNearDup(hashes.toDF(), "doc_id",
         Seq("ahash_lo", "ahash_hi"), wordBits = 32, bandBits = 16,
         maxHamming = 3)
@@ -1178,10 +1178,10 @@ object TextQueries extends QueryPack {
         (lit(50) + $"doc_id" % 100).cast("int").as("n_samples"),
         when($"doc_id" % 2 === 0, 8000).otherwise(16000).as("rate"),
         (lit(500) + ($"doc_id" % 16) * 1000).cast("int").as("amp"))
-      val wavs = Multimodal.renderWavSquare(s,
+      val wavs = Multimodal.renderWavSquare(
         graft.core.Tables.spread(withAudio),
         "doc_id", "n_samples", "rate", "amp")
-      Multimodal.pcmStats(s, wavs, "doc_id", "payload").toDF()
+      Multimodal.pcmStats(wavs, "doc_id", "payload").toDF()
     }),
 
     // corpus-trained bigram-LM perplexity per doc (CCNet's quality

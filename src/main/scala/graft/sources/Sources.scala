@@ -218,8 +218,9 @@ object Sources {
 
   /** Fact-table-scale idempotent micro-batch upsert — the distributed
     * alternative to [[upsertBatch]]'s driver-side collect, for sinks whose
-    * micro-batch is O(events), not O(windows). Rows never visit the
-    * driver:
+    * micro-batch is O(events), not O(windows); a fact-scale stream calls
+    * it from `foreachBatch`, as [[jdbcSink]] calls [[upsertBatch]]. Rows
+    * never visit the driver:
     *
     *  1. each partition batch-INSERTs its rows into `<table>_stage` in its
     *     own transaction, preceded by a partition-scoped DELETE so a
@@ -331,19 +332,6 @@ object Sources {
         throw e
     }
   }
-
-  /** Streaming fact-table JDBC sink: [[stagedUpsertBatch]] per
-    * micro-batch — the documented alternative a fact-scale deployment
-    * uses where [[jdbcSink]]'s aggregate-table collect would not hold. */
-  def jdbcFactSink(df: DataFrame, cfg: JdbcConfig, checkpoint: String,
-                   keyCols: Seq[String], trigger: Trigger = DefaultTrigger)
-      : DataStreamWriter[_] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        stagedUpsertBatch(batch, cfg, keyCols)
-      }
 
   /** K2 — streaming JDBC sink via foreachBatch (Structured Streaming has no
     * built-in one). Unlike the reference (batch size 1, no checkpointing —

@@ -354,8 +354,8 @@ object StreamingDedup {
             var d = 0
             val n = math.min(dims, v.length)
             while (d < n) {
-              s += math.floor(v(d).toDouble * signs(p)(d) *
-                graft.operators.Similarity.Scale).toLong
+              s += graft.functions.ExactNum.floorUnits(
+                v(d).toDouble * signs(p)(d), graft.operators.Similarity.Scale)
               d += 1
             }
             if (s >= 0L) 1L else 0L

@@ -74,11 +74,11 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     val meta = Multimodal.binaryMeta(df, "doc_id", "payload")
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("format")).toMap
     assert(meta(1L) == "jpeg" && meta(2L) == "png" && meta(3L) == "unknown")
-    val decoded = Multimodal.decodeMeta(spark, df, "doc_id", "payload")
+    val decoded = Multimodal.decodeMeta(df, "doc_id", "payload")
       .collect().sortBy(_.doc_id)
     assert(decoded.length == 3)
     assert(decoded.forall(m => m.width >= 64 && m.height >= 64))
-    val again = Multimodal.decodeMeta(spark, df, "doc_id", "payload")
+    val again = Multimodal.decodeMeta(df, "doc_id", "payload")
       .collect().sortBy(_.doc_id)
     assert(decoded.toSeq == again.toSeq)
   }
@@ -86,57 +86,57 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
   test("multimodal: real PNG render → imageio header decode round trip") {
     val dims = Seq((1L, 5, 3), (2L, 37, 23), (3L, 1, 1))
     val df = dims.toDF("doc_id", "w", "h")
-    val pngs = Multimodal.renderPng(spark, df, "doc_id", "w", "h")
+    val pngs = Multimodal.renderPng(df, "doc_id", "w", "h")
     // payloads are genuine PNGs (magic sniff agrees)
     val fmts = Multimodal.binaryMeta(pngs, "doc_id", "payload")
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("format"))
     assert(fmts.forall(_._2 == "png"))
-    val meta = Multimodal.decodeMeta(spark, pngs, "doc_id", "payload")
+    val meta = Multimodal.decodeMeta(pngs, "doc_id", "payload")
       .collect().map(m => m.doc_id -> ((m.width, m.height, m.format))).toMap
     dims.foreach { case (id, w, h) => assert(meta(id) == ((w, h, "png"))) }
   }
 
   test("multimodal: real resize re-encodes a decodable image at target dims") {
     val df = Seq((1L, 20, 14)).toDF("doc_id", "w", "h")
-    val pngs = Multimodal.renderPng(spark, df, "doc_id", "w", "h")
-    val resized = Multimodal.resizeImage(spark, pngs, "doc_id", "payload", 8, 6)
-    val roundTrip = Multimodal.decodeMeta(spark,
+    val pngs = Multimodal.renderPng(df, "doc_id", "w", "h")
+    val resized = Multimodal.resizeImage(pngs, "doc_id", "payload", 8, 6)
+    val roundTrip = Multimodal.decodeMeta(
         resized.select($"doc_id", $"payload").toDF(), "doc_id", "payload")
       .collect().head
     assert(roundTrip.width == 8 && roundTrip.height == 6 &&
       roundTrip.format == "png")
     // deterministic re-encode (retry-safe)
     val a = resized.collect().head.payload.toSeq
-    val b = Multimodal.resizeImage(spark, pngs, "doc_id", "payload", 8, 6)
+    val b = Multimodal.resizeImage(pngs, "doc_id", "payload", 8, 6)
       .collect().head.payload.toSeq
     assert(a == b)
   }
 
   test("multimodal: real pixel featurizer is deterministic, stub fallback for non-images") {
     val df = Seq((1L, 9, 7), (2L, 9, 7)).toDF("doc_id", "w", "h")
-    val pngs = Multimodal.renderPng(spark, df, "doc_id", "w", "h")
-    val feats = Multimodal.extractImageFeatures(spark, pngs, "doc_id", "payload", 8)
+    val pngs = Multimodal.renderPng(df, "doc_id", "w", "h")
+    val feats = Multimodal.extractImageFeatures(pngs, "doc_id", "payload", 8)
       .collect().sortBy(_.doc_id)
     assert(feats.forall(_.embedding.length == 8))
     // luminance means land in [0,1]; different pixels → different features
     assert(feats.forall(_.embedding.forall(v => v >= 0.0f && v <= 1.0f)))
     assert(feats(0).embedding != feats(1).embedding)
-    val again = Multimodal.extractImageFeatures(spark, pngs, "doc_id", "payload", 8)
+    val again = Multimodal.extractImageFeatures(pngs, "doc_id", "payload", 8)
       .collect().sortBy(_.doc_id)
     assert(feats.map(_.embedding).toSeq == again.map(_.embedding).toSeq)
     // non-image payloads take the stub path (same values as the stub op)
     val junk = Seq((9L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload")
-    val viaReal = Multimodal.extractImageFeatures(spark, junk, "doc_id", "payload", 8)
+    val viaReal = Multimodal.extractImageFeatures(junk, "doc_id", "payload", 8)
       .collect().head.embedding
-    val viaStub = Multimodal.extractFeaturesStub(spark, junk, "doc_id", "payload", 8)
+    val viaStub = Multimodal.extractFeaturesStub(junk, "doc_id", "payload", 8)
       .collect().head.embedding
     assert(viaReal == viaStub)
   }
 
   test("multimodal: WAV render → RIFF header decode round trip; non-WAV falls back") {
     val df = Seq((1L, 160, 8000), (2L, 441, 44100)).toDF("doc_id", "n", "rate")
-    val wavs = Multimodal.renderWav(spark, df, "doc_id", "n", "rate")
-    val meta = Multimodal.decodeAudioMeta(spark, wavs, "doc_id", "payload")
+    val wavs = Multimodal.renderWav(df, "doc_id", "n", "rate")
+    val meta = Multimodal.decodeAudioMeta(wavs, "doc_id", "payload")
       .collect().map(m => m.doc_id -> m).toMap
     assert(meta(1L).format == "wav" && meta(1L).sample_rate == 8000 &&
       meta(1L).channels == 1 && meta(1L).bits_per_sample == 16 &&
@@ -149,7 +149,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
       new String(bytes.slice(8, 12), "US-ASCII") == "WAVE")
     // non-WAV payloads take the stub fallback row, not an exception
     val junk = Seq((9L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload")
-    val fb = Multimodal.decodeAudioMeta(spark, junk, "doc_id", "payload")
+    val fb = Multimodal.decodeAudioMeta(junk, "doc_id", "payload")
       .collect().head
     assert(fb.format == "unknown" && fb.n_samples == 3L)
     // malformed headers, decoded driver-side (offsets: fmt length at 16,
@@ -174,9 +174,9 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
   test("multimodal: MP4 render → box-walk decode round trip; corrupt falls back") {
     val df = Seq((1L, 600, 3000L, 1, 160, 90), (2L, 1000, 9000L, 3, 320, 240))
       .toDF("doc_id", "ts", "dur", "n_tracks", "w", "h")
-    val mp4s = Multimodal.renderMp4(spark, df, "doc_id", "ts", "dur",
+    val mp4s = Multimodal.renderMp4(df, "doc_id", "ts", "dur",
       "n_tracks", "w", "h")
-    val meta = Multimodal.decodeVideoMeta(spark, mp4s, "doc_id", "payload")
+    val meta = Multimodal.decodeVideoMeta(mp4s, "doc_id", "payload")
       .collect().map(m => m.doc_id -> m).toMap
     assert(meta(1L).format == "mp4" && meta(1L).timescale == 600 &&
       meta(1L).duration_ms == 5000L && meta(1L).n_tracks == 1 &&
@@ -189,14 +189,14 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     assert(new String(bytes.slice(4, 8), "US-ASCII") == "ftyp")
     // non-MP4 payloads take the stub fallback row, not an exception
     val junk = Seq((9L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload")
-    val fb = Multimodal.decodeVideoMeta(spark, junk, "doc_id", "payload")
+    val fb = Multimodal.decodeVideoMeta(junk, "doc_id", "payload")
       .collect().head
     assert(fb.format == "unknown" && fb.width == 3)
     // a corrupt box size (< 8) must neither loop forever nor throw: the
     // walk flags malformed and the row falls back
     val corrupt = bytes.clone()
     corrupt(20) = 0; corrupt(21) = 0; corrupt(22) = 0; corrupt(23) = 1
-    val cb = Multimodal.decodeVideoMeta(spark,
+    val cb = Multimodal.decodeVideoMeta(
         Seq((8L, corrupt)).toDF("doc_id", "payload"), "doc_id", "payload")
       .collect().head
     assert(cb.format == "unknown")
@@ -210,9 +210,9 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
   test("multimodal: AVI render → RIFF hdrl decode round trip; corrupt falls back") {
     val df = Seq((1L, 33333L, 300L, 1, 640, 480), (2L, 16667L, 1200L, 2, 1920, 1080))
       .toDF("doc_id", "frame_us", "n_frames", "n_streams", "w", "h")
-    val avis = Multimodal.renderAvi(spark, df, "doc_id", "frame_us",
+    val avis = Multimodal.renderAvi(df, "doc_id", "frame_us",
       "n_frames", "n_streams", "w", "h")
-    val meta = Multimodal.decodeAviMetaOp(spark, avis, "doc_id", "payload")
+    val meta = Multimodal.decodeAviMetaOp(avis, "doc_id", "payload")
       .collect().map(m => m.doc_id -> m).toMap
     assert(meta(1L).format == "avi" && meta(1L).frame_us == 33333L &&
       meta(1L).n_frames == 300L && meta(1L).n_streams == 1 &&
@@ -224,10 +224,10 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     val bytes = avis.collect().head.getAs[Array[Byte]]("payload")
     assert(new String(bytes.take(4), "US-ASCII") == "RIFF" &&
       new String(bytes.slice(8, 12), "US-ASCII") == "AVI ")
-    val wav = Multimodal.renderWav(spark,
+    val wav = Multimodal.renderWav(
         Seq((3L, 100, 8000)).toDF("doc_id", "n", "rate"),
       "doc_id", "n", "rate")
-    val cross = Multimodal.decodeAviMetaOp(spark, wav, "doc_id", "payload")
+    val cross = Multimodal.decodeAviMetaOp(wav, "doc_id", "payload")
       .collect().head
     assert(cross.format == "unknown")
     // corrupt avih chunk length (negative advance): the loop guard must
@@ -235,7 +235,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     val corrupt = bytes.clone()
     corrupt(28) = 0xF0.toByte; corrupt(29) = -1; corrupt(30) = -1
     corrupt(31) = -1
-    val cb = Multimodal.decodeAviMetaOp(spark,
+    val cb = Multimodal.decodeAviMetaOp(
         Seq((8L, corrupt)).toDF("doc_id", "payload"), "doc_id", "payload")
       .collect().head
     assert(cb.format == "unknown")
@@ -250,9 +250,9 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     val df = Seq((1L, true, 640L, 480L, 8, 6, 400),
         (2L, false, 1920L, 1080L, 16, 1, 3200))
       .toDF("doc_id", "le", "w", "h", "bps", "orient", "iso")
-    val tiffs = Multimodal.renderTiff(spark, df, "doc_id", "le", "w", "h",
+    val tiffs = Multimodal.renderTiff(df, "doc_id", "le", "w", "h",
       "bps", "orient", "iso")
-    val meta = Multimodal.decodeTiffMetaOp(spark, tiffs, "doc_id", "payload")
+    val meta = Multimodal.decodeTiffMetaOp(tiffs, "doc_id", "payload")
       .collect().map(m => m.doc_id -> m).toMap
     assert(meta(1L).format == "tiff" && meta(1L).byte_order == "II" &&
       meta(1L).width == 640L && meta(1L).height == 480L &&
@@ -272,7 +272,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     val badExif = bytes.clone()
     // IFD0 at 8, entry 7 (0x8769) at 8 + 2 + 6*12 = 82; value at 90
     badExif(90) = 0x7f; badExif(91) = -1; badExif(92) = -1; badExif(93) = -1
-    val fb = Multimodal.decodeTiffMetaOp(spark,
+    val fb = Multimodal.decodeTiffMetaOp(
         Seq((8L, badMark), (9L, truncated), (10L, badExif))
           .toDF("doc_id", "payload"), "doc_id", "payload")
       .collect().map(m => m.doc_id -> m.format).toMap
@@ -320,7 +320,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     entry(striped, 46, 273, 4, 4L, 64L)
     le32(striped, 58, 0L)
     (0 until 4).foreach(i => le32(striped, 64 + i * 4, 1000L + i))
-    val out = Multimodal.decodeTiffMetaOp(spark,
+    val out = Multimodal.decodeTiffMetaOp(
         Seq((20L, jpegInTiff), (21L, striped))
           .toDF("doc_id", "payload"), "doc_id", "payload")
       .collect().map(m => m.doc_id -> m).toMap
@@ -344,16 +344,16 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
   test("multimodal: extractFeaturesStub emits fixed-dim deterministic embeddings") {
     val df = Seq((1L, Array[Byte](1, 2, 3)), (2L, Array[Byte](4, 5)))
       .toDF("doc_id", "payload")
-    val a = Multimodal.extractFeaturesStub(spark, df, "doc_id", "payload", 8)
+    val a = Multimodal.extractFeaturesStub(df, "doc_id", "payload", 8)
       .collect().sortBy(_.doc_id)
     assert(a.forall(_.embedding.length == 8) && a.forall(_.dim == 8))
     // deterministic (retry-safe) and content-sensitive
-    val b = Multimodal.extractFeaturesStub(spark, df, "doc_id", "payload", 8)
+    val b = Multimodal.extractFeaturesStub(df, "doc_id", "payload", 8)
       .collect().sortBy(_.doc_id)
     assert(a.toSeq == b.toSeq)
     assert(a(0).embedding != a(1).embedding)
     // the output schema feeds the similarity operators directly
-    val ds = Multimodal.extractFeaturesStub(spark, df, "doc_id", "payload", 8)
+    val ds = Multimodal.extractFeaturesStub(df, "doc_id", "payload", 8)
       .toDF().withColumn("embedding", $"embedding".cast("array<float>"))
     val norms = graft.operators.Similarity
       .normSeq($"embedding")
@@ -362,11 +362,11 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
 
   test("multimodal: resizeStub output is sized by target area, deterministic") {
     val df = Seq((1L, Array[Byte](1, 2, 3, 4, 5))).toDF("doc_id", "payload")
-    val out = Multimodal.resizeStub(spark, df, "doc_id", "payload", 64, 64)
+    val out = Multimodal.resizeStub(df, "doc_id", "payload", 64, 64)
       .collect().head
     assert(out.width == 64 && out.height == 64)
     assert(out.n_bytes == 64L * 64 / 64 && out.payload.length == 64)
-    val again = Multimodal.resizeStub(spark, df, "doc_id", "payload", 64, 64)
+    val again = Multimodal.resizeStub(df, "doc_id", "payload", 64, 64)
       .collect().head
     assert(out.payload.toSeq == again.payload.toSeq)
   }
@@ -389,17 +389,17 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
       .map { case (id, w, px, py) =>
         val (lo, hi) = split(w); (id, lo, hi, px, py) }
     val df = pats.toDF("doc_id", "lo", "hi", "w", "h")
-    val pngs = Multimodal.renderBlockPng(spark, df, "doc_id", "lo", "hi",
+    val pngs = Multimodal.renderBlockPng(df, "doc_id", "lo", "hi",
       "w", "h")
-    val hs = Multimodal.imageAHash(spark, pngs, "doc_id", "payload")
+    val hs = Multimodal.imageAHash(pngs, "doc_id", "payload")
       .collect().map(h => h.doc_id -> ((h.ahash_lo, h.ahash_hi))).toMap
     // decoded hash IS the rendered pattern word — at EVERY resolution
     assert(hs(1L) == split(wordA) && hs(2L) == split(wordA))
     assert(hs(3L) == split(wordB) && hs(4L) == split(wordP))
     // a bilinear-resized copy of the image stays within the near-dup bar
-    val resized = Multimodal.resizeImage(spark,
+    val resized = Multimodal.resizeImage(
       pngs.filter(col("doc_id") === 1L), "doc_id", "payload", 32, 32)
-    val rh = Multimodal.imageAHash(spark,
+    val rh = Multimodal.imageAHash(
         resized.select($"doc_id", $"payload").toDF(), "doc_id", "payload")
       .collect().head
     val (la, ha) = split(wordA)
@@ -409,7 +409,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     // banded pair stage: same-pattern pairs + the 2-bit perturbed pair,
     // nothing against the unrelated pattern
     val pairs = Dedup.hammingNearDup(
-        Multimodal.imageAHash(spark, pngs, "doc_id", "payload").toDF(),
+        Multimodal.imageAHash(pngs, "doc_id", "payload").toDF(),
         "doc_id", Seq("ahash_lo", "ahash_hi"), 32, 16, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs == Map((1L, 2L) -> 0L, (1L, 4L) -> 2L, (2L, 4L) -> 2L),
@@ -418,7 +418,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
 
   test("imageAHash drops undecodable payloads instead of fabricating hashes") {
     val junk = Seq((9L, Array[Byte](1, 2, 3, 4, 5))).toDF("doc_id", "payload")
-    assert(Multimodal.imageAHash(spark, junk, "doc_id", "payload")
+    assert(Multimodal.imageAHash(junk, "doc_id", "payload")
       .collect().isEmpty)
   }
 
@@ -427,8 +427,8 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     // oracle fixture) and check peak/sum/rms against the same LCG run on
     // the driver — exercises int16 LE sign handling on arbitrary values
     val df = Seq((1L, 160, 8000), (2L, 441, 44100)).toDF("doc_id", "n", "rate")
-    val wavs = Multimodal.renderWav(spark, df, "doc_id", "n", "rate")
-    val got = Multimodal.pcmStats(spark, wavs, "doc_id", "payload")
+    val wavs = Multimodal.renderWav(df, "doc_id", "n", "rate")
+    val got = Multimodal.pcmStats(wavs, "doc_id", "payload")
       .collect().map(s => s.doc_id -> s).toMap
     for ((id, n) <- Seq((1L, 160), (2L, 441))) {
       var s = id * 6364136223846793005L + 1442695040888963407L
@@ -447,7 +447,7 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     }
     // malformed payloads fall back to the zero row, not an exception
     val junk = Seq((9L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload")
-    val fb = Multimodal.pcmStats(spark, junk, "doc_id", "payload")
+    val fb = Multimodal.pcmStats(junk, "doc_id", "payload")
       .collect().head
     assert(fb.n_samples == 0L && fb.peak == 0 && fb.rms == 0.0)
     // malformed headers, decoded driver-side (the WAV meta test's

@@ -7,7 +7,7 @@ import graft.operators.Similarity
 
 /** The native VectorDotFixed expression (r15's LSH-signature fold):
   * bit-equality with the exploded per-plane SUM-aggregate shape it
-  * replaced, scale-constant parity, and null/edge handling. */
+  * replaced, and null/edge handling. */
 class VectorDotFixedSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
@@ -31,10 +31,6 @@ class VectorDotFixedSpec extends AnyFunSuite {
           .cast("long").as("t"))
       .groupBy($"id").agg(sum($"t").as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  test("scale constant matches Similarity.Scale") {
-    assert(VectorDotFixed(null, null).Scale == Similarity.Scale)
   }
 
   test("per-row fold is bit-identical to the exploded SUM aggregate " +

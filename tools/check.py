@@ -3,10 +3,15 @@
 
 Usage: python3 tools/check.py [sf_dir] [verify_out_dir]
 
-Reads each parquet result dumped by `graft.Verify`, runs the matching
-oracle SQL from oracle_sql.json in DuckDB over the same fixture tables,
+Checks every expected key — the keys of oracle_sql.json and
+bounded_oracles.json that `graft.Verify` writes beside its dumps — and
+nothing else, so a stray subdirectory (a plan dump, say) is ignored. For
+each key it reads the parquet result dumped under `<verify_out_dir>/<key>`,
+runs the matching oracle SQL in DuckDB over the same fixture tables,
 canonicalizes both sides (columns sorted by name, rows sorted by all
-columns), and compares values exactly. Exit 0 iff all queries match.
+columns), and compares values exactly; bounded keys are compared within
+their documented bound. An expected key with no result directory is a
+FAIL (MISSING). Exit 0 iff all expected keys match.
 """
 import json
 import math
@@ -15,9 +20,6 @@ from pathlib import Path
 
 import duckdb
 import pyarrow.dataset as pads
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/vout")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -111,20 +113,24 @@ def check_bounded(con, spec, spark_cols, spark_rows):
             f"maxrel={max_rel:.4f} rtol={rtol}")
 
 
-def main():
+def run(sf_dir, out_dir):
+    """{key: status} for every expected key of the Verify run in
+    `out_dir`, checked against the fixture tables in `sf_dir`."""
+    out_dir = Path(out_dir)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    oracle = json.loads((OUT_DIR / "oracle_sql.json").read_text())
-    bounded_path = OUT_DIR / "bounded_oracles.json"
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    oracle = json.loads((out_dir / "oracle_sql.json").read_text())
+    bounded_path = out_dir / "bounded_oracles.json"
     bounded = (json.loads(bounded_path.read_text())
                if bounded_path.exists() else {})
     results = {}
-    for qdir in sorted(OUT_DIR.iterdir()):
+    for name in sorted(set(oracle) | set(bounded)):
+        qdir = out_dir / name
         if not qdir.is_dir():
+            results[name] = "MISSING no result directory"
             continue
-        name = qdir.name
         try:
             tbl = pads.dataset(str(qdir)).to_table()
         except Exception as e:
@@ -134,13 +140,10 @@ def main():
         spark_rows = [tuple(row[c] for c in spark_cols)
                       for row in tbl.to_pylist()]
         if name not in oracle:
-            if name in bounded:
-                # spec-approximate sketch: compare every numeric cell
-                # against the EXACT twin within the documented bound
-                results[name] = check_bounded(
-                    con, bounded[name], spark_cols, spark_rows)
-            else:
-                results[name] = f"NO-ORACLE rows={len(spark_rows)}"
+            # spec-approximate sketch: compare every numeric cell
+            # against the EXACT twin within the documented bound
+            results[name] = check_bounded(
+                con, bounded[name], spark_cols, spark_rows)
             continue
         try:
             duck = con.execute(oracle[name])
@@ -174,21 +177,26 @@ def main():
             results[name] = f"VALUE row{i} {detail[:300]}"
         else:
             results[name] = f"OK rows={len(spark_rows)}"
+    return results
+
+
+def main(argv):
+    """Print the per-key report and summary; return the exit code."""
+    sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
+    out_dir = argv[1] if len(argv) > 1 else "/tmp/vout"
+    results = run(sf_dir, out_dir)
     n_ok = sum(1 for v in results.values() if v.startswith("OK"))
     n_bounded = sum(1 for v in results.values()
                     if v.startswith("BOUNDED-OK"))
-    n_rows_only = sum(1 for v in results.values()
-                      if v.startswith("NO-ORACLE"))
     for k in sorted(results):
         v = results[k]
-        mark = ("✓" if v.startswith("OK") or v.startswith("BOUNDED-OK")
-                else "○" if v.startswith("NO-ORACLE") else "✗")
+        mark = "✓" if v.startswith(("OK", "BOUNDED-OK")) else "✗"
         print(f"{mark} {k}: {v}")
-    n_fail = len(results) - n_ok - n_bounded - n_rows_only
-    print(f"\n{n_ok} OK, {n_bounded} bounded-ok, {n_rows_only} rows-only, "
+    n_fail = len(results) - n_ok - n_bounded
+    print(f"\n{n_ok} OK, {n_bounded} bounded-ok, "
           f"{n_fail} FAIL of {len(results)}")
-    sys.exit(1 if n_fail else 0)
+    return 1 if n_fail else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))
