@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable, fixture-fingerprint-keyed cache for the shared prewarm
@@ -28,8 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    same-size content, a same-millisecond rewrite) is invisible to
   *    the key, the same boundary every mtime-based build cache accepts.
   *
-  * Write protocol (same shape as [[graft.operators.VectorIndex.compact]]
-  * and a Spark FileOutputCommitter v1 job commit): build fully into a
+  * Write protocol (the shape of a Spark FileOutputCommitter v1 job
+  * commit): build fully into a
   * `_build_<fp>_<uuid>` temp dir, drop a `_GRAFT_COMPLETE` marker, then
   * a single filesystem rename into `<root>/<name>/<fp>`. A crash
   * mid-build leaves only an ignored temp dir; concurrent builders race
@@ -38,8 +38,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fingerprints of the same artifact) are pruned so regenerating
   * fixtures can't grow the cache without bound.
   *
-  * All paths go through Hadoop's FileSystem API, so the cache root may
-  * be HDFS/S3 on a real cluster exactly like the fixture dirs.
+  * All paths go through Hadoop's FileSystem API ([[fs]], the repo's one
+  * file-system lookup), so the cache root may be HDFS/S3 on a real
+  * cluster exactly like the fixture dirs.
+  *
+  * This object is also the durable-artifact layer of the persisted
+  * indexes: [[swapTables]]/[[healSwaps]] are the one crash-safe in-place
+  * table rewrite (TextIndex's docfreq/stats merge, VectorIndex compact),
+  * and [[memo]] is the one JVM memo of driver-side values read from
+  * durable files (the [[localFor]] models, VectorIndex's frozen models).
   */
 object FixtureCache {
 
@@ -50,11 +57,26 @@ object FixtureCache {
   def cacheRoot: String = sys.env.getOrElse("SPARK_GRAFT_CACHE_DIR",
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-fixture-cache")
 
-  /** Per-(artifact, fingerprint) JVM locks: concurrent suites asking for
-    * the same missing generation build it once, not once per thread.
-    * Cross-JVM concurrency still resolves through the rename race. */
-  private val buildLocks =
+  /** Per-key JVM locks: `build:<artifact>/<fingerprint>` makes concurrent
+    * suites asking for the same missing generation build it once, not
+    * once per thread (cross-JVM concurrency still resolves through the
+    * rename race); `memo:<key>` serializes the loads of one [[memo]] key
+    * without holding any map bin. One Object per distinct key — bounded
+    * by the artifacts and index roots, never grows with queries. */
+  private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def locked[A](key: String)(body: => A): A =
+    locks.computeIfAbsent(key, _ => new Object).synchronized(body)
+
+  /** The file system serving `path` (its scheme, else the default FS). */
+  def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** `path` qualified against its file system: `/x`, `/x/` and a
+    * relative spelling of the same dir give one string. */
+  def qualify(spark: SparkSession, path: String): String =
+    fs(spark, path).makeQualified(new Path(path)).toString
 
   /** 64-bit FNV-1a over the sorted (relative path, length, mtime) of
     * every data file beneath `dir` — hidden files (`_`/`.`-prefixed
@@ -71,7 +93,7 @@ object FixtureCache {
     * valid across the switch. */
   def fingerprint(spark: SparkSession, dir: String): String = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = this.fs(spark, dir)
     val qual = fs.makeQualified(p)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     def keep(base: String): Boolean =
@@ -154,9 +176,8 @@ object FixtureCache {
                      (build: String => Unit): String = {
     val parent = new Path(generationParent(fixtureDir, name))
     val fin = new Path(parent, fp)
-    val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lock = buildLocks.computeIfAbsent(s"$name/$fp", _ => new Object)
-    lock.synchronized {
+    val fs = this.fs(spark, parent.toString)
+    locked(s"build:$name/$fp") {
       if (!fs.exists(new Path(fin, Complete))) {
         val tmp = new Path(parent,
           s"_build_${fp}_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -201,26 +222,39 @@ object FixtureCache {
     * a per-call parquet read keeps model-consuming queries on
     * LocalRelation/broadcast plans (no scan job per call) while the
     * durable copy still carries warm starts and structural staleness —
-    * a regenerated fixture changes the fingerprint, which changes the
-    * memo key; superseded entries are dropped to keep the map bounded. */
+    * a regenerated fixture changes the fingerprint, which is the
+    * [[memo]] token. */
   def localFor[A <: AnyRef](spark: SparkSession, fixtureDir: String,
                             name: String)
                            (build: String => Unit)(load: String => A): A = {
     val fp = fingerprint(spark, fixtureDir)
-    val prefix = s"$name/${dirToken(fixtureDir)}/"
-    val key = prefix + fp
-    val hit = valueMemo.get(key)
-    if (hit != null) hit.asInstanceOf[A]
-    else {
-      val v = load(resolve(spark, fixtureDir, name, fp)(build))
-      valueMemo.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-      val prev = valueMemo.putIfAbsent(key, v.asInstanceOf[AnyRef])
-      (if (prev != null) prev else v).asInstanceOf[A]
-    }
+    memo(s"$name/${dirToken(fixtureDir)}", fp)(
+      load(resolve(spark, fixtureDir, name, fp)(build)))
   }
 
-  private val valueMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  /** The one JVM memo of driver-side values read from durable files:
+    * `load` runs once per (`key`, `token`), where `token` is a freshness
+    * fold of the files the value came from (a [[fingerprint]]). A lookup
+    * under a new token reloads and replaces the key's entry, so the map
+    * holds one value per key. The load runs OUTSIDE any map remapping
+    * function (ConcurrentHashMap requires remappers to be short and
+    * non-blocking — a slow load inside compute() blocks unrelated keys
+    * hashing to the same bin): a per-key lock plus a double-checked
+    * reread gives one loader per stale key, and readers of OTHER keys
+    * never wait on it. */
+  def memo[A <: AnyRef](key: String, token: String)(load: => A): A = {
+    def cached = Option(values.get(key)).collect { case (`token`, v) => v }
+    cached.getOrElse(locked(s"memo:$key") {
+      cached.getOrElse {
+        val v = load
+        values.put(key, (token, v))
+        v
+      }
+    }).asInstanceOf[A]
+  }
+
+  private val values =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]()
 
   /** [[dirFor]] specialized to a single parquet table: `build` is
     * evaluated only on a cache miss; the result is always served from
@@ -248,7 +282,7 @@ object FixtureCache {
     * visible, retryable failure for unbounded disk growth under
     * crashed readers — the wrong trade for a cache. */
   private def prune(spark: SparkSession, parent: Path, keep: String): Unit = {
-    val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = this.fs(spark, parent.toString)
     if (!fs.exists(parent)) return
     fs.listStatus(parent).foreach { st =>
       val n = st.getPath.getName
@@ -264,6 +298,56 @@ object FixtureCache {
       else if (n.startsWith(s"_build_${keep}_") &&
           fs.exists(new Path(new Path(parent, keep), Complete)))
         fs.delete(st.getPath, true)
+    }
+  }
+
+  /** Temp-dir prefix of [[swapTables]]: `<root>/_swap_<table>`. */
+  private[graft] val SwapPrefix = "_swap_"
+
+  /** Rewrite tables under `root` in place, crash-safely: every frame is
+    * written IN FULL to its `_swap_<table>` temp before any live table is
+    * deleted (the frames may read the live tables they replace); then,
+    * per table, the live copy is deleted, the temp renamed into place and
+    * the frame memo invalidated. No distributed write ever runs with a
+    * live copy gone. A crash in the write phase leaves every live table
+    * untouched; a crash between one table's delete and its rename leaves
+    * the full new copy at the temp path, which [[healSwaps]] renames into
+    * place on the next touch. */
+  def swapTables(spark: SparkSession, root: String,
+                 tables: Seq[(String, DataFrame)]): Unit = {
+    tables.foreach { case (t, df) =>
+      df.write.mode("overwrite").parquet(s"$root/$SwapPrefix$t")
+    }
+    val fs = this.fs(spark, root)
+    tables.foreach { case (t, _) =>
+      val live = new Path(s"$root/$t")
+      val tmp = new Path(s"$root/$SwapPrefix$t")
+      fs.delete(live, true)
+      // a swallowed rename failure would surface only as a later
+      // FileNotFoundException on some unrelated read — name the table and
+      // both paths NOW (healSwaps can still heal from the intact temp)
+      require(fs.rename(tmp, live), s"swap of table '$t': rename $tmp -> " +
+        s"$live failed; the table is offline until healSwaps succeeds")
+      Frames.invalidate(s"$root/$t")
+    }
+  }
+
+  /** Repair a crash that landed between a [[swapTables]] delete and its
+    * rename: a live table of `names` that is MISSING while its full temp
+    * exists is renamed into place. Two existence checks per table — free
+    * next to any real work — so index mutators and readers run it first,
+    * and a half-swapped index heals on first touch instead of failing
+    * every read until manual surgery. */
+  def healSwaps(spark: SparkSession, root: String, names: Seq[String]): Unit = {
+    val fs = this.fs(spark, root)
+    names.foreach { t =>
+      val live = new Path(s"$root/$t")
+      val tmp = new Path(s"$root/$SwapPrefix$t")
+      if (!fs.exists(live) && fs.exists(tmp)) {
+        require(fs.rename(tmp, live),
+          s"healing rename $tmp -> $live failed; table '$t' remains offline")
+        Frames.invalidate(s"$root/$t")
+      }
     }
   }
 }

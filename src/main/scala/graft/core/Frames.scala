@@ -21,19 +21,25 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    otherwise pin a dead session's analyzed plans for the JVM lifetime,
   *    and a WeakHashMap cannot help because each memoized frame strongly
   *    references its session (the value→key leak).
-  *  - **[[FixtureCache]] — durable, content-addressed artifacts.**
-  *    Derived tables live under a fixture-fingerprint path, so a
+  *  - **[[FixtureCache]] — durable artifacts and the values read from
+  *    them.** Derived tables live under a fixture-fingerprint path, so a
   *    regenerated fixture resolves to a NEW path and a memo entry over a
-  *    generation dir can never go stale.
+  *    generation dir can never go stale. It is the one owner of
+  *    temp-then-rename (generation builds, and the in-place index table
+  *    swap [[FixtureCache.swapTables]]) and the one JVM memo of
+  *    file-derived driver values ([[FixtureCache.memo]]: collected
+  *    models, keyed by a freshness token of their files).
   *  - **[[ManagedPersist]] — GC-scoped Dataset persists.** Unpersisted
   *    once the frames they serve become unreachable.
   *
   * Who must call [[invalidate]]: anything that rewrites files IN PLACE
   * under a memoized path.
   *  - Index mutators (DedupIndex/TextIndex/VectorIndex append, compact,
-  *    delete, swap, recover) call it inside their write methods, after
-  *    every write. A new mutator that forgets it serves a stale schema
-  *    and partition listing.
+  *    delete) call it inside their write methods, after every write;
+  *    a table rewrite goes through [[FixtureCache.swapTables]] and a
+  *    crash repair through [[FixtureCache.healSwaps]], which invalidate
+  *    each table they move. A new mutator that forgets it serves a stale
+  *    schema and partition listing.
   *  - A fixture dir regenerated in place mid-JVM goes through
   *    [[Tables.invalidate]] (an `events` ts physical-type flip would
   *    otherwise keep the old schema until JVM exit).

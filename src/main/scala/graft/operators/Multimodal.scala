@@ -175,7 +175,8 @@ object Multimodal {
     * ffmpeg/audio bindings plugs the real codec behind the same seam. */
   def fakeDecode(id: Long, bytes: Array[Byte]): MediaMeta = {
     val n = nBytes(bytes)
-    val h = bytes.take(16).foldLeft(17L)((acc, b) => acc * 31 + (b & 0xff))
+    val head = if (bytes == null) Array.emptyByteArray else bytes.take(16)
+    val h = head.foldLeft(17L)((acc, b) => acc * 31 + (b & 0xff))
     MediaMeta(
       doc_id = id,
       n_bytes = n.toLong,

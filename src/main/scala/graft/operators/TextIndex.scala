@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.FixtureCache
 import graft.functions.{ExactNum, TextFunctions}
 
 /** Durable, incrementally-appendable INVERTED TEXT INDEX with its
@@ -37,20 +38,18 @@ import graft.functions.{ExactNum, TextFunctions}
   * [[serveBm25]] reads the four tables and pays only the scoring join
   * ([[Retrieval.bm25TopKServed]]).
   *
-  * Swap protocol for the rewritten tables (docfreq/stats): full write
-  * to `_swap_<table>`, delete live, filesystem rename — [[VectorIndex]]
-  * compact's shape; [[recover]] (run at the start of every
-  * append/serve) heals a crash that landed between delete and rename.
-  * Batch doc ids must be disjoint from ids already indexed (enforce
-  * upstream, as in [[DedupIndex]]/[[VectorIndex]]).
+  * The rewritten tables (docfreq/stats) go through the one crash-safe
+  * swap, [[graft.core.FixtureCache.swapTables]], in ONE call: both new
+  * copies are written in full before either live table is deleted, and
+  * [[graft.core.FixtureCache.healSwaps]] (run at the start of every
+  * append/serve) heals a crash that landed between a delete and its
+  * rename — the protocol [[VectorIndex]] compact shares. Batch doc ids
+  * must be disjoint from ids already indexed (enforce upstream, as in
+  * [[DedupIndex]]/[[VectorIndex]]).
   */
 object TextIndex {
 
   private val Swapped = Seq("docfreq", "stats")
-
-  private def fsOf(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** (doc, term, tf) over one doc set — the TermFreqBase AST. */
   private def tfOf(docs: DataFrame, idCol: String,
@@ -82,8 +81,9 @@ object TextIndex {
   def build(docs: DataFrame, idCol: String, textCol: String,
             root: String): Unit = {
     val spark = docs.sparkSession
-    val fs = fsOf(spark, root)
-    (Seq("tf", "dl") ++ Swapped ++ Swapped.map("_swap_" + _) :+ "_applied")
+    val fs = FixtureCache.fs(spark, root)
+    (Seq("tf", "dl") ++ Swapped ++ Swapped.map(FixtureCache.SwapPrefix + _) :+
+        "_applied")
       .foreach(t => fs.delete(new org.apache.hadoop.fs.Path(s"$root/$t"),
         true))
     val tf = tfOf(docs, idCol, textCol)
@@ -120,7 +120,7 @@ object TextIndex {
                   idCol: String, textCol: String,
                   batchId: Long = -1L): Unit = {
     recover(spark, root)
-    val fs = fsOf(spark, root)
+    val fs = FixtureCache.fs(spark, root)
     val marker = new org.apache.hadoop.fs.Path(
       s"$root/_applied/b$batchId")
     if (batchId >= 0L && fs.exists(marker)) return
@@ -139,7 +139,6 @@ object TextIndex {
           .select(col("term"),
             (coalesce(col("df"), lit(0L)) +
               coalesce(col("dfb"), lit(0L))).as("df"))
-        swapIn(spark, root, "docfreq", merged)
         val oldStats = graft.core.Frames.parquet(spark, s"$root/stats")
           .select(col("n_docs"), col("sum_dl"))
         val newStats = oldStats.crossJoin(statsOf(docs, dlB)
@@ -147,7 +146,8 @@ object TextIndex {
           .select((col("n_docs") + col("_nb")).as("n_docs"),
             (col("sum_dl") + col("_sb")).cast(ExactNum.Exact)
               .as("sum_dl"))
-        swapIn(spark, root, "stats", withAvgdl(newStats).coalesce(1))
+        FixtureCache.swapTables(spark, root, Seq("docfreq" -> merged,
+          "stats" -> withAvgdl(newStats).coalesce(1)))
       } finally dlB.unpersist()
     } finally tfB.unpersist()
     graft.core.Frames.invalidate(root)
@@ -183,33 +183,7 @@ object TextIndex {
         appendBatch(b.sparkSession, root, b, idCol, textCol, batchId = id)
       }
 
-  /** Full write to `_swap_<name>`, delete live, rename — never a second
-    * distributed write with the live copy already gone. */
-  private def swapIn(spark: SparkSession, root: String, name: String,
-                     df: DataFrame): Unit = {
-    val fs = fsOf(spark, root)
-    df.write.mode("overwrite").parquet(s"$root/_swap_$name")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$name"), true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"$root/_swap_$name"),
-        new org.apache.hadoop.fs.Path(s"$root/$name")),
-      s"TextIndex: rename of $root/_swap_$name -> $root/$name failed; " +
-        s"table '$name' is offline until recover() succeeds")
-    graft.core.Frames.invalidate(s"$root/$name")
-  }
-
-  /** Heal a crash between a swap's delete and its rename (the
-    * [[VectorIndex.recoverCompact]] shape). */
-  private[graft] def recover(spark: SparkSession,
-                             root: String): Unit = {
-    val fs = fsOf(spark, root)
-    Swapped.foreach { t =>
-      val live = new org.apache.hadoop.fs.Path(s"$root/$t")
-      val tmp = new org.apache.hadoop.fs.Path(s"$root/_swap_$t")
-      if (!fs.exists(live) && fs.exists(tmp)) {
-        require(fs.rename(tmp, live),
-          s"TextIndex.recover: healing rename $tmp -> $live failed")
-        graft.core.Frames.invalidate(s"$root/$t")
-      }
-    }
-  }
+  /** Heal a crash between a swap's delete and its rename. */
+  private[graft] def recover(spark: SparkSession, root: String): Unit =
+    FixtureCache.healSwaps(spark, root, Swapped)
 }

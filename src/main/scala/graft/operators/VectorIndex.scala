@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.FixtureCache
 
 /** Durable, incrementally-appendable IVF-PQ index — [[DedupIndex]]'s
   * persisted-index pattern applied to vectors. The deployment story the
@@ -81,86 +82,33 @@ object VectorIndex {
       r.getAs[Int]("coarse_iters"), enc)
   }
 
-  /** JVM-lifetime memo of the FROZEN per-root artifacts (meta, PQ
-    * model, collected centroid rows): every [[query]]/[[health]] call
-    * was paying three separate collect jobs + parquet footer reads for
-    * models the freezing contract declares IMMUTABLE after build —
-    * measured as the bulk of the index query's fixed latency (a ~1.8 s
-    * warm query carried ~19 sub-100 ms jobs and driver gaps, no heavy
-    * stage). [[build]] invalidates its root's entry, so a same-JVM
-    * rebuild (VectorIndexSpec does this) never serves stale models;
-    * appends/deletes/compact don't touch the frozen tables, so they
-    * don't invalidate.
+  /** The FROZEN per-root artifacts (meta, PQ model, collected centroid
+    * rows), served from [[graft.core.FixtureCache.memo]]: every
+    * [[query]]/[[health]] call was paying three separate collect jobs +
+    * parquet footer reads for models the freezing contract declares
+    * IMMUTABLE after build — measured as the bulk of the index query's
+    * fixed latency (a ~1.8 s warm query carried ~19 sub-100 ms jobs and
+    * driver gaps, no heavy stage).
     *
     * Staleness + aliasing (ADVICE r10): the memo key is the
     * FileSystem-QUALIFIED root (so `/x`, `/x/`, and a relative spelling
-    * of the same dir share one entry), and every lookup validates a
-    * freshness token — the (name, length, mtime) fold of the root's
-    * `meta` files (ONE FS listing, trivial next to any query it
-    * fronts). A root rebuilt by ANOTHER process rewrites `meta`, the
-    * token changes, and the entry reloads instead of serving the dead
-    * build's models — the same (size, mtime)-granularity boundary
-    * FixtureCache documents. */
-  private val frozenMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, VMeta, ProductQuantization.PqModel,
-        Array[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]()
-
-  /** Per-root load locks (see `frozen`): serialize loads of ONE stale
-    * root without holding any frozenMemo bin. Entries are one Object per
-    * distinct root string ever queried in this JVM — bounded by the
-    * number of index roots, never grows with queries. */
-  private val loadLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** (qualified root, freshness token) — one FS listing of `meta`. */
-  private def memoKey(spark: SparkSession, root: String): (String, String) = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val q = fs.makeQualified(p).toString
-    val metaDir = new org.apache.hadoop.fs.Path(q, "meta")
-    val tok = fs.listStatus(metaDir)
-      .filter { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString(";")
-    (q, tok)
-  }
-
+    * of the same dir share one entry), and its token is the
+    * [[graft.core.FixtureCache.fingerprint]] of the root's `meta` (ONE
+    * FS listing, trivial next to any query it fronts). A rebuild — in
+    * this JVM or another process — rewrites `meta`, the token changes,
+    * and the entry reloads instead of serving the dead build's models;
+    * appends/deletes/compact don't touch the frozen tables. */
   private def frozen(spark: SparkSession, root: String)
       : (VMeta, ProductQuantization.PqModel, DataFrame) = {
-    val (qRoot, tok) = memoKey(spark, root)
-    def load(): (String, VMeta, ProductQuantization.PqModel,
-        Array[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType) = {
-      val meta = readMeta(spark, qRoot)
-      val model = readPqModel(spark, qRoot, meta)
-      val cent = spark.read.parquet(s"$qRoot/centroids")
-      (tok, meta, model, cent.collect(), cent.schema)
-    }
-    // the (parquet reads + collect) load runs OUTSIDE any CHM remapping
-    // function (ADVICE r11: CHM requires remappers to be short and
-    // non-blocking — a slow load inside compute() blocks unrelated roots
-    // hashing to the same bin). Per-root lock + double-checked reread:
-    // one loader per stale root, concurrent readers of OTHER roots never
-    // wait on it.
-    def cached = Option(frozenMemo.get(qRoot)).filter(_._1 == tok)
-    val e = cached.getOrElse {
-      val lock = loadLocks.computeIfAbsent(qRoot, _ => new Object)
-      lock.synchronized {
-        cached.getOrElse {
-          val fresh = load()
-          frozenMemo.put(qRoot, fresh)
-          fresh
-        }
+    val q = FixtureCache.qualify(spark, root)
+    val (meta, model, rows, schema) =
+      FixtureCache.memo(q, FixtureCache.fingerprint(spark, s"$q/meta")) {
+        val meta = readMeta(spark, q)
+        val cent = spark.read.parquet(s"$q/centroids")
+        (meta, readPqModel(spark, q, meta), cent.collect(), cent.schema)
       }
-    }
-    (e._2, e._3, Similarity.centroidArrays(
-      spark.createDataFrame(java.util.Arrays.asList(e._4: _*), e._5)))
+    (meta, model, Similarity.centroidArrays(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)))
   }
 
   /** The freezing contract extended to the CODE SEMANTICS: appends and
@@ -219,17 +167,12 @@ object VectorIndex {
     // appendBatch uses mode("append"), so stale cells/codes/vectors (and
     // tombstones for ids about to be re-indexed) would duplicate every
     // row and mask live ones. Clear the append-mode tables first.
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // (A same-JVM rebuild never serves the PREVIOUS build's memoized
+    // models: the meta rewrite below changes the memo token.)
+    val fs = FixtureCache.fs(spark, root)
     Seq("cells", "codes", "vectors", "tombstones").foreach { t =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/$t"), true)
     }
-    // a same-JVM rebuild must not serve the PREVIOUS build's memoized
-    // models (the freeze contract is per-build, not per-root-forever);
-    // remove under the QUALIFIED key — the freshness token would catch
-    // it too, but only after meta is rewritten below
-    frozenMemo.remove(fs.makeQualified(
-      new org.apache.hadoop.fs.Path(root)).toString)
     Seq((dims, m, ks, iters, coarseK, coarseIters, "residual"))
       .toDF("dims", "m", "ks", "iters", "coarse_k", "coarse_iters", "enc")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
@@ -278,7 +221,7 @@ object VectorIndex {
             idCol: String, vecCol: String, nprobe: Int,
             k: Int): DataFrame = {
     require(nprobe >= 1 && k >= 1)
-    recoverCompact(spark, root)
+    FixtureCache.healSwaps(spark, root, Compacted)
     val (meta, model, centArr) = frozen(spark, root)
     requireResidual(meta, root)
     val probes = Similarity.assignToCentroidArrays(queries, idCol, vecCol,
@@ -352,14 +295,13 @@ object VectorIndex {
   /** Filesystem-agnostic existence check (a java.io.File test would
     * silently skip tombstones on HDFS/S3 roots — the 100 TB deployment
     * target — and return deleted vectors). */
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def hasTombstones(spark: SparkSession, root: String): Boolean =
+    FixtureCache.fs(spark, root)
+      .exists(new org.apache.hadoop.fs.Path(tombstonePath(root)))
 
   private def masked(spark: SparkSession, root: String,
                      df: DataFrame): DataFrame =
-    if (!pathExists(spark, tombstonePath(root))) df
+    if (!hasTombstones(spark, root)) df
     else df.join(graft.core.Frames.parquet(spark, tombstonePath(root)),
       Seq("_vid"), "left_anti")
 
@@ -404,7 +346,7 @@ object VectorIndex {
     * no sampled query. */
   def health(spark: SparkSession, root: String, recallSample: Int = 0,
              recallK: Int = 10, nprobe: Int = 2): DataFrame = {
-    recoverCompact(spark, root)
+    FixtureCache.healSwaps(spark, root, Compacted)
     val centArr = frozen(spark, root)._3
     val vecs = masked(spark, root,
       graft.core.Frames.parquet(spark, s"$root/vectors"))
@@ -477,62 +419,26 @@ object VectorIndex {
       Seq("label"), "left")
   }
 
+  /** The tables [[compact]] rewrites in place (healed before every
+    * compact/query/health). */
+  private val Compacted = Seq("cells", "codes", "vectors")
+
   /** Rewrite `cells`/`codes`/`vectors` without tombstoned rows and drop
     * the tombstone set — the periodic space-reclaim pass. The frozen
     * models are untouched, so surviving codes stay valid verbatim.
     *
-    * Crash-safety: all three compacted copies are fully written to
-    * `_compact_*` temp dirs BEFORE any live table is touched, then each
-    * swap is delete + filesystem rename (no second distributed write
-    * with the live copy already gone). A crash during the write phase
-    * leaves the live index untouched; a crash mid-swap leaves the full
-    * new copy at the temp path, and [[recoverCompact]] — run at the
-    * start of every compact/query/health — renames it into place.
-    * Tombstones are dropped only after all three swaps land. */
+    * Crash-safety is [[graft.core.FixtureCache.swapTables]]'s: all three
+    * compacted copies are fully written BEFORE any live table is
+    * touched, and a crash mid-swap heals on the next compact/query/health
+    * ([[graft.core.FixtureCache.healSwaps]]). Tombstones are dropped
+    * only after all three swaps land. */
   def compact(spark: SparkSession, root: String): Unit = {
-    recoverCompact(spark, root)
-    if (!pathExists(spark, tombstonePath(root))) return
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tables = Seq("cells", "codes", "vectors")
-    tables.foreach { t =>
-      masked(spark, root, spark.read.parquet(s"$root/$t"))
-        .write.mode("overwrite").parquet(s"$root/_compact_$t")
-    }
-    tables.foreach { t =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$t"), true)
-      // a swallowed rename failure here would surface only as a later
-      // FileNotFoundException on some unrelated read — name the table
-      // and paths NOW (recoverCompact can still heal from the intact
-      // _compact_ copy after the operator is fixed/retried)
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$root/_compact_$t"),
-          new org.apache.hadoop.fs.Path(s"$root/$t")),
-        s"compact: rename of $root/_compact_$t -> $root/$t failed; " +
-          s"table '$t' is offline until recoverCompact succeeds")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tombstonePath(root)), true)
+    FixtureCache.healSwaps(spark, root, Compacted)
+    if (!hasTombstones(spark, root)) return
+    FixtureCache.swapTables(spark, root, Compacted.map(t =>
+      t -> masked(spark, root, spark.read.parquet(s"$root/$t"))))
+    FixtureCache.fs(spark, root)
+      .delete(new org.apache.hadoop.fs.Path(tombstonePath(root)), true)
     graft.core.Frames.invalidate(root)
-  }
-
-  /** Repair a crash that landed between a mid-[[compact]] delete and
-    * its rename: a live table that is MISSING while its full
-    * `_compact_` copy exists is renamed into place. Run at the start of
-    * compact/query/health (four existence checks — free next to any
-    * real work), so a half-swapped index heals on first touch instead
-    * of failing every read until manual surgery. */
-  private[operators] def recoverCompact(spark: SparkSession,
-                                        root: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("cells", "codes", "vectors").foreach { t =>
-      val live = new org.apache.hadoop.fs.Path(s"$root/$t")
-      val tmp = new org.apache.hadoop.fs.Path(s"$root/_compact_$t")
-      if (!fs.exists(live) && fs.exists(tmp)) {
-        require(fs.rename(tmp, live),
-          s"recoverCompact: healing rename $tmp -> $live failed; " +
-            s"table '$t' remains offline")
-        graft.core.Frames.invalidate(s"$root/$t")
-      }
-    }
   }
 }

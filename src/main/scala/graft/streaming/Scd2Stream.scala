@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.FixtureCache
 import graft.operators.Scd2
 
 /** Streaming SCD2 / CDC apply — the streaming twin of the batch
@@ -53,13 +54,10 @@ object Scd2Stream {
       .sortBy(_._1)
 
   /** Resolve the newest applied version dir under `dimPath`, if any. */
-  def latestVersion(spark: SparkSession, dimPath: String): Option[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dimPath),
-      spark.sparkContext.hadoopConfiguration)
-    listVersions(fs, new org.apache.hadoop.fs.Path(dimPath))
+  def latestVersion(spark: SparkSession, dimPath: String): Option[String] =
+    listVersions(FixtureCache.fs(spark, dimPath),
+        new org.apache.hadoop.fs.Path(dimPath))
       .filter(_._3).lastOption.map(_._2.toString)
-  }
 
   /** Read the current dimension state (empty-with-schema before the
     * first batch; `init` supplies the seed history/schema). */
@@ -74,8 +72,7 @@ object Scd2Stream {
                  init: DataFrame, keyCols: Seq[String],
                  attrCols: Seq[String], effCol: String): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dimPath), spark.sparkContext.hadoopConfiguration)
+    val fs = FixtureCache.fs(spark, dimPath)
     val vdir = new org.apache.hadoop.fs.Path(s"$dimPath/v$batchId")
     if (fs.exists(new org.apache.hadoop.fs.Path(vdir, "_SUCCESS"))) return
     val cur = currentDim(spark, dimPath, init)
@@ -152,8 +149,7 @@ object Scd2Stream {
     * a partial NEWER than every complete version may be an in-flight
     * write and is left alone. */
   def pruneVersions(spark: SparkSession, dimPath: String, keep: Int): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dimPath), spark.sparkContext.hadoopConfiguration)
+    val fs = FixtureCache.fs(spark, dimPath)
     val versions = listVersions(fs, new org.apache.hadoop.fs.Path(dimPath))
     val complete = versions.filter(_._3)
     val keepIds = complete.takeRight(keep).map(_._1).toSet

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, collect_list, concat, concat_ws,
 import org.apache.spark.sql.streaming.{ListState, OutputMode,
   StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues}
 import graft.operators.{Dedup, DedupIndex}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Near-duplicate detection on an UNBOUNDED document stream — the
   * production LLM-ingest shape: every arriving document is checked against
@@ -163,6 +164,45 @@ object StreamingDedup {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  /** THE bucket stream every operator below runs: a pre-banded stream
+    * (bucket_key, doc, sig, payload) grouped by bucket through
+    * [[VerifyingBucketProcessor]], seeded with `init` (one [[BucketInit]]
+    * per bucket) on a warm start. TTL state requires the processing-time
+    * mode; without a TTL the cheaper no-time mode suffices (bounding then
+    * rests on maxPerBucket). */
+  private def bucketStream[P: TypeTag](spark: SparkSession, banded: DataFrame,
+      maxPerBucket: Int, ttl: TTLConfig, threshold: Double,
+      sim: (P, P) => Double,
+      init: Option[KeyValueGroupedDataset[String, BucketInit[P]]] = None)
+      : Dataset[VerifiedPair] = {
+    import spark.implicits._
+    val mode =
+      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
+    val buckets = banded.as[(String, Long, Seq[Long], P)].groupByKey(_._1)
+    val proc = new VerifyingBucketProcessor[P](maxPerBucket, ttl, threshold,
+      Encoders.product[VMember[P]], sim)
+    init match {
+      case None => buckets.transformWithState(proc, mode, OutputMode.Append())
+      case Some(i) =>
+        buckets.transformWithState(proc, mode, OutputMode.Append(), i)
+    }
+  }
+
+  /** Historical bucket members (bucket_key, doc, sig, payload) grouped to
+    * ONE [[BucketInit]] row per bucket key — the initial-state API hands
+    * each key a single value. One shuffle (groupBy bucket_key). */
+  private def bucketInits[P: TypeTag](spark: SparkSession, banded: DataFrame)
+      : KeyValueGroupedDataset[String, BucketInit[P]] = {
+    import spark.implicits._
+    banded
+      .groupBy(col("bucket_key"))
+      .agg(collect_list(struct(col("doc"), col("sig"), col("payload")))
+        .as("members"))
+      .as[(String, Seq[VMember[P]])]
+      .map { case (k, ms) => (k, BucketInit(ms)) }
+      .groupByKey(_._1).mapValues(_._2)
+  }
+
   /** Verified text variant over a pre-banded stream (bucket_key, doc,
     * sig, shh) — exposed for spec-level fault injection (planted
     * signature collisions); production callers use [[nearDupVerified]]. */
@@ -170,36 +210,9 @@ object StreamingDedup {
                    maxPerBucket: Int, ttl: TTLConfig,
                    jaccardThreshold: Double,
                    sim: (Seq[Long], Seq[Long]) => Double = jaccardSets)
-      : Dataset[VerifiedPair] = {
-    import spark.implicits._
-    // TTL state requires the processing-time mode; without a TTL the
-    // cheaper no-time mode suffices (bounding then rests on maxPerBucket)
-    val mode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    banded.as[(String, Long, Seq[Long], Seq[Long])]
-      .groupByKey(_._1)
-      .transformWithState(
-        new VerifyingBucketProcessor[Seq[Long]](maxPerBucket, ttl,
-          jaccardThreshold, Encoders.product[VMember[Seq[Long]]], sim),
-        mode, OutputMode.Append())
-  }
-
-  /** Verified embedding variant over a pre-banded stream (bucket_key,
-    * doc, sig, vec) — see [[verifiedText]]. */
-  def verifiedVec(spark: SparkSession, banded: DataFrame,
-                  maxPerBucket: Int, ttl: TTLConfig,
-                  cosineThreshold: Double): Dataset[VerifiedPair] = {
-    import spark.implicits._
-    val mode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    banded.as[(String, Long, Seq[Long], Seq[Float])]
-      .groupByKey(_._1)
-      .transformWithState(
-        new VerifyingBucketProcessor[Seq[Float]](maxPerBucket, ttl,
-          cosineThreshold, Encoders.product[VMember[Seq[Float]]],
-          cosineSeq _),
-        mode, OutputMode.Append())
-  }
+      : Dataset[VerifiedPair] =
+    bucketStream[Seq[Long]](spark, banded, maxPerBucket, ttl,
+      jaccardThreshold, sim)
 
   /** Unverified candidate index = the verifying processor with an empty
     * payload and a pass-through verifier (ONE bucket algorithm; a
@@ -259,11 +272,9 @@ object StreamingDedup {
     * holds every historical doc's minhash values, so the streaming bucket
     * keys (band prefix + raw band signature values) are reconstructed
     * from index SCANS — history is never re-shingled, the same guarantee
-    * the batch incremental path gives. One shuffle (groupBy bucket_key)
-    * over the banded index; each bucket becomes one [[BucketInit]] row. */
+    * the batch incremental path gives. */
   def warmStartTextState(spark: SparkSession, indexRoot: String)
       : KeyValueGroupedDataset[String, BucketInit[Seq[Long]]] = {
-    import spark.implicits._
     val meta = DedupIndex.readMeta(spark, indexRoot)
     val rows = meta.num_hashes / meta.bands
     val sigArr = org.apache.spark.sql.functions.array(
@@ -276,13 +287,7 @@ object StreamingDedup {
       .select(col("doc"), col("sig"), col("payload"),
         explode(graft.operators.Dedup.bandKeys(col("sig"), meta.bands,
           rows)).as("bucket_key"))
-    banded
-      .groupBy(col("bucket_key"))
-      .agg(collect_list(struct(col("doc"), col("sig"), col("payload")))
-        .as("members"))
-      .as[(String, Seq[VMember[Seq[Long]]])]
-      .map { case (k, ms) => (k, BucketInit(ms)) }
-      .groupByKey(_._1).mapValues(_._2)
+    bucketInits[Seq[Long]](spark, banded)
   }
 
   /** [[nearDupVerified]] warm-started from a persisted batch index: the
@@ -299,19 +304,12 @@ object StreamingDedup {
                           maxPerBucket: Int = 64,
                           ttl: TTLConfig = TTLConfig.NONE,
                           jaccardThreshold: Double = 0.5): Dataset[VerifiedPair] = {
-    import spark.implicits._
     val meta = DedupIndex.readMeta(spark, indexRoot)
-    val banded = Dedup.minhashBands(docs, idCol, textCol, meta.shingle_k,
-      meta.num_hashes, meta.bands, keepShingles = true)
-    val mode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    banded.as[(String, Long, Seq[Long], Seq[Long])]
-      .groupByKey(_._1)
-      .transformWithState(
-        new VerifyingBucketProcessor[Seq[Long]](maxPerBucket, ttl,
-          jaccardThreshold, Encoders.product[VMember[Seq[Long]]],
-          jaccardSets),
-        mode, OutputMode.Append(), warmStartTextState(spark, indexRoot))
+    bucketStream[Seq[Long]](spark,
+      Dedup.minhashBands(docs, idCol, textCol, meta.shingle_k,
+        meta.num_hashes, meta.bands, keepShingles = true),
+      maxPerBucket, ttl, jaccardThreshold, jaccardSets,
+      Some(warmStartTextState(spark, indexRoot)))
   }
 
   /** The EMBEDDING stream operator: vectors (idCol, vecCol float array) →
@@ -398,10 +396,10 @@ object StreamingDedup {
                                maxPerBucket: Int = 64,
                                ttl: TTLConfig = TTLConfig.NONE,
                                cosineThreshold: Double = 0.8): Dataset[VerifiedPair] =
-    verifiedVec(spark,
+    bucketStream[Seq[Float]](spark,
       embeddingBands(spark, vecs, idCol, vecCol, dims, planes, bands,
         keepVec = true),
-      maxPerBucket, ttl, cosineThreshold)
+      maxPerBucket, ttl, cosineThreshold, cosineSeq)
 
   /** Rebuild the EMBEDDING bucket state from a persisted
     * [[graft.operators.VectorIndex]] — [[warmStartTextState]]'s vector
@@ -410,20 +408,15 @@ object StreamingDedup {
     * SCAN (the hyperplane sign table is derived from (planes, dims)
     * alone, so recomputation is deterministic and parameter-free — no
     * signature table needs persisting). `dims` comes from the index
-    * meta; one shuffle (groupBy bucket_key) over B·bands rows. */
+    * meta. */
   def warmStartVecState(spark: SparkSession, indexRoot: String,
                         planes: Int, bands: Int)
       : KeyValueGroupedDataset[String, BucketInit[Seq[Float]]] = {
-    import spark.implicits._
     val meta = graft.operators.VectorIndex.readMeta(spark, indexRoot)
-    embeddingBands(spark, spark.read.parquet(s"$indexRoot/vectors"),
-        "_vid", "vec", meta.dims, planes, bands, keepVec = true)
-      .groupBy(col("bucket_key"))
-      .agg(collect_list(struct(col("doc"), col("sig"),
-        col("vec").as("payload"))).as("members"))
-      .as[(String, Seq[VMember[Seq[Float]]])]
-      .map { case (k, ms) => (k, BucketInit(ms)) }
-      .groupByKey(_._1).mapValues(_._2)
+    bucketInits[Seq[Float]](spark,
+      embeddingBands(spark, spark.read.parquet(s"$indexRoot/vectors"),
+          "_vid", "vec", meta.dims, planes, bands, keepVec = true)
+        .withColumnRenamed("vec", "payload"))
   }
 
   /** [[embeddingNearDupVerified]] warm-started from a persisted vector
@@ -444,19 +437,11 @@ object StreamingDedup {
                                    ttl: TTLConfig = TTLConfig.NONE,
                                    cosineThreshold: Double = 0.8)
       : Dataset[VerifiedPair] = {
-    import spark.implicits._
     val meta = graft.operators.VectorIndex.readMeta(spark, indexRoot)
-    val banded = embeddingBands(spark, vecs, idCol, vecCol, meta.dims,
-      planes, bands, keepVec = true)
-    val mode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    banded.as[(String, Long, Seq[Long], Seq[Float])]
-      .groupByKey(_._1)
-      .transformWithState(
-        new VerifyingBucketProcessor[Seq[Float]](maxPerBucket, ttl,
-          cosineThreshold, Encoders.product[VMember[Seq[Float]]],
-          cosineSeq _),
-        mode, OutputMode.Append(),
-        warmStartVecState(spark, indexRoot, planes, bands))
+    bucketStream[Seq[Float]](spark,
+      embeddingBands(spark, vecs, idCol, vecCol, meta.dims, planes, bands,
+        keepVec = true),
+      maxPerBucket, ttl, cosineThreshold, cosineSeq,
+      Some(warmStartVecState(spark, indexRoot, planes, bands)))
   }
 }

@@ -130,6 +130,29 @@ class FixtureCacheSpec extends AnyFunSuite {
     }
   }
 
+  test("memo: one load per (key, token), a reload when the token " +
+      "changes, and /x and /x/ resolve to one entry") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fxc-memo-")
+    val file = dir.resolve("part-0")
+    java.nio.file.Files.write(file, Array[Byte](1, 2, 3))
+    var loads = 0
+    def get(d: String): String = FixtureCache.memo(
+        FixtureCache.qualify(spark, d), FixtureCache.fingerprint(spark, d)) {
+      loads += 1
+      s"value-$loads"
+    }
+    val first = get(dir.toString)
+    assert(get(dir.toString) eq first)
+    assert(get(dir.toString + "/") eq first, "/x and /x/ must share an entry")
+    assert(loads == 1)
+    // a rewritten file changes the token: the entry reloads, once
+    java.nio.file.Files.write(file, Array[Byte](1, 2, 3, 4))
+    val second = get(dir.toString + "/")
+    assert(second == "value-2" && loads == 2)
+    assert(get(dir.toString) eq second)
+    assert(loads == 2)
+  }
+
   test("fingerprint ignores hidden/marker/crc files") {
     withFixture { (fx, _) =>
       val fp1 = FixtureCache.fingerprint(spark, fx)

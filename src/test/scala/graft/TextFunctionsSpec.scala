@@ -81,6 +81,14 @@ class TextFunctionsSpec extends AnyFunSuite with TimeLimits {
     val again = Multimodal.decodeMeta(df, "doc_id", "payload")
       .collect().sortBy(_.doc_id)
     assert(decoded.toSeq == again.toSeq)
+    // a null payload gets its stub row too; it must not abort the job
+    val withNull = df.union(
+      Seq((4L, null: Array[Byte])).toDF("doc_id", "payload"))
+    val stubs = Multimodal.decodeMeta(withNull, "doc_id", "payload")
+      .collect().sortBy(_.doc_id)
+    assert(stubs.take(3).toSeq == decoded.toSeq)
+    assert(stubs(3).doc_id == 4L && stubs(3).n_bytes == 0L &&
+      stubs(3).width >= 64 && stubs(3).height >= 64)
   }
 
   test("multimodal: real PNG render → imageio header decode round trip") {

@@ -192,18 +192,18 @@ class VectorIndexSpec extends AnyFunSuite {
       val before = hits()
       // fabricate the exact crash state: the swap's delete landed but
       // the rename didn't — live `cells` is gone, the full compacted
-      // copy sits at `_compact_cells`
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
+      // copy sits at the swap temp
+      val tmp = graft.core.FixtureCache.SwapPrefix
+      val fs = graft.core.FixtureCache.fs(spark, root)
       assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/cells"),
-        new org.apache.hadoop.fs.Path(s"$root/_compact_cells")))
+        new org.apache.hadoop.fs.Path(s"$root/${tmp}cells")))
       // first read-path touch recovers and serves identically
       assert(hits() == before)
       assert(new java.io.File(s"$root/cells").exists())
-      assert(!new java.io.File(s"$root/_compact_cells").exists())
+      assert(!new java.io.File(s"$root/${tmp}cells").exists())
       // compact() itself also recovers (and then has nothing to reclaim)
       assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/vectors"),
-        new org.apache.hadoop.fs.Path(s"$root/_compact_vectors")))
+        new org.apache.hadoop.fs.Path(s"$root/${tmp}vectors")))
       VectorIndex.compact(spark, root)
       assert(new java.io.File(s"$root/vectors").exists())
       assert(hits() == before)
