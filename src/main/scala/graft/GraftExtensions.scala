@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{VectorDot, VectorDotFixed}
 
 /** The engine's SparkSessionExtensions entry point — the one way its SQL
-  * functions (`vector_dot`, `vector_dot_fixed`) are registered. Wire
-  * with:
+  * functions (`vector_dot`, `vector_dot_fixed`) are registered. Each
+  * resolves to its `RuntimeReplaceable` expression, which the optimizer
+  * swaps for a `StaticInvoke` of one static kernel
+  * ([[graft.functions.VectorKernels]]). Wire with:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions)...

@@ -43,10 +43,6 @@ object Tables {
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Register all fixture tables as temp views (for spark.sql use). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** Round-robin repartition to the session's shuffle parallelism, placed
     * before per-row-CPU-heavy stages (decimal folds, regex, HOFs).
     *

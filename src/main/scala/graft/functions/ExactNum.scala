@@ -104,9 +104,9 @@ object ExactNum {
   /** One value's term of the floor fold at scale `s` (10^digits): Spark's
     * floor(x·s) as a long, saturating at the long range. Executor-side
     * folds that merge their own partials (LrBase.train, StreamingDedup's
-    * signatures) and the fixed-point vector kernels (VectorDotFixed,
-    * VectorOuterFixed, whose generated code calls the static forwarder)
-    * call it too. */
+    * signatures) and the fixed-point vector kernels
+    * ([[VectorKernels.dotFixed]], [[VectorKernels.outerTerms]]) call it
+    * too. */
   def floorUnits(x: Double, s: Double): Long = math.floor(x * s).toLong
 
   /** The vector kernels' fixed-point scale (1e-12 resolution): the `s` of

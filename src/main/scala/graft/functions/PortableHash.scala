@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Engine-portable hashing for the sketch operators (MinHash, SimHash).
   *
@@ -16,16 +17,16 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
   * integers in both engines from plain SQL arithmetic:
   *
   *  - [[hash60]]: the first 15 hex chars of `md5(s)` parsed base-16 — a
-  *    uniform 60-bit non-negative long. Spark computes it with codegen'd
-  *    `conv`; the DuckDB twin ([[hash60Sql]]) folds the same 15 chars with
-  *    `strpos` arithmetic. md5 on UTF-8 bytes is engine-identical
+  *    uniform 60-bit non-negative long. Spark computes it with the native
+  *    [[Hash60]] kernel; the DuckDB twin ([[hash60Sql]]) folds the same
+  *    15 chars with `strpos` arithmetic. md5 on UTF-8 bytes is engine-identical
   *    (verified incl. non-ASCII), so both sides see the same 60-bit value.
   *  - [[minhashPerm]]: the classic affine permutation family
   *    h_i(x) = (a_i * (x mod p) + b_i) mod p over p = 2^31-1. Operands
   *    stay under 2^62, so the arithmetic never overflows a BIGINT in
   *    either engine (DuckDB errors on overflow rather than wrapping).
   *
-  * Cost note: hash60 is ~2× an xxhash64 (md5 + conv, both codegen'd) —
+  * Cost note: hash60 is an md5 digest per value, dearer than an xxhash64 —
   * still narrow per-row work; use xxhash64 where only hash EQUALITY
   * matters (join keys), these where hash VALUES reach the output.
   */
@@ -37,15 +38,10 @@ object PortableHash {
   /** 60-bit engine-portable string hash (see class doc) — computed by the
     * native [[Hash60]] expression, which takes the digest's top 60 bits
     * directly instead of round-tripping a 32-char hex string through
-    * substring+conv per row (the composed form is kept as
-    * [[hash60Composed]] and pinned bit-equal in PortableHashSpec). */
+    * substring+conv per row (PortableHashSpec pins it bit-equal to that
+    * built-ins-only composition). */
   def hash60(c: Column): Column =
     Bridge.column(Hash60(Bridge.expr(c)))
-
-  /** The built-ins-only composition — same value as [[hash60]]; the
-    * readable reference implementation. */
-  def hash60Composed(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -57,6 +53,9 @@ object PortableHash {
     * shifted right 4. Thread-local digest: no per-row allocation. */
   def hash60Java(bytes: Array[Byte]): Long =
     hash60Java(bytes, 0, bytes.length)
+
+  /** [[hash60Java]] of a string's UTF-8 bytes — the [[Hash60]] kernel. */
+  def hash60Java(s: UTF8String): Long = hash60Java(s.getBytes)
 
   /** [[hash60Java]] over a byte range — the token-slice form
     * (md.update(range) + digest() ≡ digest(copied slice)). */
@@ -102,28 +101,21 @@ object PortableHash {
   }
 }
 
-/** Native codegen'd form of [[PortableHash.hash60]]: md5 digest → top 60
-  * bits, skipping the hex-string round trip of the composed
-  * conv(substring(md5)) form. Same SURVEY §7 phase-3 extension level (b)
-  * as [[VectorDot]]: a custom `Expression` where built-in composition
-  * leaves performance on the table (the shingle/token hash is the hottest
-  * per-row op in the dedup operators). */
-case class Hash60(child: Expression) extends UnaryExpression {
+/** Native form of [[PortableHash.hash60]]: md5 digest → top 60 bits
+  * ([[PortableHash.hash60Java]]), skipping the hex-string round trip of
+  * the composed conv(substring(md5)) form. Same SURVEY §7 phase-3
+  * extension level (b) as [[VectorDot]]: a custom `Expression` where
+  * built-in composition leaves performance on the table (the
+  * shingle/token hash is the hottest per-row op in the dedup operators). */
+case class Hash60(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hash60 expects a string argument, got ${child.dataType.simpleString}")
+  override def checkInputDataTypes(): TypeCheckResult = Kernel.check(
+    child.dataType == StringType,
+    s"hash60 expects a string argument, got ${child.dataType.simpleString}")
 
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(s: Any): Any =
-    PortableHash.hash60Java(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PortableHash.hash60Java($c.getBytes());")
+  override lazy val replacement: Expression =
+    Kernel.invoke(PortableHash, "hash60Java", LongType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

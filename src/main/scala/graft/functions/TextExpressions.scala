@@ -2,93 +2,64 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Thin Catalyst wrappers over [[TextKernels]]: each `doGenCode` emits a
-  * single static call, so the kernels run inside whole-stage codegen with
-  * no regex, no boxing and no UDF serialization — level (b) of SURVEY §7's
-  * extension-preference order, same as [[VectorDot]]/[[Hash60]].
-  */
-private[functions] trait TextKernelExpr extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${t.simpleString}")
-  }
+/** Thin Catalyst wrappers over [[TextKernels]]: each is one static kernel
+  * reached by `StaticInvoke` (see [[Kernel]]), so the kernels run inside
+  * whole-stage codegen with no regex, no boxing and no UDF serialization
+  * — level (b) of SURVEY §7's extension-preference order, same as
+  * [[VectorDot]]/[[Hash60]]. `constants` are the kernel's plan-time
+  * arguments after the string. */
+private[functions] abstract class TextKernelExpr(
+    override val prettyName: String, kernel: String, resultType: DataType,
+    constants: Literal*)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
+  override def checkInputDataTypes(): TypeCheckResult = Kernel.check(
+    child.dataType.isInstanceOf[StringType],
+    s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
+  override lazy val replacement: Expression =
+    Kernel.invoke(TextKernels, kernel, resultType, child +: constants: _*)
 }
 
 /** [[TextKernels.normalize]] as an expression. */
-case class AsciiNormalize(child: Expression) extends TextKernelExpr {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "ascii_normalize"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.normalize(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.normalize($c)")
+case class AsciiNormalize(child: Expression)
+    extends TextKernelExpr("ascii_normalize", "normalize", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** [[TextKernels.tokenCount]] as an expression. */
-case class TokenCount(child: Expression) extends TextKernelExpr {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "token_count"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.tokenCount(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.tokenCount($c)")
+case class TokenCount(child: Expression)
+    extends TextKernelExpr("token_count", "tokenCount", LongType) {
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** [[TextKernels.punctCount]] as an expression. */
-case class PunctCount(child: Expression) extends TextKernelExpr {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "punct_count"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.punctCount(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.punctCount($c)")
+case class PunctCount(child: Expression)
+    extends TextKernelExpr("punct_count", "punctCount", LongType) {
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** `\b(w1|w2|…)\b` occurrence count for all-word-char alternatives; the
-  * word list is fixed at plan time and rides codegen as a reference
-  * object (no per-row parsing). */
+  * word list is fixed at plan time and rides as an array<string> literal
+  * (no per-row parsing). */
 case class WordSetCount(child: Expression, words: Seq[String])
-    extends TextKernelExpr {
+    extends TextKernelExpr("word_set_count", "wordSetCount", LongType,
+      Literal.create(words, ArrayType(StringType, containsNull = false))) {
   require(words.nonEmpty && words.forall(_.matches("[a-zA-Z0-9_]+")),
     s"word list must be non-empty all-word-char literals, got $words")
-
-  @transient private lazy val wordBytes: Array[Array[Byte]] =
-    words.map(_.getBytes("UTF-8")).toArray
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "word_set_count"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.wordSetCount(s.asInstanceOf[UTF8String], wordBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("words", wordBytes, "byte[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.wordSetCount($c, $ref)")
-  }
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** [[TextKernels.subwordCount]] as an expression. */
-case class SubwordCount(child: Expression) extends TextKernelExpr {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "subword_count"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.subwordCount(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.subwordCount($c)")
+case class SubwordCount(child: Expression)
+    extends TextKernelExpr("subword_count", "subwordCount", LongType) {
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -96,27 +67,17 @@ case class SubwordCount(child: Expression) extends TextKernelExpr {
 /** [[TextKernels.tokenWeightSum]] as an expression — the classifier
   * margin fold (the bucket count is fixed at plan time). */
 case class TokenWeightSum(child: Expression, buckets: Long)
-    extends TextKernelExpr {
+    extends TextKernelExpr("token_weight_sum", "tokenWeightSum", LongType,
+      Literal(buckets)) {
   require(buckets > 0, s"buckets must be positive, got $buckets")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "token_weight_sum"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.tokenWeightSum(s.asInstanceOf[UTF8String], buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.tokenWeightSum($c, ${buckets}L)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** [[TextKernels.tokens]] as an expression. */
-case class Tokens(child: Expression) extends TextKernelExpr {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "tokens"
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.tokens(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.tokens($c)")
+case class Tokens(child: Expression)
+    extends TextKernelExpr("tokens", "tokens",
+      ArrayType(StringType, containsNull = false)) {
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

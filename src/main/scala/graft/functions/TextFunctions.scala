@@ -19,28 +19,20 @@ object TextFunctions {
     *
     * Kernel-backed (TextKernels): profiling showed the JDK regex engine
     * serializing under executor-thread concurrency — see TextKernels'
-    * scaladoc. The regex forms survive as `*Regex` twins, pinned
-    * bit-equal by TextKernelsSpec. */
+    * scaladoc. TextKernelsSpec keeps the regex forms as test twins and
+    * pins each kernel bit-equal to its twin. */
   def tokens(text: Column): Column = TextExpressions.tokens_fast(text)
-  def tokensRegex(text: Column): Column =
-    regexp_extract_all(text, lit("\\S+"), lit(0))
 
   /** Token count without materializing the token array. */
   def tokenCount(text: Column): Column = TextExpressions.token_count(text)
-  def tokenCountRegex(text: Column): Column =
-    regexp_count(text, lit("\\S+")).cast("long")
 
   /** Count of punctuation characters. */
   def punctCount(text: Column): Column = TextExpressions.punct_count(text)
-  def punctCountRegex(text: Column): Column =
-    regexp_count(text, lit("[.,!?;:]")).cast("long")
 
   /** Count of occurrences of any word in `words` (word-boundary matched,
     * case-insensitive via pre-lowered input). */
   def wordListCount(text: Column, words: Seq[String]): Column =
     TextExpressions.word_set_count(text, words)
-  def wordListCountRegex(text: Column, words: Seq[String]): Column =
-    regexp_count(text, lit("\\b(" + words.mkString("|") + ")\\b")).cast("long")
 
   /** Per-language stopword marker lists for the language-ID heuristic.
     * Order matters: it is the deterministic tie-break order. */
@@ -97,9 +89,6 @@ object TextFunctions {
     * batch/stream content hashes agree by construction, not copy-paste. */
   def normalizeText(text: Column): Column =
     TextExpressions.ascii_normalize(text)
-  def normalizeTextRegex(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9\\s]", ""), "\\s+", " "))
 
   /** SQL twins for the oracle. */
   def normalizeTextSql(e: String): String =

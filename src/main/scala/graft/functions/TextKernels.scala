@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass byte-level scan kernels behind the hot text functions.
@@ -17,15 +17,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * RUNNABLE inside Pattern$BmpCharPredicate lambdas). A per-char
   * predicate interpreter is also simply the wrong tool for fixed ASCII
   * char classes. Each kernel below is one branch-predictable pass over
-  * the UTF8String bytes, called from tight `doGenCode` sites
+  * the UTF8String bytes, reached by one `StaticInvoke` per expression
   * (TextExpressions.scala), so the work stays inside whole-stage codegen
   * and scales linearly with executor threads.
   *
   * Semantics contract: each kernel is BIT-EQUAL to the regex composition
-  * it replaces (TextFunctions keeps the regex twins; TextKernelsSpec pins
-  * equality on fixture text and adversarial ASCII/whitespace/unicode
-  * strings). Byte-level scanning is exact even on multi-byte UTF-8 for
-  * the token/punct/word kernels because Java's default (non-unicode)
+  * it replaces (TextKernelsSpec keeps the regex twins and pins equality
+  * on fixture text and adversarial ASCII/whitespace/unicode strings).
+  * Byte-level scanning is exact even on multi-byte UTF-8 for the
+  * token/punct/word kernels because Java's default (non-unicode)
   * `\s`/`\w`/punct classes match single ASCII bytes only, and UTF-8
   * continuation bytes (>= 0x80) never collide with ASCII values.
   * `normalize` alone changes behavior on non-ASCII *lowercasing*, so it
@@ -117,10 +117,12 @@ object TextKernels {
   /** regexp_count(s, "\\b(w1|w2|…)\\b") for all-word-char alternatives:
     * each match is a maximal `\w+` run equal to one of the words (both
     * boundaries forced, so no partial or overlapping matches exist).
-    * Case-sensitive, like the regex (callers pre-lower).
+    * Case-sensitive, like the regex (callers pre-lower). `words` is an
+    * array of strings.
     */
-  def wordSetCount(s: UTF8String, words: Array[Array[Byte]]): Long = {
+  def wordSetCount(s: UTF8String, words: ArrayData): Long = {
     val n = s.numBytes()
+    val nWords = words.numElements()
     var c = 0L
     var i = 0
     while (i < n) {
@@ -130,11 +132,11 @@ object TextKernels {
         val len = j - i
         var w = 0
         var matched = false
-        while (!matched && w < words.length) {
-          val cand = words(w)
-          if (cand.length == len) {
+        while (!matched && w < nWords) {
+          val cand = words.getUTF8String(w)
+          if (cand.numBytes() == len) {
             var k = 0
-            while (k < len && cand(k) == s.getByte(i + k)) k += 1
+            while (k < len && cand.getByte(k) == s.getByte(i + k)) k += 1
             matched = k == len
           }
           w += 1

@@ -36,16 +36,18 @@ object Similarity {
   val Scale: Double = graft.functions.ExactNum.FixedScale
 
   /** Engine-portable per-row dot product: sequential double fold, executed
-    * by the native codegen'd [[graft.functions.VectorDot]] expression (see
-    * class doc for why the sequential fold is deterministic; VectorDotSpec
-    * pins bit-equality between the native expression and the HOF fold).
+    * by the native [[graft.functions.VectorDot]] expression, one static
+    * kernel ([[graft.functions.VectorKernels.dot]]) reached by
+    * `StaticInvoke` in both interpreted and generated code (see class doc
+    * for why the sequential fold is deterministic; VectorDotSpec pins
+    * bit-equality between the native expression and the HOF fold).
     *
     * Nullability/raggedness caveat (ADVICE r15): the built-ins-only
     * fold `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` (VectorDotSpec's
     * reference twin) returns NULL on a length mismatch (zip_with pads
-    * with nulls, the fold nulls out) or a null ELEMENT; the native
-    * expression instead dots the min-length overlap and must not see
-    * null elements (it reads primitive slots). Every in-repo call site
+    * with nulls, the fold nulls out) or a null ELEMENT; the kernel
+    * instead dots the min-length overlap and must not see null elements
+    * (it reads primitive slots). Every in-repo call site
     * feeds equal-length, non-null-element embeddings; a future caller
     * with nullable element arrays must pre-filter
     * (`!array_contains(transform(v, isnull), …)`) or use that fold to

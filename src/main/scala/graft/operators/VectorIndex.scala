@@ -128,11 +128,6 @@ object VectorIndex {
     ProductQuantization.PqModel(meta.m, meta.subDim, cb)
   }
 
-  /** Coarse-centroid arrays ((label, c_arr, c2), broadcast-sized) from
-    * the persisted quantizer. */
-  def readCentroidArrays(spark: SparkSession, root: String): DataFrame =
-    Similarity.centroidArrays(spark.read.parquet(s"$root/centroids"))
-
   /** Train both models on `vecs` (the historical corpus), persist them,
     * and index the corpus itself. Training is the one-off expensive
     * stage (two seeded Lloyd's runs); everything downstream — appends,

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TextFunctions
+import graft.functions.TextExpressions
 import graft.functions.TextFunctions._
 
 /** Pins the byte-scan kernels (TextKernels, via the TextExpressions
@@ -16,6 +17,19 @@ import graft.functions.TextFunctions._
 class TextKernelsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
+
+  /** The regex compositions the kernels replaced — their reference twins. */
+  private def tokensRegex(text: Column): Column =
+    regexp_extract_all(text, lit("\\S+"), lit(0))
+  private def tokenCountRegex(text: Column): Column =
+    regexp_count(text, lit("\\S+")).cast("long")
+  private def punctCountRegex(text: Column): Column =
+    regexp_count(text, lit("[.,!?;:]")).cast("long")
+  private def wordListCountRegex(text: Column, words: Seq[String]): Column =
+    regexp_count(text, lit("\\b(" + words.mkString("|") + ")\\b")).cast("long")
+  private def normalizeTextRegex(text: Column): Column =
+    trim(regexp_replace(
+      regexp_replace(lower(text), "[^a-z0-9\\s]", ""), "\\s+", " "))
 
   /** The composed classifier-margin fold over the production token
     * weight — the reference twin of the token_weight_sum kernel. */
@@ -42,7 +56,7 @@ class TextKernelsSpec extends AnyFunSuite {
     val df = (adversarial ++ fixtureTexts).toDF("text")
     val diff = df.select(
         normalizeText($"text").as("fast"),
-        TextFunctions.normalizeTextRegex($"text").as("slow"))
+        normalizeTextRegex($"text").as("slow"))
       .where(not($"fast" <=> $"slow"))
     assert(diff.count() === 0, diff.collect().take(3).mkString("; "))
   }
@@ -63,7 +77,7 @@ class TextKernelsSpec extends AnyFunSuite {
   test("subword kernel == regex alternation twin") {
     val df = (adversarial ++ fixtureTexts).toDF("text")
     val diff = df.select(
-        graft.functions.TextExpressions.subword_count($"text").as("fast"),
+        TextExpressions.subword_count($"text").as("fast"),
         regexp_count($"text", lit("[A-Za-z0-9]+|[^A-Za-z0-9\\s]"))
           .cast("long").as("slow"))
       .where(not($"fast" <=> $"slow"))
@@ -73,14 +87,12 @@ class TextKernelsSpec extends AnyFunSuite {
   test("token_weight_sum kernel == interpreted HOF fold (incl. null)") {
     val df = (adversarial ++ fixtureTexts).toDF("text")
     val diff = df.select(
-        graft.functions.TextExpressions
-          .token_weight_sum($"text", 4096L).as("fast"),
+        TextExpressions.token_weight_sum($"text", 4096L).as("fast"),
         marginHof($"text").as("slow"))
       .where(not($"fast" <=> $"slow"))
     assert(diff.count() === 0, diff.collect().take(3).mkString("; "))
     val nulls = Seq[Option[String]](None, Some("a b")).toDF("text")
-      .select(graft.functions.TextExpressions
-        .token_weight_sum($"text", 4096L).as("f"))
+      .select(TextExpressions.token_weight_sum($"text", 4096L).as("f"))
       .collect()
     assert(nulls(0).isNullAt(0) && !nulls(1).isNullAt(0))
   }
@@ -105,15 +117,17 @@ class TextKernelsSpec extends AnyFunSuite {
   }
 
   test("interpreted (non-codegen) eval path agrees with codegen") {
-    // collect() above runs whole-stage codegen; force the interpreted
-    // path through the expressions' nullSafeEval via a filter that
-    // Catalyst constant-folds at analysis time
-    import graft.functions.TextKernels
-    import org.apache.spark.unsafe.types.UTF8String
-    adversarial.foreach { t =>
-      val u = UTF8String.fromString(t)
-      assert(TextKernels.tokenCount(u) >= 0)
-      assert(TextKernels.normalize(u) != null)
-    }
+    // every text kernel on both expression paths (KernelParity), over
+    // the adversarial strings (the empty one included) and a null row
+    val words = Seq("the", "and", "of", "a", "in", "is", "to", "for")
+    val df = (adversarial.map(Option(_)) :+ None).toDF("text")
+    val out = KernelParity.rows(df,
+      normalizeText($"text"), tokenCount($"text"), punctCount($"text"),
+      wordListCount(lower($"text"), words), tokens($"text"),
+      TextExpressions.subword_count($"text"),
+      TextExpressions.token_weight_sum($"text", 4096L))
+    assert(out.length == adversarial.length + 1)
+    assert((0 until 7).forall(out.last.isNullAt))
+    assert(out.init.forall(r => (0 until 7).forall(i => !r.isNullAt(i))))
   }
 }

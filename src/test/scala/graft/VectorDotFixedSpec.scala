@@ -58,24 +58,15 @@ class VectorDotFixedSpec extends AnyFunSuite {
   }
 
   test("interpreted eval agrees with codegen") {
+    // KernelParity compares the two paths and restores every setting it
+    // touches (wholeStage, factoryMode, fallback) to its previous value
+    val prevMode = spark.conf.getOption("spark.sql.codegen.factoryMode")
     val signs = (0 until 64).map(d => Similarity.planeSignJava(7, d))
-    val expr = VectorDotFixed.vector_dot_fixed($"v",
-      array(signs.map(lit): _*))
-    val codegen = df.select($"id", expr.as("s")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // force the interpreted path through a deterministic UDF-free eval:
-    // nullSafeEval via a local relation with codegen disabled
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val interp = df.select($"id", expr.as("s")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(interp == codegen)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", prev)
-      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    }
+    val out = KernelParity.rows(df, $"id",
+      VectorDotFixed.vector_dot_fixed($"v", array(signs.map(lit): _*)),
+      VectorDotFixed.vector_dot_fixed($"v", $"v"))
+    assert(out.length == 300 && out.forall(r => !r.isNullAt(1)))
+    assert(spark.conf.getOption("spark.sql.codegen.factoryMode") == prevMode)
   }
 
   test("null vector yields null; empty arrays yield 0; length mismatch " +
@@ -86,16 +77,21 @@ class VectorDotFixedSpec extends AnyFunSuite {
       (3L, Some(Seq.empty[Float]), Some(Seq.empty[Float])),
       (4L, Some(Seq(1.0f, 7.0f, 9.0f)), Some(Seq(2.0f))))
       .toDF("id", "a", "b")
+      .union(Seq((5L, Seq[java.lang.Float](2.0f, null, 4.0f),
+        Seq[java.lang.Float](1.0f, 3.0f, null))).toDF("id", "a", "b"))
       .withColumn("a", $"a".cast("array<float>"))
       .withColumn("b", $"b".cast("array<float>"))
-    val out = edge.select($"id",
-        VectorDotFixed.vector_dot_fixed($"a", $"b").as("s"))
-      .orderBy("id").collect()
+    val out = KernelParity.rows(edge, $"id",
+      VectorDotFixed.vector_dot_fixed($"a", $"b").as("s"),
+      VectorDotFixed.vector_dot_fixed($"a", $"b".cast("array<double>")))
+    assert(out.forall(r => r.get(1) == r.get(2)))
     assert(out(0).getLong(1) ==
       math.floor(1.5 * 1e12).toLong + math.floor(-2.25 * 1e12).toLong)
     assert(out(1).isNullAt(1))
     assert(out(2).getLong(1) == 0L)
     assert(out(3).getLong(1) == math.floor(2.0 * 1e12).toLong)
+    // pairs with a null element are skipped
+    assert(out(4).getLong(1) == math.floor(2.0 * 1e12).toLong)
   }
 
   test("signatures: new per-row build equals the r14 exploded-agg build " +

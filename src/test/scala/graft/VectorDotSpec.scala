@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorDot
 
 /** The native VectorDot expression: bit-equality with the built-ins-only
-  * HOF fold, the GraftExtensions SQL function, null/edge handling. */
+  * HOF fold on both expression paths (KernelParity), the GraftExtensions
+  * SQL function, null/edge handling. */
 class VectorDotSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
@@ -27,10 +28,10 @@ class VectorDotSpec extends AnyFunSuite {
     .withColumn("b", $"b".cast("array<float>"))
 
   test("native expression is bit-identical to the zip_with/aggregate fold") {
-    val cmp = df.select(
-      VectorDot.vector_dot($"a", $"b").as("native"),
-      dotSeqHof($"a", $"b").as("hof")).collect()
-    assert(cmp.forall(r => r.getDouble(0) == r.getDouble(1)))
+    // the HOF fold is interpreted-only, so it runs in its own projection
+    val native = KernelParity.rows(df, VectorDot.vector_dot($"a", $"b"))
+    val hof = df.select(dotSeqHof($"a", $"b")).collect()
+    assert(native.map(_.getDouble(0)) == hof.map(_.getDouble(0)).toSeq)
   }
 
   test("GraftExtensions-injected SQL function resolves without temp registration") {
@@ -56,15 +57,23 @@ class VectorDotSpec extends AnyFunSuite {
     val edge = Seq(
       (1L, Some(Seq(1.0f)), Some(Seq(2.0f))),
       (2L, None, Some(Seq(2.0f))),
-      (3L, Some(Seq.empty[Float]), Some(Seq.empty[Float])))
+      (3L, Some(Seq.empty[Float]), Some(Seq.empty[Float])),
+      (4L, Some(Seq(1.0f, 7.0f, 9.0f)), Some(Seq(2.0f))),
+      (5L, Some(Seq(3.0f)), None))
       .toDF("id", "a", "b")
       .withColumn("a", $"a".cast("array<float>"))
       .withColumn("b", $"b".cast("array<float>"))
-    val out = edge.select($"id", VectorDot.vector_dot($"a", $"b").as("d"))
-      .orderBy("id").collect()
+    val out = KernelParity.rows(edge.orderBy("id"), $"id",
+      VectorDot.vector_dot($"a", $"b").as("d"),
+      VectorDot.vector_dot($"a", $"b".cast("array<double>")).as("fd"),
+      VectorDot.vector_dot($"a".cast("array<double>"), $"b").as("df"))
     assert(out(0).getDouble(1) == 2.0)
     assert(out(1).isNullAt(1))
     assert(out(2).getDouble(1) == 0.0)
+    // ragged: the min-length overlap
+    assert(out(3).getDouble(1) == 2.0)
+    assert(out(4).isNullAt(1))
+    assert(out.forall(r => r.get(1) == r.get(2) && r.get(1) == r.get(3)))
   }
 
   test("double and mixed float/double arrays are bit-identical to the HOF fold") {
@@ -75,13 +84,12 @@ class VectorDotSpec extends AnyFunSuite {
         Seq.fill(64)(rnd.nextGaussian())))
       .toDF("id", "f", "d")
       .withColumn("f", $"f".cast("array<float>"))
-    val cmp = mixed.select(
-      VectorDot.vector_dot($"f", $"d").as("n_fd"),
-      dotSeqHof($"f", $"d").as("h_fd"),
-      VectorDot.vector_dot($"d", $"d").as("n_dd"),
-      dotSeqHof($"d", $"d").as("h_dd")).collect()
-    assert(cmp.forall(r =>
-      r.getDouble(0) == r.getDouble(1) && r.getDouble(2) == r.getDouble(3)))
+    val pairs = Seq(($"f", $"d"), ($"d", $"d"), ($"d", $"f"))
+    val native = KernelParity.rows(mixed,
+      pairs.map { case (x, y) => VectorDot.vector_dot(x, y) }: _*)
+    val hof = mixed.select(
+      pairs.map { case (x, y) => dotSeqHof(x, y) }: _*).collect()
+    assert(native.map(_.toSeq) == hof.map(_.toSeq).toSeq)
   }
 
   test("type mismatch is an analysis error") {

@@ -46,6 +46,15 @@ class VectorOuterFixedSpec extends AnyFunSuite {
 
     assert(got.length == want.length)
     assert(got.sameElements(want))
+
+    // both expression paths agree, incl. an empty and a null vector
+    val edge = Seq((90L, Option(Seq.empty[Float])), (91L, None)).toDF("id", "v")
+      .withColumn("v", $"v".cast("array<float>"))
+    val both = KernelParity.rows(df.union(edge), $"id",
+      VectorOuterFixed.vector_outer_fixed($"v"),
+      VectorOuterFixed.vector_outer_fixed($"v", withLinear = true))
+    assert(both.find(_.getLong(0) == 90L).get.getSeq[Long](1).isEmpty)
+    assert(both.find(_.getLong(0) == 91L).get.isNullAt(1))
   }
 
   test("double input takes the getDouble path and matches the HOF fold") {
@@ -56,6 +65,11 @@ class VectorOuterFixedSpec extends AnyFunSuite {
     val want = df.select(explode(hofPairs($"v")).as("c"))
       .select($"c.t").collect().map(_.getLong(0))
     assert(got.sameElements(want))
+    val both = KernelParity.rows(
+      df.union(Seq((2L, Option.empty[Seq[Double]])).toDF("id", "v")),
+      VectorOuterFixed.vector_outer_fixed($"v"),
+      VectorOuterFixed.vector_outer_fixed($"v", withLinear = true))
+    assert(both.head.getSeq[Long](0) == want.toSeq && both(1).isNullAt(0))
   }
 
   test("covarianceMatrix is unchanged by the codegen'd expansion") {
