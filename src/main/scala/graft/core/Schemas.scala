@@ -1,14 +1,13 @@
 package graft.core
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
-/** The three record types of the reference engine, re-expressed as Spark
-  * schemas / case classes.
+/** The input record of the reference engine, re-expressed as a Spark case
+  * class and its wire schema.
   *
   * Source of truth (reference, read-only):
-  *   - flink-app/src/main/java/com/swift/flink_app/dto/RemittanceTransaction.java:10-18
-  *   - flink-app/src/main/java/com/swift/flink_app/dto/Metric.java:12-22
-  *   - flink-app/src/main/java/com/swift/flink_app/dto/RiskLabel.java:12-19
+  *   flink-app/src/main/java/com/swift/flink_app/dto/RemittanceTransaction.java:10-18
   */
 object Schemas {
 
@@ -23,41 +22,11 @@ object Schemas {
       exchangeRate: Double,
       timestamp: Long)
 
-  /** Windowed-aggregate output row (Metric.java:12-22). `count` =
-    * successCount + failureCount; averages divide by successCount (0 when
-    * none); min/max over success rows only, 0 when none (our documented fix
-    * of the reference's Double.MAX_VALUE/MIN_VALUE sentinel bug,
-    * StreamJob.java:120-121,:144-147 — SURVEY.md §2.3). */
-  case class Metric(
-      windowStart: Long,
-      windowEnd: Long,
-      count: Long,
-      avgAmount: Double,
-      avgExchangeRate: Double,
-      minAmount: Double,
-      maxAmount: Double,
-      successCount: Long,
-      failureCount: Long)
-
-  /** Enrichment output (RiskLabel.java:12-19). Unlike the reference — which
-    * leaves transactionId null and amount 0.0 (StreamJob.java:68-78, a
-    * documented quirk, SURVEY.md §1.2) — we carry the full transaction. */
-  case class RiskLabel(
-      transactionId: String,
-      amount: Double,
-      processingTime: String,
-      latency: String,
-      riskType: String)
-
-  /** Wire schema of the Kafka JSON payload (RemittanceGenerator.java:43-58). */
-  val transactionSchema: StructType = StructType(Seq(
-    StructField("transactionId", StringType),
-    StructField("senderId", StringType),
-    StructField("receiverId", StringType),
-    StructField("amount", DoubleType),
-    StructField("currency", StringType),
-    StructField("exchangeRate", DoubleType),
-    StructField("timestamp", LongType)))
+  /** Wire schema of the Kafka JSON payload (RemittanceGenerator.java:43-58):
+    * [[RemittanceTransaction]]'s fields, every one nullable — a JSON
+    * payload may omit any field, and `from_json` then yields null. */
+  val transactionSchema: StructType = StructType(
+    Encoders.product[RemittanceTransaction].schema.map(_.copy(nullable = true)))
 
   /** The fixed FX table of the generator (RemittanceGenerator.java:65-74).
     * CNY -> 0.0 is the deliberate poison value: rows with exchangeRate == 0

@@ -33,15 +33,19 @@ object JsonCodec {
         .map(f => col(s"_parsed.$f")) :+ col("_corrupt"): _*)
   }
 
-  /** P4 — the metrics JSON line, byte-identical to the reference's printf
-    * (StreamJob.java:150-169: %d for longs/counts, %.2f amounts, %.4f rate). */
+  /** P4 — the metrics JSON line's format, byte-identical to the
+    * reference's printf (StreamJob.java:150-169: %d for longs/counts, %.2f
+    * amounts, %.4f rate). Spark's `format_string` ([[metricJson]]) and
+    * DuckDB's `printf` (the p4 oracle) both read it. */
+  val MetricJsonFormat: String =
+    "{\"windowStart\": %d, \"windowEnd\": %d, \"count\": %d, " +
+      "\"successCount\": %d, \"failureCount\": %d, \"avgAmount\": %.2f, " +
+      "\"avgExchangeRate\": %.4f, \"minAmount\": %.2f, \"maxAmount\": %.2f}"
+
+  /** P4 — the metrics JSON line ([[MetricJsonFormat]]). */
   def metricJson(windowStart: Column, windowEnd: Column, cnt: Column,
                  successCnt: Column, failureCnt: Column, avgAmount: Column,
                  avgRate: Column, minAmount: Column, maxAmount: Column): Column =
-    format_string(
-      "{\"windowStart\": %d, \"windowEnd\": %d, \"count\": %d, " +
-        "\"successCount\": %d, \"failureCount\": %d, \"avgAmount\": %.2f, " +
-        "\"avgExchangeRate\": %.4f, \"minAmount\": %.2f, \"maxAmount\": %.2f}",
-      windowStart, windowEnd, cnt, successCnt, failureCnt,
-      avgAmount, avgRate, minAmount, maxAmount)
+    format_string(MetricJsonFormat, windowStart, windowEnd, cnt, successCnt,
+      failureCnt, avgAmount, avgRate, minAmount, maxAmount)
 }

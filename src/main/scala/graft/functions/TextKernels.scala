@@ -184,17 +184,29 @@ object TextKernels {
     * in order. Slices share one fresh copy of the source bytes. */
   def tokens(s: UTF8String): GenericArrayData = {
     val bytes = s.getBytes // fresh copy; safe to alias from the slices
-    val n = bytes.length
     val out = new java.util.ArrayList[UTF8String]()
-    var i = 0
-    while (i < n) {
-      if (!isWs(bytes(i))) {
-        val start = i
-        while (i < n && !isWs(bytes(i))) i += 1
-        out.add(UTF8String.fromBytes(bytes, start, i - start))
-      } else i += 1
+    var run = nextRun(bytes, 0)
+    while (run >= 0) {
+      val start = (run >>> 32).toInt
+      out.add(UTF8String.fromBytes(bytes, start, run.toInt - start))
+      run = nextRun(bytes, run.toInt)
     }
     new GenericArrayData(out.toArray)
+  }
+
+  /** The first \S+ byte run at or after `from`: its start in the high 32
+    * bits and its end (exclusive) in the low 32, or -1 when none is left.
+    * Packed into one Long, so the token walks allocate nothing per run. */
+  private def nextRun(bytes: Array[Byte], from: Int): Long = {
+    val n = bytes.length
+    var i = from
+    while (i < n && isWs(bytes(i))) i += 1
+    if (i == n) -1L
+    else {
+      val start = i
+      while (i < n && !isWs(bytes(i))) i += 1
+      (start.toLong << 32) | i
+    }
   }
 
   /** aggregate(tokens(s), 0L, (acc, t) => acc +
@@ -210,16 +222,13 @@ object TextKernels {
     * bit-equal to Hash60 over the sliced token. */
   def tokenWeightSum(s: UTF8String, buckets: Long): Long = {
     val bytes = s.getBytes
-    val n = bytes.length
     var acc = 0L
-    var i = 0
-    while (i < n) {
-      if (!isWs(bytes(i))) {
-        val start = i
-        while (i < n && !isWs(bytes(i))) i += 1
-        val h = PortableHash.hash60Java(bytes, start, i - start)
-        acc += (h % buckets) * 131L % 401L - 200L
-      } else i += 1
+    var run = nextRun(bytes, 0)
+    while (run >= 0) {
+      val start = (run >>> 32).toInt
+      val h = PortableHash.hash60Java(bytes, start, run.toInt - start)
+      acc += (h % buckets) * 131L % 401L - 200L
+      run = nextRun(bytes, run.toInt)
     }
     acc
   }

@@ -23,6 +23,10 @@ object ReferenceQueries extends QueryPack {
   private val okPred = "event_type <> 'error'"
   private val kDouble = "CAST(json_extract_string(props, '$.k') AS DOUBLE)"
 
+  /** The p2/p3 threshold: the reference's 1000 scaled to the fixture's
+    * `value` range, so both labels occur. */
+  private val RiskThreshold = 100.0
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // W1/W2: 10 s tumbling all-window metrics (StreamJob.java:108-173)
     "w2_metrics_10s" -> ((s, dir) => {
@@ -48,17 +52,17 @@ object ReferenceQueries extends QueryPack {
         get_json_object($"props", "$.k").as("k_str"),
         get_json_object($"props", "$.k").cast("long").as("k_num"))
     }),
-    // P2: risk labeling (StreamJob.java:67-78), threshold analog = 100
+    // P2: risk labeling (StreamJob.java:67-78)
     "p2_risk_label" -> ((s, dir) => {
       import s.implicits._
-      RiskLabeler.label(events(s, dir), $"value", 100.0)
+      RiskLabeler.label(events(s, dir), $"value", RiskThreshold)
         .select($"event_id", $"user_id", $"value", $"risk_type")
     }),
     // P3: printf console line (StreamJob.java:82-89)
     "p3_risk_format" -> ((s, dir) => {
       import s.implicits._
       RiskLabeler.formatted(
-        RiskLabeler.label(events(s, dir), $"value", 100.0),
+        RiskLabeler.label(events(s, dir), $"value", RiskThreshold),
         $"event_id", $"value")
         .select($"event_id", $"line")
     }),
@@ -127,19 +131,18 @@ object ReferenceQueries extends QueryPack {
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
         |FROM events""".stripMargin,
     "p2_risk_label" ->
-      """SELECT event_id, user_id, value,
-        |  CASE WHEN value > 100.0 THEN 'RISK' ELSE 'SAFE' END AS risk_type
-        |FROM events""".stripMargin,
+      s"""SELECT event_id, user_id, value,
+         |  ${RiskLabeler.labelSql("value", RiskThreshold)} AS risk_type
+         |FROM events""".stripMargin,
     "p3_risk_format" ->
-      """SELECT event_id, printf('TxId=%s, Amount=%.2f, Risk=%s',
-        |  CAST(event_id AS VARCHAR), value,
-        |  CASE WHEN value > 100.0 THEN 'RISK' ELSE 'SAFE' END) AS line
-        |FROM events""".stripMargin,
+      s"""SELECT event_id, printf('${RiskLabeler.LineFormat}',
+         |  CAST(event_id AS VARCHAR), value,
+         |  ${RiskLabeler.labelSql("value", RiskThreshold)}) AS line
+         |FROM events""".stripMargin,
     "p4_metric_json" -> {
       val inner = WindowMetrics.tumblingSql(
         "events", "ts", okPred, "value", kDouble, 10000L)
-      s"""SELECT window_start, printf(
-         |  '{"windowStart": %d, "windowEnd": %d, "count": %d, "successCount": %d, "failureCount": %d, "avgAmount": %.2f, "avgExchangeRate": %.4f, "minAmount": %.2f, "maxAmount": %.2f}',
+      s"""SELECT window_start, printf('${JsonCodec.MetricJsonFormat}',
          |  window_start, window_end, cnt, success_cnt, failure_cnt,
          |  avg_amount + 1e-9, avg_rate + 1e-9, min_amount, max_amount) AS line
          |FROM ($inner) m""".stripMargin

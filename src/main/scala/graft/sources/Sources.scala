@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -153,8 +153,7 @@ object Sources {
     * Driver-side by design: this sink targets windowed AGGREGATE tables
     * (one row per closed window — the reference's metrics table), so a
     * micro-batch is O(windows), not O(events); collecting it is bounded by
-    * construction. Fact-table micro-batches use [[stagedUpsertBatch]]
-    * (per-partition staging + server-side merge) instead. */
+    * construction. */
   def upsertBatch(batch: DataFrame, cfg: JdbcConfig,
                   keyCols: Seq[String] = Seq("window_start")): Unit = {
     val rows = batch.collect()
@@ -203,10 +202,7 @@ object Sources {
 
   /** Key index on `cols`, created once and kept. Without it every
     * per-key DELETE of [[upsertBatch]] scans the whole table (a 30-key
-    * call over ~3k Derby rows: ~30 ms vs ~0.6 ms indexed), and the
-    * server-side merge of [[stagedUpsertBatch]] (DELETE … WHERE EXISTS)
-    * degenerates to an O(target×stage) nested loop — measured as a
-    * 25-minute hang on a 100k×100k Derby replay vs seconds indexed. */
+    * call over ~3k Derby rows: ~30 ms vs ~0.6 ms indexed). */
   private def ensureKeyIndex(conn: java.sql.Connection, table: String,
                              cols: Seq[String]): Unit = {
     val st = conn.createStatement()
@@ -214,107 +210,6 @@ object Sources {
       s"CREATE INDEX ${table}_gkix ON $table (${cols.mkString(", ")})")
     catch { case e: java.sql.SQLException if isAlreadyExists(e) => () }
     finally st.close()
-  }
-
-  /** Fact-table-scale idempotent micro-batch upsert — the distributed
-    * alternative to [[upsertBatch]]'s driver-side collect, for sinks whose
-    * micro-batch is O(events), not O(windows); a fact-scale stream calls
-    * it from `foreachBatch`, as [[jdbcSink]] calls [[upsertBatch]]. Rows
-    * never visit the driver:
-    *
-    *  1. each partition batch-INSERTs its rows into `<table>_stage` in its
-    *     own transaction, preceded by a partition-scoped DELETE so a
-    *     retried task rewrites its slice instead of duplicating it
-    *     (partition contents are deterministic under Spark's retry
-    *     contract — the same caveat every staged JDBC writer carries);
-    *  2. ONE driver-side transaction then merges server-side — delete the
-    *     target rows whose key tuple appears in the stage, insert the
-    *     stage, clear the stage — and commits.
-    *
-    * A replayed micro-batch re-runs both phases against the freshly
-    * cleared stage and overwrites the same keys: exactly-once OUTPUT,
-    * the [[upsertBatch]] contract, at O(batch/partitions) memory per
-    * executor and O(1) rows on the driver. The key-identifies-rows
-    * fail-fast runs server-side (GROUP BY … HAVING over the stage), so
-    * it costs no extra Spark job over the batch. */
-  def stagedUpsertBatch(batch: DataFrame, cfg: JdbcConfig,
-                        keyCols: Seq[String] = Seq("window_start"),
-                        insertBatchSize: Int = 1000): Unit = {
-    val schema = batch.schema
-    keyCols.foreach(schema.fieldIndex) // fail fast on a typo'd key
-    val stage = s"${cfg.table}_stage"
-    val stageSchema = StructType(schema.fields :+
-      StructField("graft_pt", LongType, nullable = false))
-    val setup = java.sql.DriverManager.getConnection(
-      cfg.url, cfg.user, cfg.password)
-    try {
-      ensureTable(setup, cfg.table, schema)
-      ensureTable(setup, stage, stageSchema)
-      ensureKeyIndex(setup, cfg.table, keyCols)
-      ensureKeyIndex(setup, stage, keyCols)
-      val st = setup.createStatement()
-      try st.executeUpdate(s"DELETE FROM $stage") finally st.close()
-    } finally setup.close()
-
-    val colNames = schema.fieldNames
-    val insSql = s"INSERT INTO $stage (${colNames.mkString(", ")}, graft_pt) " +
-      s"VALUES (${schema.fields.map(_ => "?").mkString(", ")}, ?)"
-    val nCols = schema.size
-    batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-        val conn = java.sql.DriverManager.getConnection(
-          cfg.url, cfg.user, cfg.password)
-        try inTransaction(conn) {
-          val del = conn.prepareStatement(
-            s"DELETE FROM $stage WHERE graft_pt = ?")
-          try { del.setLong(1, pid); del.executeUpdate() } finally del.close()
-          val ins = conn.prepareStatement(insSql)
-          try {
-            var n = 0
-            it.foreach { r =>
-              (0 until nCols).foreach(i => ins.setObject(i + 1, r.get(i)))
-              ins.setLong(nCols + 1, pid)
-              ins.addBatch()
-              n += 1
-              if (n % insertBatchSize == 0) ins.executeBatch()
-            }
-            ins.executeBatch()
-          } finally ins.close()
-        } finally conn.close()
-      }
-    }
-
-    val conn = java.sql.DriverManager.getConnection(
-      cfg.url, cfg.user, cfg.password)
-    try inTransaction(conn) {
-      val st = conn.createStatement()
-      try {
-        // distinct FULL rows first: a speculative / zombie task attempt
-        // that double-commits a partition leaves byte-identical copies
-        // (both attempts stage the same deterministic content under the
-        // same partition id), which must not abort a correct batch; the
-        // check flags only keys carrying ≥2 DIFFERENT tuples — a real
-        // key-does-not-identify-rows violation
-        val dup = st.executeQuery(
-          s"SELECT 1 FROM (SELECT DISTINCT ${colNames.mkString(", ")} " +
-            s"FROM $stage) d GROUP BY ${keyCols.mkString(", ")} " +
-            "HAVING COUNT(*) > 1 FETCH FIRST 1 ROWS ONLY")
-        val hasDup = try dup.next() finally dup.close()
-        require(!hasDup,
-          s"stagedUpsertBatch: batch has duplicate values for key " +
-            s"${keyCols.mkString(",")} — pass every grouping column as a " +
-            "key column")
-        val keyMatch = keyCols
-          .map(k => s"s.$k = ${cfg.table}.$k").mkString(" AND ")
-        st.executeUpdate(s"DELETE FROM ${cfg.table} WHERE EXISTS " +
-          s"(SELECT 1 FROM $stage s WHERE $keyMatch)")
-        st.executeUpdate(s"INSERT INTO ${cfg.table} " +
-          s"(${colNames.mkString(", ")}) " +
-          s"SELECT DISTINCT ${colNames.mkString(", ")} FROM $stage")
-        st.executeUpdate(s"DELETE FROM $stage")
-      } finally st.close()
-    } finally conn.close()
   }
 
   /** Runs `body` as ONE transaction on `conn`: autocommit off, body,
@@ -347,14 +242,4 @@ object Sources {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         upsertBatch(batch, cfg, keyCols)
       }
-
-  /** K1 — console sink (StreamJob.java:90, :218). */
-  def consoleSink(df: DataFrame,
-                  trigger: Trigger = DefaultTrigger): DataStreamWriter[_] =
-    df.writeStream.format("console").option("truncate", value = false)
-      .trigger(trigger)
-
-  /** Start helper: name + start + return the query. */
-  def start(w: DataStreamWriter[_], name: String): StreamingQuery =
-    w.queryName(name).start()
 }

@@ -7,8 +7,7 @@ import graft.core.Schemas
 /** S3 — the synthetic remittance generator (RemittanceGenerator.java:31-63)
   * as a Spark source: a deterministic seeded batch variant (LCG over the
   * row index — oracle-able, see ReferenceQueries."s3_generator") and a
-  * streaming variant over the rate source (1 row / `intervalMs`, matching
-  * the reference's @Scheduled(fixedRate = 2000)).
+  * streaming variant over the rate source (`rowsPerSecond`).
   *
   * The FX table carries the reference's deliberate CNY→0.0 poison
   * (RemittanceGenerator.java:65-74) that feeds the failure-count path.
@@ -41,30 +40,33 @@ object Generator {
             when(col("currency") === cur, lit(rate)).otherwise(acc)
         })
 
-  /** Deterministic batch generator: `n` transactions, 1 per `intervalMs`
-    * starting at `baseTsMillis`. */
-  def batch(spark: SparkSession, n: Long, baseTsMillis: Long = 1700000000000L,
-            intervalMs: Long = 2000L): DataFrame =
+  /** The wire fields, in wire order (Schemas.transactionSchema). */
+  private val wireCols = Schemas.transactionSchema.fieldNames.toSeq.map(col)
+
+  /** The producer's send period, `@Scheduled(fixedRate = 2000)`
+    * (RemittanceGenerator.java:31). */
+  private val IntervalMs = 2000L
+
+  /** Deterministic batch generator: `n` transactions, 1 per
+    * [[IntervalMs]] starting at `baseTsMillis`. */
+  def batch(spark: SparkSession, n: Long,
+            baseTsMillis: Long = 1700000000000L): DataFrame =
     derive(spark.range(0, n).toDF("i"))
-      .withColumn("timestamp", lit(baseTsMillis) + col("i") * intervalMs)
-      .select("transactionId", "senderId", "receiverId", "amount",
-        "currency", "exchangeRate", "timestamp")
+      .withColumn("timestamp", lit(baseTsMillis) + col("i") * IntervalMs)
+      .select(wireCols: _*)
 
   /** Streaming generator over the rate source; same derivation, event time
-    * = source timestamp. */
-  def stream(spark: SparkSession, rowsPerSecond: Int = 1): DataFrame =
+    * = source timestamp: the broker-free live form of the reference
+    * producer. No job starts it; StreamingSpec pins it against [[batch]]. */
+  def stream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
     derive(spark.readStream.format("rate")
         .option("rowsPerSecond", rowsPerSecond).load()
         .withColumnRenamed("value", "i"))
       .withColumn("timestamp", unix_millis(col("timestamp")))
-      .select("transactionId", "senderId", "receiverId", "amount",
-        "currency", "exchangeRate", "timestamp")
+      .select(wireCols: _*)
 
   /** The JSON wire form (K3 producer side, RemittanceGenerator.java:43-58):
     * one string `value` column, shaped like the Kafka payload. */
   def toWire(df: DataFrame): DataFrame =
-    df.select(to_json(struct(
-      col("transactionId"), col("senderId"), col("receiverId"),
-      col("amount"), col("currency"), col("exchangeRate"),
-      col("timestamp"))).as("value"))
+    df.select(to_json(struct(wireCols: _*)).as("value"))
 }

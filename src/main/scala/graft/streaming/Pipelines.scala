@@ -13,7 +13,7 @@ import graft.operators.{RiskLabeler, WindowMetrics}
   * (SURVEY.md §7 phase 0.4).
   *
   * Input contract: a DataFrame with a string `value` column holding the
-  * JSON wire shape (Kafka value), or already-parsed transaction columns.
+  * JSON wire shape (Kafka value).
   */
 object Pipelines {
 
@@ -25,34 +25,40 @@ object Pipelines {
   private def parseWire(raw: DataFrame): DataFrame =
     JsonCodec.parseTransactions(raw, col("value")).filter(!col("_corrupt"))
 
-  /** Pipeline B ("Metrics", StreamJob.java:94-218): parse → watermark →
-    * 10 s tumbling window → conditional aggregate → metric JSON line.
-    *
-    * @param watermark allowed lateness; reference uses monotonous
-    *                  timestamps ≈ "0 seconds" (SURVEY.md §2.4 T2)
-    */
-  def metricsPipeline(raw: DataFrame, watermark: String = "0 seconds",
-                      windowDur: String = "10 seconds"): DataFrame = {
+  /** The metrics branch's watermark delay: the reference's
+    * `forMonotonousTimestamps()` (StreamJob.java:102-105), whose watermark
+    * is the largest event time seen — allowed lateness 0 (SURVEY.md §2.4
+    * T2). */
+  private val MetricsWatermark = "0 seconds"
+
+  /** The metrics branch's tumbling window:
+    * `TumblingEventTimeWindows.of(Time.seconds(10))` (StreamJob.java:108-109). */
+  private val MetricsWindow = "10 seconds"
+
+  /** Pipeline B ("Metrics", StreamJob.java:94-218): parse →
+    * [[MetricsWatermark]] → [[MetricsWindow]] tumbling window → conditional
+    * aggregate → metric JSON line. */
+  def metricsPipeline(raw: DataFrame): DataFrame = {
     val parsed = parseWire(raw)
       .withColumn("event_time", eventTime)
-      .withWatermark("event_time", watermark)
+      .withWatermark("event_time", MetricsWatermark)
     val m = WindowMetrics.tumbling(parsed, col("event_time"),
       col("exchangeRate") =!= 0.0, col("amount"), col("exchangeRate"),
-      windowDur)
+      MetricsWindow)
     m.withColumn("line", JsonCodec.metricJson(
       col("window_start"), col("window_end"), col("cnt"),
       col("success_cnt"), col("failure_cnt"), col("avg_amount"),
       col("avg_rate"), col("min_amount"), col("max_amount")))
   }
 
-  /** Pipeline A ("Risk", StreamJob.java:55-90): parse → label → latency
-    * stamp → printf line. Stateless, and it sets no watermark: the
-    * reference assigns one on this branch too (T1), but nothing here
-    * reads it — no window, no state, no join. */
-  def riskPipeline(raw: DataFrame, threshold: Double = 1000.0): DataFrame = {
+  /** Pipeline A ("Risk", StreamJob.java:55-90): parse → label at
+    * [[RiskLabeler.Threshold]] → latency stamp → printf line. Stateless,
+    * and it sets no watermark: the reference assigns one on this branch
+    * too (T1), but nothing here reads it — no window, no state, no join. */
+  def riskPipeline(raw: DataFrame): DataFrame = {
     val parsed = parseWire(raw)
     val labeled = RiskLabeler.labelWithLatency(
-      parsed, col("amount"), col("timestamp"), threshold)
+      parsed, col("amount"), col("timestamp"))
     RiskLabeler.formatted(labeled, col("transactionId"), col("amount"))
   }
 
@@ -111,11 +117,10 @@ object Pipelines {
 
   /** Deterministic part of pipeline A (no wall-clock columns) — used by the
     * streaming-equals-batch equivalence tests. */
-  def riskPipelineDeterministic(raw: DataFrame,
-                                threshold: Double = 1000.0): DataFrame = {
+  def riskPipelineDeterministic(raw: DataFrame): DataFrame = {
     val parsed = parseWire(raw)
     RiskLabeler.formatted(
-      RiskLabeler.label(parsed, col("amount"), threshold),
+      RiskLabeler.label(parsed, col("amount")),
       col("transactionId"), col("amount"))
       .select(col("transactionId"), col("amount"), col("risk_type"), col("line"))
   }

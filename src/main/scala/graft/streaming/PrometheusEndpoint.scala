@@ -38,37 +38,15 @@ class PrometheusEndpoint(reporter: MetricsReporter, port: Int = 0) {
   def boundPort: Int = server.getAddress.getPort
   def stop(): Unit = server.stop(0)
 
-  /** One gauge per reporter series, `graft_`-prefixed (Prometheus metric
+  /** One sample per reporter series, `graft_`-prefixed (Prometheus metric
     * names admit `[a-zA-Z_:][a-zA-Z0-9_:]*`; every reporter id already
-    * fits). Values re-parse the reporter's display strings — the scrape
-    * and the dashboard see the identical rounded value, which is the
-    * reference's behavior too (it formats once, in MetricsService). */
-  private[streaming] def renderExposition: String = {
-    import scala.jdk.CollectionConverters._
-    val sb = new StringBuilder
-    reporter.latest.asScala.toSeq.sortBy(_._1).foreach { case (id, v) =>
-      val name = s"graft_$id"
-      sb.append(s"# HELP $name ${MetricsHelp.text(id)}\n")
-      sb.append(s"# TYPE $name gauge\n")
-      sb.append(s"$name $v\n")
-    }
-    sb.toString
-  }
-}
-
-private object MetricsHelp {
-  /** Help strings mirror what each series means in the reference's
-    * dashboard (MetricsService.java:33-63 id → PromQL mapping). */
-  def text(id: String): String = id match {
-    case "records_in_rate"     => "Input rows per second"
-    case "records_out_rate"    => "Processed rows per second"
-    case "avg_latency"         => "Micro-batch trigger execution ms"
-    case "checkpoint_size"     => "State store memory in MB"
-    case "checkpoint_duration" => "Offset commit duration ms"
-    case "heap_used"           => "JVM heap used MB"
-    case "heap_max"            => "JVM heap max MB"
-    case "cpu_load"            => "System load average"
-    case "dropped_late_rows"   => "Rows dropped by watermark"
-    case other                 => other
-  }
+    * fits), with the series' help text and type. Values are the
+    * series' display text — the scrape and the dashboard see the
+    * identical rounded value, which is the reference's behavior too (it
+    * formats once, in MetricsService). */
+  private[streaming] def renderExposition: String =
+    reporter.series.map { s =>
+      val name = s"graft_${s.id}"
+      s"# HELP $name ${s.help}\n# TYPE $name ${s.kind}\n$name ${s.text}\n"
+    }.mkString
 }

@@ -23,6 +23,19 @@ class CodecAndRiskSpec extends AnyFunSuite {
     assert(r.getAs[Long]("timestamp") == 1700000000000L)
   }
 
+  test("wire schema: RemittanceTransaction's fields in order, every one nullable") {
+    import org.apache.spark.sql.types._
+    assert(graft.core.Schemas.transactionSchema == StructType(Seq(
+      StructField("transactionId", StringType),
+      StructField("senderId", StringType),
+      StructField("receiverId", StringType),
+      StructField("amount", DoubleType),
+      StructField("currency", StringType),
+      StructField("exchangeRate", DoubleType),
+      StructField("timestamp", LongType))))
+    assert(graft.core.Schemas.transactionSchema.forall(_.nullable))
+  }
+
   test("corrupt rows are flagged, not fatal (better than the reference's crash)") {
     val df = Seq("""{"transactionId":"t1","amount":1.0,"timestamp":5}""",
       "not json at all", "").toDF("value")

@@ -212,53 +212,6 @@ class JdbcSinkSpec extends AnyFunSuite {
     assert(keyedRows == first)
   }
 
-  test("stagedUpsertBatch: 100k-row fact micro-batch lands distributed," +
-      " replay and partial re-emit stay duplicate-free") {
-    import org.apache.spark.sql.functions._
-    val t = "f_staged"
-    val cfg = cfgFor(t)
-    // 100k rows across 8 partitions — the shape upsertBatch's collect
-    // must never see
-    val batch = spark.range(100000L).repartition(8)
-      .select($"id".as("k"), ($"id" % 97).as("v"),
-        concat(lit("p"), $"id" % 1000).as("tag"))
-    Sources.stagedUpsertBatch(batch, cfg, keyCols = Seq("k"))
-
-    def agg: (Long, Long) = {
-      val conn = java.sql.DriverManager.getConnection(
-        cfg.url, cfg.user, cfg.password)
-      try {
-        val rs = conn.createStatement().executeQuery(
-          s"SELECT COUNT(*), SUM(v) FROM $t")
-        rs.next(); (rs.getLong(1), rs.getLong(2))
-      } finally conn.close()
-    }
-    val first = agg
-    assert(first._1 == 100000L)
-    // whole-batch replay (post-failure foreachBatch redelivery)
-    Sources.stagedUpsertBatch(batch, cfg, keyCols = Seq("k"))
-    assert(agg == first)
-    // partial re-emit with changed values: overwrites its keys, leaves
-    // the rest — and the stage table is empty between calls
-    val patch = spark.range(500L).repartition(3)
-      .select($"id".as("k"), lit(1000L).as("v"), lit("patched").as("tag"))
-    Sources.stagedUpsertBatch(patch, cfg, keyCols = Seq("k"))
-    val after = agg
-    assert(after._1 == 100000L)
-    assert(after._2 == first._2 - (0L until 500L).map(_ % 97).sum
-      + 500L * 1000L)
-  }
-
-  test("stagedUpsertBatch: rejects a batch whose key does not identify rows") {
-    val df = Seq((1000L, "a", 5L), (1000L, "b", 7L))
-      .toDF("window_start", "k", "cnt")
-    val e = intercept[IllegalArgumentException] {
-      Sources.stagedUpsertBatch(df, cfgFor("f_reject"),
-        keyCols = Seq("window_start"))
-    }
-    assert(e.getMessage.contains("duplicate values"))
-  }
-
   test("trigger cadence knob (T3): ProcessingTime drives repeated micro-batches") {
     implicit val sc = spark.sqlContext
     val t = "m_cadence"

@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec, WholeStageCodegenExec}
 import org.scalatest.Assertions._
 
@@ -25,13 +25,13 @@ import org.scalatest.Assertions._
 object KernelParity {
 
   def rows(df: DataFrame, cols: Column*): Seq[Row] = {
-    val spark = df.sparkSession
+    val spark = TestSession.spark
     val root = Files.createTempDirectory("graft-kernel-parity").toFile
     val path = new File(root, "rows").toString
     try {
       df.coalesce(1).write.parquet(path)
       def project() = spark.read.parquet(path).select(cols: _*)
-      val generated = withConf(spark,
+      val generated = TestSession.withConf(
           "spark.sql.codegen.wholeStage" -> "true",
           "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
           "spark.sql.codegen.fallback" -> "false") {
@@ -47,7 +47,7 @@ object KernelParity {
           s"the projection ran over a local relation:\n$plan")
         out
       }
-      val interpreted = withConf(spark,
+      val interpreted = TestSession.withConf(
           "spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
         project().collect().toSeq
@@ -66,18 +66,5 @@ object KernelParity {
     case r: Row => r.toSeq.map(bits)
     case s: scala.collection.Seq[_] => s.map(bits)
     case o => o
-  }
-
-  /** Runs `body` with the given settings, then restores each to its
-    * previous value (or unsets it). */
-  private def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      kv.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

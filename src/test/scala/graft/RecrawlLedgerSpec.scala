@@ -23,22 +23,6 @@ class RecrawlLedgerSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private val RoundMs = 60000L
 
-  /** transformWithState needs the RocksDB state store (column
-    * families); restore the previous provider afterwards. */
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf
-        .set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf
-        .unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-
   test("out-of-order stream converges to the batch pl29 classification; " +
       "buffers drain at watermark close") {
     implicit val sc = spark.sqlContext
@@ -66,7 +50,7 @@ class RecrawlLedgerSpec extends AnyFunSuite {
     val classified = RecrawlLedger.classify(spark,
       mem.toDF().toDF("canonical_url", "ts", "r", "period", "ck"),
       delay = "2 minutes")
-    withRocksDb {
+    TestSession.withConf(TestSession.RocksDb) {
       val q = classified.toDF()
         .writeStream.outputMode("append").format("memory")
         .queryName("recrawl_ledger").start()
@@ -114,7 +98,7 @@ class RecrawlLedgerSpec extends AnyFunSuite {
     val classified = RecrawlLedger.classify(spark,
       mem.toDF().toDF("canonical_url", "ts", "r", "period", "ck"),
       delay = "2 minutes")
-    withRocksDb {
+    TestSession.withConf(TestSession.RocksDb) {
       val q = classified.toDF()
         .writeStream.outputMode("append").format("memory")
         .queryName("recrawl_late").start()
@@ -146,7 +130,7 @@ class RecrawlLedgerSpec extends AnyFunSuite {
       mem.toDF().toDF("canonical_url", "ts", "r", "period", "ck"),
       delay = "2 minutes")
     val cells = RecrawlLedger.cellUpdates(classified)
-    withRocksDb {
+    TestSession.withConf(TestSession.RocksDb) {
       val q = cells.writeStream.outputMode("complete").format("memory")
         .queryName("recrawl_cells").start()
       try {

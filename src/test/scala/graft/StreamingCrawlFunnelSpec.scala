@@ -18,11 +18,7 @@ class StreamingCrawlFunnelSpec extends AnyFunSuite {
 
   test("replayed micro-batches reproduce batch tx29 stage counts") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSession.withConf(TestSession.RocksDb) {
       val docsDf = graft.core.Tables.load(spark, dir, "documents")
         .select($"doc_id", $"text")
       val n = docsDf.count()
@@ -102,11 +98,6 @@ class StreamingCrawlFunnelSpec extends AnyFunSuite {
           s"dropped=$dropped")
       // the funnel genuinely fired: each stage strictly below stage 0
       assert(s1.size < n && s2.size <= s1.size && s3.size <= s2.size)
-    } finally prev match {
-      case Some(p) => spark.conf
-        .set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf
-        .unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

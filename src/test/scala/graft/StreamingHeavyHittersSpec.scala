@@ -11,20 +11,8 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
-  private def withRocks[T](f: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(p) => spark.conf
-        .set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf
-        .unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("below capacity: exact counts (err 0) accumulate across batches") {
-    withRocks {
+    TestSession.withConf(TestSession.RocksDb) {
       implicit val sc = spark.sqlContext
       val mem = MemoryStream[String]
       val q = StreamingHeavyHitters.heavyHitters(spark,
@@ -53,7 +41,7 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
   }
 
   test("over capacity: Misra–Gries interval est ≤ true ≤ est + err holds") {
-    withRocks {
+    TestSession.withConf(TestSession.RocksDb) {
       implicit val sc = spark.sqlContext
       val mem = MemoryStream[String]
       // one shard so every token contends for the same 2 slots
@@ -88,7 +76,7 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
 
   test("decrement-emptied map keeps its error bound across batches " +
       "(TTL NONE interval contract)") {
-    withRocks {
+    TestSession.withConf(TestSession.RocksDb) {
       implicit val sc = spark.sqlContext
       val mem = MemoryStream[String]
       // capacity 1, one shard: batch 1 [aa bb] inserts aa, bb overflows

@@ -2,7 +2,13 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.streaming.{Generator, Pipelines}
 
 /** Streaming ≡ batch: the same combinators produce the same rows under
@@ -11,6 +17,35 @@ import graft.streaming.{Generator, Pipelines}
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
+
+  /** Added after a reporter to the same listener bus: a progress this
+    * probe has seen, the reporter has seen too. */
+  private class ProgressProbe extends StreamingQueryListener {
+    private val seen = ConcurrentHashMap.newKeySet[(UUID, Long, String)]()
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      seen.add((e.progress.id, e.progress.batchId, e.progress.timestamp))
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    def delivered(p: StreamingQueryProgress): Boolean =
+      p != null && seen.contains((p.id, p.batchId, p.timestamp))
+  }
+
+  /** No idle progress reports, so a query's last progress stays its last
+    * micro-batch for the length of a test. */
+  private val NoIdleProgress =
+    "spark.sql.streaming.noDataProgressEventInterval" -> "1h"
+
+  /** The reporter series computed over live queries only. */
+  private val PerQuery = Seq("avg_latency", "checkpoint_duration",
+    "checkpoint_size", "records_in_rate", "records_out_rate")
+
+  private val MB = 1048576.0
+
+  private def values(rep: graft.streaming.MetricsReporter) =
+    rep.series.map(s => s.id -> s.value).toMap
+
+  private def stateBytes(p: StreamingQueryProgress) =
+    p.stateOperators.map(_.memoryUsedBytes).sum.toDouble
 
   private def runStream(jsonRows: Seq[String], queryName: String,
                         pipeline: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -51,7 +86,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[String]
     def tx(id: String, ts: Long) =
       s"""{"transactionId":"$id","senderId":"s","receiverId":"r","amount":1.0,"currency":"USD","exchangeRate":1.0,"timestamp":$ts}"""
-    val q = Pipelines.metricsPipeline(mem.toDF(), watermark = "0 seconds")
+    val q = Pipelines.metricsPipeline(mem.toDF())
       .writeStream.outputMode("append").format("memory")
       .queryName("late_drop").start()
     try {
@@ -92,22 +127,47 @@ class StreamingSpec extends AnyFunSuite {
   test("metrics reporter captures progress with the reference metric ids") {
     implicit val sc = spark.sqlContext
     val rep = new graft.streaming.MetricsReporter
+    val probe = new ProgressProbe
     spark.streams.addListener(rep)
-    val mem = MemoryStream[String]
-    val q = Pipelines.metricsPipeline(mem.toDF())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("rep_q").start()
-    try {
-      mem.addData(Generator.toWire(Generator.batch(spark, 20))
-        .as[String].collect().toSeq)
-      q.processAllAvailable()
-    } finally { q.stop(); spark.streams.removeListener(rep) }
+    spark.streams.addListener(probe)
+    try TestSession.withConf(NoIdleProgress) {
+      val mem = MemoryStream[String]
+      val q = Pipelines.metricsPipeline(mem.toDF())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("rep_q").start()
+      try {
+        mem.addData(Generator.toWire(Generator.batch(spark, 20))
+          .as[String].collect().toSeq)
+        q.processAllAvailable()
+        eventually(timeout(30.seconds)) {
+          val p = q.lastProgress
+          assert(probe.delivered(p))
+          val v = values(rep)
+          assert(v("avg_latency") == p.durationMs.get("triggerExecution").doubleValue, v)
+          assert(v("checkpoint_size") == stateBytes(p) / MB, v)
+          assert(v("records_in_rate") == p.inputRowsPerSecond, v)
+          assert(v("records_out_rate") == p.processedRowsPerSecond, v)
+        }
+        // values only a progress report can set
+        val v = values(rep)
+        assert(v("avg_latency") > 0 && v("checkpoint_size") > 0, v)
+      } finally q.stop()
+      // a terminated query leaves every series computed over live queries
+      eventually(timeout(30.seconds)) {
+        val v = values(rep)
+        PerQuery.foreach(id => assert(v(id) == 0.0, s"$id: $v"))
+      }
+    } finally {
+      spark.streams.removeListener(probe)
+      spark.streams.removeListener(rep)
+    }
     val ids = Seq("records_in_rate", "records_out_rate", "avg_latency",
       "checkpoint_size", "heap_used", "dropped_late_rows")
-    ids.foreach(id => assert(rep.latest.containsKey(id), s"missing $id"))
+    val listed = rep.series.map(_.id).toSet
+    ids.foreach(id => assert(listed.contains(id), s"missing $id"))
     // no series Spark cannot back: no max-latency copy, no constant 0
     Seq("max_latency", "backpressure").foreach(id =>
-      assert(!rep.latest.containsKey(id), s"unbacked series $id"))
+      assert(!listed.contains(id), s"unbacked series $id"))
     assert(rep.snapshotJson.startsWith("{"))
   }
 
@@ -141,14 +201,131 @@ class StreamingSpec extends AnyFunSuite {
         assert(name.matches("[a-zA-Z_:][a-zA-Z0-9_:]*"), l)
         assert(!value.toDouble.isNaN, l)
       }
-      Seq("records_in_rate", "records_out_rate", "avg_latency",
-        "checkpoint_size", "dropped_late_rows").foreach { id =>
-        assert(body.contains(s"# TYPE graft_$id gauge"), s"missing $id")
+      Seq("records_in_rate" -> "gauge", "records_out_rate" -> "gauge",
+        "avg_latency" -> "gauge", "checkpoint_size" -> "gauge",
+        "dropped_late_rows" -> "counter").foreach { case (id, kind) =>
+        assert(body.contains(s"# TYPE graft_$id $kind"), s"missing $id")
         assert(lines.exists(_.startsWith(s"graft_$id ")), s"missing $id value")
       }
     } finally {
       ep.stop(); q.stop(); spark.streams.removeListener(rep)
     }
+  }
+
+  test("one reporter over two live queries: a stateless query's report " +
+      "resets none of the stateful query's drops, state memory or rates") {
+    implicit val sc = spark.sqlContext
+    val rep = new graft.streaming.MetricsReporter
+    val probe = new ProgressProbe
+    def tx(id: String, ts: Long) =
+      s"""{"transactionId":"$id","senderId":"s","receiverId":"r","amount":1.0,"currency":"USD","exchangeRate":1.0,"timestamp":$ts}"""
+    spark.streams.addListener(rep)
+    spark.streams.addListener(probe)
+    try TestSession.withConf(NoIdleProgress) {
+      val mMem = MemoryStream[String]
+      val rMem = MemoryStream[String]
+      val mq = Pipelines.metricsPipeline(mMem.toDF())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("rep2_metrics").start()
+      val rq = Pipelines.riskPipeline(rMem.toDF())
+        .writeStream.format("memory").queryName("rep2_risk").start()
+      try {
+        mMem.addData(Seq(tx("a", 5000L), tx("b", 15000L)))
+        mq.processAllAvailable()
+        mMem.addData(Seq(tx("future", 1000000L))) // watermark -> 1000 s
+        mq.processAllAvailable()
+        mMem.addData(Seq(tx("late", 6000L))) // behind the watermark: dropped
+        mq.processAllAvailable()
+        eventually(timeout(30.seconds)) { assert(probe.delivered(mq.lastProgress)) }
+        val m = mq.lastProgress
+        val before = values(rep)
+        assert(before("dropped_late_rows") == 1.0, before)
+        assert(before("checkpoint_size") == stateBytes(m) / MB, before)
+        assert(before("records_in_rate") == m.inputRowsPerSecond, before)
+        assert(before("checkpoint_size") > 0 && before("records_in_rate") > 0 &&
+          before("records_out_rate") > 0, before)
+        // the stateless query reports after the late row
+        rMem.addData(Seq(tx("r1", 1000L), tx("r2", 2000L)))
+        rq.processAllAvailable()
+        eventually(timeout(30.seconds)) { assert(probe.delivered(rq.lastProgress)) }
+        val r = rq.lastProgress
+        assert(mq.lastProgress eq m, "the metrics query reported again")
+        assert(stateBytes(r) == 0 && r.processedRowsPerSecond > 0)
+        val v = values(rep)
+        assert(rep.series.find(_.id == "dropped_late_rows").get.text == "1")
+        assert(v("dropped_late_rows") == 1.0, v)
+        assert(v("checkpoint_size") == before("checkpoint_size"), v)
+        assert(v("records_in_rate") == m.inputRowsPerSecond + r.inputRowsPerSecond, v)
+        assert(v("records_out_rate") ==
+          m.processedRowsPerSecond + r.processedRowsPerSecond, v)
+        assert(v("avg_latency") == Seq(m, r)
+          .map(_.durationMs.get("triggerExecution").doubleValue).max, v)
+        // the stopped query's state memory and rates leave the sums; its
+        // drops stay in the running total
+        mq.stop()
+        eventually(timeout(30.seconds)) {
+          val v = values(rep)
+          assert(v("checkpoint_size") == 0.0, v)
+          assert(v("records_in_rate") == r.inputRowsPerSecond, v)
+          assert(v("records_out_rate") == r.processedRowsPerSecond, v)
+          assert(v("dropped_late_rows") == 1.0, v)
+        }
+      } finally { mq.stop(); rq.stop() }
+    } finally {
+      spark.streams.removeListener(probe)
+      spark.streams.removeListener(rep)
+    }
+  }
+
+  test("metrics reporter counts a source that two queries read once") {
+    val rep = new graft.streaming.MetricsReporter
+    val probe = new ProgressProbe
+    val dir = java.nio.file.Files.createTempDirectory("graft-two-readers-")
+      .toString
+    def write(from: Long) =
+      spark.range(from, from + 50).toDF("i").coalesce(1)
+        .write.mode("append").parquet(dir)
+    write(0)
+    spark.streams.addListener(rep)
+    spark.streams.addListener(probe)
+    try TestSession.withConf(NoIdleProgress) {
+      val src = graft.sources.Sources.fileStream(spark, dir,
+        spark.read.parquet(dir).schema)
+      val qs = Seq("two_readers_a", "two_readers_b")
+        .map(n => src.writeStream.format("memory").queryName(n).start())
+      try {
+        qs.foreach(_.processAllAvailable())
+        write(50) // each query's second batch: a finite, positive input rate
+        qs.foreach(_.processAllAvailable())
+        eventually(timeout(30.seconds)) {
+          qs.foreach(q => assert(probe.delivered(q.lastProgress)))
+        }
+        val ps = qs.map(_.lastProgress)
+        assert(ps.map(_.sources.map(_.description).toSeq).distinct.size == 1)
+        assert(ps.forall(_.inputRowsPerSecond > 0), ps.map(_.inputRowsPerSecond))
+        val v = values(rep)
+        assert(v("records_in_rate") == ps.map(_.inputRowsPerSecond).max, v)
+        assert(v("records_out_rate") == ps.map(_.processedRowsPerSecond).sum, v)
+      } finally qs.foreach(_.stop())
+    } finally {
+      spark.streams.removeListener(probe)
+      spark.streams.removeListener(rep)
+    }
+  }
+
+  test("rate-source generator: each row equals the batch generator's row " +
+      "for its transactionId, timestamp aside") {
+    val q = Generator.stream(spark, rowsPerSecond = 200)
+      .writeStream.format("memory").queryName("gen_stream").start()
+    try eventually(timeout(60.seconds)) {
+      assert(spark.table("gen_stream").count() >= 20)
+    } finally q.stop()
+    val streamed = spark.table("gen_stream").drop("timestamp").collect()
+    // the rate source numbers its rows 0, 1, 2, ... with no gap
+    val batch = Generator.batch(spark, streamed.length).drop("timestamp")
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(streamed.length >= 20 && batch.size == streamed.length)
+    streamed.foreach(r => assert(batch.get(r.getString(0)).contains(r), r))
   }
 
   test("flatMapGroupsWithState: per-sender running totals with alerts") {
@@ -181,7 +358,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[String]
     def tx(id: String, amt: Double, ts: Long) =
       s"""{"transactionId":"$id","senderId":"s","receiverId":"r","amount":$amt,"currency":"USD","exchangeRate":1.0,"timestamp":$ts}"""
-    val q = Pipelines.metricsPipeline(mem.toDF(), watermark = "0 seconds")
+    val q = Pipelines.metricsPipeline(mem.toDF())
       .writeStream.outputMode("update").format("memory")
       .queryName("upd_metrics").start()
     try {
@@ -527,37 +704,30 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming embedding near-dup: perturbed vector found across micro-batches") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val dims = 16
-    val rnd = new scala.util.Random(7)
-    val base = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-    val nearDup = base.map(x => x + 0.001f) // tiny perturbation, cos ≈ 1
-    val unrelated = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingDedup.embeddingNearDupCandidates(spark,
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        dims = dims, planes = 16, bands = 8, maxPerBucket = 8)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_emb_dedup").start()
-    try {
-      mem.addData(Seq((1L, base.toSeq), (3L, unrelated.toSeq)))
-      q.processAllAvailable()
-      mem.addData(Seq((2L, nearDup.toSeq)))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      val dims = 16
+      val rnd = new scala.util.Random(7)
+      val base = Array.fill(dims)(rnd.nextFloat() - 0.5f)
+      val nearDup = base.map(x => x + 0.001f) // tiny perturbation, cos ≈ 1
+      val unrelated = Array.fill(dims)(rnd.nextFloat() - 0.5f)
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = graft.streaming.StreamingDedup.embeddingNearDupCandidates(spark,
+          mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+          dims = dims, planes = 16, bands = 8, maxPerBucket = 8)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_emb_dedup").start()
+      try {
+        mem.addData(Seq((1L, base.toSeq), (3L, unrelated.toSeq)))
+        q.processAllAvailable()
+        mem.addData(Seq((2L, nearDup.toSeq)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val pairs = spark.table("stream_emb_dedup").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(pairs.contains((1L, 2L)), s"cross-batch embedding dup missed: $pairs")
+      assert(pairs((1L, 2L)) >= 0.9) // near-identical vectors agree on ~all planes
     }
-    val pairs = spark.table("stream_emb_dedup").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(pairs.contains((1L, 2L)), s"cross-batch embedding dup missed: $pairs")
-    assert(pairs((1L, 2L)) >= 0.9) // near-identical vectors agree on ~all planes
   }
 
   test("exact streaming dedup: dropDuplicatesWithinWatermark drops cross-batch repeats") {
@@ -583,44 +753,37 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming near-dup dedup: planted dups across micro-batches detected, bucket capped") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = "the quick brown fox jumps over the lazy dog while rain " +
-      "falls gently on the quiet harbor town at dusk"
-    // a LAST-word edit changes exactly one k=3 shingle → J = 17/19; with
-    // 8 bands of 2 the planted pair shares 5 buckets (verified) — the
-    // collision is deterministic for these fixed strings, not luck
-    val nearDup = base.replace("dusk", "dawn")
-    val unrelated = "completely different content about spark shuffles " +
-      "partitions aggregation codegen and columnar parquet readers at scale"
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedup.nearDupCandidates(spark,
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        bands = 8, maxPerBucket = 8)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_dedup").start()
-    try {
-      // the near-dups arrive in DIFFERENT micro-batches: detection relies
-      // on bucket state surviving across batches (state IS the index)
-      mem.addData(Seq((1L, base), (3L, unrelated)))
-      q.processAllAvailable()
-      mem.addData(Seq((2L, nearDup)))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      val base = "the quick brown fox jumps over the lazy dog while rain " +
+        "falls gently on the quiet harbor town at dusk"
+      // a LAST-word edit changes exactly one k=3 shingle → J = 17/19; with
+      // 8 bands of 2 the planted pair shares 5 buckets (verified) — the
+      // collision is deterministic for these fixed strings, not luck
+      val nearDup = base.replace("dusk", "dawn")
+      val unrelated = "completely different content about spark shuffles " +
+        "partitions aggregation codegen and columnar parquet readers at scale"
+      val mem = MemoryStream[(Long, String)]
+      val q = graft.streaming.StreamingDedup.nearDupCandidates(spark,
+          mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
+          bands = 8, maxPerBucket = 8)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_dedup").start()
+      try {
+        // the near-dups arrive in DIFFERENT micro-batches: detection relies
+        // on bucket state surviving across batches (state IS the index)
+        mem.addData(Seq((1L, base), (3L, unrelated)))
+        q.processAllAvailable()
+        mem.addData(Seq((2L, nearDup)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val pairs = spark.table("stream_dedup").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(pairs.contains((1L, 2L)), s"cross-batch near-dup missed: $pairs")
+      assert(pairs((1L, 2L)) >= 0.8) // one shingle changed → most mins agree
+      assert(!pairs.keys.exists { case (a, b) => a == 3L || b == 3L },
+        "unrelated doc must not pair")
     }
-    val pairs = spark.table("stream_dedup").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(pairs.contains((1L, 2L)), s"cross-batch near-dup missed: $pairs")
-    assert(pairs((1L, 2L)) >= 0.8) // one shingle changed → most mins agree
-    assert(!pairs.keys.exists { case (a, b) => a == 3L || b == 3L },
-      "unrelated doc must not pair")
   }
 
   test("bounded ingest: maxFilesPerTrigger caps every micro-batch of a backlog") {
@@ -660,263 +823,221 @@ class StreamingSpec extends AnyFunSuite {
 
   test("verified streaming near-dup: signature collision with low true similarity rejected") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // hand-crafted banded rows force the failure mode that is nearly
-    // impossible to plant end-to-end: docs 1 and 2 share a bucket with
-    // IDENTICAL signatures (sig_agree = 1.0, the strongest possible
-    // sketch evidence) but their true shingle sets are disjoint — a pure
-    // LSH/sketch collision. Doc 3 is a genuine near-dup of doc 1.
-    val sig = Seq(7L, 8L, 9L, 10L)
-    val sh1 = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L)
-    val sh2 = Seq(101L, 102L, 103L, 104L, 105L, 106L, 107L, 108L, 109L, 110L)
-    val sh3 = sh1.take(9) :+ 999L // J(sh1, sh3) = 9/11 ≈ 0.818
-    val mem = MemoryStream[(String, Long, Seq[Long], Seq[Long])]
-    val q = graft.streaming.StreamingDedup.verifiedText(spark,
-        mem.toDF().toDF("bucket_key", "doc", "sig", "shh"),
-        maxPerBucket = 8, ttl = org.apache.spark.sql.streaming.TTLConfig.NONE,
-        jaccardThreshold = 0.5)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_verified").start()
-    try {
-      mem.addData(Seq(("0:b", 1L, sig, sh1)))
-      q.processAllAvailable()
-      // the collision and the true dup arrive in LATER micro-batches
-      mem.addData(Seq(("0:b", 2L, sig, sh2)))
-      q.processAllAvailable()
-      mem.addData(Seq(("0:b", 3L, sig, sh3)))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      // hand-crafted banded rows force the failure mode that is nearly
+      // impossible to plant end-to-end: docs 1 and 2 share a bucket with
+      // IDENTICAL signatures (sig_agree = 1.0, the strongest possible
+      // sketch evidence) but their true shingle sets are disjoint — a pure
+      // LSH/sketch collision. Doc 3 is a genuine near-dup of doc 1.
+      val sig = Seq(7L, 8L, 9L, 10L)
+      val sh1 = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L)
+      val sh2 = Seq(101L, 102L, 103L, 104L, 105L, 106L, 107L, 108L, 109L, 110L)
+      val sh3 = sh1.take(9) :+ 999L // J(sh1, sh3) = 9/11 ≈ 0.818
+      val mem = MemoryStream[(String, Long, Seq[Long], Seq[Long])]
+      val q = graft.streaming.StreamingDedup.verifiedText(spark,
+          mem.toDF().toDF("bucket_key", "doc", "sig", "shh"),
+          maxPerBucket = 8, ttl = org.apache.spark.sql.streaming.TTLConfig.NONE,
+          jaccardThreshold = 0.5)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_verified").start()
+      try {
+        mem.addData(Seq(("0:b", 1L, sig, sh1)))
+        q.processAllAvailable()
+        // the collision and the true dup arrive in LATER micro-batches
+        mem.addData(Seq(("0:b", 2L, sig, sh2)))
+        q.processAllAvailable()
+        mem.addData(Seq(("0:b", 3L, sig, sh3)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val pairs = spark.table("stream_verified").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
+      assert(!pairs.contains((1L, 2L)),
+        s"sketch collision must be rejected by exact Jaccard: $pairs")
+      assert(pairs.contains((1L, 3L)), s"true near-dup missed: $pairs")
+      assert(math.abs(pairs((1L, 3L)) - 9.0 / 11.0) < 1e-12)
+      assert(!pairs.contains((2L, 3L)), "disjoint pair must be rejected")
+      // keep-first drop decision: the LATER arrival is the duplicate
+      val dup = spark.table("stream_verified").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4)).toMap
+      assert(dup((1L, 3L)) == 3L, "dup_doc must be the later arrival")
     }
-    val pairs = spark.table("stream_verified").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-    assert(!pairs.contains((1L, 2L)),
-      s"sketch collision must be rejected by exact Jaccard: $pairs")
-    assert(pairs.contains((1L, 3L)), s"true near-dup missed: $pairs")
-    assert(math.abs(pairs((1L, 3L)) - 9.0 / 11.0) < 1e-12)
-    assert(!pairs.contains((2L, 3L)), "disjoint pair must be rejected")
-    // keep-first drop decision: the LATER arrival is the duplicate
-    val dup = spark.table("stream_verified").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4)).toMap
-    assert(dup((1L, 3L)) == 3L, "dup_doc must be the later arrival")
   }
 
   test("bucket cap closes the bucket: over-cap arrivals emit nothing, redelivery idempotent") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // cap=1: doc 1 fills the bucket; doc 2 (a perfect match on both
-    // signature AND content) must emit NOTHING — an at-cap arrival is
-    // neither stored nor compared (the batch annLsh membership-cap
-    // semantics). Emitting without storing would also re-emit the same
-    // pairs on every at-least-once redelivery, which the repeated
-    // delivery of doc 2 below would expose.
-    val sig = Seq(7L, 8L)
-    val sh = Seq(1L, 2L, 3L)
-    val mem = MemoryStream[(String, Long, Seq[Long], Seq[Long])]
-    val q = graft.streaming.StreamingDedup.verifiedText(spark,
-        mem.toDF().toDF("bucket_key", "doc", "sig", "shh"),
-        maxPerBucket = 1, ttl = org.apache.spark.sql.streaming.TTLConfig.NONE,
-        jaccardThreshold = 0.5)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_capped").start()
-    try {
-      mem.addData(Seq(("0:b", 1L, sig, sh)))
-      q.processAllAvailable()
-      mem.addData(Seq(("0:b", 2L, sig, sh)))
-      q.processAllAvailable()
-      mem.addData(Seq(("0:b", 2L, sig, sh))) // redelivery of the over-cap doc
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      // cap=1: doc 1 fills the bucket; doc 2 (a perfect match on both
+      // signature AND content) must emit NOTHING — an at-cap arrival is
+      // neither stored nor compared (the batch annLsh membership-cap
+      // semantics). Emitting without storing would also re-emit the same
+      // pairs on every at-least-once redelivery, which the repeated
+      // delivery of doc 2 below would expose.
+      val sig = Seq(7L, 8L)
+      val sh = Seq(1L, 2L, 3L)
+      val mem = MemoryStream[(String, Long, Seq[Long], Seq[Long])]
+      val q = graft.streaming.StreamingDedup.verifiedText(spark,
+          mem.toDF().toDF("bucket_key", "doc", "sig", "shh"),
+          maxPerBucket = 1, ttl = org.apache.spark.sql.streaming.TTLConfig.NONE,
+          jaccardThreshold = 0.5)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_capped").start()
+      try {
+        mem.addData(Seq(("0:b", 1L, sig, sh)))
+        q.processAllAvailable()
+        mem.addData(Seq(("0:b", 2L, sig, sh)))
+        q.processAllAvailable()
+        mem.addData(Seq(("0:b", 2L, sig, sh))) // redelivery of the over-cap doc
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.table("stream_capped").count() == 0L,
+        "a full bucket must admit and emit nothing")
     }
-    assert(spark.table("stream_capped").count() == 0L,
-      "a full bucket must admit and emit nothing")
   }
 
   test("verified streaming embedding near-dup: exact cosine gates emission end-to-end") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val dims = 16
-    val rnd = new scala.util.Random(7)
-    val base = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-    val nearDup = base.map(x => x + 0.001f)
-    val unrelated = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingDedup.embeddingNearDupVerified(spark,
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        dims = dims, planes = 16, bands = 8, maxPerBucket = 8,
-        cosineThreshold = 0.9)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_emb_verified").start()
-    try {
-      mem.addData(Seq((1L, base.toSeq), (3L, unrelated.toSeq)))
-      q.processAllAvailable()
-      mem.addData(Seq((2L, nearDup.toSeq)))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      val dims = 16
+      val rnd = new scala.util.Random(7)
+      val base = Array.fill(dims)(rnd.nextFloat() - 0.5f)
+      val nearDup = base.map(x => x + 0.001f)
+      val unrelated = Array.fill(dims)(rnd.nextFloat() - 0.5f)
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = graft.streaming.StreamingDedup.embeddingNearDupVerified(spark,
+          mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+          dims = dims, planes = 16, bands = 8, maxPerBucket = 8,
+          cosineThreshold = 0.9)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_emb_verified").start()
+      try {
+        mem.addData(Seq((1L, base.toSeq), (3L, unrelated.toSeq)))
+        q.processAllAvailable()
+        mem.addData(Seq((2L, nearDup.toSeq)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.table("stream_emb_verified").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
+      assert(rows.contains((1L, 2L)), s"cross-batch embedding dup missed: $rows")
+      // emitted sim is the EXACT cosine, not the plane-agreement estimate
+      val expect = graft.streaming.StreamingDedup.cosineSeq(
+        base.toSeq, nearDup.toSeq)
+      assert(rows((1L, 2L)) == expect)
+      assert(rows((1L, 2L)) >= 0.9)
+      // any bucket the unrelated vector shares is verified away by cosine
+      assert(!rows.keys.exists { case (a, b) => a == 3L || b == 3L },
+        s"unrelated vector must not survive exact verification: $rows")
     }
-    val rows = spark.table("stream_emb_verified").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-    assert(rows.contains((1L, 2L)), s"cross-batch embedding dup missed: $rows")
-    // emitted sim is the EXACT cosine, not the plane-agreement estimate
-    val expect = graft.streaming.StreamingDedup.cosineSeq(
-      base.toSeq, nearDup.toSeq)
-    assert(rows((1L, 2L)) == expect)
-    assert(rows((1L, 2L)) >= 0.9)
-    // any bucket the unrelated vector shares is verified away by cosine
-    assert(!rows.keys.exists { case (a, b) => a == 3L || b == 3L },
-      s"unrelated vector must not survive exact verification: $rows")
   }
 
   test("transformWithState: typed ValueState running max on RocksDB provider") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[(String, Double)]
-    val q = graft.streaming.StatefulOps.runningMax(spark, mem.toDS())
-      .toDF("key", "running_max")
-      .writeStream.outputMode("update").format("memory")
-      .queryName("tws").start()
-    try {
-      mem.addData(Seq(("a", 1.0), ("a", 5.0), ("b", 2.0)))
-      q.processAllAvailable()
-      mem.addData(Seq(("a", 3.0), ("b", 7.0)))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      val mem = MemoryStream[(String, Double)]
+      val q = graft.streaming.StatefulOps.runningMax(spark, mem.toDS())
+        .toDF("key", "running_max")
+        .writeStream.outputMode("update").format("memory")
+        .queryName("tws").start()
+      try {
+        mem.addData(Seq(("a", 1.0), ("a", 5.0), ("b", 2.0)))
+        q.processAllAvailable()
+        mem.addData(Seq(("a", 3.0), ("b", 7.0)))
+        q.processAllAvailable()
+      } finally q.stop()
+      // latest update per key reflects state carried across micro-batches:
+      // a's max stays 5.0 (3.0 doesn't raise it), b's rises to 7.0
+      val rows = spark.table("tws").collect()
+        .map(r => (r.getString(0), r.getDouble(1)))
+      assert(rows.contains(("a", 5.0)) && rows.count(_ == ("a", 5.0)) == 2)
+      assert(rows.contains(("b", 2.0)) && rows.contains(("b", 7.0)))
     }
-    // latest update per key reflects state carried across micro-batches:
-    // a's max stays 5.0 (3.0 doesn't raise it), b's rises to 7.0
-    val rows = spark.table("tws").collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-    assert(rows.contains(("a", 5.0)) && rows.count(_ == ("a", 5.0)) == 2)
-    assert(rows.contains(("b", 2.0)) && rows.contains(("b", 7.0)))
   }
 
   test("transformWithState: streaming anomaly flags ≡ q67 batch, bit-for-bit") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // user 1: ten alternating 9/11 priors, then 1000 (flagged), then 10;
-    // user 2: stays in warmup. In-order ingest split MID-HISTORY across
-    // micro-batches — the flag decision in batch 2 depends on state
-    // accumulated in batch 1.
-    val alt = Seq.tabulate(10)(i => if (i % 2 == 0) 9.0 else 11.0)
-    val rows = (alt ++ Seq(1000.0, 10.0)).zipWithIndex.map { case (v, i) =>
-      (1L, 100L + i, new java.sql.Timestamp(10000L * (i + 1)), v) } ++
-      Seq.tabulate(5)(i =>
-        (2L, 200L + i, new java.sql.Timestamp(10000L * (i + 1)), 500.0))
-    val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-    val q = graft.streaming.StatefulOps.userAnomalies(spark,
-        mem.toDS().toDF("user_id", "event_id", "ts", "value"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("anom").start()
-    try {
-      val (b1, b2) = rows.splitAt(6)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-    val got = spark.table("anom").collect().map(r =>
-      (r.getAs[Long]("event_id"), r.getAs[Long]("n_prior"),
-        r.getAs[Double]("mean_prior"), r.getAs[Double]("z"))).toSet
-    // batch twin over the identical rows written as an events fixture
-    val dir = java.nio.file.Files.createTempDirectory("graft-anom").toString
-    rows.toDF("user_id", "event_id", "ts", "value")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        lit("view").as("event_type"), col("value"), lit("{}").as("props"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val want = SparkEntry.queries("q67_user_anomaly")(spark, dir)
-      .collect().map(r =>
+    TestSession.withConf(TestSession.RocksDb) {
+      // user 1: ten alternating 9/11 priors, then 1000 (flagged), then 10;
+      // user 2: stays in warmup. In-order ingest split MID-HISTORY across
+      // micro-batches — the flag decision in batch 2 depends on state
+      // accumulated in batch 1.
+      val alt = Seq.tabulate(10)(i => if (i % 2 == 0) 9.0 else 11.0)
+      val rows = (alt ++ Seq(1000.0, 10.0)).zipWithIndex.map { case (v, i) =>
+        (1L, 100L + i, new java.sql.Timestamp(10000L * (i + 1)), v) } ++
+        Seq.tabulate(5)(i =>
+          (2L, 200L + i, new java.sql.Timestamp(10000L * (i + 1)), 500.0))
+      val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
+      val q = graft.streaming.StatefulOps.userAnomalies(spark,
+          mem.toDS().toDF("user_id", "event_id", "ts", "value"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("anom").start()
+      try {
+        val (b1, b2) = rows.splitAt(6)
+        mem.addData(b1); q.processAllAvailable()
+        mem.addData(b2); q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.table("anom").collect().map(r =>
         (r.getAs[Long]("event_id"), r.getAs[Long]("n_prior"),
           r.getAs[Double]("mean_prior"), r.getAs[Double]("z"))).toSet
-    assert(want.nonEmpty && got == want,
-      s"stream $got must equal batch $want EXACTLY (decimal-quantized state)")
+      // batch twin over the identical rows written as an events fixture
+      val dir = java.nio.file.Files.createTempDirectory("graft-anom").toString
+      rows.toDF("user_id", "event_id", "ts", "value")
+        .select(col("event_id"), col("ts"), col("user_id"),
+          lit("view").as("event_type"), col("value"), lit("{}").as("props"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val want = SparkEntry.queries("q67_user_anomaly")(spark, dir)
+        .collect().map(r =>
+          (r.getAs[Long]("event_id"), r.getAs[Long]("n_prior"),
+            r.getAs[Double]("mean_prior"), r.getAs[Double]("z"))).toSet
+      assert(want.nonEmpty && got == want,
+        s"stream $got must equal batch $want EXACTLY (decimal-quantized state)")
+    }
   }
 
   test("transformWithState: online attribution ≡ q80 batch under in-order ingest") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    // user 1: click→purchase (attributed), then a view whose credit
-    // EXPIRES (gap 3700 s > 3600); user 2: purchase with no prior
-    // marketing (direct), then view→purchase. Split MID-STREAM so the
-    // decisive click state crosses micro-batches.
-    val rows = Seq(
-      (1L, 100L, ts(100), "click", 10.0),
-      (2L, 201L, ts(150), "purchase", 70.0),
-      (1L, 101L, ts(200), "purchase", 50.0),
-      (1L, 102L, ts(300), "view", 0.0),
-      (2L, 202L, ts(350), "view", 0.0),
-      (2L, 203L, ts(360), "purchase", 30.0),
-      (1L, 103L, ts(4000), "purchase", 20.0))
-    val mem = MemoryStream[(Long, Long, java.sql.Timestamp, String, Double)]
-    val q = graft.streaming.StatefulOps.attributePurchases(spark,
-        mem.toDS().toDF("user_id", "event_id", "ts", "event_type", "value"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("attr_q").start()
-    try {
-      val (b1, b2) = rows.splitAt(3)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+      // user 1: click→purchase (attributed), then a view whose credit
+      // EXPIRES (gap 3700 s > 3600); user 2: purchase with no prior
+      // marketing (direct), then view→purchase. Split MID-STREAM so the
+      // decisive click state crosses micro-batches.
+      val rows = Seq(
+        (1L, 100L, ts(100), "click", 10.0),
+        (2L, 201L, ts(150), "purchase", 70.0),
+        (1L, 101L, ts(200), "purchase", 50.0),
+        (1L, 102L, ts(300), "view", 0.0),
+        (2L, 202L, ts(350), "view", 0.0),
+        (2L, 203L, ts(360), "purchase", 30.0),
+        (1L, 103L, ts(4000), "purchase", 20.0))
+      val mem = MemoryStream[(Long, Long, java.sql.Timestamp, String, Double)]
+      val q = graft.streaming.StatefulOps.attributePurchases(spark,
+          mem.toDS().toDF("user_id", "event_id", "ts", "event_type", "value"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("attr_q").start()
+      try {
+        val (b1, b2) = rows.splitAt(3)
+        mem.addData(b1); q.processAllAvailable()
+        mem.addData(b2); q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.table("attr_q").collect().map(r =>
+        r.getAs[Long]("event_id") -> r.getAs[String]("attr")).toMap
+      assert(got == Map(101L -> "click", 103L -> "direct",
+        201L -> "direct", 203L -> "view"))
+      // batch twin over the identical rows written as an events fixture:
+      // aggregate counts/revenue must agree with the online credits
+      val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+      rows.toDF("user_id", "event_id", "ts", "event_type", "value")
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"), lit("{}").as("props"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val want = SparkEntry.queries("q80_attribution")(spark, dir)
+        .collect().map(r => r.getAs[String]("attr") ->
+          ((r.getAs[Long]("n_purchases"), r.getAs[Double]("revenue")))).toMap
+      assert(want == Map("click" -> ((1L, 50.0)), "view" -> ((1L, 30.0)),
+        "direct" -> ((2L, 90.0))))
     }
-    val got = spark.table("attr_q").collect().map(r =>
-      r.getAs[Long]("event_id") -> r.getAs[String]("attr")).toMap
-    assert(got == Map(101L -> "click", 103L -> "direct",
-      201L -> "direct", 203L -> "view"))
-    // batch twin over the identical rows written as an events fixture:
-    // aggregate counts/revenue must agree with the online credits
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
-    rows.toDF("user_id", "event_id", "ts", "event_type", "value")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"), lit("{}").as("props"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val want = SparkEntry.queries("q80_attribution")(spark, dir)
-      .collect().map(r => r.getAs[String]("attr") ->
-        ((r.getAs[Long]("n_purchases"), r.getAs[Double]("revenue")))).toMap
-    assert(want == Map("click" -> ((1L, 50.0)), "view" -> ((1L, 30.0)),
-      "direct" -> ((2L, 90.0))))
   }
 
   test("Trigger.AvailableNow processes the backlog then terminates on its own") {
@@ -967,42 +1088,33 @@ class StreamingSpec extends AnyFunSuite {
     graft.operators.DedupIndex.buildMinhashIndex(hist, "doc_id", "text", root)
     // the initial-state path allocates extra column families — RocksDB
     // provider required (same as every transformWithState operator here)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedup.nearDupVerifiedWarm(spark,
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", root,
-        jaccardThreshold = 0.5)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stream_warm").start()
-    try {
-      // the VERY FIRST micro-batch: doc 100 duplicates indexed doc 1,
-      // doc 101 is fresh content
-      mem.addData(Seq((100L, dupText),
-        (101L, "unrelated fresh words about stone bridges and winter rain")))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      val mem = MemoryStream[(Long, String)]
+      val q = graft.streaming.StreamingDedup.nearDupVerifiedWarm(spark,
+          mem.toDF().toDF("doc_id", "text"), "doc_id", "text", root,
+          jaccardThreshold = 0.5)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stream_warm").start()
+      try {
+        // the VERY FIRST micro-batch: doc 100 duplicates indexed doc 1,
+        // doc 101 is fresh content
+        mem.addData(Seq((100L, dupText),
+          (101L, "unrelated fresh words about stone bridges and winter rain")))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.table("stream_warm").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
+      // caught against BOTH historical copies without re-shingling history,
+      // with exact Jaccard 1.0 and the keep-first drop decision on the
+      // NEW arrival
+      assert(rows.exists(t => t == ((1L, 100L, 1.0, 100L))), s"${rows.toSeq}")
+      assert(rows.exists(t => t == ((2L, 100L, 1.0, 100L))), s"${rows.toSeq}")
+      // history-vs-history pairs are not re-emitted; fresh content matches
+      // nothing
+      assert(!rows.exists(t => t._1 == 1L && t._2 == 2L), s"${rows.toSeq}")
+      assert(!rows.exists(t => t._1 == 101L || t._2 == 101L), s"${rows.toSeq}")
     }
-    val rows = spark.table("stream_warm").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
-    // caught against BOTH historical copies without re-shingling history,
-    // with exact Jaccard 1.0 and the keep-first drop decision on the
-    // NEW arrival
-    assert(rows.exists(t => t == ((1L, 100L, 1.0, 100L))), s"${rows.toSeq}")
-    assert(rows.exists(t => t == ((2L, 100L, 1.0, 100L))), s"${rows.toSeq}")
-    // history-vs-history pairs are not re-emitted; fresh content matches
-    // nothing
-    assert(!rows.exists(t => t._1 == 1L && t._2 == 2L), s"${rows.toSeq}")
-    assert(!rows.exists(t => t._1 == 101L || t._2 == 101L), s"${rows.toSeq}")
   }
 }
 

@@ -19,4 +19,22 @@ object TestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The state-store provider that transformWithState (column families)
+    * and the RocksDB-backed streaming operators need. */
+  val RocksDb: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with the given session settings, then restores each to
+    * its previous value, or unsets it when it had none. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -315,40 +315,31 @@ class VectorIndexSpec extends AnyFunSuite {
       (3L to 10L).map(i => (i, vec(i)))).toDF("vec_id", "embedding")
     VectorIndex.build(hist, "vec_id", "embedding", root, dims = Dims,
       m = 4, ks = 4, iters = 2, coarseK = 2, coarseIters = 2)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingDedup.embeddingNearDupVerifiedWarm(
-        spark, mem.toDF().toDF("vec_id", "embedding"), "vec_id",
-        "embedding", root, cosineThreshold = 0.99)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName("vec_warm").start()
-    try {
-      // the VERY FIRST micro-batch: vec 100 duplicates indexed vec 1,
-      // vec 101 is fresh content
-      mem.addData(Seq((100L, vec(1L)), (101L, vec(20L))))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    TestSession.withConf(TestSession.RocksDb) {
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = graft.streaming.StreamingDedup.embeddingNearDupVerifiedWarm(
+          spark, mem.toDF().toDF("vec_id", "embedding"), "vec_id",
+          "embedding", root, cosineThreshold = 0.99)
+        .toDF()
+        .writeStream.outputMode("append").format("memory")
+        .queryName("vec_warm").start()
+      try {
+        // the VERY FIRST micro-batch: vec 100 duplicates indexed vec 1,
+        // vec 101 is fresh content
+        mem.addData(Seq((100L, vec(1L)), (101L, vec(20L))))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.table("vec_warm").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
+      // caught against BOTH historical copies without re-reading the source
+      // corpus, with exact cosine 1.0 and the keep-first drop decision on
+      // the NEW arrival
+      assert(rows.exists(t => t._1 == 1L && t._2 == 100L && t._3 > 0.999 &&
+        t._4 == 100L), s"${rows.toSeq}")
+      assert(rows.exists(t => t._1 == 2L && t._2 == 100L && t._4 == 100L),
+        s"${rows.toSeq}")
+      // history-vs-history pairs are not re-emitted
+      assert(!rows.exists(t => t._1 == 1L && t._2 == 2L), s"${rows.toSeq}")
     }
-    val rows = spark.table("vec_warm").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
-    // caught against BOTH historical copies without re-reading the source
-    // corpus, with exact cosine 1.0 and the keep-first drop decision on
-    // the NEW arrival
-    assert(rows.exists(t => t._1 == 1L && t._2 == 100L && t._3 > 0.999 &&
-      t._4 == 100L), s"${rows.toSeq}")
-    assert(rows.exists(t => t._1 == 2L && t._2 == 100L && t._4 == 100L),
-      s"${rows.toSeq}")
-    // history-vs-history pairs are not re-emitted
-    assert(!rows.exists(t => t._1 == 1L && t._2 == 2L), s"${rows.toSeq}")
   }
 }

@@ -87,6 +87,12 @@ def verdict(parent, change, better):
             "losses": losses, "pairs": n, "call": call}
 
 
+def over_bound(ratio, better, bound):
+    """True when a change/parent median ratio is worse than `bound`."""
+    worse = ratio - 1 if better == "lower" else 1 - ratio
+    return worse > bound
+
+
 def fmt(q):
     return "/".join(f"{x:.4g}" for x in q)
 
@@ -128,8 +134,7 @@ def main():
         c = [r["change"]["line"]["metrics"][name]["value"] for r in runs]
         v = verdict(p, c, better)
         if bound is not None and v["ratio"] is not None:
-            worse = v["ratio"] - 1 if better == "lower" else 1 - v["ratio"]
-            v["over_bound"] = worse > bound
+            v["over_bound"] = over_bound(v["ratio"], better, bound)
         summary[name] = v
         ratio = f"{v['ratio']:.3f}" if v["ratio"] is not None else "-"
         flag = " OVER BOUND" if v.get("over_bound") else ""
