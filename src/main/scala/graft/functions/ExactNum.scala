@@ -103,8 +103,8 @@ object ExactNum {
 
   /** One value's term of the floor fold at scale `s` (10^digits): Spark's
     * floor(x·s) as a long, saturating at the long range. Executor-side
-    * folds that merge their own partials (LrBase.train, StreamingDedup's
-    * signatures) and the fixed-point vector kernels
+    * folds that merge their own partials (LrBase.train) and the
+    * fixed-point vector kernels
     * ([[VectorKernels.dotFixed]], [[VectorKernels.outerTerms]]) call it
     * too. */
   def floorUnits(x: Double, s: Double): Long = math.floor(x * s).toLong

@@ -84,9 +84,9 @@ object TextFunctions {
       (acc, h) => (acc * 31L + h) % 1000000007L)
 
   /** Canonical pre-dedup text normalization: lowercase, strip non-alnum,
-    * collapse whitespace. THE single definition — tx7, the composed
-    * pl8 pipeline and the streaming ingest pipeline all call this, so
-    * batch/stream content hashes agree by construction, not copy-paste. */
+    * collapse whitespace. THE single definition — tx7 and the composed
+    * pl8 pipeline both call this, so their content hashes agree by
+    * construction, not copy-paste. */
   def normalizeText(text: Column): Column =
     TextExpressions.ascii_normalize(text)
 

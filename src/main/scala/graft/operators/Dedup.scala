@@ -30,8 +30,7 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Word-k-gram shingle ARRAY over a token-array column (shared by the
-    * batch explode path and the per-row streaming signature). */
+  /** Word-k-gram shingle ARRAY over a token-array column. */
   def shingleArray(toks: Column, k: Int): Column = {
     val n = size(toks)
     when(n >= k,
@@ -236,61 +235,6 @@ object Dedup {
     minhashLsh(docs, idCol, textCol, shingleK, bands * r, bands,
       jaccardThreshold, preShingles)
   }
-
-  /** Per-row MinHash pipeline for UNBOUNDED streams: no groupBy over
-    * exploded shingles (a shuffle per micro-batch), instead the signature
-    * is an array fold per row and banding is a narrow explode. Same
-    * portable permutation family as [[minhashLsh]], so batch and stream
-    * signatures are comparable. Output: (bucket_key, doc, sig) — one row
-    * per band, keyed for [[graft.streaming.StreamingDedup]]'s stateful
-    * bucket join. Docs with no shingles get sentinel Long.MaxValue mins
-    * (they bucket together and verify to agree=1.0 only vs other empties).
-    *
-    * The shingle-hash array is materialized as `_shh` BEFORE the
-    * `numHashes` min-folds — Catalyst does not hoist common expressions
-    * out of HOF lambdas, so inlining would re-tokenize per fold. */
-  def minhashBands(docs: DataFrame, idCol: String, textCol: String,
-                   shingleK: Int = 3, numHashes: Int = 16,
-                   bands: Int = 4, keepShingles: Boolean = false): DataFrame = {
-    import graft.functions.PortableHash
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
-    val sig = array((0 until numHashes).map { i =>
-      val (a, b) = PortableHash.permCoeffs(i)
-      coalesce(
-        array_min(transform(col("_shh"),
-          h => (lit(a) * (h % PortableHash.P31) + lit(b)) % PortableHash.P31)),
-        lit(Long.MaxValue))
-    }: _*)
-    // keepShingles additionally carries the distinct shingle-hash set per
-    // row (`shh`) so a downstream stateful stage can verify candidates
-    // with EXACT Jaccard — see StreamingDedup.nearDupVerified.
-    val payload: Seq[Column] =
-      if (keepShingles) Seq(col("_shh").as("shh")) else Nil
-    docs
-      .withColumn("_shh", transform(
-        array_distinct(shingleArray(TextFunctions.tokens(col(textCol)),
-          shingleK)),
-        s => PortableHash.hash60(s)))
-      .withColumn("sig", sig)
-      .select(col(idCol).cast("long").as("doc") +: col("sig") +:
-        explode(bandKeys(col("sig"), bands, rows)).as("bucket_key") +:
-        payload: _*)
-      .select(col("bucket_key") +: col("doc") +: col("sig") +: payload.map(
-        _ => col("shh")): _*)
-  }
-
-  /** The streaming/warm-start LSH bucket keys of a signature array:
-    * "b:" + "|"-joined band slice, one element per band. The ONE
-    * definition shared by the live path ([[minhashBands]]) and the
-    * persisted-index warm start (StreamingDedup.warmStartTextState) —
-    * a drifted second copy would land warm-started state under keys no
-    * live row ever hits: no error, pure silent recall loss. */
-  def bandKeys(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      concat(lit(s"$b:"), concat_ws("|",
-        slice(sig, b * rows + 1, rows).cast("array<string>")))
-    }: _*)
 
   /** SimHash sketch width: 60 bits — every bit of the engine-portable
     * [[graft.functions.PortableHash.hash60]] token hash, which is what

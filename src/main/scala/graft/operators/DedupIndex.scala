@@ -10,8 +10,7 @@ import graft.functions.PortableHash
   * joining it against a durable band index, without ever re-shingling (or
   * even re-reading the text of) the historical corpus.
   *
-  * Index layout under `root` (all parquet — the batch twin of
-  * [[graft.streaming.StreamingDedup]]'s bucket state):
+  * Index layout under `root` (all parquet):
   *  - `meta`     one row (shingle_k, num_hashes, bands): the parameters
   *               the index was built with. Queries against the index MUST
   *               use these — [[incrementalDedup]] reads them itself, so a
@@ -21,8 +20,7 @@ import graft.functions.PortableHash
   *               so history is never re-tokenized.
   *  - `sig`      (doc, h0..h{n-1}, n_sh): minhash signatures + set sizes.
   *               Kept (tiny: one row per doc) so the index can be extended
-  *               by [[appendBatch]] and can warm-start the streaming
-  *               dedup's bucket state.
+  *               by [[appendBatch]].
   *  - `banded`   (doc, band, bsig): the LSH band table new batches
   *               equi-join against.
   *

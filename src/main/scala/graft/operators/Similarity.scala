@@ -171,8 +171,8 @@ object Similarity {
     * so parity((p·dims+d)·48271) = parity(p·dims+d), and with an even
     * `dims` that is parity(d) — every "plane" was the SAME alternating
     * hyperplane, collapsing all LSH signatures into two buckets (and
-    * both the DuckDB and streaming twins mirrored the identical
-    * arithmetic, so every parity check passed on the degenerate
+    * the DuckDB twin mirrored the identical arithmetic, so every
+    * parity check passed on the degenerate
     * family). hash60's avalanche makes the planes actually independent,
     * which is what Charikar 2002 requires. */
   def planeSignJava(p: Int, d: Int): Double =
@@ -251,8 +251,7 @@ object Similarity {
     *    covers log2(N/targetBucketSize) at the target scale; banding
     *    consumes only the first bands·bandBits planes.
     *  - `maxBucket` caps bucket MEMBERSHIP (first maxBucket members by
-    *    id — deterministic, the batch twin of StreamingDedup's
-    *    maxPerBucket): a degenerate bucket (e.g. near-zero vectors
+    *    id — deterministic): a degenerate bucket (e.g. near-zero vectors
     *    sharing a signature) stops absorbing members instead of going
     *    O(bucket²) in the self-join. */
   def annLsh(vecs: DataFrame, idCol: String, vecCol: String, dims: Int,

@@ -70,23 +70,8 @@ object Sketches {
       .agg(min(col("cnt")).as("n_cm"))
   }
 
-  /** Streaming twin of the Count-Min grid: the same portable bucket
-    * assignment as a STREAMING aggregation in update mode. The state
-    * store holds exactly the depth×width counter grid — constant memory
-    * for any stream length, the sketch's defining property — and because
-    * bucket arithmetic is identical, a drained stream's grid is
-    * row-for-row equal to the batch grid over the same corpus
-    * (pinned in SketchesSpec). */
-  def streamingCmGrid(docs: DataFrame, textCol: String,
-                      depth: Int = 4, width: Int = 1024): DataFrame =
-    cmGrid(docs
-      .select(explode(TextFunctions.tokens(col(textCol))).as("token")),
-      depth, width)
-
   /** One (d, bucket) row per token occurrence per hash row, collapsed to
-    * the constant depth×width grid. Works unchanged over a batch or a
-    * streaming token table — the shared definition is what makes the
-    * batch/stream equality in SketchesSpec true by construction. */
+    * the constant depth×width grid. */
   private def cmGrid(toks: DataFrame, depth: Int, width: Int): DataFrame =
     toks.select(explode(array((0 until depth).map(d =>
         struct(lit(d).as("d"),
@@ -149,97 +134,6 @@ object Sketches {
 
   /** 2^60 as a double (exact): the hash range for the KMV estimator. */
   val Pow60: Double = 1152921504606846976.0
-
-  /** Streaming twin of [[kmvDistinct]]: the same k-min state maintained
-    * per group across micro-batches via flatMapGroupsWithState — state
-    * is AT MOST k longs per group (the sketch's defining bound; folding
-    * a batch is merge-with-state, the exact operation SketchesSpec pins
-    * ≡ a fresh batch pass), and each batch emits the group's refreshed
-    * (n_kept, h_k, est_distinct) row for a replace-by-key sink.
-    * Estimate arithmetic is [[kmvEstimate]]'s, verbatim. */
-  def streamingKmvDistinct(
-      df: DataFrame, grpCol: String, keyCol: String, k: Int = 64)
-      : DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-      OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.filter(col(keyCol).isNotNull)
-      .select(col(grpCol).cast("string").as("grp"),
-        PortableHash.hash60(col(keyCol).cast("string")).as("h"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[Long], (String, Long, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (grp, rows, state: GroupState[Seq[Long]]) =>
-          val merged = (state.getOption.getOrElse(Seq.empty) ++
-            rows.map(_._2)).distinct.sorted.take(k)
-          state.update(merged)
-          val nKept = merged.size.toLong
-          val hK = merged.last
-          val est = if (nKept < k) nKept.toDouble
-            else (k - 1).toDouble * Pow60 / hK.toDouble
-          Iterator.single((grp, nKept, hK, est))
-      }
-      .toDF("grp", "n_kept", "h_k", "est_distinct")
-  }
-
-  /** One partition's maintained column statistics (q68's ANALYZE row,
-    * kept fresh incrementally): exact count/null/min/max plus the KMV
-    * distinct estimate of the key column. */
-  case class ColStats(grp: String, n_rows: Long, n_nulls: Long,
-                      vmin: Double, vmax: Double, n_kept: Long,
-                      est_distinct: Double)
-
-  /** Streaming stats maintenance — the q68 ANALYZE job without the
-    * rescan: per-group (table-partition) count / null-count / min / max
-    * merged exactly across micro-batches, plus the KMV k-min state for
-    * the key column's NDV estimate. At 100 TB, re-running ANALYZE after
-    * every ingest batch rescans the table; this keeps CBO stats current
-    * for the cost of the arriving rows. State per group is O(k) longs +
-    * four scalars — every piece MERGEABLE (counts add, min/min, max/max,
-    * KMV union-take-k), which is exactly why these are the stats engines
-    * maintain incrementally. Emits the refreshed row per group per batch
-    * (update mode, replace-by-key sink). */
-  def streamingColumnStats(df: DataFrame, grpCol: String, valCol: String,
-      keyCol: String, k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-      OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(grpCol).cast("string").as("grp"),
-        col(valCol).cast("double").as("v"),
-        PortableHash.hash60(col(keyCol).cast("string")).as("h"))
-      .as[(String, Option[Double], Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Double, Double, Seq[Long]),
-        ColStats](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (grp, rows,
-            state: GroupState[(Long, Long, Double, Double, Seq[Long])]) =>
-          var (n, nulls, vmin, vmax, kmv) = state.getOption
-            .getOrElse((0L, 0L, Double.PositiveInfinity,
-              Double.NegativeInfinity, Seq.empty[Long]))
-          val hs = scala.collection.mutable.ArrayBuffer[Long]()
-          rows.foreach { case (_, v, h) =>
-            n += 1
-            v match {
-              case Some(x) =>
-                if (x < vmin) vmin = x
-                if (x > vmax) vmax = x
-              case None => nulls += 1
-            }
-            h.foreach(hs += _)
-          }
-          kmv = (kmv ++ hs).distinct.sorted.take(k)
-          state.update((n, nulls, vmin, vmax, kmv))
-          val nKept = kmv.size.toLong
-          val est = if (nKept == 0) 0.0
-            else if (nKept < k) nKept.toDouble
-            else (k - 1).toDouble * Pow60 / kmv.last.toDouble
-          Iterator.single(ColStats(grp, n, nulls, vmin, vmax, nKept, est))
-      }.toDF()
-  }
 
   /** DuckDB twin of [[kmvDistinct]]'s selection + estimate, as a CTE
     * body parameterized on the source relation and expressions. */

@@ -109,8 +109,9 @@ object TextIndex {
     * row adds the batch's exact-decimal dl sum and doc count
     * (TextIndexSpec pins that this plan reads no historical `tf`/`dl`).
     *
-    * `batchId` (the streaming hook): when ≥ 0, an already-applied id
-    * returns without touching state — the foreachBatch replay guard.
+    * `batchId` (the replay guard of an at-least-once caller, such as a
+    * `foreachBatch` sink): when ≥ 0, an already-applied id returns
+    * without touching state.
     * The marker lands AFTER the appends, so a crash mid-append can
     * still double-append on replay; that is the exposure every
     * multi-file append sink has without a transactional table format,
@@ -169,19 +170,6 @@ object TextIndex {
         .select(col("n_docs"), col("avgdl")),
       queries, queryIdCol, queryTextCol, k)
   }
-
-  /** Maintain the index from a doc STREAM: each micro-batch folds in
-    * through [[appendBatch]] with the batch id as the replay guard —
-    * a query served between batches sees history + every committed
-    * batch (TextIndexSpec catches one after the FIRST micro-batch).
-    * Caller starts the returned writer with a checkpoint location. */
-  def maintainStream(docStream: DataFrame, root: String, idCol: String,
-                     textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[_] =
-    docStream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        appendBatch(b.sparkSession, root, b, idCol, textCol, batchId = id)
-      }
 
   /** Heal a crash between a swap's delete and its rename. */
   private[graft] def recover(spark: SparkSession, root: String): Unit =

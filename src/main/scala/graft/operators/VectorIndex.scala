@@ -31,11 +31,9 @@ import graft.core.FixtureCache
   *  - `vectors`    (_vid, vec): the raw float arrays — [[DedupIndex]]'s
   *                 `shingles` analog: the exact-verification payload.
   *                 ADC queries NEVER scan it (VectorIndexSpec pins
-  *                 that); it serves exact re-rank and the streaming
-  *                 warm-start
-  *                 ([[graft.streaming.StreamingDedup.embeddingNearDupVerifiedWarm]]),
-  *                 which need history's floats without re-reading (or
-  *                 depending on the existence of) the source corpus.
+  *                 that); it serves exact re-rank, which needs
+  *                 history's floats without re-reading (or depending on
+  *                 the existence of) the source corpus.
   *
   * Scale shape: models are KB-scale (k·dims + m·ks·subDim doubles) —
   * driver read + broadcast. [[appendBatch]] costs O(B) encode work for a
@@ -130,8 +128,8 @@ object VectorIndex {
 
   /** Train both models on `vecs` (the historical corpus), persist them,
     * and index the corpus itself. Training is the one-off expensive
-    * stage (two seeded Lloyd's runs); everything downstream — appends,
-    * queries, streaming warm-starts — reads the frozen artifacts. */
+    * stage (two seeded Lloyd's runs); everything downstream — appends
+    * and queries — reads the frozen artifacts. */
   def build(vecs: DataFrame, idCol: String, vecCol: String, root: String,
             dims: Int, m: Int = 8, ks: Int = 8, iters: Int = 2,
             coarseK: Int = 8, coarseIters: Int = 2): VMeta = {

@@ -991,10 +991,10 @@ object ExtendedQueries extends QueryPack {
     // Q67 — per-user adaptive anomaly detection: the reference's static
     // risk threshold (P2, StreamJob.java:92-100) upgraded to a per-entity
     // baseline — each event z-scored against the mean/std of THAT user's
-    // complete prior history (expanding window over event-time order, the
-    // batch twin of streaming fraud scoring; ties broken by event_id so
-    // both engines see one total order). The prefix sums fold in exact
-    // decimal — order-portable under any partitioning — and mean/var/z
+    // complete prior history (expanding window over event-time order;
+    // ties broken by event_id so both engines see one total order). The
+    // prefix sums fold in exact decimal — order-portable under any
+    // partitioning — and mean/var/z
     // are then IEEE arithmetic on identical operands, so the flagged
     // set carries a full hash oracle. Scale: one exchange on user_id
     // (high-cardinality key), per-user sort of a bounded history — the

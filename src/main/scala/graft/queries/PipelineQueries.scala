@@ -419,10 +419,6 @@ object PipelineQueries extends QueryPack {
     // than report missing=class_size — probed impossible at these
     // fixtures (residues mod 13 spread within every class); stated as
     // the accounting's edge.
-    // Derivation shared verbatim with the STREAMING twin
-    // ([[graft.streaming.RecrawlLedger]], VERDICT r13 #4) through
-    // RecrawlBase — the batch key aggregates the classified fetches the
-    // online ledger emits at watermark close.
     "pl29_recrawl_delta" -> ((s, dir) => {
       import s.implicits._
       val seen = RecrawlBase.classified(s, dir)
@@ -441,7 +437,7 @@ object PipelineQueries extends QueryPack {
             .as("change_rate"))
     }),
 
-    // PL31 — recrawl SCHEDULING policy, closing the pl29/RecrawlLedger
+    // PL31 — recrawl SCHEDULING policy, closing the pl29 recrawl-ledger
     // loop with the decision the ledger exists to drive (VERDICT r14
     // #5): per page, the Poisson change-rate estimate λ̂ from the
     // observed change history — Cho & Garcia-Molina 2003's

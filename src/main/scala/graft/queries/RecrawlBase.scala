@@ -5,10 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** pl29's fetch-table derivation, extracted (the LrBase precedent) so
-  * the batch ledger key and its STREAMING twin
-  * ([[graft.streaming.RecrawlLedger]], VERDICT r13 #4) consume one
-  * definition and cannot drift. Fixture mapping (PLANS_r13 §pl29 gate —
+/** The recrawl keys' fetch-table derivation, shared by pl29 and pl31
+  * (the LrBase precedent). Fixture mapping (PLANS_r13 §pl29 gate —
   * planted change schedule, ~7.7% fetch-failure sample, both falsified
   * against the organic alternatives before the oracle): fetch = one
   * documents row; page = doc_id mod npages; round r = doc_id div
@@ -46,8 +44,7 @@ object RecrawlBase {
   }
 
   /** Fetches classified against each page's previous OBSERVED fetch via
-    * ONE page-partitioned lag window — the batch classification the
-    * streaming ledger must converge to. (canonical_url, r, period, chg). */
+    * ONE page-partitioned lag window. (canonical_url, r, period, chg). */
   def classified(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val lagW = Window.partitionBy($"canonical_url").orderBy($"r")

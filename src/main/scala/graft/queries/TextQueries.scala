@@ -1225,9 +1225,8 @@ object TextQueries extends QueryPack {
     // from-scratch build in any of the four tables cannot hash-match.
     // Query panel doc_id % 50 = 25 (disjoint from tx13's % 50 = 0
     // panel), k = 10. TextIndexSpec pins the table-level equivalence,
-    // that appendBatch's plan never scans historical tf/dl, the
-    // foreachBatch replay guard, and the streaming maintainer serving
-    // a first-micro-batch query.
+    // that appendBatch's plan never scans historical tf/dl, and the
+    // batchId replay guard.
     "tx36_bm25_incremental" -> ((s, dir) => {
       import s.implicits._
       val qs = graft.core.Tables.spread(docs(s, dir))

@@ -63,7 +63,8 @@ class MetricsReporter extends StreamingQueryListener {
         Gauge, slowest("commitOffsets")),
       Series("checkpoint_size", "State store memory in MB",
         Gauge, sum(_.stateOperators.map(_.memoryUsedBytes).sum) / MB),
-      Series("cpu_load", "System load average", Gauge,
+      Series("cpu_load", "Host-wide 1-minute load average over all " +
+        "processes, negative when the OS reports none", Gauge,
         java.lang.management.ManagementFactory.getOperatingSystemMXBean
           .getSystemLoadAverage),
       Series("dropped_late_rows", "Rows dropped by watermark", Counter,

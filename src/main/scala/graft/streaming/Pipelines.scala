@@ -62,59 +62,6 @@ object Pipelines {
     RiskLabeler.formatted(labeled, col("transactionId"), col("amount"))
   }
 
-  /** Watermarked stream-stream interval join (the reference has no joins —
-    * SURVEY.md §2.7 gap analysis; this is the missing piece next to the
-    * stream-static join).
-    *
-    * Shape: equi-key + forward time-range predicate. With watermarks on
-    * BOTH sides, Spark bounds the join state — each side's buffered rows
-    * are evicted once the other side's watermark passes the range bound —
-    * so state stays O(key-rate × window), not O(stream length): the only
-    * stream-stream join shape that survives at scale. The same combinator
-    * runs in batch (withWatermark is a no-op there), which is what the
-    * equivalence spec exploits.
-    *
-    * Caller selects from aliases `l` / `r`. */
-  def intervalJoin(a: DataFrame, b: DataFrame, keyCol: String, tsCol: String,
-                   watermark: String, withinSeconds: Long,
-                   joinType: String = "inner"): DataFrame = {
-    val l = a.withWatermark(tsCol, watermark).alias("l")
-    val r = b.withWatermark(tsCol, watermark).alias("r")
-    l.join(r,
-      col(s"l.$keyCol") === col(s"r.$keyCol") &&
-        col(s"r.$tsCol") > col(s"l.$tsCol") &&
-        col(s"r.$tsCol") <= col(s"l.$tsCol") +
-          expr(s"INTERVAL $withinSeconds SECONDS"),
-      joinType)
-  }
-
-  /** The LLM-ingest pipeline (pl8's batch chain) on an UNBOUNDED stream:
-    * normalize → quality filter → exact dedup on the normalized content
-    * hash via `dropDuplicatesWithinWatermark` (state bounded by the
-    * watermark horizon — an exact duplicate arriving within `dedupHorizon`
-    * of the first copy is dropped; later than that it re-admits, the
-    * standard bounded-state tradeoff) → per-doc token count, ready for
-    * downstream packing/aggregation.
-    *
-    * Input: (idCol, textCol, tsCol event-time). Same column expressions
-    * as the batch operators (tx7/tx2/tx1), so batch and stream agree on
-    * every per-doc value — StreamingSpec pins the equivalence. */
-  def ingestStream(docs: DataFrame, idCol: String, textCol: String,
-                   tsCol: String, dedupHorizon: String = "1 hour",
-                   minQuality: Double = 0.0): DataFrame = {
-    import graft.functions.TextFunctions
-    docs
-      .withColumn("norm_text", TextFunctions.normalizeText(col(textCol)))
-      .withColumn("quality", TextFunctions.qualityScore(col(textCol)))
-      .filter(col("quality") > minQuality && col("norm_text") =!= "")
-      .withColumn("content_hash", md5(col("norm_text")))
-      .withWatermark(tsCol, dedupHorizon)
-      .dropDuplicatesWithinWatermark("content_hash")
-      .select(col(idCol), col(tsCol), col("content_hash"),
-        TextFunctions.tokenCount(col("norm_text")).as("n_tok"),
-        col("quality"))
-  }
-
   /** Deterministic part of pipeline A (no wall-clock columns) — used by the
     * streaming-equals-batch equivalence tests. */
   def riskPipelineDeterministic(raw: DataFrame): DataFrame = {

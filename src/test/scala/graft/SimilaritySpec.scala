@@ -142,11 +142,11 @@ class SimilaritySpec extends AnyFunSuite {
     // Regression guard for the r9 claims-audit find: the old LCG-parity
     // sign was parity(p·dims+d) for every reachable seed, so with an
     // even dims EVERY plane was the same alternating vector and all
-    // signatures collapsed into two buckets — while batch, streaming,
-    // and the DuckDB twin all agreed (the oracle is blind to a bug both
-    // twins share). This pins the family's actual randomness per
-    // (planes, dims) configuration used by sim5 and the streaming twin.
-    // configs actually shipped (sim5/streaming: dims=64; spec fixtures:
+    // signatures collapsed into two buckets — while batch and the
+    // DuckDB twin agreed (the oracle is blind to a bug both twins
+    // share). This pins the family's actual randomness per (planes,
+    // dims) configuration used by sim5.
+    // configs actually shipped (sim5: dims=64; spec fixtures:
     // dims=16 with 16 planes). dims=16 with MANY planes is excluded by
     // design: 48 draws from the 2^16 sign space have a ~2 % birthday
     // collision chance — a random-family property, not degeneracy (the

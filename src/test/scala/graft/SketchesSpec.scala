@@ -44,31 +44,6 @@ class SketchesSpec extends AnyFunSuite {
       "65536-wide grid over 400 tokens should be collision-free")
   }
 
-  test("streamed CM grid equals the batch grid over the same corpus") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val texts = (1 to 120).map(i => s"tok${i % 17} tok${i % 5} shared")
-    val mem = MemoryStream[String]
-    val q = Sketches.streamingCmGrid(
-        mem.toDF().withColumnRenamed("value", "text"), "text",
-        depth = 4, width = 64)
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("cm_stream").start()
-    try {
-      // three micro-batches: state must accumulate across them
-      texts.grouped(40).foreach { chunk =>
-        mem.addData(chunk); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("cm_stream")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = Sketches.streamingCmGrid(
-        texts.toDF("text"), "text", depth = 4, width = 64)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-    assert(streamed.size <= 4 * 64, "state exceeded the constant grid")
-  }
-
   test("KMV distinct estimate: calibrated error, partition-invariant, " +
       "exact in the sparse regime") {
     // 3 groups with known distinct counts: g0 5000 keys, g1 800 keys
@@ -125,73 +100,6 @@ class SketchesSpec extends AnyFunSuite {
         r.getAs[Double]("est_distinct"))).head
     assert(viaMerge == direct)
     assert(math.abs(direct._3 / 4500.0 - 1.0) < 0.5, direct)
-  }
-
-  test("streaming KMV: drained stream's final sketch equals the batch " +
-      "sketch over the same keys") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val rows = (1 to 3000).map(i => ("g0", s"a$i")) ++
-      (1 to 40).map(i => ("g1", s"b$i")) ++
-      (500 to 1500).map(i => ("g0", s"a$i")) // cross-batch repeats
-    val mem = MemoryStream[(String, String)]
-    val q = Sketches.streamingKmvDistinct(
-        mem.toDF().toDF("grp", "key"), "grp", "key", k = 64)
-      .writeStream.outputMode("update").format("memory")
-      .queryName("kmv_stream").start()
-    try {
-      rows.grouped(700).foreach { chunk =>
-        mem.addData(chunk); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // update mode: last row per group is the final sketch
-    val streamed = spark.table("kmv_stream")
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("grp"))
-          .orderBy(col("n_kept").desc, col("h_k").asc)))
-      .filter(col("rn") === 1)
-      .collect().map(r => r.getAs[String]("grp") ->
-        (r.getAs[Long]("n_kept"), r.getAs[Long]("h_k"),
-          r.getAs[Double]("est_distinct"))).toMap
-    val batch = Sketches.kmvDistinct(rows.toDF("grp", "key"),
-        col("grp"), col("key"), k = 64)
-      .collect().map(r => r.getAs[String]("grp") ->
-        (r.getAs[Long]("n_kept"), r.getAs[Long]("h_k"),
-          r.getAs[Double]("est_distinct"))).toMap
-    assert(streamed == batch)
-    assert(batch("g1")._1 == 40L) // sparse group: all hashes kept
-  }
-
-  test("streaming column stats merge exactly across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(String, Option[Double], Long)]
-    val q = Sketches.streamingColumnStats(
-        mem.toDF().toDF("grp", "v", "key"), "grp", "v", "key", k = 64)
-      .writeStream.outputMode("update").format("memory")
-      .queryName("stats_stream").start()
-    try {
-      // batch 1: g1 values 5, null, 9 over keys 1..3
-      mem.addData(Seq(("g1", Some(5.0), 1L), ("g1", None, 2L),
-        ("g1", Some(9.0), 3L)))
-      q.processAllAvailable()
-      // batch 2: widen min AND max, repeat key 1 (ndv must not grow)
-      mem.addData(Seq(("g1", Some(1.0), 1L), ("g1", Some(20.0), 4L),
-        ("g2", Some(7.0), 9L)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val last = spark.table("stats_stream")
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("grp"))
-          .orderBy(col("n_rows").desc)))
-      .filter(col("rn") === 1)
-      .collect().map(r => r.getAs[String]("grp") ->
-        ((r.getAs[Long]("n_rows"), r.getAs[Long]("n_nulls"),
-          r.getAs[Double]("vmin"), r.getAs[Double]("vmax"),
-          r.getAs[Double]("est_distinct")))).toMap
-    // sparse regime (< k distinct keys): the estimate IS the exact ndv
-    assert(last("g1") == ((5L, 1L, 1.0, 20.0, 4.0)))
-    assert(last("g2") == ((1L, 0L, 7.0, 7.0, 1.0)))
   }
 
   test("top-k tie-break is (count desc, token asc) and deterministic") {

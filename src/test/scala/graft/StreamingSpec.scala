@@ -203,10 +203,14 @@ class StreamingSpec extends AnyFunSuite {
       }
       Seq("records_in_rate" -> "gauge", "records_out_rate" -> "gauge",
         "avg_latency" -> "gauge", "checkpoint_size" -> "gauge",
+        "cpu_load" -> "gauge",
         "dropped_late_rows" -> "counter").foreach { case (id, kind) =>
         assert(body.contains(s"# TYPE graft_$id $kind"), s"missing $id")
         assert(lines.exists(_.startsWith(s"graft_$id ")), s"missing $id value")
       }
+      // the load average is the host's, not this process's
+      assert(lines.exists(l => l.startsWith("# HELP graft_cpu_load ") &&
+        l.contains("Host-wide")), "cpu_load help must say host-wide")
     } finally {
       ep.stop(); q.stop(); spark.streams.removeListener(rep)
     }
@@ -328,31 +332,6 @@ class StreamingSpec extends AnyFunSuite {
     streamed.foreach(r => assert(batch.get(r.getString(0)).contains(r), r))
   }
 
-  test("flatMapGroupsWithState: per-sender running totals with alerts") {
-    implicit val sc = spark.sqlContext
-    import graft.core.Schemas.RemittanceTransaction
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[RemittanceTransaction]
-    val out = graft.streaming.StatefulOps
-      .senderRunningTotals(spark, mem.toDS(), alertThreshold = 1.5)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("sender_stats").start()
-    def tx(s: String, amt: Double, ts: Long) = RemittanceTransaction(
-      s"t$ts", s, "r", amt, "USD", 1.0, ts)
-    try {
-      mem.addData(tx("A", 1.0, 1), tx("B", 0.2, 2))
-      q.processAllAvailable()
-      mem.addData(tx("A", 1.0, 3)) // A crosses 1.5 -> alert, state persisted
-      q.processAllAvailable()
-    } finally q.stop()
-    import spark.implicits._
-    val rows = spark.table("sender_stats")
-      .as[graft.streaming.StatefulOps.SenderStats].collect()
-    val a2 = rows.filter(r => r.senderId == "A" && r.txCount == 2L)
-    assert(a2.length == 1 && a2.head.alert && a2.head.totalAmount == 2.0)
-    assert(rows.filter(_.senderId == "B").forall(!_.alert))
-  }
-
   test("update-mode keyed windows emit refined results per micro-batch") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[String]
@@ -454,146 +433,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
-  test("stream-stream interval join equals batch join on the same rows") {
-    implicit val sc = spark.sqlContext
-    // (event_id, user_id, epoch-sec); pairs within 60 s forward per user.
-    val rowsA = Seq((1L, 7L, 100L), (2L, 7L, 130L), (3L, 8L, 100L),
-      (4L, 9L, 500L))
-    val rowsB = Seq((11L, 7L, 150L), (12L, 7L, 190L), (13L, 8L, 160L),
-      (14L, 9L, 505L))
-    def prep(df: org.apache.spark.sql.DataFrame) =
-      df.toDF("event_id", "user_id", "sec")
-        .withColumn("ts", timestamp_seconds($"sec")).drop("sec")
-    def pairs(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("l.event_id").as("eid_a"), col("r.event_id").as("eid_b"))
-    val memA = MemoryStream[(Long, Long, Long)]
-    val memB = MemoryStream[(Long, Long, Long)]
-    val q = pairs(Pipelines.intervalJoin(prep(memA.toDF()), prep(memB.toDF()),
-        "user_id", "ts", "10 seconds", 60))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ssj").start()
-    try {
-      // split across micro-batches to exercise buffered-state matching;
-      // batch-2 rows stay ahead of the batch-1 watermark (150 - 10 s =
-      // 140) — anything older would be dropped as late, by design.
-      memA.addData(rowsA.take(3)); memB.addData(rowsB.take(1))
-      q.processAllAvailable()
-      memA.addData(rowsA.drop(3)); memB.addData(rowsB.drop(1))
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("ssj").as[(Long, Long)].collect().toSet
-    val batch = pairs(Pipelines.intervalJoin(
-        prep(rowsA.toDF()), prep(rowsB.toDF()), "user_id", "ts",
-        "10 seconds", 60)).as[(Long, Long)].collect().toSet
-    // expected: user 7 -> (1,11), (2,11), (2,12 @190<=130+60); user 8 ->
-    // (3,13 @160<=100+60, the inclusive upper bound); user 9 -> (4,14).
-    // (1,12) excluded: 190 > 100+60.
-    assert(batch == Set((1L, 11L), (2L, 11L), (2L, 12L), (3L, 13L), (4L, 14L)))
-    assert(streamed == batch)
-  }
-
-  test("stream-stream LEFT OUTER interval join emits null-padded rows after watermark") {
-    implicit val sc = spark.sqlContext
-    val memA = MemoryStream[(Long, Long, Long)]
-    val memB = MemoryStream[(Long, Long, Long)]
-    def prep(df: org.apache.spark.sql.DataFrame) =
-      df.toDF("event_id", "user_id", "sec")
-        .withColumn("ts", timestamp_seconds($"sec")).drop("sec")
-    val q = Pipelines.intervalJoin(prep(memA.toDF()), prep(memB.toDF()),
-        "user_id", "ts", "5 seconds", 60, "leftOuter")
-      .select(col("l.event_id").as("eid_a"), col("r.event_id").as("eid_b"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ssoj").start()
-    try {
-      // user 7 matches; user 8's left row never gets a right match
-      memA.addData(Seq((1L, 7L, 100L), (2L, 8L, 100L)))
-      memB.addData(Seq((11L, 7L, 120L)))
-      q.processAllAvailable()
-      // push both watermarks far past 100+60 so the unmatched left row
-      // can be finalized and emitted with nulls
-      memA.addData(Seq((99L, 1L, 5000L))); memB.addData(Seq((98L, 1L, 5000L)))
-      q.processAllAvailable()
-      memA.addData(Seq((97L, 1L, 9000L))); memB.addData(Seq((96L, 1L, 9000L)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("ssoj").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
-    assert(out.contains((1L, 11L)))   // matched pair
-    assert(out.contains((2L, -1L)))   // unmatched left, null-padded
-  }
-
-  test("event-time timeout closes idle sessions and drops their state") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(String, Long, Double)]
-    val events = mem.toDF().toDF("key", "sec", "value")
-      .withColumn("ts", timestamp_seconds($"sec")).drop("sec")
-      .withWatermark("ts", "0 seconds")
-    val q = graft.streaming.StatefulOps
-      .sessionsWithTimeout(spark, events, gapMs = 30000L)
-      .toDF().writeStream.outputMode("append").format("memory")
-      .queryName("etimeout").start()
-    try {
-      // key a: two rows 10 s apart; key b: one row. Then advance the
-      // watermark far past both last+gap bounds via a sentinel key.
-      mem.addData(Seq(("a", 100L, 1.0), ("a", 110L, 2.0), ("b", 100L, 5.0)))
-      q.processAllAvailable()
-      mem.addData(Seq(("zz", 10000L, 0.0)))
-      q.processAllAvailable()
-      mem.addData(Seq(("zz", 20000L, 0.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("etimeout").collect()
-      .map(r => r.getAs[String]("key") ->
-        (r.getAs[Long]("n"), r.getAs[Double]("total"),
-          r.getAs[Long]("last_ms"), r.getAs[Boolean]("closed_by_timeout")))
-      .toMap
-    assert(out("a") == ((2L, 3.0, 110000L, true)))
-    assert(out("b") == ((1L, 5.0, 100000L, true)))
-  }
-
-  test("streaming funnel: out-of-order micro-batches finalize to the " +
-      "batch q63 stages on timeout") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    val events = mem.toDF().toDF("user_id", "event_type", "sec")
-      .withColumn("ts", timestamp_seconds($"sec")).drop("sec")
-      .withWatermark("ts", "1 hour")
-    val q = graft.streaming.StatefulOps
-      .funnelStages(spark, events, horizonMs = 30000L)
-      .toDF().writeStream.outputMode("append").format("memory")
-      .queryName("funnel_stream").start()
-    try {
-      // the SAME planted users as EventAnalyticsSpec's q63 test, arriving
-      // maximally out of order across micro-batches: purchases first,
-      // user 2's pre-view click early, user 1's view LAST
-      mem.addData(Seq((1L, "purchase", 30L), (2L, "click", 10L),
-        (3L, "view", 10L), (4L, "click", 10L)))
-      q.processAllAvailable()
-      mem.addData(Seq((1L, "click", 20L), (2L, "view", 20L),
-        (3L, "purchase", 5L), (4L, "click", 20L)))
-      q.processAllAvailable()
-      mem.addData(Seq((1L, "view", 10L), (2L, "click", 30L)))
-      q.processAllAvailable()
-      // advance the watermark far past every user's maxTs + horizon
-      mem.addData(Seq((99L, "view", 20000L)))
-      q.processAllAvailable()
-      mem.addData(Seq((99L, "view", 30000L)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("funnel_stream").collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        (r.getAs[Int]("stage"), Option(r.getAs[Any]("t_click_ms"))))
-      .toMap
-    // user 1: view@10 click@20 purchase@30 despite arrival order ⇒ 3;
-    // user 2: the click@10 BEFORE view@20 must not count, click@30
-    // does ⇒ 2; user 3: purchase precedes the view ⇒ 1; user 4: clicks
-    // without any view ⇒ 0
-    assert(out(1L) == ((3, Some(20000L))))
-    assert(out(2L) == ((2, Some(30000L))))
-    assert(out(3L) == ((1, None)))
-    assert(out(4L) == ((0, None)))
-  }
-
   test("chained windowed aggregations: 10s counts roll up to 1min in one stream") {
     // Spark 4 allows multiple stateful operators in append mode when the
     // second aggregation windows over the FIRST's `window` struct (the
@@ -642,36 +481,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(rolled.toSeq == batchRolled.toSeq)
   }
 
-  test("streaming ingest pipeline: quality filter + cross-batch content dedup") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    val stream = graft.streaming.Pipelines.ingestStream(
-      mem.toDF().toDF("doc_id", "text", "ts_ms")
-        .withColumn("ts", timestamp_millis($"ts_ms")).drop("ts_ms"),
-      "doc_id", "text", "ts")
-    val q = stream.writeStream.outputMode("append").format("memory")
-      .queryName("ingest").start()
-    val good = "the quick brown fox and the lazy dog in a quiet town"
-    // same content modulo case/punctuation — normalizes identically
-    val dupOfGood = "The quick brown fox, and the lazy dog — in a quiet town!"
-    val junk = "!!! ??? ;;; ..." // quality filter drops punctuation soup
-    try {
-      mem.addData(Seq((1L, good, 1000L), (2L, junk, 2000L)))
-      q.processAllAvailable()
-      // the normalized duplicate arrives in a LATER micro-batch — the
-      // content-hash state must span batches
-      mem.addData(Seq((3L, dupOfGood, 3000L),
-        (4L, "an entirely different document about parquet readers", 4000L)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val ids = spark.table("ingest").collect().map(_.getAs[Long]("doc_id")).sorted
-    assert(ids.toSeq == Seq(1L, 4L),
-      s"expected only first copy + distinct doc, got ${ids.toSeq}")
-    // per-doc values agree with the batch operators on the same rows
-    val row = spark.table("ingest").filter($"doc_id" === 1L).collect().head
-    assert(row.getAs[Long]("n_tok") == 12L)
-  }
-
   test("file-stream source: incremental parquet ingest picks up late-arriving files") {
     // the batch-incremental ingest shape: a directory that keeps receiving
     // parquet drops, consumed as a stream with per-file batching — the
@@ -702,34 +511,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming embedding near-dup: perturbed vector found across micro-batches") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      val dims = 16
-      val rnd = new scala.util.Random(7)
-      val base = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-      val nearDup = base.map(x => x + 0.001f) // tiny perturbation, cos ≈ 1
-      val unrelated = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-      val mem = MemoryStream[(Long, Seq[Float])]
-      val q = graft.streaming.StreamingDedup.embeddingNearDupCandidates(spark,
-          mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          dims = dims, planes = 16, bands = 8, maxPerBucket = 8)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_emb_dedup").start()
-      try {
-        mem.addData(Seq((1L, base.toSeq), (3L, unrelated.toSeq)))
-        q.processAllAvailable()
-        mem.addData(Seq((2L, nearDup.toSeq)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pairs = spark.table("stream_emb_dedup").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(pairs.contains((1L, 2L)), s"cross-batch embedding dup missed: $pairs")
-      assert(pairs((1L, 2L)) >= 0.9) // near-identical vectors agree on ~all planes
-    }
-  }
-
   test("exact streaming dedup: dropDuplicatesWithinWatermark drops cross-batch repeats") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
@@ -751,48 +532,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(ids.sorted.toSeq == Seq("a", "b", "c"))
   }
 
-  test("streaming near-dup dedup: planted dups across micro-batches detected, bucket capped") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      val base = "the quick brown fox jumps over the lazy dog while rain " +
-        "falls gently on the quiet harbor town at dusk"
-      // a LAST-word edit changes exactly one k=3 shingle → J = 17/19; with
-      // 8 bands of 2 the planted pair shares 5 buckets (verified) — the
-      // collision is deterministic for these fixed strings, not luck
-      val nearDup = base.replace("dusk", "dawn")
-      val unrelated = "completely different content about spark shuffles " +
-        "partitions aggregation codegen and columnar parquet readers at scale"
-      val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingDedup.nearDupCandidates(spark,
-          mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          bands = 8, maxPerBucket = 8)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_dedup").start()
-      try {
-        // the near-dups arrive in DIFFERENT micro-batches: detection relies
-        // on bucket state surviving across batches (state IS the index)
-        mem.addData(Seq((1L, base), (3L, unrelated)))
-        q.processAllAvailable()
-        mem.addData(Seq((2L, nearDup)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pairs = spark.table("stream_dedup").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(pairs.contains((1L, 2L)), s"cross-batch near-dup missed: $pairs")
-      assert(pairs((1L, 2L)) >= 0.8) // one shingle changed → most mins agree
-      assert(!pairs.keys.exists { case (a, b) => a == 3L || b == 3L },
-        "unrelated doc must not pair")
-    }
-  }
-
   test("bounded ingest: maxFilesPerTrigger caps every micro-batch of a backlog") {
     // 6-file backlog, cap 2 files/trigger: the catch-up run must split
     // into ≥3 micro-batches of ≤2 files' rows each — without the bound,
     // batch 0 would swallow the whole backlog and any state/shuffle
-    // sizing that held at steady state dies on restart. This pins the
-    // knob end-to-end through the ingest pipeline (normalize → quality
-    // filter → dedup), not just the option string.
+    // sizing that held at steady state dies on restart. This pins
+    // `Sources.fileStream`'s bound end-to-end through a running query,
+    // not just the option string.
     val dir = java.nio.file.Files.createTempDirectory("graft-bounded-")
       .toString
     (0 until 6).foreach { i =>
@@ -805,7 +551,7 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(dir).schema
     val src = graft.sources.Sources.fileStream(spark, dir, schema,
       maxFilesPerTrigger = Some(2))
-    val q = graft.streaming.Pipelines.ingestStream(src, "doc_id", "text", "ts")
+    val q = src.select("doc_id", "text", "ts")
       .writeStream.outputMode("append").format("memory")
       .queryName("bounded_ingest").start()
     try {
@@ -816,228 +562,9 @@ class StreamingSpec extends AnyFunSuite {
       assert(batches.forall(_.numInputRows <= 20),
         s"a micro-batch exceeded the 2-file cap: " +
           batches.map(_.numInputRows).mkString(","))
-      // nothing lost to the bounding: every unique doc arrives
+      // nothing lost to the bounding: every row arrives
       assert(spark.table("bounded_ingest").count() == 60L)
     } finally q.stop()
-  }
-
-  test("verified streaming near-dup: signature collision with low true similarity rejected") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      // hand-crafted banded rows force the failure mode that is nearly
-      // impossible to plant end-to-end: docs 1 and 2 share a bucket with
-      // IDENTICAL signatures (sig_agree = 1.0, the strongest possible
-      // sketch evidence) but their true shingle sets are disjoint — a pure
-      // LSH/sketch collision. Doc 3 is a genuine near-dup of doc 1.
-      val sig = Seq(7L, 8L, 9L, 10L)
-      val sh1 = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L)
-      val sh2 = Seq(101L, 102L, 103L, 104L, 105L, 106L, 107L, 108L, 109L, 110L)
-      val sh3 = sh1.take(9) :+ 999L // J(sh1, sh3) = 9/11 ≈ 0.818
-      val mem = MemoryStream[(String, Long, Seq[Long], Seq[Long])]
-      val q = graft.streaming.StreamingDedup.verifiedText(spark,
-          mem.toDF().toDF("bucket_key", "doc", "sig", "shh"),
-          maxPerBucket = 8, ttl = org.apache.spark.sql.streaming.TTLConfig.NONE,
-          jaccardThreshold = 0.5)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_verified").start()
-      try {
-        mem.addData(Seq(("0:b", 1L, sig, sh1)))
-        q.processAllAvailable()
-        // the collision and the true dup arrive in LATER micro-batches
-        mem.addData(Seq(("0:b", 2L, sig, sh2)))
-        q.processAllAvailable()
-        mem.addData(Seq(("0:b", 3L, sig, sh3)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pairs = spark.table("stream_verified").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-      assert(!pairs.contains((1L, 2L)),
-        s"sketch collision must be rejected by exact Jaccard: $pairs")
-      assert(pairs.contains((1L, 3L)), s"true near-dup missed: $pairs")
-      assert(math.abs(pairs((1L, 3L)) - 9.0 / 11.0) < 1e-12)
-      assert(!pairs.contains((2L, 3L)), "disjoint pair must be rejected")
-      // keep-first drop decision: the LATER arrival is the duplicate
-      val dup = spark.table("stream_verified").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4)).toMap
-      assert(dup((1L, 3L)) == 3L, "dup_doc must be the later arrival")
-    }
-  }
-
-  test("bucket cap closes the bucket: over-cap arrivals emit nothing, redelivery idempotent") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      // cap=1: doc 1 fills the bucket; doc 2 (a perfect match on both
-      // signature AND content) must emit NOTHING — an at-cap arrival is
-      // neither stored nor compared (the batch annLsh membership-cap
-      // semantics). Emitting without storing would also re-emit the same
-      // pairs on every at-least-once redelivery, which the repeated
-      // delivery of doc 2 below would expose.
-      val sig = Seq(7L, 8L)
-      val sh = Seq(1L, 2L, 3L)
-      val mem = MemoryStream[(String, Long, Seq[Long], Seq[Long])]
-      val q = graft.streaming.StreamingDedup.verifiedText(spark,
-          mem.toDF().toDF("bucket_key", "doc", "sig", "shh"),
-          maxPerBucket = 1, ttl = org.apache.spark.sql.streaming.TTLConfig.NONE,
-          jaccardThreshold = 0.5)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_capped").start()
-      try {
-        mem.addData(Seq(("0:b", 1L, sig, sh)))
-        q.processAllAvailable()
-        mem.addData(Seq(("0:b", 2L, sig, sh)))
-        q.processAllAvailable()
-        mem.addData(Seq(("0:b", 2L, sig, sh))) // redelivery of the over-cap doc
-        q.processAllAvailable()
-      } finally q.stop()
-      assert(spark.table("stream_capped").count() == 0L,
-        "a full bucket must admit and emit nothing")
-    }
-  }
-
-  test("verified streaming embedding near-dup: exact cosine gates emission end-to-end") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      val dims = 16
-      val rnd = new scala.util.Random(7)
-      val base = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-      val nearDup = base.map(x => x + 0.001f)
-      val unrelated = Array.fill(dims)(rnd.nextFloat() - 0.5f)
-      val mem = MemoryStream[(Long, Seq[Float])]
-      val q = graft.streaming.StreamingDedup.embeddingNearDupVerified(spark,
-          mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          dims = dims, planes = 16, bands = 8, maxPerBucket = 8,
-          cosineThreshold = 0.9)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_emb_verified").start()
-      try {
-        mem.addData(Seq((1L, base.toSeq), (3L, unrelated.toSeq)))
-        q.processAllAvailable()
-        mem.addData(Seq((2L, nearDup.toSeq)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("stream_emb_verified").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-      assert(rows.contains((1L, 2L)), s"cross-batch embedding dup missed: $rows")
-      // emitted sim is the EXACT cosine, not the plane-agreement estimate
-      val expect = graft.streaming.StreamingDedup.cosineSeq(
-        base.toSeq, nearDup.toSeq)
-      assert(rows((1L, 2L)) == expect)
-      assert(rows((1L, 2L)) >= 0.9)
-      // any bucket the unrelated vector shares is verified away by cosine
-      assert(!rows.keys.exists { case (a, b) => a == 3L || b == 3L },
-        s"unrelated vector must not survive exact verification: $rows")
-    }
-  }
-
-  test("transformWithState: typed ValueState running max on RocksDB provider") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      val mem = MemoryStream[(String, Double)]
-      val q = graft.streaming.StatefulOps.runningMax(spark, mem.toDS())
-        .toDF("key", "running_max")
-        .writeStream.outputMode("update").format("memory")
-        .queryName("tws").start()
-      try {
-        mem.addData(Seq(("a", 1.0), ("a", 5.0), ("b", 2.0)))
-        q.processAllAvailable()
-        mem.addData(Seq(("a", 3.0), ("b", 7.0)))
-        q.processAllAvailable()
-      } finally q.stop()
-      // latest update per key reflects state carried across micro-batches:
-      // a's max stays 5.0 (3.0 doesn't raise it), b's rises to 7.0
-      val rows = spark.table("tws").collect()
-        .map(r => (r.getString(0), r.getDouble(1)))
-      assert(rows.contains(("a", 5.0)) && rows.count(_ == ("a", 5.0)) == 2)
-      assert(rows.contains(("b", 2.0)) && rows.contains(("b", 7.0)))
-    }
-  }
-
-  test("transformWithState: streaming anomaly flags ≡ q67 batch, bit-for-bit") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      // user 1: ten alternating 9/11 priors, then 1000 (flagged), then 10;
-      // user 2: stays in warmup. In-order ingest split MID-HISTORY across
-      // micro-batches — the flag decision in batch 2 depends on state
-      // accumulated in batch 1.
-      val alt = Seq.tabulate(10)(i => if (i % 2 == 0) 9.0 else 11.0)
-      val rows = (alt ++ Seq(1000.0, 10.0)).zipWithIndex.map { case (v, i) =>
-        (1L, 100L + i, new java.sql.Timestamp(10000L * (i + 1)), v) } ++
-        Seq.tabulate(5)(i =>
-          (2L, 200L + i, new java.sql.Timestamp(10000L * (i + 1)), 500.0))
-      val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-      val q = graft.streaming.StatefulOps.userAnomalies(spark,
-          mem.toDS().toDF("user_id", "event_id", "ts", "value"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("anom").start()
-      try {
-        val (b1, b2) = rows.splitAt(6)
-        mem.addData(b1); q.processAllAvailable()
-        mem.addData(b2); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("anom").collect().map(r =>
-        (r.getAs[Long]("event_id"), r.getAs[Long]("n_prior"),
-          r.getAs[Double]("mean_prior"), r.getAs[Double]("z"))).toSet
-      // batch twin over the identical rows written as an events fixture
-      val dir = java.nio.file.Files.createTempDirectory("graft-anom").toString
-      rows.toDF("user_id", "event_id", "ts", "value")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          lit("view").as("event_type"), col("value"), lit("{}").as("props"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val want = SparkEntry.queries("q67_user_anomaly")(spark, dir)
-        .collect().map(r =>
-          (r.getAs[Long]("event_id"), r.getAs[Long]("n_prior"),
-            r.getAs[Double]("mean_prior"), r.getAs[Double]("z"))).toSet
-      assert(want.nonEmpty && got == want,
-        s"stream $got must equal batch $want EXACTLY (decimal-quantized state)")
-    }
-  }
-
-  test("transformWithState: online attribution ≡ q80 batch under in-order ingest") {
-    implicit val sc = spark.sqlContext
-    TestSession.withConf(TestSession.RocksDb) {
-      def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-      // user 1: click→purchase (attributed), then a view whose credit
-      // EXPIRES (gap 3700 s > 3600); user 2: purchase with no prior
-      // marketing (direct), then view→purchase. Split MID-STREAM so the
-      // decisive click state crosses micro-batches.
-      val rows = Seq(
-        (1L, 100L, ts(100), "click", 10.0),
-        (2L, 201L, ts(150), "purchase", 70.0),
-        (1L, 101L, ts(200), "purchase", 50.0),
-        (1L, 102L, ts(300), "view", 0.0),
-        (2L, 202L, ts(350), "view", 0.0),
-        (2L, 203L, ts(360), "purchase", 30.0),
-        (1L, 103L, ts(4000), "purchase", 20.0))
-      val mem = MemoryStream[(Long, Long, java.sql.Timestamp, String, Double)]
-      val q = graft.streaming.StatefulOps.attributePurchases(spark,
-          mem.toDS().toDF("user_id", "event_id", "ts", "event_type", "value"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("attr_q").start()
-      try {
-        val (b1, b2) = rows.splitAt(3)
-        mem.addData(b1); q.processAllAvailable()
-        mem.addData(b2); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("attr_q").collect().map(r =>
-        r.getAs[Long]("event_id") -> r.getAs[String]("attr")).toMap
-      assert(got == Map(101L -> "click", 103L -> "direct",
-        201L -> "direct", 203L -> "view"))
-      // batch twin over the identical rows written as an events fixture:
-      // aggregate counts/revenue must agree with the online credits
-      val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
-      rows.toDF("user_id", "event_id", "ts", "event_type", "value")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"), lit("{}").as("props"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val want = SparkEntry.queries("q80_attribution")(spark, dir)
-        .collect().map(r => r.getAs[String]("attr") ->
-          ((r.getAs[Long]("n_purchases"), r.getAs[Double]("revenue")))).toMap
-      assert(want == Map("click" -> ((1L, 50.0)), "view" -> ((1L, 30.0)),
-        "direct" -> ((2L, 90.0))))
-    }
   }
 
   test("Trigger.AvailableNow processes the backlog then terminates on its own") {
@@ -1073,48 +600,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(back.count() == 80L)
     assert(back.columns.toSet ==
       Set("transactionId", "amount", "risk_type", "line"))
-  }
-
-  test("warm-started streaming dedup: duplicate of an INDEXED doc caught in micro-batch 1") {
-    implicit val sc = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-warmidx-")
-      .resolve("idx").toString
-    // historical corpus: docs 1 and 2 duplicate each other (their pair was
-    // decided at batch time and must NOT re-emit), doc 3 distinct
-    val dupText = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val hist = Seq((1L, dupText), (2L, dupText),
-      (3L, "one two three four five six seven eight nine ten"))
-      .toDF("doc_id", "text")
-    graft.operators.DedupIndex.buildMinhashIndex(hist, "doc_id", "text", root)
-    // the initial-state path allocates extra column families — RocksDB
-    // provider required (same as every transformWithState operator here)
-    TestSession.withConf(TestSession.RocksDb) {
-      val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingDedup.nearDupVerifiedWarm(spark,
-          mem.toDF().toDF("doc_id", "text"), "doc_id", "text", root,
-          jaccardThreshold = 0.5)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("stream_warm").start()
-      try {
-        // the VERY FIRST micro-batch: doc 100 duplicates indexed doc 1,
-        // doc 101 is fresh content
-        mem.addData(Seq((100L, dupText),
-          (101L, "unrelated fresh words about stone bridges and winter rain")))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("stream_warm").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
-      // caught against BOTH historical copies without re-shingling history,
-      // with exact Jaccard 1.0 and the keep-first drop decision on the
-      // NEW arrival
-      assert(rows.exists(t => t == ((1L, 100L, 1.0, 100L))), s"${rows.toSeq}")
-      assert(rows.exists(t => t == ((2L, 100L, 1.0, 100L))), s"${rows.toSeq}")
-      // history-vs-history pairs are not re-emitted; fresh content matches
-      // nothing
-      assert(!rows.exists(t => t._1 == 1L && t._2 == 2L), s"${rows.toSeq}")
-      assert(!rows.exists(t => t._1 == 101L || t._2 == 101L), s"${rows.toSeq}")
-    }
   }
 }
 

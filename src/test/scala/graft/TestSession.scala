@@ -20,11 +20,6 @@ object TestSession {
     s
   }
 
-  /** The state-store provider that transformWithState (column families)
-    * and the RocksDB-backed streaming operators need. */
-  val RocksDb: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Runs `body` with the given session settings, then restores each to
     * its previous value, or unsets it when it had none. */
   def withConf[T](kv: (String, String)*)(body: => T): T = {

@@ -9,9 +9,8 @@ import graft.operators.TextIndex
   * appended ≡ from-scratch at the TABLE level, appendBatch's
   * independence from historical postings (proved FUNCTIONALLY: the
   * history tf/dl data files are stashed away during the append — a
-  * plan that scanned them would fail), the foreachBatch replay guard,
-  * the swap-crash recovery, and the streaming maintainer serving a
-  * query after its first micro-batch.
+  * plan that scanned them would fail), the batchId replay guard and
+  * the swap-crash recovery.
   */
 class TextIndexSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -92,43 +91,5 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.recover(spark, root)
     assert(tableSet(root, "docfreq") == before,
       "recover did not restore the swapped table")
-  }
-
-  test("streaming maintainer: a query served after the FIRST " +
-      "micro-batch sees history plus that batch") {
-    implicit val sc = spark.sqlContext
-    val root = tmpRoot("stream")
-    val ckpt = tmpRoot("ckpt")
-    TextIndex.build(df(hist), "doc_id", "text", root)
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = TextIndex.maintainStream(
-        mem.toDF().toDF("doc_id", "text"), root, "doc_id", "text")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      mem.addData(batch.take(1)) // (10, "zulu alpha")
-      q.processAllAvailable()
-      val served = TextIndex.serveBm25(spark, root,
-        Seq((100L, "zulu")).toDF("qid", "qtext"), "qid", "qtext", k = 5)
-        .collect()
-      assert(served.map(_.getAs[Long]("doc_id")).toSet == Set(10L),
-        "first-micro-batch doc not served (or history leaked a zulu)")
-      // history still ranks: an alpha query must surface history docs
-      // ABOVE the fresh doc only per BM25's own arithmetic — just pin
-      // that both eras appear
-      val alpha = TextIndex.serveBm25(spark, root,
-        Seq((101L, "alpha")).toDF("qid", "qtext"), "qid", "qtext", k = 5)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-      assert(alpha.contains(10L) && alpha.intersect(Set(1L, 5L)).nonEmpty,
-        s"alpha panel missing an era: $alpha")
-      mem.addData(batch.drop(1)) // (11, "delta zulu zulu")
-      q.processAllAvailable()
-      val zulu2 = TextIndex.serveBm25(spark, root,
-        Seq((102L, "zulu")).toDF("qid", "qtext"), "qid", "qtext", k = 5)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-      assert(zulu2 == Set(10L, 11L), s"second batch not folded: $zulu2")
-      val st = spark.read.parquet(s"$root/stats").collect().head
-      assert(st.getAs[Long]("n_docs") == 7L)
-    } finally q.stop()
   }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{ProductQuantization, Similarity, VectorIndex}
 
 /** The durable IVF-PQ index: equivalence to from-scratch IVF-PQ with the
-  * same frozen models, the index-scan-only plan contract, the daily
-  * append loop, and the streaming warm-start bridge. */
+  * same frozen models, the index-scan-only plan contract and the daily
+  * append loop. */
 class VectorIndexSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
@@ -21,7 +21,6 @@ class VectorIndexSpec extends AnyFunSuite {
   private def oldVecs = oldIds.map(i => (i, vec(i))).toDF("vec_id", "embedding")
   // 101 exactly duplicates OLD vector 16: the cross-batch near-dup the
   // find-ability asserts rely on
-  private val newIds = Seq(101L, 102L, 103L)
   private def newVecs = Seq((101L, vec(16L)), (102L, vec(102L)),
     (103L, vec(103L))).toDF("vec_id", "embedding")
 
@@ -105,7 +104,7 @@ class VectorIndexSpec extends AnyFunSuite {
     withIndex { root =>
       // queries are an in-memory DataFrame, so EVERY file scan must read
       // from under the index root — and never the `vectors` float table,
-      // which exists for verification/warm-start, not the ADC path.
+      // which exists for exact re-rank, not the ADC path.
       val queries = Seq((1L, vec(1L))).toDF("vec_id", "embedding")
       val plan = VectorIndex.query(spark, root, queries, "vec_id",
         "embedding", nprobe = 2, k = 3).queryExecution.executedPlan.toString
@@ -300,46 +299,6 @@ class VectorIndexSpec extends AnyFunSuite {
       // recallSample=0 keeps the original 4-column geometric profile
       assert(VectorIndex.health(spark, root).columns.toSeq ==
         Seq("label", "n_members", "mean_sq_dist", "max_sq_dist"))
-    }
-  }
-
-  test("warm-started streaming embedding dedup: duplicate of an INDEXED " +
-      "vector caught in micro-batch 1") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-vwarm-")
-      .resolve("idx").toString
-    // historical corpus: vectors 1 and 2 duplicate each other (their pair
-    // was decided at batch time and must NOT re-emit), 3..10 distinct
-    val hist = (Seq((1L, vec(1L)), (2L, vec(1L))) ++
-      (3L to 10L).map(i => (i, vec(i)))).toDF("vec_id", "embedding")
-    VectorIndex.build(hist, "vec_id", "embedding", root, dims = Dims,
-      m = 4, ks = 4, iters = 2, coarseK = 2, coarseIters = 2)
-    TestSession.withConf(TestSession.RocksDb) {
-      val mem = MemoryStream[(Long, Seq[Float])]
-      val q = graft.streaming.StreamingDedup.embeddingNearDupVerifiedWarm(
-          spark, mem.toDF().toDF("vec_id", "embedding"), "vec_id",
-          "embedding", root, cosineThreshold = 0.99)
-        .toDF()
-        .writeStream.outputMode("append").format("memory")
-        .queryName("vec_warm").start()
-      try {
-        // the VERY FIRST micro-batch: vec 100 duplicates indexed vec 1,
-        // vec 101 is fresh content
-        mem.addData(Seq((100L, vec(1L)), (101L, vec(20L))))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("vec_warm").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
-      // caught against BOTH historical copies without re-reading the source
-      // corpus, with exact cosine 1.0 and the keep-first drop decision on
-      // the NEW arrival
-      assert(rows.exists(t => t._1 == 1L && t._2 == 100L && t._3 > 0.999 &&
-        t._4 == 100L), s"${rows.toSeq}")
-      assert(rows.exists(t => t._1 == 2L && t._2 == 100L && t._4 == 100L),
-        s"${rows.toSeq}")
-      // history-vs-history pairs are not re-emitted
-      assert(!rows.exists(t => t._1 == 1L && t._2 == 2L), s"${rows.toSeq}")
     }
   }
 }
