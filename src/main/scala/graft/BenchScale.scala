@@ -70,8 +70,8 @@ object BenchScale {
     def rep(df: DataFrame): DataFrame =
       df.withColumn("_r", explode(sequence(lit(0L), lit(k - 1L))))
 
-    def remap(table: String, keyCols: String*): Unit = {
-      val scaled = keyCols.foldLeft(rep(Tables.load(spark, sfDir, table))) {
+    def remap(table: String, cols: String*): Unit = {
+      val scaled = cols.foldLeft(rep(Tables.load(spark, sfDir, table))) {
         (df, c) => df.withColumn(c, col(c) * k + col("_r"))
       }
       scaled.drop("_r").repartition(outParts).write.mode("overwrite")

@@ -29,22 +29,22 @@ object Scd2 {
     *                 isCurrent: boolean)
     * @param updates  cols: key ++ attrs ++ effCol (effective timestamp)
     */
-  def merge(history: DataFrame, updates: DataFrame, keyCols: Seq[String],
+  def merge(history: DataFrame, updates: DataFrame, key: Seq[String],
             attrCols: Seq[String], effCol: String,
             validFrom: String = "valid_from", validTo: String = "valid_to",
             isCurrent: String = "is_current"): DataFrame = {
-    val outCols = keyCols ++ attrCols ++ Seq(validFrom, validTo, isCurrent)
+    val outCols = key ++ attrCols ++ Seq(validFrom, validTo, isCurrent)
     val closed = history.filter(!col(isCurrent)).select(outCols.map(col): _*)
     val cur = history.filter(col(isCurrent))
 
-    val joinCond = keyCols.map(k => col(s"c.$k") <=> col(s"u.$k"))
+    val joinCond = key.map(k => col(s"c.$k") <=> col(s"u.$k"))
       .reduce(_ && _)
     val j = cur.as("c").join(updates.as("u"), joinCond, "full_outer")
 
-    val isNew = keyCols.map(k => col(s"c.$k").isNull).reduce(_ && _)
+    val isNew = key.map(k => col(s"c.$k").isNull).reduce(_ && _)
     // a current row with NO batch match sees all-NULL u.* — the attr
     // null-safe-inequality would read as "differs", so gate on a match
-    val hasUpd = keyCols.map(k => col(s"u.$k").isNotNull).reduce(_ && _)
+    val hasUpd = key.map(k => col(s"u.$k").isNotNull).reduce(_ && _)
     val attrsDiffer = attrCols
       .map(a => !(col(s"c.$a") <=> col(s"u.$a")))
       .reduceOption(_ || _).getOrElse(lit(false))
@@ -53,8 +53,8 @@ object Scd2 {
       struct((keys ++ attrs :+ vf :+ vt :+ current).zip(outCols)
         .map { case (c, n) => c.as(n) }: _*)
 
-    val cKeys = keyCols.map(k => col(s"c.$k"))
-    val uKeys = keyCols.map(k => col(s"u.$k"))
+    val cKeys = key.map(k => col(s"c.$k"))
+    val uKeys = key.map(k => col(s"u.$k"))
     val cAttrs = attrCols.map(a => col(s"c.$a"))
     val uAttrs = attrCols.map(a => col(s"u.$a"))
     val eff = col(s"u.$effCol")

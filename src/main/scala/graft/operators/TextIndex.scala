@@ -82,8 +82,7 @@ object TextIndex {
             root: String): Unit = {
     val spark = docs.sparkSession
     val fs = FixtureCache.fs(spark, root)
-    (Seq("tf", "dl") ++ Swapped ++ Swapped.map(FixtureCache.SwapPrefix + _) :+
-        "_applied")
+    (Seq("tf", "dl") ++ Swapped ++ Swapped.map(FixtureCache.SwapPrefix + _))
       .foreach(t => fs.delete(new org.apache.hadoop.fs.Path(s"$root/$t"),
         true))
     val tf = tfOf(docs, idCol, textCol)
@@ -109,22 +108,13 @@ object TextIndex {
     * row adds the batch's exact-decimal dl sum and doc count
     * (TextIndexSpec pins that this plan reads no historical `tf`/`dl`).
     *
-    * `batchId` (the replay guard of an at-least-once caller, such as a
-    * `foreachBatch` sink): when ≥ 0, an already-applied id returns
-    * without touching state.
-    * The marker lands AFTER the appends, so a crash mid-append can
-    * still double-append on replay; that is the exposure every
-    * multi-file append sink has without a transactional table format,
-    * and the deployment answer is the same as [[Sources]]' JDBC sink:
-    * an atomic-commit table layer. Stated, not hidden. */
+    * Not idempotent: applying the same batch twice appends its postings
+    * twice. A crash mid-append can leave a partial append too; that is
+    * the exposure every multi-file append sink has without a
+    * transactional table format. Stated, not hidden. */
   def appendBatch(spark: SparkSession, root: String, docs: DataFrame,
-                  idCol: String, textCol: String,
-                  batchId: Long = -1L): Unit = {
+                  idCol: String, textCol: String): Unit = {
     recover(spark, root)
-    val fs = FixtureCache.fs(spark, root)
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$root/_applied/b$batchId")
-    if (batchId >= 0L && fs.exists(marker)) return
     val tfB = tfOf(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -152,7 +142,6 @@ object TextIndex {
       } finally dlB.unpersist()
     } finally tfB.unpersist()
     graft.core.Frames.invalidate(root)
-    if (batchId >= 0L) fs.mkdirs(marker)
   }
 
   /** BM25 top-k served ENTIRELY from the maintained index — tf/dl/

@@ -1,15 +1,16 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Source/sink wrappers for the reference's I/O surface (SURVEY.md §2.1,
-  * §2.5). Thin by design: fixtures don't need a broker, so these are the
-  * only components not exercised by the oracle gate — their logic is
-  * limited to option plumbing, and the transforms they feed are the
-  * batch-verified combinators.
+/** The remittance job's I/O surface (SURVEY.md §2.1, §2.5): the Kafka
+  * source [[graft.streaming.RemittanceJob]]'s `main` reads, the JDBC
+  * config and idempotent upsert its metrics query writes through, and the
+  * trigger both queries run on. Thin by design: the tests run with no
+  * broker, so the Kafka path is pinned by its option map only, and the
+  * transforms these feed are the batch-verified combinators.
   */
 object Sources {
 
@@ -53,43 +54,6 @@ object Sources {
       .load()
       .select(col("value").cast("string").as("value"))
 
-  /** [[kafkaSink]]'s option map, pure for the same contract-pinning
-    * reason as [[kafkaConsumerOptions]] (producer config:
-    * KafkaProducerConfig.java:19-31, send: RemittanceGenerator.java:60-61). */
-  def kafkaProducerOptions(bootstrap: String,
-                           topic: String = "remittance-stream",
-                           checkpoint: String = "/tmp/graft-ckpt-kafka")
-      : Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> bootstrap,
-    "topic" -> topic,
-    "checkpointLocation" -> checkpoint)
-
-  /** K3 — Kafka sink (producer side, RemittanceGenerator.java:60-61). */
-  def kafkaSink(df: DataFrame, bootstrap: String,
-                topic: String = "remittance-stream",
-                checkpoint: String = "/tmp/graft-ckpt-kafka",
-                trigger: Trigger = DefaultTrigger): DataStreamWriter[_] =
-    df.writeStream.format("kafka")
-      .options(kafkaProducerOptions(bootstrap, topic, checkpoint))
-      .trigger(trigger)
-
-  /** Bounded-ingest file source: stream a directory of files with
-    * `maxFilesPerTrigger` capping how many files each micro-batch admits —
-    * the file-source analog of Kafka's `maxOffsetsPerTrigger` and the
-    * ingest backpressure knob the 100 TB streaming story needs: without a
-    * bound, the FIRST micro-batch of a backfill (or any restart with a
-    * deep backlog) tries to fit the entire accumulated input, and state /
-    * shuffle sizing that held at steady state dies on the catch-up batch.
-    * With it, catch-up throughput is files-per-trigger × trigger cadence —
-    * bounded and predictable. */
-  def fileStream(spark: SparkSession, path: String, schema: StructType,
-                 format: String = "parquet",
-                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.format(format).schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.load(path)
-  }
-
   /** K2 — JDBC sink config, env-var contract of the reference
     * (StreamJob.java:177-179). */
   case class JdbcConfig(url: String, user: String, password: String,
@@ -106,8 +70,7 @@ object Sources {
 
   /** The reference's auto-watermark cadence (StreamJob.java's 500 ms
     * interval; SURVEY.md §2.4 T3) expressed as Spark's trigger: one
-    * micro-batch every 500 ms. Pass `Trigger.AvailableNow()` to drain a
-    * bounded source instead (tests / backfills). */
+    * micro-batch every 500 ms. */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("500 milliseconds")
 
   /** Spark type → portable DDL type for [[ensureTable]]. */
@@ -142,8 +105,11 @@ object Sources {
     Option(e.getSQLState).exists(s => s == "X0Y32" || s == "42P07") ||
       Option(e.getMessage).exists(_.toLowerCase.contains("already exist"))
 
+  /** The metrics table's key: one row per closed window. */
+  private val Key = "window_start"
+
   /** Idempotent micro-batch upsert: ONE transaction that DELETEs the
-    * batch's `keyCols` tuples and re-INSERTs the batch's rows. A replayed
+    * batch's [[Key]] values and re-INSERTs the batch's rows. A replayed
     * batch (failure between foreachBatch and checkpoint commit, or a
     * restart from an older checkpoint) rewrites the same keys instead of
     * duplicating them — exactly-once OUTPUT on top of foreachBatch's
@@ -154,35 +120,28 @@ object Sources {
     * (one row per closed window — the reference's metrics table), so a
     * micro-batch is O(windows), not O(events); collecting it is bounded by
     * construction. */
-  def upsertBatch(batch: DataFrame, cfg: JdbcConfig,
-                  keyCols: Seq[String] = Seq("window_start")): Unit = {
+  def upsertBatch(batch: DataFrame, cfg: JdbcConfig): Unit = {
     val rows = batch.collect()
     if (rows.isEmpty) return
     val schema = batch.schema
-    val keyIdx = keyCols.map(schema.fieldIndex)
+    val keyIdx = schema.fieldIndex(Key)
     // the delete key must IDENTIFY a row: if the batch itself carries two
-    // rows with the same key tuple (the symptom of a composite-keyed
-    // output sunk with too few key columns — e.g. keyed window metrics
-    // with only window_start), the delete-then-insert would silently
+    // rows with the same key (the symptom of a keyed output, e.g. window
+    // metrics per currency), the delete-then-insert would silently
     // destroy sibling rows on replay. Fail fast instead.
-    val keys = rows.map(r => keyIdx.map(r.get))
+    val keys = rows.map(_.get(keyIdx))
     require(keys.distinct.length == keys.length,
-      s"upsertBatch: batch has duplicate values for key ${keyCols.mkString(",")}" +
-        " — pass every grouping column as a key column")
+      s"upsertBatch: batch has duplicate values for key $Key")
     val conn = java.sql.DriverManager.getConnection(
       cfg.url, cfg.user, cfg.password)
     try {
       ensureTable(conn, cfg.table, schema)
-      ensureKeyIndex(conn, cfg.table, keyCols)
+      ensureKeyIndex(conn, cfg.table)
       inTransaction(conn) {
         val del = conn.prepareStatement(
-          s"DELETE FROM ${cfg.table} WHERE " +
-            keyCols.map(k => s"$k = ?").mkString(" AND "))
+          s"DELETE FROM ${cfg.table} WHERE $Key = ?")
         try {
-          keys.distinct.foreach { k =>
-            k.zipWithIndex.foreach { case (v, i) => del.setObject(i + 1, v) }
-            del.addBatch()
-          }
+          keys.foreach { k => del.setObject(1, k); del.addBatch() }
           del.executeBatch()
         } finally del.close()
         val colNames = schema.fieldNames.mkString(", ")
@@ -200,14 +159,12 @@ object Sources {
     } finally conn.close()
   }
 
-  /** Key index on `cols`, created once and kept. Without it every
+  /** Index on [[Key]], created once and kept. Without it every
     * per-key DELETE of [[upsertBatch]] scans the whole table (a 30-key
     * call over ~3k Derby rows: ~30 ms vs ~0.6 ms indexed). */
-  private def ensureKeyIndex(conn: java.sql.Connection, table: String,
-                             cols: Seq[String]): Unit = {
+  private def ensureKeyIndex(conn: java.sql.Connection, table: String): Unit = {
     val st = conn.createStatement()
-    try st.executeUpdate(
-      s"CREATE INDEX ${table}_gkix ON $table (${cols.mkString(", ")})")
+    try st.executeUpdate(s"CREATE INDEX ${table}_gkix ON $table ($Key)")
     catch { case e: java.sql.SQLException if isAlreadyExists(e) => () }
     finally st.close()
   }
@@ -227,19 +184,4 @@ object Sources {
         throw e
     }
   }
-
-  /** K2 — streaming JDBC sink via foreachBatch (Structured Streaming has no
-    * built-in one). Unlike the reference (batch size 1, no checkpointing —
-    * at-least-once per-row inserts), each micro-batch lands as a single
-    * idempotent transaction keyed on `keyCols` ([[upsertBatch]]), so
-    * checkpoint replays cannot duplicate windows. */
-  def jdbcSink(df: DataFrame, cfg: JdbcConfig, checkpoint: String,
-               keyCols: Seq[String] = Seq("window_start"),
-               trigger: Trigger = DefaultTrigger): DataStreamWriter[_] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, cfg, keyCols)
-      }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Schemas
 
 /** S3 — the synthetic remittance generator (RemittanceGenerator.java:31-63)
-  * as a Spark source: a deterministic seeded batch variant (LCG over the
-  * row index — oracle-able, see ReferenceQueries."s3_generator") and a
-  * streaming variant over the rate source (`rowsPerSecond`).
+  * as a deterministic seeded batch frame (LCG over the row index —
+  * oracle-able, see ReferenceQueries."s3_generator") and its JSON wire
+  * form, which specs and streambench feed to the job's MemoryStreams.
   *
   * The FX table carries the reference's deliberate CNY→0.0 poison
   * (RemittanceGenerator.java:65-74) that feeds the failure-count path.
@@ -53,16 +53,6 @@ object Generator {
             baseTsMillis: Long = 1700000000000L): DataFrame =
     derive(spark.range(0, n).toDF("i"))
       .withColumn("timestamp", lit(baseTsMillis) + col("i") * IntervalMs)
-      .select(wireCols: _*)
-
-  /** Streaming generator over the rate source; same derivation, event time
-    * = source timestamp: the broker-free live form of the reference
-    * producer. No job starts it; StreamingSpec pins it against [[batch]]. */
-  def stream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    derive(spark.readStream.format("rate")
-        .option("rowsPerSecond", rowsPerSecond).load()
-        .withColumnRenamed("value", "i"))
-      .withColumn("timestamp", unix_millis(col("timestamp")))
       .select(wireCols: _*)
 
   /** The JSON wire form (K3 producer side, RemittanceGenerator.java:43-58):

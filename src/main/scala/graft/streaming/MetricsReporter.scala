@@ -77,10 +77,6 @@ class MetricsReporter extends StreamingQueryListener {
       Series("records_out_rate", "Processed rows per second, all queries",
         Gauge, sum(_.processedRowsPerSecond)))
   }
-
-  /** The dashboard JSON payload (same shape MetricsService broadcasts). */
-  def snapshotJson: String =
-    series.map(s => s""""${s.id}": "${s.text}"""").mkString("{", ", ", "}")
 }
 
 object MetricsReporter {

@@ -8,9 +8,9 @@ import graft.operators.{RiskLabeler, WindowMetrics}
 /** The reference's two dataflow pipelines (StreamJob.java:29-221),
   * re-expressed as source-agnostic `DataFrame => DataFrame` combinators —
   * the same column expressions run in batch (fixture parquet) and under
-  * Structured Streaming (Kafka / MemoryStream / rate source). That single
-  * definition executing in both modes is the core Spark-native design win
-  * (SURVEY.md §7 phase 0.4).
+  * Structured Streaming (Kafka or MemoryStream, wired by [[RemittanceJob]]).
+  * That single definition executing in both modes is the core Spark-native
+  * design win (SURVEY.md §7 phase 0.4).
   *
   * Input contract: a DataFrame with a string `value` column holding the
   * JSON wire shape (Kafka value).

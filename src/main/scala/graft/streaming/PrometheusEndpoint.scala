@@ -41,9 +41,8 @@ class PrometheusEndpoint(reporter: MetricsReporter, port: Int = 0) {
   /** One sample per reporter series, `graft_`-prefixed (Prometheus metric
     * names admit `[a-zA-Z_:][a-zA-Z0-9_:]*`; every reporter id already
     * fits), with the series' help text and type. Values are the
-    * series' display text — the scrape and the dashboard see the
-    * identical rounded value, which is the reference's behavior too (it
-    * formats once, in MetricsService). */
+    * series' display text, rounded as the reference's MetricsService
+    * formats them. */
   private[streaming] def renderExposition: String =
     reporter.series.map { s =>
       val name = s"graft_${s.id}"

@@ -11,13 +11,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Sessions
 import graft.sources.Sources
-import graft.streaming.{Generator, Pipelines}
+import graft.streaming.{Generator, Pipelines, RemittanceJob}
 
-/** Restart from a checkpoint into the JDBC sink: the metrics pipeline is
-  * stopped (or fails) mid-stream, restarts from the SAME checkpoint, and
-  * the stored windows still equal batch `metricsPipeline` over all the
-  * input — no loss, no duplicates. Plus the overwrite guarantee of the
-  * checkpoint file manager graft sessions use ([[Sessions.CheckpointManagerConf]]).
+/** Restart from a checkpoint into the JDBC sink: the deployed job (or a
+  * metrics query of its own) is stopped (or fails) mid-stream, restarts
+  * from the SAME checkpoint, and the stored windows still equal batch
+  * `metricsPipeline` over all the input — no loss, no duplicates. Plus
+  * the overwrite guarantee of the checkpoint file manager graft sessions
+  * use ([[Sessions.CheckpointManagerConf]]).
   */
 class CheckpointRestartSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -30,18 +31,8 @@ class CheckpointRestartSpec extends AnyFunSuite {
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def stored(table: String): Seq[(Long, Long, String)] = {
-    val cfg = cfgFor(table)
-    val conn = java.sql.DriverManager.getConnection(
-      cfg.url, cfg.user, cfg.password)
-    try {
-      val rs = conn.createStatement().executeQuery(
-        s"SELECT window_start, cnt, line FROM $table ORDER BY window_start")
-      val buf = scala.collection.mutable.Buffer.empty[(Long, Long, String)]
-      while (rs.next()) buf += ((rs.getLong(1), rs.getLong(2), rs.getString(3)))
-      buf.toSeq
-    } finally conn.close()
-  }
+  private def stored(table: String): Seq[(Long, Long, String)] =
+    JobHarness.stored(cfgFor(table))
 
   // 300 events 2 s apart: 60 ten-second windows, fed as 7 micro-batches of
   // up to 47 events (not a multiple of the 5 events per window), so windows
@@ -60,45 +51,54 @@ class CheckpointRestartSpec extends AnyFunSuite {
 
   private val fast = Trigger.ProcessingTime("100 milliseconds")
 
-  /** Add each chunk and wait for it; returns how many were added before
-    * the query stopped or failed. */
-  private def feed(q: StreamingQuery, mem: MemoryStream[String],
+  /** Add each chunk to every query's stream and wait for all of them;
+    * returns how many were added before a query stopped or failed. */
+  private def feed(qs: Seq[(StreamingQuery, MemoryStream[String])],
                    cs: Seq[Seq[String]]): Int = {
     var added = 0
-    try cs.foreach { c => mem.addData(c); added += 1; q.processAllAvailable() }
-    catch { case _: StreamingQueryException => () }
+    try cs.foreach { c =>
+      qs.foreach(_._2.addData(c)); added += 1
+      qs.foreach(_._1.processAllAvailable())
+    } catch { case _: StreamingQueryException => () }
     added
   }
 
-  test("jdbcSink: stop after k triggers, restart from the same checkpoint," +
-      " stored windows ≡ batch metricsPipeline") {
+  test("RemittanceJob: stop after k triggers, restart from the same" +
+      " checkpoint, stored windows ≡ batch metricsPipeline") {
     implicit val sc = spark.sqlContext
     val t = "r_stop"
     val ckpt = tempDir("graft-restart-stop")
-    val mem = MemoryStream[String]
+    val (rMem, mMem) = (MemoryStream[String], MemoryStream[String])
     val k = 3
-    def start(): StreamingQuery =
-      Sources.jdbcSink(metrics(mem), cfgFor(t), ckpt, trigger = fast)
-        .outputMode("update").queryName("restart_stop").start()
+    def start() = JobHarness.start(ckpt, rMem, mMem, cfgFor(t), "restart")
+    def feedBoth(job: RemittanceJob.Running, cs: Seq[Seq[String]]) =
+      feed(Seq(job.risk -> rMem, job.metrics -> mMem), cs)
+    val closed = JobHarness.closedWindows(spark, chunks.flatten)
 
-    val q1 = start()
-    try assert(feed(q1, mem, chunks.take(k)) == k) finally q1.stop()
-    assert(q1.exception.isEmpty)
+    val j1 = start()
+    try assert(feedBoth(j1, chunks.take(k)) == k) finally j1.stop()
+    assert(j1.risk.exception.isEmpty && j1.metrics.exception.isEmpty)
     val mid = stored(t)
-    assert(mid.nonEmpty && mid.size < expected.size)
+    assert(mid.nonEmpty && mid.size < closed.size)
 
-    val q2 = start()
-    try assert(feed(q2, mem, chunks.drop(k)) == chunks.size - k) finally q2.stop()
-    assert(q2.exception.isEmpty)
-    // the restart resumed at the checkpoint: it read only the new chunks
-    assert(q2.recentProgress.map(_.batchId).min > 0)
-    assert(q2.recentProgress.map(_.numInputRows).sum == chunks.drop(k).flatten.size)
+    val j2 = start()
+    try assert(feedBoth(j2, chunks.drop(k)) == chunks.size - k) finally j2.stop()
+    assert(j2.risk.exception.isEmpty && j2.metrics.exception.isEmpty)
+    // the restart resumed at the checkpoint: each query read only the new chunks
+    Seq(j2.risk, j2.metrics).foreach { q =>
+      assert(q.recentProgress.map(_.batchId).min > 0)
+      assert(q.recentProgress.map(_.numInputRows).sum == chunks.drop(k).flatten.size)
+    }
     val out = stored(t)
     assert(out.map(_._1).distinct.size == out.size)
-    assert(out == expected)
+    assert(out == closed)
+    // every event's risk line was written once, across the restart
+    val ids = JobHarness.riskRows("restart").map(_._1)
+    assert(ids.sorted == Generator.batch(spark, 300).select("transactionId")
+      .as[String].collect().toSeq.sorted)
   }
 
-  test("jdbcSink: a failure after the upsert and before the commit log" +
+  test("upsertBatch: a failure after the upsert and before the commit log" +
       " replays the batch on restart, stored windows ≡ batch metricsPipeline") {
     implicit val sc = spark.sqlContext
     val t = "r_fail"
@@ -125,11 +125,11 @@ class CheckpointRestartSpec extends AnyFunSuite {
       .queryName("restart_fail").start()
 
     val q1 = start()
-    val added = try feed(q1, mem, chunks) finally q1.stop()
+    val added = try feed(Seq(q1 -> mem), chunks) finally q1.stop()
     assert(fault.get && q1.exception.isDefined)
     val q2 = start()
     try {
-      feed(q2, mem, chunks.drop(added))
+      feed(Seq(q2 -> mem), chunks.drop(added))
       q2.processAllAvailable()
     } finally q2.stop()
     assert(q2.exception.isEmpty)

@@ -3,17 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Sources
 
-/** Contract pins for the Kafka wrappers — the one §2 surface the sandbox
-  * cannot execute (no broker, no spark-sql-kafka connector jar, so even
-  * source RESOLUTION is env-blocked). What CAN be checked without a
-  * broker is the exact option strings handed to the connector, against
-  * the reference consumer/producer configuration:
+/** Contract pins for the job's deploy-side config — the one §2 surface
+  * the sandbox cannot execute (no broker, no spark-sql-kafka connector
+  * jar, so even source RESOLUTION is env-blocked; no Postgres). What CAN
+  * be checked without them is the exact values handed over, against the
+  * reference configuration:
   *
   *  - consumer: StreamJob.java:36-51 — bootstrap "kafka:9093", topic
   *    "remittance-stream", SimpleStringSchema, two independent
   *    consumers, `setStartFromLatest()` (line 56);
-  *  - producer: KafkaProducerConfig.java:19-31 + the send at
-  *    RemittanceGenerator.java:60-61.
+  *  - JDBC sink: the env vars and defaults of StreamJob.java:177-179.
   *
   * A typo in any option KEY (e.g. `kafka.bootstrap.server`) would pass a
   * compile-only check and fail at first deployment — these pins are the
@@ -49,17 +48,17 @@ class SourcesContractSpec extends AnyFunSuite {
       Sources.kafkaConsumerOptions("b:1"))
   }
 
-  test("producer option map matches the reference producer config " +
-      "(topic, bootstrap passthrough, checkpointed exactly-once send)") {
-    val opts = Sources.kafkaProducerOptions("kafka:9093")
-    assert(opts("kafka.bootstrap.servers") == "kafka:9093")
-    // the generator publishes to the same stream topic
-    // (RemittanceGenerator.java:60-61)
-    assert(opts("topic") == "remittance-stream")
-    // the reference's KafkaTemplate.send().get() acks synchronously;
-    // the structured-streaming analog of that durability is the
-    // checkpointed sink commit — the option must always be present
-    assert(opts("checkpointLocation").nonEmpty)
-    assert(opts.size == 3, s"unexpected extra options: $opts")
+  test("JdbcConfig.fromEnv: the reference's defaults, each overridden by" +
+      " its env var") {
+    // StreamJob.java:177-179
+    val defaults = Sources.JdbcConfig.fromEnv(Map.empty)
+    assert(defaults == Sources.JdbcConfig(
+      "jdbc:postgresql://localhost:5432/postgres", "postgres", "postgres",
+      "remittance_metrics"))
+    Seq("METRICS_DB_URL" -> defaults.copy(url = "v"),
+      "METRICS_DB_USER" -> defaults.copy(user = "v"),
+      "METRICS_DB_PASSWORD" -> defaults.copy(password = "v")).foreach {
+      case (k, want) => assert(Sources.JdbcConfig.fromEnv(Map(k -> "v")) == want, k)
+    }
   }
 }

@@ -9,8 +9,7 @@ import graft.operators.TextIndex
   * appended ≡ from-scratch at the TABLE level, appendBatch's
   * independence from historical postings (proved FUNCTIONALLY: the
   * history tf/dl data files are stashed away during the append — a
-  * plan that scanned them would fail), the batchId replay guard and
-  * the swap-crash recovery.
+  * plan that scanned them would fail) and the swap-crash recovery.
   */
 class TextIndexSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -63,21 +62,6 @@ class TextIndexSpec extends AnyFunSuite {
       "appended stats row diverged from the from-scratch build")
     val st = spark.read.parquet(s"$inc/stats").collect().head
     assert(st.getAs[Long]("n_docs") == 7L) // zero-token doc counted
-  }
-
-  test("replay guard: an already-applied batchId is a no-op") {
-    val root = tmpRoot("replay")
-    TextIndex.build(df(hist), "doc_id", "text", root)
-    TextIndex.appendBatch(spark, root, df(batch), "doc_id", "text",
-      batchId = 7L)
-    val after1 = spark.read.parquet(s"$root/tf").count()
-    val stats1 = tableSet(root, "stats")
-    TextIndex.appendBatch(spark, root, df(batch), "doc_id", "text",
-      batchId = 7L)
-    assert(spark.read.parquet(s"$root/tf").count() == after1,
-      "replayed batch double-appended postings")
-    assert(tableSet(root, "stats") == stats1,
-      "replayed batch re-merged the stats row")
   }
 
   test("recover heals a crash between a swap's delete and rename") {
